@@ -3,6 +3,11 @@ PY ?= python
 test:
 	$(PY) -m pytest tests/ -x -q
 
+# the full suite as ROADMAP.md's Tier-1 verify runs it: every test, no -x
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
 bench:
 	SPARK_GRAFT_SF_DIR=$${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-32} $(PY) bench.py
@@ -21,4 +26,4 @@ pipeline-smoke: zip
 	$(PY) scripts/run_pipeline.py --generate 2000 --base /tmp/cs_smoke --master 'local[8]'
 	rm -rf /tmp/cs_smoke
 
-.PHONY: test bench scaling zip pipeline-smoke
+.PHONY: test tier1 bench scaling zip pipeline-smoke

@@ -78,7 +78,10 @@ def run_column_rules(
     Examples (failing values) are fetched lazily per rule via
     ``limit(n)`` — Spark's CollectLimit stops early, never a full-set
     driver collect (unlike the reference's O(failures) Python set,
-    contessa/rules.py:74-95).
+    contessa/rules.py:74-95). That is one more job per failing rule;
+    ``collect_examples=0`` skips them, leaving the counting scan as the
+    only job (a persisted ``QualityRunner`` run does this: its rows
+    have no example column).
     """
     if not rules:
         return []
@@ -166,7 +169,8 @@ def run_custom_sql_rule(
     First result column must be boolean validity
     (contessa/rules.py:84-87 raises ValueError otherwise);
     ``only_failures_mode`` treats every returned row as a failure with
-    total_records=0 (contessa/rules.py:80-82).
+    total_records=0 (contessa/rules.py:80-82). ``collect_examples=0``
+    skips the failed-example job, as in ``run_column_rules``.
     """
     out = rule.evaluate(spark, context)
     if rule.only_failures_mode:

@@ -25,7 +25,7 @@ Exact parity carried over:
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -121,7 +121,7 @@ class ConsistencyChecker:
                 {k: str(v) for k, v in ctx.items()}, sort_keys=True
             ),
             "task_ts": task_ts,
-            "created_at": datetime.utcnow(),
+            "created_at": datetime.now(timezone.utc).replace(tzinfo=None),
         }
         LocalSmallTableMerge.merge(
             pd.DataFrame([row]), path, CONSISTENCY_UPSERT_KEY
@@ -158,8 +158,19 @@ class ConsistencyChecker:
 
     @staticmethod
     def _compare_counts(left: DataFrame, right: DataFrame) -> AggregatedResult:
-        l = left.collect()[0][0]
-        r = right.collect()[0][0]
+        # both sides' counts in ONE action: a union tagged by side, so
+        # the two scans run as concurrent stages of one query instead
+        # of two sequential collects. Each side's value is its first
+        # row's first column, as a custom-SQL side may return more.
+        tagged = left.select(
+            F.lit(0).alias("side"), F.col(left.columns[0]).alias("n")
+        ).unionByName(
+            right.select(F.lit(1).alias("side"), F.col(right.columns[0]).alias("n"))
+        )
+        first: Dict[int, int] = {}
+        for side, n in tagged.collect():
+            first.setdefault(side, n)
+        l, r = first[0], first[1]
         passed = min(l, r)
         failed = (l - passed) - (r - passed)  # signed, = l - r
         return AggregatedResult(total_records=max(l, r), failed=failed, passed=passed)

@@ -13,22 +13,28 @@ the table *name* is the parameter), widened counters to LongType for
 
 * ``IcebergMergeWriter`` — real deployment: ``MERGE INTO`` keyed on the
   identity (+ optional ``partition_id`` for per-partition lineage /
-  checkpoint-resume);
-* ``ParquetMergeWriter`` — sandbox fallback: anti-join old rows against
-  the new key set, union, atomic directory swap. Same observable
-  upsert semantics.
+  checkpoint-resume); ``iceberg:`` result paths read their 30-day
+  medians through Spark;
+* ``ParquetMergeWriter`` — parquet result directories. The table holds
+  one row per rule per run (hundreds of rows), so it is control-plane
+  data: the upsert is a driver-side pandas/pyarrow rewrite through
+  ``LocalSmallTableMerge`` and the 30-day medians come from the same
+  driver-side read — no Spark job for either. Same observable upsert
+  semantics; column types come from the StructType, and timestamps are
+  stored as UTC instants (``TimestampType``'s parquet form).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
 from dataclasses import dataclass
-from datetime import date, datetime, timedelta
+from datetime import date, datetime, timedelta, timezone
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -185,7 +191,7 @@ def build_quality_rows(
                 if rule.time_filter
                 else TIME_FILTER_DEFAULT,
                 "task_ts": task_ts,
-                "created_at": datetime.utcnow(),
+                "created_at": datetime.now(timezone.utc).replace(tzinfo=None),
             }
         )
     return rows
@@ -196,58 +202,104 @@ def medians_30_day(
     result_path: str,
     today: Optional[date] = None,
     days: int = 30,
+    history=None,
 ) -> Dict[str, Optional[float]]:
     """Exact 30-day medians over the *existing* result table
     (contessa/models.py:129-151). Computed BEFORE the current run's
     rows are merged, so the current run is excluded (ordering caveat,
     SURVEY §4). Whole-table scope (the reference applies no per-rule
-    filter). Uses Spark's exact ``median`` aggregate — a single
-    pass over the (tiny) result table.
+    filter). The window bounds are the two dates' midnights in the
+    session time zone, as Spark casts the reference's date-string
+    cutoffs, so a run later on ``today`` falls outside it.
+
+    Parquet paths: pandas' exact median over ``history`` (the table as
+    ``read_result_table`` returned it; read here when not given) — no
+    Spark job. ``iceberg:`` paths: Spark's exact ``median`` aggregate.
     """
     empty = {"failed": None, "passed": None}
-    reader = _existing_df(spark, result_path, QUALITY_CHECK_SCHEMA)
-    if reader is None:
-        return empty
     now = today or date.today()
     past = now - timedelta(days=days)
-    row = (
-        reader.where(
-            (F.col("task_ts") >= F.lit(str(past))) & (F.col("task_ts") <= F.lit(str(now)))
-        )
-        .agg(
-            F.median("failed").alias("mf"),
-            F.median("passed").alias("mp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()[0]
-    )
-    if row["n"] == 0:
-        return empty
-    return {"failed": row["mf"], "passed": row["mp"]}
-
-
-def _existing_df(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> Optional[DataFrame]:
-    if path.startswith("iceberg:"):
-        name = path[len("iceberg:") :]
+    if result_path.startswith("iceberg:"):
         try:
-            return spark.table(name)
+            table = spark.table(result_path[len("iceberg:") :])
         except Exception:
-            return None
-    if os.path.exists(path):
-        return spark.read.schema(schema).parquet(path)
-    return None
+            return empty
+        row = (
+            table.where(
+                (F.col("task_ts") >= F.lit(str(past)))
+                & (F.col("task_ts") <= F.lit(str(now)))
+            )
+            .agg(
+                F.median("failed").alias("failed"),
+                F.median("passed").alias("passed"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()[0]
+        )
+        return empty if row["n"] == 0 else {"failed": row["failed"], "passed": row["passed"]}
+
+    import pandas as pd
+
+    if history is None:
+        history = read_result_table(result_path, QUALITY_CHECK_SCHEMA)
+    if history is None:
+        return empty
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    lo, hi = (pd.Timestamp(d).tz_localize(tz) for d in (past, now))
+    window = history[(history["task_ts"] >= lo) & (history["task_ts"] <= hi)]
+    if not len(window):
+        return empty
+    medians = {c: window[c].median() for c in ("failed", "passed")}
+    return {c: None if pd.isna(m) else float(m) for c, m in medians.items()}
+
+
+def read_result_table(path: str, schema: T.StructType):
+    """The parquet result table at ``path`` as a pandas frame typed by
+    ``schema`` (a column the files lack reads as NULL), or None for an
+    ``iceberg:`` table or a path with no parquet file.
+
+    ``task_ts``/``created_at`` come back as UTC instants however the
+    file stores them: Spark's INT96 and naive micros hold UTC-based
+    values (Spark reads both that way under ``TimestampType``), and
+    tz-adjusted micros convert. Upsert keys therefore match across
+    tables written by Spark, by older pandas writers and by this one.
+    """
+    if path.startswith("iceberg:"):
+        return None
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not files:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    parts = []
+    for f in files:
+        t = pq.read_table(f)
+        parts.append(
+            pa.Table.from_arrays(
+                [
+                    # INT96 reads as ns; Spark's values are whole micros
+                    t.column(fld.name).cast(fld.type, safe=not pa.types.is_timestamp(fld.type))
+                    if fld.name in t.column_names
+                    else pa.nulls(t.num_rows, fld.type)
+                    for fld in target
+                ],
+                schema=target,
+            )
+        )
+    return pa.concat_tables(parts).to_pandas()
 
 
 class ParquetMergeWriter:
-    """Upsert into a parquet result table by key anti-join + swap.
+    """Upsert into a parquet result table on the driver.
 
-    Sandbox stand-in for Iceberg ``MERGE INTO`` — same observable
-    semantics as contessa/db.py:61-88 (re-running a check for the same
-    task_ts replaces the row). The result table is tiny (one row per
-    rule per run), so the rewrite is cheap; at production scale use
-    ``IcebergMergeWriter``.
+    Stand-in for Iceberg ``MERGE INTO`` — same observable semantics as
+    contessa/db.py:61-88 (re-running a check for the same task_ts
+    replaces the row). The table holds one row per rule per run, so the
+    upsert is a pandas/pyarrow rewrite through ``LocalSmallTableMerge``
+    (no Spark job); at production scale use ``IcebergMergeWriter``.
     """
 
     def __init__(self, spark: SparkSession):
@@ -255,28 +307,39 @@ class ParquetMergeWriter:
 
     def merge(
         self,
-        rows_df: DataFrame,
+        rows: List[dict],
         path: str,
         key_cols: List[str],
         schema: T.StructType,
+        existing=None,
     ) -> None:
-        existing = _existing_df(self.spark, path, schema)
-        if existing is not None:
-            # broadcast the new (small) side; anti-join drops replaced keys
-            kept = existing.join(F.broadcast(rows_df.select(*key_cols)), key_cols, "left_anti")
-            merged = kept.unionByName(rows_df)
-        else:
-            merged = rows_df
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        """Upsert ``rows`` (dicts shaped by ``schema``) into ``path``.
+        ``existing`` is the table as ``read_result_table`` returned it
+        earlier in the same run; it is read here when not given.
+
+        Column types come from ``schema``, not from the values (an
+        all-NULL string column stays a string column). Timestamps are
+        stored as the instants Spark would store: a naive datetime is
+        driver-local time, as ``TimestampType.toInternal`` reads it.
+        """
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(schema)
+        to_micros = T.TimestampType().toInternal
+        ts_cols = [f.name for f in schema if isinstance(f.dataType, T.TimestampType)]
+        new = pa.Table.from_pylist(
+            [{**r, **{c: to_micros(r.get(c)) for c in ts_cols}} for r in rows],
+            schema=target,
+        ).to_pandas()
+        if existing is None:
+            existing = read_result_table(path, schema)
+        LocalSmallTableMerge.merge(new, path, key_cols, existing=existing, schema=target)
 
 
 class LocalSmallTableMerge:
-    """Driver-side upsert for TINY control tables (lineage, quality) —
-    pandas + pyarrow, zero Spark jobs.
+    """Driver-side upsert for TINY control tables (lineage, quality,
+    consistency) — pandas + pyarrow, zero Spark jobs.
 
     Rationale: at any scale these tables hold one row per
     bucket/rule/run — thousands of rows, not data-plane rows. Running
@@ -289,8 +352,6 @@ class LocalSmallTableMerge:
 
     @staticmethod
     def read(path: str):
-        import glob
-
         import pandas as pd
 
         files = sorted(glob.glob(os.path.join(path, "*.parquet")))
@@ -299,12 +360,19 @@ class LocalSmallTableMerge:
         return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
 
     @classmethod
-    def merge(cls, new_pdf, path: str, key_cols: List[str]) -> "object":
+    def merge(
+        cls, new_pdf, path: str, key_cols: List[str], existing=None, schema=None
+    ) -> "object":
         """Upsert new_pdf into the parquet dir at path; returns the
-        merged pandas frame."""
+        merged pandas frame. ``existing`` is the table already read by
+        the caller (read here when None); ``schema`` is the pyarrow
+        schema to write (inferred from the frame when None)."""
         import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        existing = cls.read(path)
+        if existing is None:
+            existing = cls.read(path)
         if existing is not None and len(existing) and not len(new_pdf):
             # nothing to upsert (e.g. a fully-resumed run): the table is
             # already the merge result — and concatenating an EMPTY
@@ -345,10 +413,16 @@ class LocalSmallTableMerge:
             merged = new_pdf
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp, exist_ok=True)
-        # Spark cannot read TIMESTAMP(NANOS) parquet — write micros
-        merged.to_parquet(
+        table = pa.Table.from_pandas(merged, schema=schema, preserve_index=False)
+        # The pandas and ARROW:schema footer metadata (~6 KB) would
+        # outweigh a table this small; parquet's own logical types carry
+        # everything a reader needs. Spark cannot read TIMESTAMP(NANOS)
+        # parquet — write micros.
+        pq.write_table(
+            table.replace_schema_metadata(None),
             os.path.join(tmp, "part-00000.parquet"),
-            index=False,
+            compression="zstd",
+            store_schema=False,
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
@@ -375,9 +449,20 @@ class IcebergMergeWriter:
             f"WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
         )
 
-    def merge(self, rows_df: DataFrame, table: str, key_cols: List[str], schema=None) -> None:
+    def merge(
+        self,
+        rows: List[dict],
+        table: str,
+        key_cols: List[str],
+        schema: T.StructType,
+        existing=None,
+    ) -> None:
+        """Same interface as ``ParquetMergeWriter.merge``; ``table`` may
+        carry the runner's ``iceberg:`` prefix. ``existing`` is unused:
+        the MERGE reads the target itself."""
+        table = table[len("iceberg:") :] if table.startswith("iceberg:") else table
         view = f"_merge_src_{uuid.uuid4().hex[:8]}"
-        rows_df.createOrReplaceTempView(view)
+        self.spark.createDataFrame(rows, schema=schema).createOrReplaceTempView(view)
         try:
             self.spark.sql(self.merge_sql(table, view, key_cols))
         finally:

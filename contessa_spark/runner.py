@@ -11,12 +11,18 @@ mapping (SURVEY §3.1):
 4. ensure result table / else in-memory ``CheckResult``;
 5. execute — **one DataFrame pass for all Column rules** (the
    idiomatic-Spark win over the reference's per-rule scans,
-   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule;
+   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule. A
+   persisted run fetches no failed examples (the QualityCheck row has
+   no column for them), so its only Spark jobs are these counting
+   scans; the in-memory run also collects up to ``collect_examples``
+   failing values per rule;
 6. enrich with percentages/status/30-day medians (medians computed
    BEFORE merging the current rows — contessa ordering caveat,
-   models.py:111 vs runner.py:58);
+   models.py:111 vs runner.py:58). A parquet result table is read
+   once, on the driver, and serves both the medians and step 7;
 7. MERGE-upsert into the result table keyed on
-   (attribute, rule_name, rule_type, task_ts, time_filter).
+   (attribute, rule_name, rule_type, task_ts, time_filter) — a
+   driver-side rewrite for parquet paths, ``MERGE INTO`` for Iceberg.
 
 No global executor singleton (the reference's is documented
 not-thread-safe, contessa/executor.py:91-93) — context is threaded
@@ -39,6 +45,7 @@ from contessa_spark.results import (
     ParquetMergeWriter,
     build_quality_rows,
     medians_30_day,
+    read_result_table,
 )
 from contessa_spark.rules import CustomSqlRule, OneColumnRule, get_rule_cls
 from contessa_spark.table import Table
@@ -50,6 +57,12 @@ class QualityRunner:
         is the Spark analogue of the reference's ``special_qc_map``
         (contessa/runner.py:29,124-140 — swap the persisted row shape
         per result table); defaults to the standard QualityCheck rows.
+        It only runs when persisting, so its ``agg_results`` carry no
+        failed examples.
+
+        ``writer.merge(rows, path, key_cols, schema, existing=None)``
+        upserts the rows; ``existing`` is the parquet table as this run
+        already read it (None for Iceberg).
         """
         self.spark = spark
         self.writer = writer or ParquetMergeWriter(spark)
@@ -72,6 +85,10 @@ class QualityRunner:
         the Jinja context; ``result_table_path`` switches persistence on
         (parquet path or ``iceberg:<ident>``), else in-memory
         CheckResults are returned (contessa/runner.py:46-52).
+
+        ``collect_examples`` caps the failing values each in-memory
+        ``CheckResult`` carries. A persisted run ignores it: the
+        persisted rows cannot hold examples, so none are fetched.
         """
         tbl = Table(**check_table) if check_table else Table(None, "check_table")
         ctx = self.get_context(tbl, context)
@@ -87,23 +104,29 @@ class QualityRunner:
         column_rules = [r for r in rules if isinstance(r, OneColumnRule) and not isinstance(r, CustomSqlRule)]
         sql_rules = [r for r in rules if isinstance(r, CustomSqlRule)]
 
+        n_examples = 0 if result_table_path else collect_examples
         agg_results = {}
         for rule, res in zip(
             column_rules,
-            run_column_rules(check_df, column_rules, task_ts, collect_examples),
+            run_column_rules(check_df, column_rules, task_ts, n_examples),
         ):
             agg_results[id(rule)] = res
         for rule in sql_rules:
             agg_results[id(rule)] = run_custom_sql_rule(
-                self.spark, rule, ctx, collect_examples
+                self.spark, rule, ctx, n_examples
             )
         ordered = [agg_results[id(r)] for r in rules]
 
         if result_table_path:
-            medians = medians_30_day(self.spark, result_table_path, today=today)
+            history = read_result_table(result_table_path, QUALITY_CHECK_SCHEMA)
+            medians = medians_30_day(
+                self.spark, result_table_path, today=today, history=history
+            )
             rows = self.row_builder(rules, ordered, task_ts, medians)
-            rows_df = self.spark.createDataFrame(rows, schema=QUALITY_CHECK_SCHEMA)
-            self.writer.merge(rows_df, result_table_path, UPSERT_KEY, QUALITY_CHECK_SCHEMA)
+            self.writer.merge(
+                rows, result_table_path, UPSERT_KEY, QUALITY_CHECK_SCHEMA,
+                existing=history,
+            )
             return rows
 
         out: List[CheckResult] = []

@@ -155,3 +155,28 @@ def test_consistency_persists_and_upserts(spark, left, right_missing_one, tmp_pa
         result_table_path=path,
     )
     assert spark.read.parquet(path).count() == 2
+
+
+def test_count_is_one_action_with_signed_failed(spark, left, monkeypatch):
+    """COUNT over custom-SQL sides collects both counts in one action;
+    ``failed`` stays signed (l - r), total = max, passed = min."""
+    cc = ConsistencyChecker(spark)
+    left.createOrReplaceTempView("booking_cnt")
+    frame_cls = type(left)
+    actions = []
+    collect = frame_cls.collect
+
+    def counted(self):
+        actions.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", counted)
+    res = cc.run(
+        "count", left, left,
+        left_sql="SELECT count(*) AS n FROM booking_cnt WHERE id <= 3",
+        right_sql="SELECT count(*) AS c FROM booking_cnt",
+        context={"task_ts": TASK_TS},
+    )
+    assert len(actions) == 1
+    assert (res.total_records, res.failed, res.passed) == (4, -1, 3)
+    assert res.status == "invalid"
