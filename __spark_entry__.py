@@ -73,17 +73,30 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Round-robin repartition a UDF-heavy input up to the session's
-    parallelism when the scan yields fewer splits. A pandas-UDF stage
-    inherits the scan partitioning, and the small-SF documents table is
-    ONE ~20 MB parquet split — without this the entire Python stage of
+def _documents_footer(sf_dir: str):
+    """Parquet footer metadata of the documents table: row count and
+    row-group count without a Spark job (at production scale: the
+    snapshot's stats)."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(os.path.join(sf_dir, "documents.parquet")).metadata
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, round-robin repartitioned up to the
+    session's parallelism when the file has fewer row groups than that.
+    A pandas-UDF stage inherits the scan partitioning, and a row group
+    is the smallest unit a scan split reads: the small-SF documents
+    table is ONE row group, so without this the entire Python stage of
     a dedup query serializes onto one core (measured: the whole 2 s
     shingle pass of dedup_ngram_jaccard at sf0.1 ran as a single task).
-    At production scale input splits ≫ cores and this no-ops; the
+    The decision reads the footer rather than the scan's partition
+    count, which would convert the plan to an RDD on every query build.
+    At production scale row groups ≫ cores and this no-ops; the
     repartition itself moves one small file's bytes once."""
+    df = _load(spark, sf_dir, "documents")
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if _documents_footer(sf_dir).num_row_groups < target:
         return df.repartition(target)
     return df
 
@@ -191,13 +204,13 @@ def _consistency_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import token_counts
 
-    return token_counts(_spread(_load(spark, sf_dir, "documents"), spark))
+    return token_counts(_documents(spark, sf_dir))
 
 
 def _doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import quality_scores
 
-    return quality_scores(_spread(_load(spark, sf_dir, "documents"), spark))
+    return quality_scores(_documents(spark, sf_dir))
 
 
 def _doc_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,7 +220,7 @@ def _doc_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_terciles,
     )
 
-    docs = _spread(_load(spark, sf_dir, "documents"), spark)
+    docs = _documents(spark, sf_dir)
     scored = quality_scores(docs, keep_cols=("lang",)).select(
         "doc_id", "lang", "quality_score"
     )
@@ -217,7 +230,7 @@ def _doc_quality_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_keep_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.functions.textstats import spark_stat_columns
 
-    docs = _spread(_load(spark, sf_dir, "documents"), spark)
+    docs = _documents(spark, sf_dir)
     stats = spark_stat_columns("text")
     keep = (
         (stats["n_chars"] >= 100)
@@ -234,15 +247,13 @@ def _doc_keep_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import fingerprints
 
-    return fingerprints(_spread(_load(spark, sf_dir, "documents"), spark)).select(
-        "doc_id", "fingerprint"
-    )
+    return fingerprints(_documents(spark, sf_dir)).select("doc_id", "fingerprint")
 
 
 def _doc_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import dup_ngram_char_frac
 
-    return dup_ngram_char_frac(_spread(_load(spark, sf_dir, "documents"), spark), n=2)
+    return dup_ngram_char_frac(_documents(spark, sf_dir), n=2)
 
 
 def _doc_dup_ngrams5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,19 +261,19 @@ def _doc_dup_ngrams5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the generalized core against the parameterized oracle
     from contessa_spark.operators.text_analysis import dup_ngram_char_frac
 
-    return dup_ngram_char_frac(_spread(_load(spark, sf_dir, "documents"), spark), n=5)
+    return dup_ngram_char_frac(_documents(spark, sf_dir), n=5)
 
 
 def _doc_dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import dup_line_fracs
 
-    return dup_line_fracs(_spread(_load(spark, sf_dir, "documents"), spark))
+    return dup_line_fracs(_documents(spark, sf_dir))
 
 
 def _doc_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import top_ngram_char_frac
 
-    return top_ngram_char_frac(_spread(_load(spark, sf_dir, "documents"), spark), ns=(2, 3, 4))
+    return top_ngram_char_frac(_documents(spark, sf_dir), ns=(2, 3, 4))
 
 
 def _doc_pack_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +282,7 @@ def _doc_pack_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import pack_documents
 
     return pack_documents(
-        _spread(_load(spark, sf_dir, "documents"), spark),
+        _documents(spark, sf_dir),
         budget_tokens=2048,
         n_buckets=8,
         bucket_col=F.pmod(F.col("doc_id"), F.lit(8)),
@@ -285,7 +296,7 @@ def _doc_pack_bfd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import pack_documents_bfd
 
     return pack_documents_bfd(
-        _spread(_load(spark, sf_dir, "documents"), spark),
+        _documents(spark, sf_dir),
         budget_tokens=2048,
         n_buckets=8,
         bucket_col=F.pmod(F.col("doc_id"), F.lit(8)),
@@ -295,13 +306,13 @@ def _doc_pack_bfd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_alpha_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import alpha_word_stats
 
-    return alpha_word_stats(_spread(_load(spark, sf_dir, "documents"), spark))
+    return alpha_word_stats(_documents(spark, sf_dir))
 
 
 def _doc_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import line_stats
 
-    return line_stats(_spread(_load(spark, sf_dir, "documents"), spark))
+    return line_stats(_documents(spark, sf_dir))
 
 
 def _doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,7 +357,7 @@ def _token_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import detect_language
 
-    return detect_language(_spread(_load(spark, sf_dir, "documents"), spark))
+    return detect_language(_documents(spark, sf_dir))
 
 
 def _doc_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,9 +523,7 @@ def _doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repo convention)
     from contessa_spark.operators.retrieval import bm25_topk
 
-    return bm25_topk(
-        _spread(_load(spark, sf_dir, "documents"), spark), _BM25_QUERIES, k=10
-    )
+    return bm25_topk(_documents(spark, sf_dir), _BM25_QUERIES, k=10)
 
 
 #: query_id ↔ query embedding row (vec_id) for the hybrid retriever
@@ -531,7 +540,7 @@ def _doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.retrieval import bm25_topk, rrf_fuse
     from contessa_spark.operators.similarity import brute_force_topk
 
-    docs = _spread(_load(spark, sf_dir, "documents"), spark)
+    docs = _documents(spark, sf_dir)
     emb = _load(spark, sf_dir, "embeddings")
     lexical = bm25_topk(docs, _BM25_QUERIES, k=20).select(
         "query_id", "doc_id", "rank"
@@ -672,7 +681,7 @@ def _doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _load(spark, sf_dir, "documents")
     merges = train_bpe(docs, n_merges=128, max_words=5000)
-    return bpe_token_counts(_spread(docs, spark), merges)
+    return bpe_token_counts(_documents(spark, sf_dir), merges)
 
 
 def _doc_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,7 +692,7 @@ def _doc_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.functions.badwords import badword_stats
 
     return badword_stats(
-        _spread(_load(spark, sf_dir, "documents"), spark),
+        _documents(spark, sf_dir),
         words=["slow"],
         phrases=["row scan"],
     )
@@ -692,9 +701,7 @@ def _doc_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.text_analysis import chunk_documents
 
-    return chunk_documents(
-        _spread(_load(spark, sf_dir, "documents"), spark), chunk_tokens=64, overlap=8
-    )
+    return chunk_documents(_documents(spark, sf_dir), chunk_tokens=64, overlap=8)
 
 
 def _lm_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,7 +711,7 @@ def _lm_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TakeOrderedAndProject cap. Fully SQL-expressible → oracle-backed.
     from contessa_spark.functions.kenlm import top_ngram_counts
 
-    return top_ngram_counts(_spread(_load(spark, sf_dir, "documents"), spark), 3, 200)
+    return top_ngram_counts(_documents(spark, sf_dir), 3, 200)
 
 
 def _doc_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,7 +724,7 @@ def _doc_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle-backed lm_trigram_counts.
     from contessa_spark.functions.kenlm import kn_perplexity, train_kn
 
-    docs = _spread(_load(spark, sf_dir, "documents"), spark)
+    docs = _documents(spark, sf_dir)
     model = train_kn(docs, order=3, min_count=2, max_grams=200_000)
     return kn_perplexity(docs, model)
 
@@ -734,7 +741,7 @@ def _doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _load(spark, sf_dir, "documents")
     logp = train_unigram(docs, vocab_size=512, max_words=5000)
-    return unigram_token_counts(_spread(docs, spark), logp)
+    return unigram_token_counts(_documents(spark, sf_dir), logp)
 
 
 def _doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -750,7 +757,7 @@ def _doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _load(spark, sf_dir, "documents")
     vocab = train_wordpiece(docs, vocab_size=512, max_words=5000)
-    return wordpiece_token_counts(_spread(docs, spark), vocab)
+    return wordpiece_token_counts(_documents(spark, sf_dir), vocab)
 
 
 def _doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,25 +802,25 @@ def _doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_train_docs=2000,
         label_fn=keep_label,
     )
-    return classify_quality(_spread(docs, spark), w)
+    return classify_quality(_documents(spark, sf_dir), w)
 
 
 def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.dedup import exact_dedup
 
-    return exact_dedup(_spread(_load(spark, sf_dir, "documents"), spark)).select("doc_id")
+    return exact_dedup(_documents(spark, sf_dir)).select("doc_id")
 
 
 def _doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.dedup import dedup_doc_lines
 
-    return dedup_doc_lines(_spread(_load(spark, sf_dir, "documents"), spark))
+    return dedup_doc_lines(_documents(spark, sf_dir))
 
 
 def _corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.dedup import corpus_line_dedup
 
-    return corpus_line_dedup(_spread(_load(spark, sf_dir, "documents"), spark))
+    return corpus_line_dedup(_documents(spark, sf_dir))
 
 
 #: target mixture for the doc_mixture_sample query — shared with its
@@ -822,16 +829,12 @@ MIX_WEIGHTS = {"en": 0.4, "zh": 0.2, "de": 0.2, "fr": 0.1, "es": 0.1}
 
 
 def _doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow.parquet as pq
-
     from contessa_spark.operators.text_analysis import tfidf_top_terms
 
     # n_docs from the parquet footer — no Spark job, no second corpus
     # scan (at production scale: the Iceberg snapshot's row-count stat)
-    n_docs = pq.ParquetFile(
-        os.path.join(sf_dir, "documents.parquet")
-    ).metadata.num_rows
-    return tfidf_top_terms(_spread(_load(spark, sf_dir, "documents"), spark), k=5, n_docs=n_docs)
+    n_docs = _documents_footer(sf_dir).num_rows
+    return tfidf_top_terms(_documents(spark, sf_dir), k=5, n_docs=n_docs)
 
 
 def _doc_textnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,9 +844,7 @@ def _doc_textnorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pytest-gated (tests/test_textnorm.py)
     from contessa_spark.functions.textnorm import normalize_text
 
-    return normalize_text(
-        _spread(_load(spark, sf_dir, "documents"), spark), mojibake=False
-    )
+    return normalize_text(_documents(spark, sf_dir), mojibake=False)
 
 
 #: train/val/test weights for the split query; German gets a larger
@@ -938,7 +939,7 @@ def _doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _corpus_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.dedup import corpus_sentence_dedup
 
-    return corpus_sentence_dedup(_spread(_load(spark, sf_dir, "documents"), spark))
+    return corpus_sentence_dedup(_documents(spark, sf_dir))
 
 
 def _doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -947,7 +948,7 @@ def _doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold (operator default)
     from contessa_spark.operators.dedup import substring_dedup
 
-    return substring_dedup(_spread(_load(spark, sf_dir, "documents"), spark), k=3)
+    return substring_dedup(_documents(spark, sf_dir), k=3)
 
 
 def _doc_substring_dedup_dropall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,26 +956,17 @@ def _doc_substring_dedup_dropall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # span is stripped (no canonical copy survives)
     from contessa_spark.operators.dedup import substring_dedup
 
-    return substring_dedup(
-        _spread(_load(spark, sf_dir, "documents"), spark), k=3, keep_first=False
-    )
+    return substring_dedup(_documents(spark, sf_dir), k=3, keep_first=False)
 
 
 def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow.parquet as pq
-
     from contessa_spark.operators.dedup import ngram_jaccard_pairs
 
     # n_docs from the parquet footer (the tfidf trick) — skips the
     # block-count job; at production scale: the snapshot's row count
-    n_docs = pq.ParquetFile(
-        os.path.join(sf_dir, "documents.parquet")
-    ).metadata.num_rows
+    n_docs = _documents_footer(sf_dir).num_rows
     return ngram_jaccard_pairs(
-        _spread(_load(spark, sf_dir, "documents"), spark),
-        k=3,
-        threshold=0.1,
-        n_docs=n_docs,
+        _documents(spark, sf_dir), k=3, threshold=0.1, n_docs=n_docs
     )
 
 
@@ -985,9 +977,7 @@ def _dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reproduces exactly that with a HAVING count(*) <= max_df filter
     from contessa_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        _spread(_load(spark, sf_dir, "documents"), spark), k=3, threshold=0.1, max_df=30
-    )
+    return ngram_jaccard_pairs(_documents(spark, sf_dir), k=3, threshold=0.1, max_df=30)
 
 
 def _doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -996,7 +986,7 @@ def _doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actually shares grams — production uses n=13 (GPT-3 appendix C)
     from contessa_spark.operators.decontaminate import ngram_contamination
 
-    docs = _spread(_load(spark, sf_dir, "documents"), spark)
+    docs = _documents(spark, sf_dir)
     bench = docs.where(F.col("doc_id") % 50 == 0)
     return ngram_contamination(docs, bench, n=3)
 
@@ -1007,23 +997,20 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB recursive CTE over the identical pair set
     from contessa_spark.operators.dedup import dedup_components, ngram_jaccard_pairs
 
-    import pyarrow.parquet as pq
-
-    docs = _load(spark, sf_dir, "documents")
-    n_docs = pq.ParquetFile(
-        os.path.join(sf_dir, "documents.parquet")
-    ).metadata.num_rows
+    n_docs = _documents_footer(sf_dir).num_rows
     pairs = ngram_jaccard_pairs(
-        _spread(docs, spark), k=3, threshold=0.1, n_docs=n_docs
+        _documents(spark, sf_dir), k=3, threshold=0.1, n_docs=n_docs
     )
-    return dedup_components(pairs, all_ids=docs.select("doc_id"))
+    return dedup_components(
+        pairs, all_ids=_load(spark, sf_dir, "documents").select("doc_id")
+    )
 
 
 def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.dedup import minhash_lsh_candidates
 
     return minhash_lsh_candidates(
-        _spread(_load(spark, sf_dir, "documents"), spark),
+        _documents(spark, sf_dir),
         k=3, n_hashes=32, bands=16, threshold=0.1
     )
 
@@ -1034,9 +1021,7 @@ def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall gap, now gone); equality to brute force is pytest-gated
     from contessa_spark.operators.dedup import simhash_near_dups
 
-    return simhash_near_dups(
-        _spread(_load(spark, sf_dir, "documents"), spark), max_hamming=7
-    )
+    return simhash_near_dups(_documents(spark, sf_dir), max_hamming=7)
 
 
 def _dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1236,7 +1221,7 @@ def _media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the single-file documents scan yields ONE split; the synth+decode
     # python chain inherits it and serializes onto one core without
     # the round-robin spread (no-op at production split counts)
-    docs = _spread(_load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = _documents(spark, sf_dir).select("doc_id")
 
     def make_media(batches):
         for pdf in batches:
@@ -1358,7 +1343,7 @@ def _media_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from contessa_spark.operators.multimodal import decode_audio, fake_wav_bytes
 
-    docs = _spread(_load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = _documents(spark, sf_dir).select("doc_id")
 
     def make_media(batches):
         for pdf in batches:
@@ -1387,7 +1372,7 @@ def _media_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from contessa_spark.operators.multimodal import decode_video, fake_mp4_bytes
 
-    docs = _spread(_load(spark, sf_dir, "documents").select("doc_id"), spark)
+    docs = _documents(spark, sf_dir).select("doc_id")
 
     def make_media(batches):
         for pdf in batches:

@@ -20,15 +20,8 @@ fusing changes nothing semantically.
 from __future__ import annotations
 
 from contessa_spark.functions.langid import detect
-from contessa_spark.functions.perplexity import perplexity
 from contessa_spark.functions.scrub import scrub_text
-from contessa_spark.functions.textstats import (
-    py_mean_word_len,
-    py_n_chars,
-    py_repetition,
-    py_stopword_frac,
-    py_symbol_ratio,
-)
+from contessa_spark.functions.textstats import py_symbol_ratio
 
 FIELDS = [
     ("lang_pred", "string"),
@@ -137,23 +130,6 @@ def annotate_rows(texts):
             cols["stopword_frac"][i] = int(stop_cnt[i]) / n
             cols["mean_word_len"][i] = int(wlen_sum[i]) / n
     return cols
-
-
-def annotate_texts(texts):
-    """Back-compat slice: (lang_pred, lang_conf, ppl, scrubbed, changed).
-    Scrubbed text is materialized (None-coalesced) here."""
-    cols = annotate_rows(texts)
-    scrubbed = [
-        s if s is not None else (t if isinstance(t, str) else "")
-        for s, t in zip(cols["scrubbed_text"], texts)
-    ]
-    return (
-        cols["lang_pred"],
-        cols["lang_conf"],
-        cols["ppl"],
-        scrubbed,
-        cols["pii_changed"],
-    )
 
 
 def spark_udf():

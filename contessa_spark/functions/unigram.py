@@ -313,34 +313,6 @@ def train_unigram(
     )
 
 
-def unigram_encode_udf(logp: Dict[str, float]):
-    """pandas UDF: text → array<string> of unigram pieces (lowercased
-    whitespace words, Viterbi per word, per-worker memo — the same
-    Zipf-word memoization as the BPE apply)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    memo: Dict[str, List[str]] = {}
-    floor = _vocab_floor(logp)
-
-    def _enc(texts):
-        out = []
-        for t in texts:
-            toks: List[str] = []
-            for w in (t if isinstance(t, str) else "").lower().split():
-                got = memo.get(w)
-                if got is None:
-                    got = _viterbi(w, logp, floor)
-                    if len(memo) < 2_000_000:
-                        memo[w] = got
-                toks.extend(got)
-            out.append(toks)
-        return pd.Series(out)
-
-    _enc.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_enc, T.ArrayType(T.StringType()))
-
-
 def unigram_token_counts(
     df: DataFrame,
     logp: Dict[str, float],

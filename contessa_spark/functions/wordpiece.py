@@ -200,27 +200,6 @@ def _make_word_encoder(vocab: List[str]):
     return enc
 
 
-def wordpiece_encode_udf(vocab: List[str]):
-    """pandas UDF: text → array<string> of WordPiece tokens
-    (lowercased whitespace words, greedy longest match, per-worker
-    memo)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def _enc(texts):
-        enc = _make_word_encoder(vocab)
-        out = []
-        for t in texts:
-            toks: List[str] = []
-            for w in (t if isinstance(t, str) else "").lower().split():
-                toks.extend(enc(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    _enc.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_enc, T.ArrayType(T.StringType()))
-
-
 def wordpiece_token_counts(
     df: DataFrame,
     vocab: List[str],

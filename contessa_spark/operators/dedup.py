@@ -15,7 +15,9 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
 * SimHash (Charikar 2002; Manku et al. WWW'07): 64-bit signature via a
   vectorized pandas UDF, near-dup = Hamming distance ≤ k emitted from
   capped rotated-band-key groups;
-* embedding cosine: LSH-bucketed or brute pair join over `array<float>`.
+* embedding cosine: exact blocked-GEMM all-pairs
+  (``embedding_near_dups_blocked``); the LSH-bucketed scale path is
+  ``similarity.hyperplane_lsh_join``.
 """
 
 from __future__ import annotations
@@ -57,6 +59,34 @@ def _cap_groups(
     return groups.where(F.size(list_col) <= max_df)
 
 
+def _emit_group_pairs(batches):
+    """``mapInPandas`` body: each ``_ids`` list (one band bucket / LSH
+    table bucket) → its sorted, deduplicated upper-triangle id pairs
+    ``(id_a < id_b)``. Pairs repeat across groups; callers ``distinct()``."""
+    import numpy as np
+    import pandas as pd
+
+    triu = {}
+    for pdf in batches:
+        ca, cb = [], []
+        for ids in pdf["_ids"]:
+            ds = np.unique(np.asarray(ids, dtype=np.int64))  # sort+dedup
+            g = len(ds)
+            if g < 2:
+                continue
+            t = triu.get(g)
+            if t is None:
+                t = np.triu_indices(g, 1)
+                triu[g] = t
+            xi, yi = t
+            ca.append(ds[xi])
+            cb.append(ds[yi])
+        if ca:
+            yield pd.DataFrame({"id_a": np.concatenate(ca), "id_b": np.concatenate(cb)})
+        else:
+            yield pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
+
+
 # ---------------------------------------------------------------- exact
 
 def fingerprint_col(text_col: str = "text") -> Column:
@@ -78,16 +108,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     fp = df.select(F.col(id_col), fingerprint_col(text_col).alias("fp"))
     keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col)).drop("fp")
     return df.join(keep, id_col, "left_semi")
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(fp, dup_count, keep_id) for groups with >1 member."""
-    return (
-        df.select(fingerprint_col(text_col).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.min(id_col).alias("keep_id"))
-        .where(F.col("dup_count") > 1)
-    )
 
 
 def dedup_doc_lines(
@@ -238,26 +258,6 @@ def _corpus_span_dedup(
 
 # ------------------------------------------------------------- shingles
 
-def shingle_col(text_col: str = "text", k: int = 3) -> Column:
-    """Distinct word k-gram shingles as array<string>. JVM-side:
-    split → sequence → transform(slice → concat_ws).
-
-    NOTE: higher-order array lambdas are INTERPRETED (no codegen) —
-    measured ~1.8ms/doc on 1.4k-word docs. This form is kept as the
-    SQL-comparable reference; the hot paths use ``shingles_udf``
-    (identical output, ~40× faster)."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"(?U)\s+"), lambda x: x != F.lit(""))
-    n = F.size(words)
-    shingles = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-    )
-    # guard: sequence(1, x<1) would count DOWN in Spark
-    return F.when(n >= k, F.array_distinct(shingles)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def py_shingles(text: str, k: int = 3) -> List[str]:
     """Pure core: distinct word k-gram shingles, first-occurrence order
     (matches array_distinct of the JVM form)."""
@@ -270,20 +270,6 @@ def py_shingles(text: str, k: int = 3) -> List[str]:
         if s not in seen:
             seen[s] = None
     return list(seen.keys())
-
-
-def shingles_udf(k: int = 3):
-    """pandas UDF: text → array<string> of distinct word k-grams."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def _sh(texts):
-        return pd.Series(
-            [py_shingles(t if isinstance(t, str) else "", k) for t in texts]
-        )
-
-    _sh.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_sh, T.ArrayType(T.StringType()))
 
 
 def _make_fnv64_memo():
@@ -981,22 +967,6 @@ def _ngram_jaccard_pairs_blocked(
 
 # --------------------------------------------------------- MinHash+LSH
 
-def minhash_signature(
-    shingles: Column, n_hashes: int = 64
-) -> Column:
-    """array<long> of n minhashes — min over xxhash64(shingle, seed_j).
-    Pure JVM; deterministic across partitionings. Reference form — the
-    hot path uses ``band_keys_udf`` (numpy affine minhash, same
-    collision statistics, ~40× faster than n interpreted transforms)."""
-    sigs = [
-        F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(j)))
-        )
-        for j in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
-
 _MERSENNE = (1 << 61) - 1
 
 
@@ -1058,48 +1028,21 @@ def _batch_band_keys(flat, lens, n_hashes, bands, A, B):
     return np.ascontiguousarray(signed.T), nz
 
 
-def band_keys_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
-    """pandas UDF: text → array<long> of LSH band keys.
-
-    Per batch: shingles → FNV-64 base hash per shingle (factorized) →
-    affine family ``(a_j·h + b_j) mod (2^61−1)`` → segment-min per doc
-    (the minhash signature) → vectorized FNV fold per band. All numpy;
-    deterministic; value-identical to the per-doc reference form.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    A, B = _affine_params(n_hashes)
-    _fnv64 = _make_fnv64_memo()
-
-    def _keys(texts):
-        flat, lens = _batch_shingle_hashes(texts, k, _fnv64)
-        km, nz = _batch_band_keys(flat, lens, n_hashes, bands, A, B)
-        empty = np.empty(0, dtype=np.int64)
-        out = [empty] * len(lens)
-        for idx, d in enumerate(np.flatnonzero(nz)):
-            out[d] = km[idx]
-        return pd.Series(out)
-
-    _keys.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_keys, T.ArrayType(T.LongType()))
-
-
 def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
     """pandas UDF: text → struct(keys: array<long> LSH band keys,
     hs: binary — the distinct shingle hashes packed as native int64
     bytes).
 
     ONE fused pass computes both what the candidate stage needs (band
-    keys — same derivation as ``band_keys_udf``) and what the verify
-    stage needs (the distinct FNV-64 shingle hash set): text crosses
-    the JVM↔Python boundary once and shingling/hashing runs once,
-    instead of a second shingle UDF over candidate docs. Exact Jaccard
-    over the hash sets equals Jaccard over the string shingle sets
-    unless two distinct shingles FNV-collide (~2⁻⁶⁴ per pair of
-    distinct shingles — negligible even at 10¹² docs per doc pair,
-    since only within-pair collisions matter).
+    keys: FNV-64 shingle hashes → affine minhash family
+    ``(a_j·h + b_j) mod (2^61−1)`` → per-band FNV fold, all numpy in
+    ``_batch_band_keys``) and what the verify stage needs (the distinct
+    FNV-64 shingle hash set): text crosses the JVM↔Python boundary once
+    and shingling/hashing runs once, instead of a second shingle UDF
+    over candidate docs. Exact Jaccard over the hash sets equals Jaccard
+    over the string shingle sets unless two distinct shingles
+    FNV-collide (~2⁻⁶⁴ per pair of distinct shingles — negligible even
+    at 10¹² docs per doc pair, since only within-pair collisions matter).
 
     ``hs`` is BINARY rather than array<long>: the signature table is
     persisted and scanned by three consumers (band explode + both
@@ -1219,34 +1162,9 @@ def minhash_lsh_candidates(
     )
     groups = _cap_groups(groups, "_ids", max_df, observation)
 
-    def emit_pairs(batches):
-        import numpy as np
-
-        triu = {}
-        for pdf in batches:
-            ca, cb = [], []
-            for ids in pdf["_ids"]:
-                ds = np.unique(np.asarray(ids, dtype=np.int64))  # sort+dedup
-                g = len(ds)
-                if g < 2:
-                    continue
-                t = triu.get(g)
-                if t is None:
-                    t = np.triu_indices(g, 1)
-                    triu[g] = t
-                xi, yi = t
-                ca.append(ds[xi])
-                cb.append(ds[yi])
-            if ca:
-                yield pd.DataFrame(
-                    {"id_a": np.concatenate(ca), "id_b": np.concatenate(cb)}
-                )
-            else:
-                yield pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-
-    cand = (
-        groups.mapInPandas(emit_pairs, schema="id_a long, id_b long").distinct()
-    )
+    cand = groups.mapInPandas(
+        _emit_group_pairs, schema="id_a long, id_b long"
+    ).distinct()
 
     sig_v = sig
     if verify_semi_join:
@@ -1578,6 +1496,8 @@ def dedup_components(
     return out
 
 
+# ------------------------------------------------- embedding near-dup
+
 def embedding_near_dups_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1650,81 +1570,6 @@ def embedding_near_dups_blocked(
 
     return pairs.select("ids_a", "ids_b", "vs_a", "vs_b").mapInPandas(
         block_sim, schema="id_a long, id_b long, cosine double"
-    )
-
-
-# ------------------------------------------------- embedding near-dup
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float/double> columns — pure JVM
-    (zip_with + aggregate), no UDF. Generic (any dim) but interpreted;
-    for hot pair-join paths use ``dot_fixed`` + precomputed norms."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product expanded to ``dim`` element_at terms — stays inside
-    whole-stage codegen (higher-order array lambdas do not), ~20×
-    faster on O(n²) pair joins."""
-    terms = [
-        F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_fixed(a, a, dim))
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    ids: Optional[List[int]] = None,
-    dim: Optional[int] = None,
-) -> DataFrame:
-    """Cosine ≥ threshold pairs. Brute pair join (id_a < id_b) — the
-    exactness baseline; at scale use similarity.hyperplane_lsh_join to
-    bucket first (same verify step).
-
-    Pass ``dim`` when known — inference costs an extra ``first()`` job;
-    a wrong declared value raises per-row (``dim_check``)."""
-    from contessa_spark.operators.similarity import dim_check
-
-    base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v"))
-    if ids is not None:
-        base = base.where(F.col("_id").isin(ids))
-    if dim is None:
-        # dim from the schema-carrying first row; norms computed ONCE per
-        # row before the pair join (n rows) instead of per pair (n²)
-        first = base.select(F.size("_v")).first()
-        if first is None:
-            return base.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        dim = first[0]
-    normed = base.where(dim_check(F.col("_v"), dim)).withColumn(
-        "_n", norm_fixed(F.col("_v"), dim)
-    )
-    a = normed.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_n").alias("na"))
-    b = normed.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), F.col("_n").alias("nb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            dot_fixed(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )
 
 

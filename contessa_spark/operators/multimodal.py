@@ -24,7 +24,6 @@ import struct
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -1307,29 +1306,3 @@ def decode_images(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.select("media_id", "payload").mapInPandas(_decode, schema=DECODED_SCHEMA)
-
-
-def resize_stub(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Metadata-only resize for the FAKEIMG container — kept for the
-    no-pixel-payload path; PNG payloads have the REAL kernel
-    (``resize_images``: decode → nearest-neighbor → re-encode)."""
-    decoded = decode_images(df)
-    return decoded.where("ok").select(
-        "media_id",
-        F.lit(target_w).alias("width"),
-        F.lit(target_h).alias("height"),
-        (F.col("mean_byte")).alias("mean_byte"),
-    )
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: explode a deterministic frame
-    index list per media row (real impl would emit decoded frames)."""
-    decoded = decode_images(df)
-    n_frames = (F.col("n_bytes") % 120 + 1).cast("int")
-    return decoded.where("ok").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )

@@ -19,13 +19,11 @@ the r1-r3 pure-expression forms were exactly as distributed, but at
 dim=64 their expanded/interpreted trees cost seconds-per-call of
 driver-side PLANNING + janino compile (measured ~2 s for one 64-term
 dot, ~30 s for IVF's 16×64 cell scorer) — the plan, not the data, was
-the bottleneck. ``signature_col``/``cosine_sim`` remain as the
-SQL-comparable reference forms.
+the bottleneck.
 """
 
 from __future__ import annotations
 
-import math
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -34,15 +32,11 @@ from pyspark.sql import functions as F
 def dim_check(vec: Column, dim: int) -> Column:
     """Per-row declared-dim guard as a FILTER predicate: true when the
     vector's size equals ``dim``, raises otherwise. A wrong declared
-    dim otherwise produces silently-wrong math (truncated dots, NULLed
-    norms via out-of-range ``element_at``, the bucket-collapse
-    degeneration the LSH docstrings document). Use via ``.where(
-    dim_check(col, dim))`` — a predicate evaluates ONCE per row;
-    wrapping the vector column itself in a CASE WHEN would re-embed the
-    branch into every one of the ``dim`` expanded dot terms and blow
-    the generated method past janino's 64 KB limit (measured at
-    dim=64). ``size()`` is O(1) on arrays — no extra Spark job, unlike
-    a ``first()`` check."""
+    dim otherwise produces silently-wrong math (GEMMs against planes or
+    pivots of the wrong width, the bucket-collapse degeneration the LSH
+    docstrings document). Use via ``.where(dim_check(col, dim))`` — a
+    predicate evaluates ONCE per row. ``size()`` is O(1) on arrays — no
+    extra Spark job, unlike a ``first()`` check."""
     return F.when(F.size(vec) == dim, F.lit(True)).otherwise(
         F.raise_error(
             F.concat(
@@ -77,33 +71,11 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> List[List[float]]:
     return planes
 
 
-def signature_col(vec: Column, planes: List[List[float]]) -> Column:
-    """int bucket id: sign bits of plane dot products. Pure JVM —
-    plane vectors are array literals folded by Catalyst. Reference
-    form (SQL-comparable); the operators use ``bucket_signatures_udf``
-    — same bit rule, one numpy GEMM per Arrow batch, and crucially a
-    SMALL plan node: n_tables × n_bits of these interpreted
-    zip_with/aggregate trees cost seconds of driver-side planning per
-    execution (measured — the same janino/planning tax the
-    brute-force dot expansion paid)."""
-    bits = []
-    for i, p in enumerate(planes):
-        lit = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(vec, lit, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-        )
-        bits.append(F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def bucket_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     """pandas UDF: vector → array<long> of per-table sign-bucket ids
-    (index = table). Same planes and bit rule as ``signature_col``
-    (bit i set iff dot(plane_i, v) ≥ 0; bucket = Σ 1<<i), computed as
-    one (batch × n_tables·n_bits) GEMM."""
+    (index = table). Table t uses ``_hyperplanes(dim, n_bits, seed +
+    7919·t)``; bit i is set iff dot(plane_i, v) ≥ 0 and bucket = Σ 1<<i,
+    all computed as one (batch × n_tables·n_bits) GEMM."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -466,13 +438,15 @@ def hyperplane_lsh_join(
     dim: Optional[int] = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via LSH pre-bucketing — the 10⁹-vector
-    path that ``embedding_near_dups`` (exact all-pairs) cannot walk.
+    path that ``dedup.embedding_near_dups_blocked`` (exact all-pairs
+    GEMM) cannot walk.
 
-    Plan: per table, a sign-signature bucket id (deterministic
-    hyperplanes, pure JVM); candidate pairs emitted per (table, bucket)
-    group — same single-pass group emission as MinHash banding,
+    Plan: per table, a sign-signature bucket id
+    (``bucket_signatures_udf``: deterministic hyperplanes, one GEMM per
+    Arrow batch); candidate pairs emitted per (table, bucket) group by
+    the same emitter as MinHash banding (``dedup._emit_group_pairs``),
     including the ``max_df`` hot-bucket cap (``dedup._cap_groups``) —
-    then every candidate is verified with an exact codegen dot product.
+    then every candidate is verified with ``pair_cosine_udf``.
     No cross join and no all-blocks-pair join anywhere; shuffles carry
     (table, bucket, id) entries and candidate id pairs only.
 
@@ -481,9 +455,7 @@ def hyperplane_lsh_join(
     (8 bits × 6 tables) gives ≈ 0.96; for low thresholds use fewer
     bits / more tables.
     """
-    import pandas as pd
-
-    from contessa_spark.operators.dedup import _cap_groups
+    from contessa_spark.operators.dedup import _cap_groups, _emit_group_pairs
 
     base = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -512,32 +484,9 @@ def hyperplane_lsh_join(
     )
     groups = _cap_groups(groups, "_ids", max_df, observation)
 
-    def emit_pairs(batches):
-        import numpy as np
-
-        triu = {}
-        for pdf in batches:
-            ca, cb = [], []
-            for ids in pdf["_ids"]:
-                ds = np.unique(np.asarray(ids, dtype=np.int64))  # sort+dedup
-                g = len(ds)
-                if g < 2:
-                    continue
-                t = triu.get(g)
-                if t is None:
-                    t = np.triu_indices(g, 1)
-                    triu[g] = t
-                xi, yi = t
-                ca.append(ds[xi])
-                cb.append(ds[yi])
-            if ca:
-                yield pd.DataFrame(
-                    {"id_a": np.concatenate(ca), "id_b": np.concatenate(cb)}
-                )
-            else:
-                yield pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-
-    cand = groups.mapInPandas(emit_pairs, schema="id_a long, id_b long").distinct()
+    cand = groups.mapInPandas(
+        _emit_group_pairs, schema="id_a long, id_b long"
+    ).distinct()
 
     a = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))
     b = base.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"))

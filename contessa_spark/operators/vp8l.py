@@ -374,16 +374,6 @@ def _inv_predictor(pix: List[int], w: int, h: int, bits: int, tiles: List[int]) 
         pix[p] = _add_pixels(pix[p], pred)
 
 
-def _ct_delta(t: int, c: int) -> int:
-    """Signed (int8) cross-channel delta: (t * c) >> 5 in C semantics
-    (arithmetic shift of the signed product)."""
-    if t >= 128:
-        t -= 256
-    if c >= 128:
-        c -= 256
-    return (t * c) >> 5
-
-
 def _signed8(a):
     """Vectorized int8 reinterpretation of 0..255 values (int32 out)."""
     import numpy as np

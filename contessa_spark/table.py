@@ -6,7 +6,8 @@ prefixes the table name with ``quality_check_`` / ``consistency_check_``.
 
 Spark realization: the checked table is either a catalog identifier
 (``spark.table``) or a parquet/Iceberg path; the result table is a
-path (sandbox) or Iceberg identifier (production). Dynamic per-table
+caller-supplied path (sandbox) or Iceberg identifier (production), so
+no ``ResultTable`` type derives its name. Dynamic per-table
 SQLAlchemy classes are unnecessary — a fixed schema + table-name
 parameter replaces them (SURVEY §2.3).
 """
@@ -33,19 +34,3 @@ class Table:
     @property
     def view_name(self) -> str:
         return self.fullname.replace(".", "__")
-
-
-@dataclass
-class ResultTable:
-    """quality_check_<table> naming (contessa/models.py:247-271)."""
-
-    schema_name: Optional[str]
-    table_name: str
-    prefix: str = "quality_check_"
-
-    @property
-    def fullname(self) -> str:
-        name = f"{self.prefix}{self.table_name}"
-        if self.schema_name:
-            return f"{self.schema_name}.{name}"
-        return name

@@ -102,7 +102,7 @@ def test_lsh_buckets_stable_across_partitionings(spark):
     """Hyperplane signatures and minhash band keys must not depend on
     the physical partitioning — a repartitioned corpus yields the same
     buckets/pairs (no RNG state, no partition-id leakage)."""
-    from contessa_spark.operators.dedup import band_keys_udf
+    from contessa_spark.operators.dedup import lsh_signature_udf
     from contessa_spark.operators.similarity import hyperplane_lsh_join
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -122,13 +122,15 @@ def test_lsh_buckets_stable_across_partitionings(spark):
     k1 = {
         (r["doc_id"], tuple(r["k"]))
         for r in docs.select(
-            "doc_id", band_keys_udf(3, 32, 16)(F.col("text")).alias("k")
+            "doc_id", lsh_signature_udf(3, 32, 16)(F.col("text")).keys.alias("k")
         ).collect()
     }
     k2 = {
         (r["doc_id"], tuple(r["k"]))
         for r in docs.repartition(5)
-        .select("doc_id", band_keys_udf(3, 32, 16)(F.col("text")).alias("k"))
+        .select(
+            "doc_id", lsh_signature_udf(3, 32, 16)(F.col("text")).keys.alias("k")
+        )
         .collect()
     }
     assert k1 == k2
@@ -233,12 +235,12 @@ def test_simhash_banding_is_lossless(spark, max_h):
 
 def test_hyperplane_lsh_join_recall_and_plan(spark):
     """The scale path for embedding near-dup: bucketed candidates +
-    exact verify. Gate: recall ≥ 0.9 vs the exact all-pairs operator on
+    exact verify. Gate: recall ≥ 0.9 vs the exact blocked-GEMM operator on
     planted near-dups, identical cosines for found pairs, and a plan
     with NO cross/nested-loop join."""
     import numpy as np
 
-    from contessa_spark.operators.dedup import embedding_near_dups
+    from contessa_spark.operators.dedup import embedding_near_dups_blocked
     from contessa_spark.operators.similarity import hyperplane_lsh_join
 
     rng = np.random.RandomState(11)
@@ -257,7 +259,7 @@ def test_hyperplane_lsh_join_recall_and_plan(spark):
 
     exact = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_near_dups(emb, threshold=0.95).collect()
+        for r in embedding_near_dups_blocked(emb, threshold=0.95).collect()
     }
     lsh_df = hyperplane_lsh_join(emb, threshold=0.95, n_bits=8, n_tables=6)
     lsh = {(r["id_a"], r["id_b"]): r["cosine"] for r in lsh_df.collect()}
@@ -265,7 +267,7 @@ def test_hyperplane_lsh_join_recall_and_plan(spark):
     assert len(exact) >= 30
     assert set(lsh) <= set(exact)  # exact verify ⇒ no false positives
     for pair, cos in lsh.items():
-        assert cos == exact[pair]  # same codegen dot ⇒ identical values
+        assert cos == exact[pair]  # float64 cosine, 6 dp ⇒ identical values
     recall = len(lsh) / len(exact)
     assert recall >= 0.9, recall
 
@@ -413,27 +415,27 @@ def test_dedup_components_raises_when_unconverged(spark):
         dedup_components(pairs, max_iters=0)
 
 
-def test_embedding_near_dups_declared_dim(spark):
+def test_hyperplane_lsh_join_declared_dim(spark):
     """The declared-dim fast path must skip inference yet agree with
     the inferred path; a WRONG declared dim must raise loudly instead
-    of silently truncating the dot product (ADVICE r3)."""
+    of silently bucketing and scoring the wrong width (ADVICE r3)."""
     import pytest
 
-    from contessa_spark.operators.dedup import embedding_near_dups
+    from contessa_spark.operators.similarity import hyperplane_lsh_join
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     inferred = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dups(emb, threshold=0.3).collect()
+        for r in hyperplane_lsh_join(emb, threshold=0.3).collect()
     }
     declared = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dups(emb, threshold=0.3, dim=64).collect()
+        for r in hyperplane_lsh_join(emb, threshold=0.3, dim=64).collect()
     }
     assert declared == inferred and len(declared) > 0
 
     with pytest.raises(Exception, match="declared dim=16"):
-        embedding_near_dups(emb, threshold=0.3, dim=16).collect()
+        hyperplane_lsh_join(emb, threshold=0.3, dim=16).collect()
 
 
 def test_substring_dedup_semantics(spark):

@@ -150,21 +150,22 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     from pyspark.sql import functions as F
 
     from contessa_spark.operators.similarity import (
-        _hyperplanes,
         brute_force_topk,
+        bucket_signatures_udf,
         hyperplane_lsh_topk,
-        signature_col,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 20)
 
     # signatures must actually spread the corpus (>= 2^(n_bits-1)
-    # distinct buckets on 500 near-uniform vectors)
-    planes = _hyperplanes(64, 3, 42)
+    # distinct buckets on 500 near-uniform vectors); table 0 uses the
+    # planes _hyperplanes(64, 3, 42)
     n_buckets = (
         emb.select(
-            signature_col(F.col("embedding").cast("array<double>"), planes).alias("b")
+            bucket_signatures_udf(64, 3, 1, 42)(
+                F.col("embedding").cast("array<double>")
+            )[0].alias("b")
         )
         .distinct()
         .count()
@@ -276,22 +277,37 @@ def test_token_topk_two_level_plan(spark):
     assert re.search(r"_r1#\d+ <= 10", plan), "level-1 survivors not filtered"
 
 
-def test_spread_only_when_underpartitioned(spark):
-    """_spread must repartition a single-split scan up to the session
-    parallelism and NO-OP when the input already has >= that many
-    partitions (at production scale splits >> cores, so the branch
-    never fires)."""
+def test_documents_spreads_only_when_underpartitioned(spark, tmp_path, monkeypatch):
+    """_documents must round-robin a documents table with fewer row
+    groups than the session parallelism up to that parallelism, and
+    leave a table with enough row groups unshuffled. The decision
+    comes from the parquet footer: building the frame must never touch
+    ``DataFrame.rdd`` (a plan→RDD conversion per query build)."""
+    import pyarrow.parquet as pq
+
     import __spark_entry__ as entry_mod
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    spread = entry_mod._spread(docs, spark)
-    assert (
-        spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    )
+    def no_rdd(self):
+        raise AssertionError("_documents touched DataFrame.rdd")
 
-    wide = docs.repartition(spark.sparkContext.defaultParallelism + 3)
-    assert entry_mod._spread(wide, spark) is wide  # identity: no extra shuffle
+    # patch the concrete (classic) DataFrame class the session returns
+    monkeypatch.setattr(type(spark.range(1)), "rdd", property(no_rdd))
+    with pytest.raises(AssertionError, match="touched DataFrame.rdd"):
+        spark.range(1).rdd
+    target = spark.sparkContext.defaultParallelism
+    sf = "/root/testdata/sf0.01"
+
+    assert pq.ParquetFile(f"{sf}/documents.parquet").metadata.num_row_groups < target
+    spread = _plan(entry_mod._documents(spark, sf))
+    assert f"RoundRobinPartitioning({target})" in spread, spread
+
+    table = pq.read_table(f"{sf}/documents.parquet")
+    pq.write_table(
+        table, tmp_path / "documents.parquet", row_group_size=-(-table.num_rows // target)
+    )
+    assert pq.ParquetFile(tmp_path / "documents.parquet").metadata.num_row_groups >= target
+    wide = _plan(entry_mod._documents(spark, str(tmp_path)))
+    assert "Exchange" not in wide, wide
 
 
 def test_semantic_dedup_plan_no_cross_join(spark):
