@@ -5,8 +5,10 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
 
 * exact: one hash-aggregate on a fingerprint column — the canonical
   web-dedup first pass (URL- or content-keyed);
-* n-gram Jaccard: exact pairwise similarity via a shingle inverted
-  index (explode → self-join on shingle → group by pair) — never a
+* n-gram Jaccard: exact pairwise similarity over hashed shingle sets —
+  uncapped, block-pair local counting (each doc replicated to its B
+  block-pair groups, one ``applyInArrow`` counter per group); capped,
+  the shingle posting lists with vectorized pair emission — never a
   cross join;
 * MinHash+LSH: ONE fused pandas-UDF pass computes band keys + the
   shingle hash set, candidate pairs come from capped band-bucket
@@ -18,6 +20,12 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
 * embedding cosine: exact blocked-GEMM all-pairs
   (``embedding_near_dups_blocked``); the LSH-bucketed scale path is
   ``similarity.hyperplane_lsh_join``.
+
+Every pair emitter — the capped n-gram posting lists, MinHash band
+buckets, SimHash band groups, ``similarity.hyperplane_lsh_join``'s
+table buckets (all through ``_emit_group_pairs`` under ``mapInArrow``)
+and the uncapped block-pair counter — draws its pairs from one
+in-run generator, ``_run_pairs``.
 """
 
 from __future__ import annotations
@@ -59,32 +67,76 @@ def _cap_groups(
     return groups.where(F.size(list_col) <= max_df)
 
 
-def _emit_group_pairs(batches):
-    """``mapInPandas`` body: each ``_ids`` list (one band bucket / LSH
-    table bucket) → its sorted, deduplicated upper-triangle id pairs
-    ``(id_a < id_b)``. Pairs repeat across groups; callers ``distinct()``."""
+def _run_pairs(start, L, first=0):
+    """The in-run pair generator every pair emitter shares: position
+    ``first + i`` pairs with the ``L[i]`` positions ``start[i],
+    start[i] + 1, …`` (earlier positions of its run). Returns the
+    ``(x, y)`` position arrays, ``x < y``, all numpy — no per-group
+    loop and no cached triangle indices. int32 wherever it fits:
+    the transient pair arrays set a worker's peak RSS."""
     import numpy as np
-    import pandas as pd
 
-    triu = {}
-    for pdf in batches:
-        ca, cb = [], []
-        for ids in pdf["_ids"]:
-            ds = np.unique(np.asarray(ids, dtype=np.int64))  # sort+dedup
-            g = len(ds)
-            if g < 2:
-                continue
-            t = triu.get(g)
-            if t is None:
-                t = np.triu_indices(g, 1)
-                triu[g] = t
-            xi, yi = t
-            ca.append(ds[xi])
-            cb.append(ds[yi])
-        if ca:
-            yield pd.DataFrame({"id_a": np.concatenate(ca), "id_b": np.concatenate(cb)})
-        else:
-            yield pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
+    tot = int(L.sum())
+    dt = np.int32 if max(first + len(L), tot) < (1 << 31) else np.int64
+    y = np.repeat(np.arange(first, first + len(L), dtype=dt), L)
+    base = (np.cumsum(L) - L).astype(dt)
+    x = np.arange(tot, dtype=dt) - np.repeat(base, L) + np.repeat(start.astype(dt), L)
+    return x, y
+
+
+def _id_pairs(cols, x, y):
+    ids = cols["_id"]
+    return {"id_a": ids[x], "id_b": ids[y]}
+
+
+def _emit_group_pairs(step=_id_pairs):
+    """``mapInArrow`` body over one ``collect_list`` column — of ``_id``
+    or of ``struct(_id, *payload)`` — holding one group per row (a
+    posting list, band bucket or LSH table bucket). Reads the list's
+    offsets and child arrays, lexsorts by (group, id), drops repeated
+    (group, id) entries and pairs every group's upper triangle
+    (``id_a < id_b``) through ``_run_pairs``.
+
+    ``step(cols, x, y)`` turns a batch's pairs into output columns:
+    ``cols`` maps ``_id`` and every payload field to its sorted, deduped
+    values, and ``x``/``y`` index them. Default: ``(id_a, id_b)``. Pairs
+    repeat across groups; callers aggregate or ``distinct()``."""
+
+    def emit(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for b in batches:
+            lists = b.column(0)
+            flat = pc.list_flatten(lists)
+            if pa.types.is_struct(flat.type):
+                cols = {
+                    f.name: a.to_numpy(zero_copy_only=False)
+                    for f, a in zip(flat.type, flat.flatten())
+                }
+            else:
+                cols = {"_id": flat.to_numpy(zero_copy_only=False)}
+            lens = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
+            grp = np.repeat(np.arange(len(lens)), lens)
+            # the id column may be int: output ids are declared long
+            ids = cols["_id"] = cols["_id"].astype(np.int64, copy=False)
+            order = np.lexsort((ids, grp))
+            grp, ids = grp[order], ids[order]
+            keep = np.ones(len(ids), dtype=bool)
+            np.logical_or(grp[1:] != grp[:-1], ids[1:] != ids[:-1], out=keep[1:])
+            order, grp = order[keep], grp[keep]
+            cols = {n: v[order] for n, v in cols.items()}
+            newrun = np.ones(len(grp), dtype=bool)
+            np.not_equal(grp[1:], grp[:-1], out=newrun[1:])
+            start = np.flatnonzero(newrun)[np.cumsum(newrun) - 1]
+            x, y = _run_pairs(start, np.arange(len(grp)) - start)
+            out = step(cols, x, y)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(v) for v in out.values()], names=list(out)
+            )
+
+    return emit
 
 
 # ---------------------------------------------------------------- exact
@@ -432,8 +484,6 @@ def ngram_jaccard_pairs(
         return _ngram_jaccard_pairs_blocked(
             df, id_col, text_col, k, threshold, block_docs, n_docs
         )
-    import pandas as pd
-
     # asNondeterministic (guide §4.4): deterministic python UDF
     # projections get PUSHED THROUGH the caller's round-robin spread
     # exchange and then re-extracted above it — two ArrowEvalPython
@@ -458,15 +508,7 @@ def ngram_jaccard_pairs(
     )
     groups = _cap_groups(groups, "_docs", max_df, observation)
 
-    def emit_pairs(batches):
-        import numpy as np
-
-        # vectorized upper-triangle pair emission: the nested python
-        # loop is O(g²) *interpreter* steps (2M list-appends for one
-        # g=2000 group); numpy triu indexing + ONE concat per Arrow
-        # batch measured 11× faster on the sf0.1 shingle distribution.
-        # triu index pairs are cached per group size (sizes repeat).
-        #
+    def partial_counts(cols, x, y):
         # Pairs are PARTIALLY COUNTED per Arrow batch before leaving
         # Python (lexsort + run-length boundaries — all vectorized): a
         # near-dup pair at threshold 0.1 shares hundreds of shingles,
@@ -476,57 +518,27 @@ def ngram_jaccard_pairs(
         # groupBy sums the partial counts — identical `common`, ~an
         # order of magnitude fewer Python→JVM rows on near-dup-dense
         # corpora.
-        triu = {}
-        for pdf in batches:
-            ca, cb, cna, cnb = [], [], [], []
-            for docs in pdf["_docs"]:
-                g = len(docs)
-                if g < 2:
-                    continue
-                ids = np.fromiter((d["_id"] for d in docs), dtype=np.int64, count=g)
-                ns = np.fromiter((d["_n"] for d in docs), dtype=np.int64, count=g)
-                order = np.argsort(ids, kind="stable")
-                ids, ns = ids[order], ns[order]
-                t = triu.get(g)
-                if t is None:
-                    t = np.triu_indices(g, 1)
-                    triu[g] = t
-                xi, yi = t
-                ca.append(ids[xi])
-                cb.append(ids[yi])
-                cna.append(ns[xi])
-                cnb.append(ns[yi])
-            if ca:
-                ia = np.concatenate(ca)
-                ib = np.concatenate(cb)
-                na = np.concatenate(cna)
-                nb = np.concatenate(cnb)
-                order = np.lexsort((ib, ia))
-                ia, ib, na, nb = ia[order], ib[order], na[order], nb[order]
-                new = np.empty(len(ia), dtype=bool)
-                new[0] = True
-                np.logical_or(
-                    ia[1:] != ia[:-1], ib[1:] != ib[:-1], out=new[1:]
-                )
-                idx = np.flatnonzero(new)
-                cnt = np.diff(np.append(idx, len(ia)))
-                yield pd.DataFrame(
-                    {
-                        "id_a": ia[idx],
-                        "id_b": ib[idx],
-                        "na": na[idx],
-                        "nb": nb[idx],
-                        "cnt": cnt.astype(np.int64),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {"id_a": [], "id_b": [], "na": [], "nb": [], "cnt": []}
-                ).astype("int64")
+        import numpy as np
+
+        ids, ns = cols["_id"], cols["_n"]
+        ia, ib = ids[x], ids[y]
+        order = np.lexsort((ib, ia))
+        ia, ib, x, y = ia[order], ib[order], x[order], y[order]
+        new = np.ones(len(ia), dtype=bool)
+        np.logical_or(ia[1:] != ia[:-1], ib[1:] != ib[:-1], out=new[1:])
+        idx = np.flatnonzero(new)
+        return {
+            "id_a": ia[idx],
+            "id_b": ib[idx],
+            "na": ns[x[idx]],
+            "nb": ns[y[idx]],
+            "cnt": np.diff(np.append(idx, len(ia))),
+        }
 
     pairs = (
-        groups.mapInPandas(
-            emit_pairs, schema="id_a long, id_b long, na int, nb int, cnt long"
+        groups.mapInArrow(
+            _emit_group_pairs(partial_counts),
+            schema="id_a long, id_b long, na int, nb int, cnt long",
         )
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.sum("cnt").alias("common"))
@@ -565,6 +577,12 @@ def _murmur3_int(x: int, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
+#: largest block-pair group count the uncapped Jaccard counter LPT-packs
+#: onto ``defaultParallelism`` partitions; above it the group index is
+#: hashed
+_LPT_MAX_GROUPS = 4096
+
+
 def _partition_target_values(n: int) -> list:
     """For each partition p in 0..n-1, a small int v with
     ``pmod(murmur3(v), n) == p`` — i.e. a column value Spark's hash
@@ -583,79 +601,28 @@ def _partition_target_values(n: int) -> list:
     return out
 
 
-def _make_block_pair_emitter(threshold: float, chunk_pairs: int = 1 << 21):
-    """applyInPandas kernel for one block-pair: count |A∩B| for every
-    doc pair sharing ≥1 shingle hash, threshold locally, emit only
-    passing pairs as (id_a, id_b, common, na, nb).
+def _count_block_pair(
+    ids, ns, side, hcat, lens, diag, threshold, chunk_pairs=1 << 21
+):
+    """Count |A∩B| for every doc pair of one block-pair group sharing
+    ≥1 shingle hash, threshold locally, and return only passing pairs
+    as (id_a, id_b, common, na, nb) numpy arrays.
 
-    All vectorized: concat the block's hash arrays → one stable argsort
-    → equal-hash runs → pair (x, y) for every in-run position pair
-    x < y (generated arithmetically from run offsets, ``chunk_pairs``
-    positions at a time so a degenerate clone-cluster block can't
-    materialize O(m²·s) pairs at once) → unique-sum on the (u·m+v)
-    pair key. Off-diagonal block-pairs keep only cross-side pairs
-    (same-side pairs belong to that block's own diagonal task).
+    All vectorized: one argsort of the group's concatenated hash arrays
+    → equal-hash runs → every in-run position pair x < y from
+    ``_run_pairs``, ``chunk_pairs`` pairs at a time so a degenerate
+    clone-cluster group can't materialize O(m²·s) pairs at once →
+    unique-sum on the (u·m+v) pair key. Off-diagonal block-pairs keep
+    only cross-side pairs (same-side pairs belong to that block's own
+    diagonal group). Chunk results are accumulated in a pending list
+    and merged GEOMETRICALLY (only once pending reaches the aggregate's
+    size), never by re-sorting the whole aggregate after every chunk.
 
     The threshold prefilter uses the same float64 division Spark
     applies downstream, so the pass/fail set is bit-identical; the
     emitted integers let Spark recompute jaccard with the exact
-    expression (and rounding) the inverted-index path uses.
+    expression (and rounding) the capped path uses.
     """
-
-    def emit(pdf):
-        import numpy as np
-        import pandas as pd
-
-        def _empty():
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series([], dtype="int64"),
-                    "id_b": pd.Series([], dtype="int64"),
-                    "common": pd.Series([], dtype="int64"),
-                    "na": pd.Series([], dtype="int32"),
-                    "nb": pd.Series([], dtype="int32"),
-                }
-            )
-
-        m = len(pdf)
-        if m < 2:
-            return _empty()
-        diag = bool(pdf["_bi"].iat[0] == pdf["_bj"].iat[0])
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
-        ns = pdf["_n"].to_numpy(dtype=np.int64)
-        side = pdf["_side"].to_numpy(dtype=np.int8)
-        hs = [np.asarray(a, dtype=np.int64) for a in pdf["_sh"]]
-        lens = np.fromiter((len(a) for a in hs), dtype=np.int64, count=m)
-        if int(lens.sum()) == 0:
-            return _empty()
-        hcat = np.concatenate(hs)
-        ia, ib, c, na, nb = _count_block_pair(
-            ids, ns, side, hcat, lens, diag, threshold, chunk_pairs
-        )
-        if len(ia) == 0:
-            return _empty()
-        return pd.DataFrame(
-            {
-                "id_a": ia,
-                "id_b": ib,
-                "common": c,
-                "na": na,
-                "nb": nb,
-            }
-        )
-
-    return emit
-
-
-def _count_block_pair(ids, ns, side, hcat, lens, diag, threshold, chunk_pairs):
-    """Numeric core of the block-pair counter (see
-    ``_make_block_pair_emitter``): takes the block-pair's rows as flat
-    numpy arrays, returns (id_a, id_b, common, na, nb) for pairs at or
-    above ``threshold``. Chunk results are accumulated in a pending
-    list and merged GEOMETRICALLY (only once pending reaches the
-    aggregate's size) — the old merge re-sorted the full aggregate
-    after every chunk, which made per-task cost superlinear in block
-    size and dominated large-block runs."""
     import numpy as np
 
     m = len(ids)
@@ -681,8 +648,7 @@ def _count_block_pair(ids, ns, side, hcat, lens, diag, threshold, chunk_pairs):
     hsorted = hcat[order]
     dsorted = dcat[order]  # ascending row idx within each run
     N = len(hsorted)
-    newrun = np.empty(N, dtype=bool)
-    newrun[0] = True
+    newrun = np.ones(N, dtype=bool)
     np.not_equal(hsorted[1:], hsorted[:-1], out=newrun[1:])
     # start position of each element's run; L = how many earlier
     # in-run elements each position pairs with
@@ -719,20 +685,11 @@ def _count_block_pair(ids, ns, side, hcat, lens, diag, threshold, chunk_pairs):
     while pos < N:
         end = int(np.searchsorted(csum, csum[pos] + chunk_pairs, "right")) - 1
         end = max(end, pos + 1)
-        Ls = L[pos:end]
         tot = int(csum[end] - csum[pos])
         pos_prev, pos = pos, end
         if tot == 0:
             continue
-        # pair every position p in [pos_prev, end) with the L[p]
-        # earlier positions of its run
-        y = np.repeat(np.arange(pos_prev, end, dtype=np.int32), Ls)
-        base = (csum[pos_prev:end] - csum[pos_prev]).astype(np.int32)
-        x = (
-            np.arange(tot, dtype=np.int32)
-            - np.repeat(base, Ls)
-            + np.repeat(start_pos[pos_prev:end].astype(np.int32), Ls)
-        )
+        x, y = _run_pairs(start_pos[pos_prev:end], L[pos_prev:end], pos_prev)
         key = dsorted[x] * m + dsorted[y]  # u < v by in-run order
         k, c = np.unique(key, return_counts=True)
         pend_k.append(k)
@@ -767,95 +724,6 @@ def _count_block_pair(ids, ns, side, hcat, lens, diag, threshold, chunk_pairs):
         na.astype(np.int32),
         nb.astype(np.int32),
     )
-
-
-def _make_block_pair_arrow_kernel(threshold: float, chunk_pairs: int = 1 << 21):
-    """mapInArrow kernel for a partition holding one or more complete
-    block-pair groups (explicit LPT placement — see
-    ``_ngram_jaccard_pairs_blocked``). Reads the Arrow list column's
-    contiguous values+offsets buffers directly, so the per-row ndarray
-    allocation, ``pd.concat`` and per-row ``np.asarray`` the pandas
-    path pays (hundreds of thousands of tiny objects per task at
-    replication factor B) never happen; per group the kernel runs the
-    same ``_count_block_pair`` core on one gathered slice."""
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        ids_l, ns_l, side_l, bi_l, bj_l, flat_l, lens_l = (
-            [], [], [], [], [], [], [],
-        )
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            ids_l.append(cols["_id"].to_numpy(zero_copy_only=False))
-            ns_l.append(
-                cols["_n"].to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            side_l.append(
-                cols["_side"].to_numpy(zero_copy_only=False).astype(np.int8)
-            )
-            bi_l.append(cols["_bi"].to_numpy(zero_copy_only=False))
-            bj_l.append(cols["_bj"].to_numpy(zero_copy_only=False))
-            sh = cols["_sh"]
-            offs = sh.offsets.to_numpy(zero_copy_only=False)
-            vals = sh.values.to_numpy(zero_copy_only=False)
-            lens_l.append(np.diff(offs))
-            flat_l.append(vals[offs[0] : offs[-1]])
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l)
-        ns = np.concatenate(ns_l)
-        side = np.concatenate(side_l)
-        bi = np.concatenate(bi_l).astype(np.int64)
-        bj = np.concatenate(bj_l).astype(np.int64)
-        lens = np.concatenate(lens_l)
-        flat = np.concatenate(flat_l) if flat_l else np.empty(0, np.int64)
-        bounds = np.concatenate(([0], np.cumsum(lens)))
-        gkey = bi * (1 << 31) + bj
-        out = []
-        for g in np.unique(gkey):
-            rows = np.flatnonzero(gkey == g)
-            if len(rows) < 2:
-                continue
-            Lr = lens[rows]
-            tot = int(Lr.sum())
-            if tot == 0:
-                continue
-            shift = np.concatenate(([0], np.cumsum(Lr[:-1])))
-            gi = np.repeat(bounds[rows] - shift, Lr) + np.arange(tot)
-            res = _count_block_pair(
-                ids[rows],
-                ns[rows],
-                side[rows],
-                flat[gi],
-                Lr,
-                bool((g >> 31) == (g & ((1 << 31) - 1))),
-                threshold,
-                chunk_pairs,
-            )
-            if len(res[0]):
-                out.append(res)
-        if out:
-            ia = np.concatenate([p[0] for p in out])
-            ib = np.concatenate([p[1] for p in out])
-            c = np.concatenate([p[2] for p in out])
-            na = np.concatenate([p[3] for p in out])
-            nb = np.concatenate([p[4] for p in out])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ia, type=pa.int64()),
-                    pa.array(ib, type=pa.int64()),
-                    pa.array(c, type=pa.int64()),
-                    pa.array(na, type=pa.int32()),
-                    pa.array(nb, type=pa.int32()),
-                ],
-                names=["id_a", "id_b", "common", "na", "nb"],
-            )
-
-    return kernel
 
 
 def _ngram_jaccard_pairs_blocked(
@@ -907,10 +775,10 @@ def _ngram_jaccard_pairs_blocked(
         .select("_id", "_sh", "_n", F.explode(targets).alias("_p"))
         .select("_id", "_sh", "_n", "_p.*")
     )
-    schema = "id_a long, id_b long, common long, na int, nb int"
     nG = B * (B + 1) // 2
     n_bins = max(sc.defaultParallelism, 1)
-    if n_bins < nG <= 4096:
+    t_idx = F.expr(f"_bi * {B} - (_bi * (_bi - 1)) DIV 2 + (_bj - _bi)").cast("int")
+    if nG <= _LPT_MAX_GROUPS:
         # Pack the nG block-pair groups into EXACTLY defaultParallelism
         # reduce tasks, balanced by predicted pair work (off-diagonal
         # blocks hold 2m docs and ~2× a diagonal's pairs), and place
@@ -923,8 +791,9 @@ def _ngram_jaccard_pairs_blocked(
         # (nG tasks over P cores = ragged ceil(nG/P) waves). LPT
         # packing + explicit placement gives one full wave of
         # near-equal tasks; an explicit numPartitions AQE won't
-        # coalesce. Beyond 4096 groups (or nG ≤ cores) the law of
-        # large numbers (resp. the group count) makes hashing fine.
+        # coalesce. At nG ≤ cores every group gets its own task;
+        # beyond the limit the law of large numbers makes hashing the
+        # group index fine.
         weights = [
             (bi * B - (bi * (bi - 1)) // 2 + (bj - bi), 1 if bi == bj else 2)
             for bi in range(B)
@@ -941,22 +810,40 @@ def _ngram_jaccard_pairs_blocked(
             assign[t] = b
             heapq.heappush(heap, (load + w, b))
         tvals = _partition_target_values(n_bins)
-        route = [tvals[assign[t]] for t in range(nG)]
-        t_idx = F.expr(
-            f"_bi * {B} - (_bi * (_bi - 1)) DIV 2 + (_bj - _bi)"
-        ).cast("int")
-        part = (
-            rep.withColumn("_pt", F.element_at(F.lit(route), t_idx + 1))
-            .repartition(n_bins, "_pt")
-            .select("_id", "_sh", "_n", "_bi", "_bj", "_side")
-        )
-        cand = part.mapInArrow(
-            _make_block_pair_arrow_kernel(threshold), schema=schema
-        )
+        route = F.element_at(F.lit([tvals[assign[t]] for t in range(nG)]), t_idx + 1)
     else:
-        cand = rep.groupBy("_bi", "_bj").applyInPandas(
-            _make_block_pair_emitter(threshold), schema=schema
+        route = t_idx
+
+    def per_group(key, t):
+        # one block-pair group: the partition's hash exchange is reused
+        # by the grouping (its keys include _pt), so Python holds one
+        # group at a time, never a whole bin
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        sh = t.column("_sh")
+        res = _count_block_pair(
+            t.column("_id").to_numpy().astype(np.int64, copy=False),
+            t.column("_n").to_numpy().astype(np.int64),
+            t.column("_side").to_numpy(),
+            pc.list_flatten(sh).to_numpy(),
+            pc.list_value_length(sh).to_numpy().astype(np.int64),
+            key[1].as_py() == key[2].as_py(),
+            threshold,
         )
+        return pa.Table.from_arrays(
+            [pa.array(a) for a in res], names=["id_a", "id_b", "common", "na", "nb"]
+        )
+
+    cand = (
+        rep.withColumn("_pt", route)
+        .repartition(n_bins, "_pt")
+        .groupBy("_pt", "_bi", "_bj")
+        .applyInArrow(
+            per_group, schema="id_a long, id_b long, common long, na int, nb int"
+        )
+    )
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
     return (
         cand.withColumn("jaccard", jac)
@@ -1090,7 +977,6 @@ def minhash_lsh_candidates(
     threshold: float = 0.8,
     max_df: Optional[int] = None,
     observation=None,
-    verify_semi_join: bool = False,
     cleanup: Optional[list] = None,
 ) -> DataFrame:
     """MinHash → band → bucket-group → exact-Jaccard verify.
@@ -1119,15 +1005,7 @@ def minhash_lsh_candidates(
     ``max_df`` into verification, silently undercounting overlap inside
     large true near-dup clusters).
 
-    ``verify_semi_join=True`` pre-filters the signature table to docs
-    that appear in some candidate pair before the verify join — set it
-    when candidates ≪ corpus (the 10¹²-doc regime) so the verify join
-    shuffles only candidate signatures; leave False when candidate
-    coverage is near the corpus (small corpora), where the semi-join
-    is pure overhead.
-
-    PERSIST LIFETIME: the signature table (and, under
-    ``verify_semi_join``, the candidate pairs) is ``persist()``-ed
+    PERSIST LIFETIME: the signature table is ``persist()``-ed
     because two downstream branches consume it — and it stays cached
     until the returned DataFrame is garbage-collected or the session's
     ContextCleaner reclaims it. The ``hs`` column (~1k longs/doc) makes
@@ -1162,26 +1040,12 @@ def minhash_lsh_candidates(
     )
     groups = _cap_groups(groups, "_ids", max_df, observation)
 
-    cand = groups.mapInPandas(
-        _emit_group_pairs, schema="id_a long, id_b long"
+    cand = groups.mapInArrow(
+        _emit_group_pairs(), schema="id_a long, id_b long"
     ).distinct()
 
-    sig_v = sig
-    if verify_semi_join:
-        # cand feeds the id-set AND the verify join below — persist so
-        # the band-group subtree doesn't execute twice
-        cand = cand.persist()
-        if cleanup is not None:
-            cleanup.append(cand)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("_id"))
-            .unionByName(cand.select(F.col("id_b").alias("_id")))
-            .distinct()
-        )
-        sig_v = sig.join(cand_ids, "_id", "left_semi")
-
-    a = sig_v.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
-    b = sig_v.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
+    a = sig.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
+    b = sig.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
     joined = cand.join(a, "id_a").join(b, "id_b")
 
     def _verify(batches):
@@ -1282,8 +1146,6 @@ def simhash_near_dups(
     verify runs vectorized (numpy xor + byte-popcount) INSIDE the
     emission, so only passing pairs ever materialize.
     """
-    import pandas as pd
-
     sh = df.select(F.col(id_col).alias("_id"), simhash_udf()(F.col(text_col)).alias("_sim"))
     if bands is None:
         bands = 4 if max_hamming <= 3 else 8
@@ -1313,54 +1175,19 @@ def simhash_near_dups(
     )
     groups = _cap_groups(groups, "_docs", max_df, observation)
 
-    def emit_pairs(batches):
+    def hamming_filter(cols, x, y):
         import numpy as np
 
         pop8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-        triu = {}
-        for pdf in batches:
-            ca, cb, ch = [], [], []
-            for docs in pdf["_docs"]:
-                g = len(docs)
-                if g < 2:
-                    continue
-                ids = np.fromiter((d["_id"] for d in docs), dtype=np.int64, count=g)
-                sims = np.fromiter((d["_sim"] for d in docs), dtype=np.int64, count=g)
-                order = np.argsort(ids, kind="stable")
-                ids, sims = ids[order], sims[order]
-                t = triu.get(g)
-                if t is None:
-                    t = np.triu_indices(g, 1)
-                    triu[g] = t
-                xi, yi = t
-                x = np.bitwise_xor(sims[xi].view(np.uint64), sims[yi].view(np.uint64))
-                hd = pop8[x.view(np.uint8).reshape(-1, 8)].sum(axis=1).astype(np.int32)
-                m = hd <= max_hamming
-                if m.any():
-                    ca.append(ids[xi][m])
-                    cb.append(ids[yi][m])
-                    ch.append(hd[m])
-            if ca:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(ca),
-                        "id_b": np.concatenate(cb),
-                        "hamming": np.concatenate(ch).astype("int32"),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.array([], dtype=np.int64),
-                        "id_b": np.array([], dtype=np.int64),
-                        "hamming": np.array([], dtype=np.int32),
-                    }
-                )
+        ids, sims = cols["_id"], cols["_sim"]
+        xor = np.bitwise_xor(sims[x], sims[y]).view(np.uint64)
+        hd = pop8[xor.view(np.uint8).reshape(-1, 8)].sum(axis=1).astype(np.int32)
+        m = hd <= max_hamming
+        return {"id_a": ids[x][m], "id_b": ids[y][m], "hamming": hd[m]}
 
-    return (
-        groups.mapInPandas(emit_pairs, schema="id_a long, id_b long, hamming int")
-        .distinct()
-    )
+    return groups.mapInArrow(
+        _emit_group_pairs(hamming_filter), schema="id_a long, id_b long, hamming int"
+    ).distinct()
 
 
 def dedup_components(

@@ -444,8 +444,9 @@ def hyperplane_lsh_join(
     Plan: per table, a sign-signature bucket id
     (``bucket_signatures_udf``: deterministic hyperplanes, one GEMM per
     Arrow batch); candidate pairs emitted per (table, bucket) group by
-    the same emitter as MinHash banding (``dedup._emit_group_pairs``),
-    including the ``max_df`` hot-bucket cap (``dedup._cap_groups``) —
+    the ``mapInArrow`` group emitter MinHash, SimHash and the capped
+    n-gram path share (``dedup._emit_group_pairs``), including the
+    ``max_df`` hot-bucket cap (``dedup._cap_groups``) —
     then every candidate is verified with ``pair_cosine_udf``.
     No cross join and no all-blocks-pair join anywhere; shuffles carry
     (table, bucket, id) entries and candidate id pairs only.
@@ -484,8 +485,8 @@ def hyperplane_lsh_join(
     )
     groups = _cap_groups(groups, "_ids", max_df, observation)
 
-    cand = groups.mapInPandas(
-        _emit_group_pairs, schema="id_a long, id_b long"
+    cand = groups.mapInArrow(
+        _emit_group_pairs(), schema="id_a long, id_b long"
     ).distinct()
 
     a = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))

@@ -449,3 +449,28 @@ def test_split_assign_is_pure_projection(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_pair_emitters_are_arrow_kernels(spark):
+    """One pair engine. The uncapped n-gram counter is ONE grouped Arrow
+    stage fed by exactly one exchange after the shingle UDF (the
+    grouping reuses the ``_pt`` hash exchange), with no pandas grouped
+    stage; the capped n-gram, MinHash, SimHash and hyperplane-LSH group
+    emitters all run under ``mapInArrow``."""
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.01"
+    queries = entry.queries()
+    lines = _plan(queries["dedup_ngram_jaccard"](spark, sf)).splitlines()
+    counter = [i for i, l in enumerate(lines) if "FlatMapGroupsInArrow" in l]
+    assert len(counter) == 1
+    assert not any("FlatMapGroupsInPandas" in l for l in lines)
+    (udf,) = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
+    assert sum("Exchange" in l for l in lines[counter[0] : udf]) == 1
+    for name in (
+        "dedup_ngram_jaccard_capped",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "embedding_near_dups_lsh",
+    ):
+        assert "MapInArrow" in _plan(queries[name](spark, sf)), name
