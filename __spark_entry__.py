@@ -1254,12 +1254,12 @@ def _media_image_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row set to match.
     import pandas as pd
 
+    from contessa_spark.hashing import splitmix64
     from contessa_spark.operators.image_dedup import (
         bmp24_from_gray,
         codeword_image_gray,
         image_dhash,
         image_near_dups,
-        splitmix64,
     )
 
     docs = (
@@ -1306,7 +1306,7 @@ def _media_audio_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_near_dups,
         codeword_wav_bytes,
     )
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     docs = (
         _load(spark, sf_dir, "documents")

@@ -43,21 +43,23 @@ def annotate_rows(texts):
 
     Tokenizes each document ONCE, then computes every word-level signal
     from ONE ``pd.factorize`` over the batch's flattened tokens: the
-    FNV hash, the lowercasing, the stopword membership and the word
-    length run once per UNIQUE token (Zipf: ~30× fewer than token
-    occurrences) and broadcast back through the code array; perplexity
-    runs on the flat hash array (``perplexity_flat``); stopword counts
-    and word-length sums are exact-integer cumsum range sums. Values
-    are bit-identical to the old per-row form — same tokenization
-    (whitespace-run split; lowering a token never changes split
-    boundaries), same integer counts, same per-doc float arithmetic —
-    which the one-signal-at-a-time ``py_*`` test oracles still check
-    independently.
+    lowercasing, the stopword membership and the word length run once
+    per UNIQUE token (Zipf: ~30× fewer than token occurrences), the
+    32-bit FNV hash once per batch over the unique lowered tokens
+    (``hashing.fnv1a``), all broadcast back through the code array;
+    perplexity runs on the flat hash array (``perplexity_flat``);
+    stopword counts and word-length sums are exact-integer cumsum range
+    sums. Values are bit-identical to the old per-row form — same
+    tokenization (whitespace-run split; lowering a token never changes
+    split boundaries), same integer counts, same per-doc float
+    arithmetic — which the one-signal-at-a-time ``py_*`` test oracles
+    still check independently.
     """
     import numpy as np
 
-    from contessa_spark.functions.perplexity import _hash_word, perplexity_flat
+    from contessa_spark.functions.perplexity import perplexity_flat
     from contessa_spark.functions.textstats import _STOPSET
+    from contessa_spark.hashing import fnv1a
 
     texts = [t if isinstance(t, str) else "" for t in texts]
     n_docs = len(texts)
@@ -77,9 +79,7 @@ def annotate_rows(texts):
         uniq_list = uniq.tolist()
         uniq_lower = [u.lower() for u in uniq_list]
         n_uniq = len(uniq_list)
-        hs_flat = np.fromiter(
-            (_hash_word(u) for u in uniq_lower), dtype=np.int64, count=n_uniq
-        )[codes]
+        hs_flat = fnv1a(uniq_lower, 32).view(np.int64)[codes]
         stop_cs = np.concatenate(
             (
                 [0],

@@ -8,8 +8,10 @@ fixed buckets; score = exp(-mean log p) over a document's word
 bigrams. Clean in-domain prose scores low; gibberish, boilerplate and
 symbol soup score high.
 
-Pure core (numpy, deterministic, model built at import) + a scalar
-pandas UDF binding. Shared verbatim with the test oracle.
+Pure core (numpy, deterministic, model built at import); words hash
+with 32-bit FNV-1a (``hashing.fnv1a``). The fused annotate UDF scores
+whole batches through ``perplexity_flat``; ``perplexity`` is the
+per-doc reference form shared verbatim with the test oracle.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from typing import List
 import numpy as np
 
 from contessa_spark.functions.langid import SEED_CORPORA
+from contessa_spark.hashing import fnv1a
 
 N_UNI = 1 << 15
 N_BI = 1 << 17
@@ -29,30 +32,6 @@ _MASK_BI = N_BI - 1
 _LAMBDA = 0.7
 
 
-def _fnv1a(w: str) -> int:
-    # FNV-1a over utf-8 bytes — stable across processes (unlike hash())
-    h = 2166136261
-    for byte in w.encode("utf-8", "ignore"):
-        h = ((h ^ byte) * 16777619) & 0xFFFFFFFF
-    return h
-
-
-# word→hash memo: natural text is Zipf-distributed, so the hit rate is
-# high and the pure-python FNV loop (the profile hotspot) almost never
-# runs. Purely a cache of a deterministic function — results unchanged.
-_HASH_MEMO: dict = {}
-_HASH_MEMO_MAX = 1 << 20
-
-
-def _hash_word(w: str) -> int:
-    h = _HASH_MEMO.get(w)
-    if h is None:
-        if len(_HASH_MEMO) >= _HASH_MEMO_MAX:
-            _HASH_MEMO.clear()
-        h = _HASH_MEMO[w] = _fnv1a(w)
-    return h
-
-
 def _tokens(text: str) -> List[str]:
     return text.lower().split()
 
@@ -61,12 +40,9 @@ def _build_counts():
     uni = np.zeros(N_UNI, dtype=np.float64)
     bi = np.zeros(N_BI, dtype=np.float64)
     for corpus in SEED_CORPORA.values():
-        toks = _tokens(corpus)
-        hs = [_hash_word(w) for w in toks]
-        for h in hs:
-            uni[h & _MASK_UNI] += 1
-        for a, b in zip(hs, hs[1:]):
-            bi[(a * 1000003 + b) & _MASK_BI] += 1
+        hs = fnv1a(_tokens(corpus), 32).view(np.int64)
+        np.add.at(uni, hs & _MASK_UNI, 1)
+        np.add.at(bi, (hs[:-1] * 1000003 + hs[1:]) & _MASK_BI, 1)
     return uni, bi
 
 
@@ -89,7 +65,7 @@ def perplexity_tokens(toks: List[str]) -> float:
     tokenizes each document once for all word stats)."""
     if not toks:
         return 1.0e6
-    hs = np.array([_hash_word(w) for w in toks], dtype=np.int64)
+    hs = fnv1a(toks, 32).view(np.int64)
     uni_lp = _LOG_P_UNI[hs & _MASK_UNI]
     if len(toks) == 1:
         return float(np.exp(-uni_lp.mean()))
@@ -132,19 +108,3 @@ def perplexity_flat(hs_flat, offsets, lens):
         else:
             out[i] = np.exp(-lp[o : o + n - 1].mean())
     return out
-
-
-def perplexity_batch(texts) -> List[float]:
-    return [perplexity(t if isinstance(t, str) else "") for t in texts]
-
-
-def spark_udf():
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def _ppl(texts):
-        return pd.Series(perplexity_batch(texts.fillna("")), dtype="float64")
-
-    _ppl.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_ppl, T.DoubleType())

@@ -21,9 +21,10 @@ the heuristic keep rule (C4/Gopher conjunction) — the standard
 bootstrap when no human/LLM labels exist; production swaps in real
 labels without touching the plumbing.
 
-Features: FNV-64 word hashes into ``n_features`` buckets, log(1+tf)
-weighting, L2 normalization, plus a bias. Collisions are benign at
-the usual 2^12–2^16 sizes (hashing-trick regime).
+Features: FNV-64 word hashes (``hashing.fnv1a``, one call per batch
+of texts) into ``n_features`` buckets, log(1+tf) weighting, L2
+normalization, plus a bias. Collisions are benign at the usual
+2^12–2^16 sizes (hashing-trick regime).
 """
 
 from __future__ import annotations
@@ -35,6 +36,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from contessa_spark.hashing import fnv1a
+
 
 #: engineered features appended after the hashed buckets: L2-normalized
 #: BOW erases document LENGTH, which most quality rules key on — the
@@ -42,27 +45,34 @@ from pyspark.sql import functions as F
 N_EXTRA = 3  # log-chars, log-words, bias
 
 
-def _hash_words(text: str, n_features: int) -> "np.ndarray":
+def _hash_words(texts, n_features: int):
     """Dense log-tf L2-normalized hashed bag-of-words + log-length
-    features + bias. Pure core shared by training and the scoring
-    UDF."""
-    v = np.zeros(n_features + N_EXTRA, dtype=np.float64)
-    words = text.lower().split()
-    for w in words:
-        h = 0xCBF29CE484222325
-        for b in w.encode("utf-8", "ignore"):
-            h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        v[h % n_features] += 1.0
-    bow = v[:n_features]
-    nz = bow > 0
-    bow[nz] = np.log1p(bow[nz])
-    norm = np.linalg.norm(bow)
-    if norm > 0:
-        bow /= norm
-    v[n_features] = np.log1p(len(text)) / 10.0
-    v[n_features + 1] = np.log1p(len(words)) / 10.0
-    v[-1] = 1.0  # bias
-    return v
+    features + bias: a list with one vector per (possibly NULL) text,
+    or one vector for a single ``str``. Pure core shared by training
+    and the scoring UDF; the words of all texts hash in one ``fnv1a``
+    call, and each vector is still its own array, so its norm and dot
+    products run on the same memory layout as a per-text build."""
+    single = isinstance(texts, str)
+    texts = [texts] if single else [t if isinstance(t, str) else "" for t in texts]
+    words = [t.lower().split() for t in texts]
+    buckets = fnv1a([w for ws in words for w in ws]) % np.uint64(n_features)
+    out = []
+    o = 0
+    for text, ws in zip(texts, words):
+        v = np.zeros(n_features + N_EXTRA, dtype=np.float64)
+        v[:n_features] = np.bincount(buckets[o : o + len(ws)].astype(np.int64), minlength=n_features)
+        o += len(ws)
+        bow = v[:n_features]
+        nz = bow > 0
+        bow[nz] = np.log1p(bow[nz])
+        norm = np.linalg.norm(bow)
+        if norm > 0:
+            bow /= norm
+        v[n_features] = np.log1p(len(text)) / 10.0
+        v[n_features + 1] = np.log1p(len(ws)) / 10.0
+        v[-1] = 1.0  # bias
+        out.append(v)
+    return out[0] if single else out
 
 
 def train_logreg(
@@ -153,12 +163,10 @@ def train_quality_classifier(
             (r[text_col], label_fn(r[text_col])) for r in rows
         ]
         labeled = [(t, y) for t, y in labeled if y is not None]
-        X = np.stack([_hash_words(t or "", n_features) for t, _ in labeled])
+        X = np.stack(_hash_words([t for t, _ in labeled], n_features))
         y = np.array([float(y) for _, y in labeled], dtype=np.float64)
     else:
-        X = np.stack(
-            [_hash_words(r[text_col] or "", n_features) for r in rows]
-        )
+        X = np.stack(_hash_words([r[text_col] for r in rows], n_features))
         y = np.array([r["_y"] for r in rows], dtype=np.float64)
     return train_logreg(X, y, iters=iters)
 
@@ -172,8 +180,7 @@ def quality_score_udf(weights: "np.ndarray", n_features: int = 4096):
 
     def _score(texts):
         out = np.empty(len(texts), dtype=np.float64)
-        for i, t in enumerate(texts):
-            v = _hash_words(t if isinstance(t, str) else "", n_features)
+        for i, v in enumerate(_hash_words(texts.tolist(), n_features)):
             z = min(500.0, max(-500.0, float(v @ w)))
             out[i] = 1.0 / (1.0 + np.exp(-z))
         return pd.Series(out)

@@ -30,10 +30,12 @@ in-run generator, ``_run_pairs``.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from contessa_spark.hashing import FNV64_BASIS, FNV64_PRIME, fnv1a, gram_hashes, splitmix64
 
 
 def _cap_groups(
@@ -310,67 +312,9 @@ def _corpus_span_dedup(
 
 # ------------------------------------------------------------- shingles
 
-def py_shingles(text: str, k: int = 3) -> List[str]:
-    """Pure core: distinct word k-gram shingles, first-occurrence order
-    (matches array_distinct of the JVM form)."""
-    words = text.lower().split()
-    if len(words) < k:
-        return []
-    seen = {}
-    for i in range(len(words) - k + 1):
-        s = " ".join(words[i : i + k])
-        if s not in seen:
-            seen[s] = None
-    return list(seen.keys())
-
-
-def _make_fnv64_memo():
-    """Per-worker memoized FNV-64 string hash: shingles/words repeat
-    heavily across documents (Zipf), and the per-byte loop is the
-    hottest UDF line — a dict hit replaces ~30 interpreter steps.
-    Bounded so a pathological corpus can't grow worker memory."""
-    _memo: dict = {}
-
-    def _fnv64(s: str) -> int:
-        h = _memo.get(s)
-        if h is not None:
-            return h
-        h = 0xCBF29CE484222325
-        for byte in s.encode("utf-8", "ignore"):
-            h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        if len(_memo) < 4_000_000:
-            _memo[s] = h
-        return h
-
-    return _fnv64
-
-
-def _batch_shingle_hashes(texts, k, _fnv64):
-    """Batch core: FNV-64 hashes of every doc's shingles (first-
-    occurrence order), as ONE flat uint64 array plus per-doc lengths.
-
-    The batch's shingle strings are ``pd.factorize``-d so the per-byte
-    FNV loop runs once per UNIQUE shingle (Zipf: far fewer than
-    occurrences) and cross-batch repeats hit the per-worker memo; the
-    codes array then broadcasts the hashes back at numpy speed. The
-    old form paid an ``np.fromiter`` generator call per occurrence."""
-    import itertools
-
-    import numpy as np
-    import pandas as pd
-
-    per_doc = [py_shingles(t if isinstance(t, str) else "", k) for t in texts]
-    lens = np.fromiter(map(len, per_doc), dtype=np.int64, count=len(per_doc))
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.uint64), lens
-    flat = np.empty(total, dtype=object)
-    flat[:] = list(itertools.chain.from_iterable(per_doc))
-    codes, uniq = pd.factorize(flat)
-    uh = np.fromiter(
-        (_fnv64(u) for u in uniq.tolist()), dtype=np.uint64, count=len(uniq)
-    )
-    return uh[codes], lens
+def _lower_words(texts):
+    """Whitespace-split lowered words of each (possibly NULL) text."""
+    return [t.lower().split() if isinstance(t, str) else [] for t in texts]
 
 
 def _segment_unique(flat, lens):
@@ -412,15 +356,15 @@ def hashed_shingles_udf(k: int = 3):
     spread exchange (guide §4.4's duplicated-UDF trap) — the capped
     path then ran the whole shingle pass twice, once single-core.
     Struct first, fields second (the established in-repo pattern)
-    keeps it one eval."""
+    keeps it one eval.
+
+    Hashing is one ``gram_hashes`` call per Arrow batch over the
+    lowered words; ``_segment_unique`` then drops repeated grams."""
     import pandas as pd
     from pyspark.sql import types as T
 
-    _fnv64 = _make_fnv64_memo()
-
     def _hs(texts):
-        flat, lens = _batch_shingle_hashes(texts, k, _fnv64)
-        hs = _segment_unique(flat, lens)
+        hs = _segment_unique(*gram_hashes(_lower_words(texts), k))
         return pd.DataFrame({"hs": hs, "n": [len(a) for a in hs]})
 
     _hs.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
@@ -861,14 +805,8 @@ def _affine_params(n_hashes: int, seed: int = 1234567):
     """Deterministic (a_j, b_j) pairs for affine minhash permutations."""
     import numpy as np
 
-    def splitmix(x):
-        x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-        z = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-        return z ^ (z >> 31)
-
-    a = np.array([splitmix(seed + 2 * j) % _MERSENNE or 1 for j in range(n_hashes)], dtype=np.uint64)
-    b = np.array([splitmix(seed + 2 * j + 1) % _MERSENNE for j in range(n_hashes)], dtype=np.uint64)
+    a = np.array([splitmix64(seed + 2 * j) % _MERSENNE or 1 for j in range(n_hashes)], dtype=np.uint64)
+    b = np.array([splitmix64(seed + 2 * j + 1) % _MERSENNE for j in range(n_hashes)], dtype=np.uint64)
     return a, b
 
 
@@ -877,13 +815,16 @@ def _batch_band_keys(flat, lens, n_hashes, bands, A, B):
 
     For each affine permutation j the whole batch is transformed in one
     vectorized pass and segment-minimized with ``minimum.reduceat``
-    (per-doc boundaries), then the per-band FNV fold runs as uint64
-    vector ops across ALL docs at once — the old per-doc form paid a
-    (n_hashes × n_shingles) allocation per doc plus a Python int-boxing
-    loop per band key, which dominated the signature UDF.
+    (per-doc boundaries), then the per-band FNV-64 fold (from the
+    offset basis) runs as uint64 vector ops across ALL docs at once —
+    the old per-doc form paid a (n_hashes × n_shingles) allocation per
+    doc plus a Python int-boxing loop per band key, which dominated the
+    signature UDF. Band keys are only compared for equality, so the
+    fold's start value changes key values but not (up to ~2⁻⁶⁴
+    collisions) which docs share a key.
 
-    Bit-identical to the old form: uint64 multiply/add wrap mod 2^64
-    exactly like the old numpy broadcast; the final signed key
+    uint64 multiply/add wrap mod 2^64 exactly like a numpy broadcast;
+    the final signed key
     ``(acc ^ band) − 2^63`` is computed as the int64 view of
     ``(acc ^ band) ^ 2^63`` (adding/subtracting 2^63 mod 2^64 only
     flips the top bit). Returns an (n_nonempty, bands) int64 matrix for
@@ -902,8 +843,8 @@ def _batch_band_keys(flat, lens, n_hashes, bands, A, B):
     for j in range(n_hashes):
         y = (A[j] * base + B[j]) % np.uint64(_MERSENNE)
         sig[j] = np.minimum.reduceat(y, starts)
-    basis = np.uint64(1469598103934665603)
-    prime = np.uint64(0x100000001B3)
+    basis = np.uint64(FNV64_BASIS)
+    prime = np.uint64(FNV64_PRIME)
     keys = np.empty((bands, n_nz), dtype=np.uint64)
     for i in range(bands):
         acc = np.full(n_nz, basis, dtype=np.uint64)
@@ -937,16 +878,19 @@ def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
     an object per element where the packed form is one byte buffer per
     doc — cheaper to cache, scan, shuffle and Arrow-transfer. The
     verify kernel reads it back with ``np.frombuffer`` (same machine
-    byte order on both sides of the boundary)."""
+    byte order on both sides of the boundary).
+
+    Shingle hashes come from one ``gram_hashes`` call per Arrow batch
+    and keep repeated grams: a repeat changes neither a doc's minimum
+    under any permutation nor its distinct hash set."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     A, B = _affine_params(n_hashes)
-    _fnv64 = _make_fnv64_memo()
 
     def _sig(texts):
-        flat, lens = _batch_shingle_hashes(texts, k, _fnv64)
+        flat, lens = gram_hashes(_lower_words(texts), k)
         km, nz = _batch_band_keys(flat, lens, n_hashes, bands, A, B)
         empty = np.empty(0, dtype=np.int64)
         keys_out = [empty] * len(lens)
@@ -1080,39 +1024,33 @@ def minhash_lsh_candidates(
 
 # -------------------------------------------------------------- SimHash
 
+def _simhash_batch(texts, n_bits: int = 64):
+    """Batch core of ``simhash_udf``: int64 simhash per (possibly NULL)
+    text. Bit i is set when more than half of the doc's lowered words
+    have FNV-64 bit i set (no words → 0); the words of the whole batch
+    are hashed in one ``fnv1a`` call and the votes summed per doc."""
+    import numpy as np
+
+    words = _lower_words(texts)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+    h = fnv1a([w for ws in words for w in ws])
+    doc = np.repeat(np.arange(len(words)), lens)
+    sig = np.zeros(len(words), dtype=np.uint64)
+    for i in range(n_bits):
+        ones = np.bincount(doc, weights=(h >> np.uint64(i)) & np.uint64(1), minlength=len(words))
+        sig |= (2 * ones > lens).astype(np.uint64) << np.uint64(i)
+    # two's-complement into signed 64-bit for Spark LongType
+    return sig.view(np.int64)
+
+
 def simhash_udf(n_bits: int = 64):
     """pandas UDF: text → 64-bit simhash (as long). Word-level FNV
     hashes, bit-majority vote — deterministic."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    _fnv = _make_fnv64_memo()
-
     def _simhash(texts):
-        out = []
-        for t in texts.fillna(""):
-            words = t.lower().split()
-            if not words:
-                out.append(0)
-                continue
-            acc = np.zeros(n_bits, dtype=np.int64)
-            for w in words:
-                h = _fnv(w)
-                bits = (h >> np.arange(n_bits, dtype=np.uint64)) & 1
-                acc += np.where(bits == 1, 1, -1)
-            sig = 0
-            for i in range(n_bits):
-                if acc[i] > 0:
-                    sig |= 1 << i
-            # two's-complement into signed 64-bit for Spark LongType
-            if sig >= 1 << 63:
-                sig -= 1 << 64
-            out.append(sig)
-        return pd.Series(out, dtype="int64")
-
-    import pandas as pd  # noqa: F811
+        return pd.Series(_simhash_batch(texts, n_bits))
 
     _simhash.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return F.pandas_udf(_simhash, T.LongType())
@@ -1405,31 +1343,20 @@ def embedding_near_dups_blocked(
 def positional_gram_hashes_udf(k: int = 5):
     """pandas UDF: text → array<long> of FNV-64 word-k-gram hashes, ONE
     PER POSITION (index i = gram over words[i..i+k-1]; n_words−k+1
-    entries, empty when the doc has < k words). Unlike ``shingles``
-    this keeps duplicates and order — positions are the unit the
-    substring pass flags. Raw case (exact-substring dedup is exact);
-    whitespace split, same (?U)\\s contract as the rest of the engine."""
+    entries, empty when the doc has < k words). Unlike
+    ``hashed_shingles_udf`` this keeps duplicates and order — positions
+    are the unit the substring pass flags. Raw case (exact-substring
+    dedup is exact); whitespace split, same (?U)\\s contract as the
+    rest of the engine. One ``gram_hashes`` call per Arrow batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    _fnv64 = _make_fnv64_memo()
-
     def _gh(texts):
-        out = []
-        for t in texts:
-            words = (t if isinstance(t, str) else "").split()
-            n = len(words)
-            if n < k:
-                out.append([])
-                continue
-            hs = np.fromiter(
-                (_fnv64(" ".join(words[i : i + k])) for i in range(n - k + 1)),
-                dtype=np.uint64,
-                count=n - k + 1,
-            )
-            out.append(hs.view(np.int64).tolist())
-        return pd.Series(out)
+        words = [t.split() if isinstance(t, str) else [] for t in texts]
+        flat, counts = gram_hashes(words, k)
+        flat = flat.view(np.int64)
+        return pd.Series([flat[e - c : e] for e, c in zip(np.cumsum(counts), counts)])
 
     _gh.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return F.pandas_udf(_gh, T.ArrayType(T.LongType()))

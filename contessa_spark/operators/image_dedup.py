@@ -276,17 +276,6 @@ def image_near_dups(
     )
 
 
-def splitmix64(x: int) -> int:
-    """SplitMix64 mix (Steele et al. 2014, public domain constants) —
-    the deterministic codeword generator for planted-duplicate
-    synthesis."""
-    x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    z = x
-    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-    return z ^ (z >> 31)
-
-
 def codeword_image_gray(codeword: int, brightness: int = 0):
     """16×18 grayscale grid whose dHash is EXACTLY ``codeword``:
     each 2×2 pixel block is constant; along each block row the value

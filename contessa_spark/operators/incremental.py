@@ -21,8 +21,9 @@ Two paths, same normalized-content fingerprint as ``exact_dedup``:
   shuffle would move terabytes.
 
 Hashing is Kirsch-Mitzenmacher double hashing over the FNV-64
-fingerprint hash (position_i = (h1 + i·h2) mod m) — deterministic,
-no RNG, layout-independent.
+fingerprint hash (``hashing.fnv1a``, one call per Arrow batch;
+position_i = (h1 + i·h2) mod m) — deterministic, no RNG,
+layout-independent.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from contessa_spark.hashing import fnv1a
 from contessa_spark.operators.dedup import fingerprint_col
 
 #: driver-memory guard: a bloom beyond this is no longer a broadcastable
@@ -47,21 +49,6 @@ def bloom_params(n_items: int, fpp: float) -> Tuple[int, int]:
     m = (m + 63) // 64 * 64  # whole words
     k = max(1, round(m / n_items * math.log(2)))
     return m, k
-
-
-def _fnv64_np(values):
-    """Vectorized-ish FNV-64 over a pandas Series of strings → uint64
-    ndarray (the per-string loop is short: fingerprints are 32 hex
-    chars)."""
-    import numpy as np
-
-    out = np.empty(len(values), dtype=np.uint64)
-    for i, s in enumerate(values):
-        h = 0xCBF29CE484222325
-        for b in (s or "").encode("ascii", "ignore"):
-            h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        out[i] = h
-    return out
 
 
 def _positions(h1, m_bits: int, k: int):
@@ -117,7 +104,7 @@ def build_fingerprint_bloom(
         for pdf in batches:
             if not len(pdf):
                 continue
-            h1 = _fnv64_np(pdf["_fp"])
+            h1 = fnv1a(pdf["_fp"])
             for pos in _positions(h1, m_bits, k):
                 np.bitwise_or.at(
                     words, (pos >> np.uint64(6)).astype(np.int64),
@@ -163,7 +150,7 @@ def incremental_dedup(
     def _unseen(fp_series):
         if not len(fp_series):
             return pd.Series([], dtype=bool)
-        h1 = _fnv64_np(fp_series)
+        h1 = fnv1a(fp_series)
         hit = np.ones(len(fp_series), dtype=bool)
         for pos in _positions(h1, m_bits, k):
             bit = (

@@ -7,8 +7,8 @@
   signatures (Charikar 2002 SimHash-for-cosine) bucket the corpus;
   top-k is searched only within matching buckets (multi-probe via
   several independent tables). Hyperplanes derive deterministically
-  from a seed (SplitMix-style), so signatures are stable across
-  partitionings; recall is tunable with n_tables × n_bits.
+  from a seed (``hashing.splitmix64``), so signatures are stable
+  across partitionings; recall is tunable with n_tables × n_bits.
 * ``ivf_topk`` — IVF-style variant: k-means-free coarse quantizer
   using hash-selected pivot vectors; probes the closest n_probe cells.
 
@@ -29,6 +29,9 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from contessa_spark.hashing import splitmix64
+
+
 def dim_check(vec: Column, dim: int) -> Column:
     """Per-row declared-dim guard as a FILTER predicate: true when the
     vector's size equals ``dim``, raises otherwise. A wrong declared
@@ -47,14 +50,6 @@ def dim_check(vec: Column, dim: int) -> Column:
     )
 
 
-def _splitmix(x: int) -> int:
-    x = (x + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    z = x
-    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-    return z ^ (z >> 31)
-
-
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> List[List[float]]:
     """Deterministic pseudo-gaussian hyperplanes from a seed (sum of
     uniforms ≈ normal; all integer hashing, no RNG state)."""
@@ -64,7 +59,7 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> List[List[float]]:
         for d in range(dim):
             acc = 0.0
             for r in range(4):
-                h = _splitmix(seed * 1_000_003 + b * 10_007 + d * 101 + r)
+                h = splitmix64(seed * 1_000_003 + b * 10_007 + d * 101 + r)
                 acc += (h / 2**64) - 0.5
             row.append(acc)
         planes.append(row)

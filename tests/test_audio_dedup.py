@@ -19,7 +19,7 @@ def test_afp_codeword_roundtrip_and_volume_invariance():
         codeword_wav_bytes,
         wav_pcm16_samples,
     )
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     for g in (0, 5, 23, 39):
         cw = splitmix64(g) & 0xFFFFFFFF
@@ -47,7 +47,7 @@ def test_wav_pcm16_samples_guards():
 
 def test_audio_near_dups_matches_naive(spark):
     from contessa_spark.operators.audio_dedup import audio_near_dups
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     hashes = {}
     nid = 0
@@ -82,7 +82,7 @@ def test_audio_spark_end_to_end(spark):
         audio_near_dups,
         codeword_wav_bytes,
     )
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     rows = [
         (
@@ -110,7 +110,7 @@ def test_audio_spark_end_to_end(spark):
 def test_audio_codeword_separation():
     """Guards the media_audio_dups oracle: 40 planted 32-bit codewords
     must sit clear of the query threshold (4)."""
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     cw = [splitmix64(g) & 0xFFFFFFFF for g in range(40)]
     mn = min(

@@ -25,12 +25,12 @@ def _naive_pairs(hashes, max_hamming):
 def test_dhash_codeword_roundtrip_and_brightness():
     import numpy as np
 
+    from contessa_spark.hashing import splitmix64
     from contessa_spark.operators.image_dedup import (
         bmp24_from_gray,
         bmp24_gray_grid,
         codeword_image_gray,
         dhash64_from_gray,
-        splitmix64,
     )
 
     for g in (0, 3, 11, 49):
@@ -50,11 +50,11 @@ def test_dhash_codeword_roundtrip_and_brightness():
 
 
 def test_image_dhash_spark_and_null_payloads(spark):
+    from contessa_spark.hashing import splitmix64
     from contessa_spark.operators.image_dedup import (
         bmp24_from_gray,
         codeword_image_gray,
         image_dhash,
-        splitmix64,
     )
 
     rows = []
@@ -71,10 +71,8 @@ def test_image_dhash_spark_and_null_payloads(spark):
 
 
 def test_image_near_dups_matches_naive_popcount(spark):
-    from contessa_spark.operators.image_dedup import (
-        image_near_dups,
-        splitmix64,
-    )
+    from contessa_spark.hashing import splitmix64
+    from contessa_spark.operators.image_dedup import image_near_dups
 
     # planted perturbations: per base codeword, variants at Hamming
     # 0..6 — threshold 4 must keep exactly distances ≤ 4
@@ -127,7 +125,7 @@ def test_driver_codeword_separation():
     """Guards the media_image_dups oracle construction: the 50 planted
     group codewords must sit further apart than the query threshold
     (4) by a wide margin, so cross-group pairs can never appear."""
-    from contessa_spark.operators.image_dedup import splitmix64
+    from contessa_spark.hashing import splitmix64
 
     cw = [splitmix64(g) for g in range(50)]
     mn = min(

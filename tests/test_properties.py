@@ -232,15 +232,12 @@ def test_bloom_core_no_false_negatives(values, fpp):
     """Pure-core bloom check: every inserted value tests positive."""
     import numpy as np
 
-    from contessa_spark.operators.incremental import (
-        _fnv64_np,
-        _positions,
-        bloom_params,
-    )
+    from contessa_spark.hashing import fnv1a
+    from contessa_spark.operators.incremental import _positions, bloom_params
 
     m_bits, k = bloom_params(max(1, len(values)), fpp)
     words = np.zeros(m_bits // 64, dtype=np.uint64)
-    h1 = _fnv64_np(values)
+    h1 = fnv1a(values)
     for pos in _positions(h1, m_bits, k):
         np.bitwise_or.at(
             words, (pos >> np.uint64(6)).astype(np.int64),
@@ -358,3 +355,99 @@ def test_registrable_domain_python_matches_duckdb(url):
         [url],
     ).fetchone()[0]
     assert got == py_registrable_domain(url), url
+
+
+# ------------------------------------------------------------ hashing
+
+
+def _fnv_ref(s, bits=64, init=None):
+    """Scalar FNV-1a over a string's UTF-8 bytes: the reference every
+    ``hashing`` kernel is checked against."""
+    basis, prime = (0xCBF29CE484222325, 0x100000001B3) if bits == 64 else (2166136261, 16777619)
+    h = basis if init is None else init
+    for b in (s or "").encode("utf-8"):
+        h = ((h ^ b) * prime) & ((1 << bits) - 1)
+    return h
+
+
+@given(st.lists(st.one_of(st.none(), st.text(max_size=30)), max_size=80),
+       st.sampled_from([64, 32]), st.data())
+@settings(max_examples=150, deadline=None)
+def test_fnv1a_matches_scalar_reference(strs, bits, data):
+    """List, sliced (non-zero offset) and chunked Arrow inputs all hash
+    like the scalar loop; NULL hashes as the empty string. The drawn
+    list is repeated so the vectorized byte passes run, not only the
+    scalar tail."""
+    import pyarrow as pa
+
+    from contessa_spark.hashing import _SCALAR_TAIL, fnv1a
+
+    strs = strs * (2 * _SCALAR_TAIL)
+    want = [_fnv_ref(s, bits) for s in strs]
+    assert fnv1a(strs, bits).tolist() == want
+    padded = pa.array(["pad"] + strs + ["pad"], pa.string())
+    assert fnv1a(padded.slice(1, len(strs)), bits).tolist() == want
+    cut = data.draw(st.integers(min_value=0, max_value=len(strs)))
+    chunked = pa.chunked_array(
+        [pa.array(strs[:cut], pa.string()), pa.array(strs[cut:], pa.string())]
+    )
+    assert fnv1a(chunked, bits).tolist() == want
+
+
+def test_fnv1a_scalar_tail_long_string():
+    """A 25k-byte token among many short ones: the vectorized passes
+    stop once fewer than the tail threshold remain, and the scalar tail
+    finishes the long strings from their current state."""
+    from contessa_spark.hashing import _SCALAR_TAIL, fnv1a
+
+    strs = ["é漢" * 5000 + "x"] + [f"w{i}" * (i % 7) for i in range(3 * _SCALAR_TAIL)]
+    strs += ["y" * 300, "z" * 299, None, ""]
+    assert len(strs[0].encode("utf-8")) > 25_000
+    for bits in (64, 32):
+        assert fnv1a(strs, bits).tolist() == [_fnv_ref(s, bits) for s in strs]
+
+
+@given(st.lists(st.tuples(st.text(max_size=20), st.text(max_size=20)), max_size=60),
+       st.sampled_from([64, 32]))
+@settings(max_examples=100, deadline=None)
+def test_fnv1a_init_continues_the_hash(pairs, bits):
+    from contessa_spark.hashing import fnv1a
+
+    a = [x for x, _ in pairs]
+    b = [y for _, y in pairs]
+    got = fnv1a(b, bits, init=fnv1a(a, bits)).tolist()
+    assert got == [_fnv_ref(x + y, bits) for x, y in pairs]
+
+
+@given(st.lists(st.lists(st.text(max_size=6), max_size=9), max_size=25),
+       st.integers(min_value=1, max_value=5))
+@settings(max_examples=150, deadline=None)
+def test_gram_hashes_match_joined_grams(docs, k):
+    """One hash per word-k-gram position, equal to FNV-64 of the joined
+    gram string; docs with fewer than k words contribute none."""
+    from contessa_spark.hashing import gram_hashes
+
+    flat, counts = gram_hashes(docs, k)
+    assert counts.tolist() == [max(0, len(w) - k + 1) for w in docs]
+    assert flat.tolist() == [
+        _fnv_ref(" ".join(w[i : i + k])) for w in docs for i in range(len(w) - k + 1)
+    ]
+
+
+@given(st.lists(st.one_of(st.none(), text_st), max_size=20))
+@settings(max_examples=100, deadline=None)
+def test_simhash_batch_matches_per_word_votes(texts):
+    """The batch SimHash core equals a per-word scalar vote: bit i is
+    set when more than half of the lowered words have FNV-64 bit i."""
+    from contessa_spark.operators.dedup import _simhash_batch
+
+    want = []
+    for t in texts:
+        words = (t or "").lower().split()
+        sig = 0
+        for i in range(64):
+            ones = sum((_fnv_ref(w) >> i) & 1 for w in words)
+            if 2 * ones > len(words):
+                sig |= 1 << i
+        want.append(sig - (1 << 64) if sig >= 1 << 63 else sig)
+    assert _simhash_batch(texts).tolist() == want

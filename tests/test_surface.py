@@ -55,3 +55,30 @@ def test_no_unreferenced_top_level_definitions():
         f"{path}: {name}" for path, name, own in defs if total[name] - own == 0
     )
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+#: FNV-1a offset bases and primes, and the SplitMix64 multiplier, in
+#: the hex and decimal spellings a hand-written copy would use
+_HASH_CONSTANTS = {
+    "fnv64 basis": ("0xcbf29ce484222325", "1469598103934665603"),
+    "fnv64 prime": ("0x100000001b3", "1099511628211"),
+    "fnv32 basis": ("0x811c9dc5", "2166136261"),
+    "fnv32 prime": ("0x01000193", "16777619"),
+    "splitmix64 multiplier": ("0x94d049bb133111eb", "10723151780598845931"),
+}
+
+
+def test_hash_constants_live_in_one_module():
+    """Every string-hash and mixer constant appears in one library file,
+    ``contessa_spark/hashing.py``: a second copy means a second
+    hand-written kernel."""
+    found = {name: set() for name in _HASH_CONSTANTS}
+    for path in _tracked_py():
+        if not (path.startswith("contessa_spark/") or path == "__spark_entry__.py"):
+            continue
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            text = f.read().lower()
+        for name, spellings in _HASH_CONSTANTS.items():
+            if any(s in text for s in spellings):
+                found[name].add(path)
+    assert found == {name: {"contessa_spark/hashing.py"} for name in _HASH_CONSTANTS}
