@@ -42,11 +42,11 @@ def annotate_rows(texts):
     (possibly None) strings.
 
     Tokenizes each document ONCE, then computes every word-level signal
-    from ONE ``pd.factorize`` over the batch's flattened tokens: the
-    lowercasing, the stopword membership and the word length run once
-    per UNIQUE token (Zipf: ~30× fewer than token occurrences), the
-    32-bit FNV hash once per batch over the unique lowered tokens
-    (``hashing.fnv1a``), all broadcast back through the code array;
+    from ONE ``hashing.unique_tokens`` over the batch's flattened
+    tokens: the lowercasing, the stopword membership and the word
+    length run once per UNIQUE token (Zipf: ~30× fewer than token
+    occurrences), the 32-bit FNV hash once per batch over the unique
+    lowered tokens (``hashing.fnv1a``), all broadcast back through the code array;
     perplexity runs on the flat hash array (``perplexity_flat``);
     stopword counts and word-length sums are exact-integer cumsum range
     sums. Values are bit-identical to the old per-row form — same
@@ -59,7 +59,7 @@ def annotate_rows(texts):
 
     from contessa_spark.functions.perplexity import perplexity_flat
     from contessa_spark.functions.textstats import _STOPSET
-    from contessa_spark.hashing import fnv1a
+    from contessa_spark.hashing import fnv1a, unique_tokens
 
     texts = [t if isinstance(t, str) else "" for t in texts]
     n_docs = len(texts)
@@ -69,14 +69,8 @@ def annotate_rows(texts):
     bounds = np.concatenate(([0], np.cumsum(lens)))
     total = int(bounds[-1])
     if total:
-        import itertools
-
-        import pandas as pd
-
-        flat = np.empty(total, dtype=object)
-        flat[:] = list(itertools.chain.from_iterable(toks_per_doc))
-        codes, uniq = pd.factorize(flat)
-        uniq_list = uniq.tolist()
+        codes, uniq = unique_tokens(toks_per_doc)
+        uniq_list = uniq.to_pylist()
         uniq_lower = [u.lower() for u in uniq_list]
         n_uniq = len(uniq_list)
         hs_flat = fnv1a(uniq_lower, 32).view(np.int64)[codes]

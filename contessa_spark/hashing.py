@@ -6,6 +6,8 @@
   are a prefix, and each position costs one numpy xor/multiply pass
   over that prefix. The last few (long) strings finish in a scalar
   loop so one huge token does not cost a numpy call per byte.
+* ``unique_tokens`` — one Arrow dictionary encoding of a batch's
+  tokens: the distinct tokens and each token's code.
 * ``gram_hashes`` — FNV-64 of every word k-gram ``" ".join(words[i:i+k])``
   without building a gram string: each unique token is hashed once and
   the next k−1 words are folded in by continuing the hash state.
@@ -77,18 +79,26 @@ def fnv1a(strings, bits: int = 64, init=None) -> np.ndarray:
     return h
 
 
+def unique_tokens(tokens_per_doc):
+    """(codes, uniq): the distinct tokens of all docs as an Arrow
+    string array in first-seen order, and every token (docs
+    concatenated in order) as an index into it. Arrow's
+    ``dictionary_encode``: ``pd.factorize`` would merge strings that
+    differ only after a NUL character."""
+    enc = pa.array(list(itertools.chain.from_iterable(tokens_per_doc)), pa.string()).dictionary_encode()
+    return enc.indices.to_numpy(), enc.dictionary
+
+
 def gram_hashes(tokens_per_doc, k: int):
     """(flat uint64, counts): FNV-64 of ``" ".join(words[i:i+k])`` for
     every word k-gram position of every doc, docs concatenated in
-    order; ``counts[d] = max(0, len(words_d) − k + 1)``. Unique tokens
-    come from Arrow's ``dictionary_encode`` (``pd.factorize`` would
-    merge strings that differ only after a NUL character)."""
+    order; ``counts[d] = max(0, len(words_d) − k + 1)``. Each unique
+    token (``unique_tokens``) is hashed once."""
     lens = np.fromiter(map(len, tokens_per_doc), dtype=np.int64, count=len(tokens_per_doc))
     counts = np.maximum(lens - (k - 1), 0)
     if not counts.any():
         return np.empty(0, dtype=np.uint64), counts
-    enc = pa.array(list(itertools.chain.from_iterable(tokens_per_doc)), pa.string()).dictionary_encode()
-    codes, uniq = enc.indices.to_numpy(), enc.dictionary
+    codes, uniq = unique_tokens(tokens_per_doc)
     # gram starts: doc-local index < count of that doc
     doc_start = np.repeat(np.cumsum(lens) - lens, counts)
     starts = doc_start + (np.arange(len(doc_start)) - np.repeat(np.cumsum(counts) - counts, counts))

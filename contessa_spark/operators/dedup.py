@@ -11,9 +11,10 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
   the shingle posting lists with vectorized pair emission — never a
   cross join;
 * MinHash+LSH: ONE fused pandas-UDF pass computes band keys + the
-  shingle hash set, candidate pairs come from capped band-bucket
-  groups, exact-Jaccard verification joins the persisted hash sets —
-  the scale path (Broder 1997; Leskovec/Rajaraman/Ullman ch.3);
+  shingle hash set; the hash sets ride in the capped band-bucket
+  groups, and each candidate pair is verified by exact Jaccard inside
+  its group's emission — the scale path (Broder 1997;
+  Leskovec/Rajaraman/Ullman ch.3);
 * SimHash (Charikar 2002; Manku et al. WWW'07): 64-bit signature via a
   vectorized pandas UDF, near-dup = Hamming distance ≤ k emitted from
   capped rotated-band-key groups;
@@ -89,6 +90,24 @@ def _run_pairs(start, L, first=0):
 def _id_pairs(cols, x, y):
     ids = cols["_id"]
     return {"id_a": ids[x], "id_b": ids[y]}
+
+
+def _distinct_pairs(ids, x, y):
+    """A batch's pairs once each: lexsort by (``ids[x]``, ``ids[y]``)
+    and keep each run's first pair. Returns ``(x, y, count)`` — the
+    distinct pairs' positions in id order and how often each was
+    emitted. A near-dup pair repeats in every group it shares (every
+    shingle posting list, every band bucket), and each repeat would
+    otherwise cross the Arrow boundary as its own row."""
+    import numpy as np
+
+    ia, ib = ids[x], ids[y]
+    order = np.lexsort((ib, ia))
+    ia, ib, x, y = ia[order], ib[order], x[order], y[order]
+    new = np.ones(len(ia), dtype=bool)
+    np.logical_or(ia[1:] != ia[:-1], ib[1:] != ib[:-1], out=new[1:])
+    idx = np.flatnonzero(new)
+    return x[idx], y[idx], np.diff(np.append(idx, len(ia)))
 
 
 def _emit_group_pairs(step=_id_pairs):
@@ -454,30 +473,14 @@ def ngram_jaccard_pairs(
 
     def partial_counts(cols, x, y):
         # Pairs are PARTIALLY COUNTED per Arrow batch before leaving
-        # Python (lexsort + run-length boundaries — all vectorized): a
-        # near-dup pair at threshold 0.1 shares hundreds of shingles,
-        # so its raw emission repeats across the batch's groups, and
-        # every repeat would otherwise cross the Arrow boundary and
-        # feed the JVM hash aggregate as its own row. The downstream
-        # groupBy sums the partial counts — identical `common`, ~an
-        # order of magnitude fewer Python→JVM rows on near-dup-dense
-        # corpora.
-        import numpy as np
-
+        # Python: a near-dup pair at threshold 0.1 shares hundreds of
+        # shingles, so the batch emits it hundreds of times. The
+        # downstream groupBy sums the partial counts — identical
+        # `common`, ~an order of magnitude fewer Python→JVM rows on
+        # near-dup-dense corpora.
         ids, ns = cols["_id"], cols["_n"]
-        ia, ib = ids[x], ids[y]
-        order = np.lexsort((ib, ia))
-        ia, ib, x, y = ia[order], ib[order], x[order], y[order]
-        new = np.ones(len(ia), dtype=bool)
-        np.logical_or(ia[1:] != ia[:-1], ib[1:] != ib[:-1], out=new[1:])
-        idx = np.flatnonzero(new)
-        return {
-            "id_a": ia[idx],
-            "id_b": ib[idx],
-            "na": ns[x[idx]],
-            "nb": ns[y[idx]],
-            "cnt": np.diff(np.append(idx, len(ia))),
-        }
+        x, y, cnt = _distinct_pairs(ids, x, y)
+        return {"id_a": ids[x], "id_b": ids[y], "na": ns[x], "nb": ns[y], "cnt": cnt}
 
     pairs = (
         groups.mapInArrow(
@@ -872,13 +875,12 @@ def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
     FNV-collide (~2⁻⁶⁴ per pair of distinct shingles — negligible even
     at 10¹² docs per doc pair, since only within-pair collisions matter).
 
-    ``hs`` is BINARY rather than array<long>: the signature table is
-    persisted and scanned by three consumers (band explode + both
-    verify-join probes), and a deserialized cached array column costs
-    an object per element where the packed form is one byte buffer per
-    doc — cheaper to cache, scan, shuffle and Arrow-transfer. The
-    verify kernel reads it back with ``np.frombuffer`` (same machine
-    byte order on both sides of the boundary).
+    ``hs`` is BINARY rather than array<long>: it is shuffled once per
+    band into the band-bucket groups, and an array column costs an
+    object per element where the packed form is one byte buffer per
+    doc — cheaper to shuffle, collect and Arrow-transfer. The verify
+    step reads it back with ``np.frombuffer`` (same machine byte order
+    on both sides of the boundary).
 
     Shingle hashes come from one ``gram_hashes`` call per Arrow batch
     and keep repeated grams: a repeat changes neither a doc's minimum
@@ -921,7 +923,6 @@ def minhash_lsh_candidates(
     threshold: float = 0.8,
     max_df: Optional[int] = None,
     observation=None,
-    cleanup: Optional[list] = None,
 ) -> DataFrame:
     """MinHash → band → bucket-group → exact-Jaccard verify.
 
@@ -929,97 +930,71 @@ def minhash_lsh_candidates(
     1 − (1 − s^r)^b with r = n_hashes/bands rows per band; at
     (64, 16) the S-curve crosses ~0.77 — tuned for threshold 0.8.
 
-    Plan (one UDF pass, three shuffles):
+    Plan (one UDF pass, one shuffle into band groups, one ``distinct``):
     1. ``lsh_signature_udf`` computes band keys AND the distinct
-       shingle-hash set per doc in one fused pass; the narrow
-       (id, keys, hs) projection is persisted — it feeds both the
-       candidate and verify stages.
-    2. Candidates: explode band keys → group by key → capped
-       vectorized pair emission (never a self-join).
-    3. Verify: join the candidate pairs back to the persisted hash
-       sets (AQE broadcasts the small pair side) and compute exact
-       |A∩B|/|A∪B| with a vectorized sorted-array intersection —
-       no re-shingling, no posting-list shuffle of candidate docs.
+       shingle-hash set per doc in one fused pass.
+    2. Explode the band keys next to ``struct(id, hs)`` → group by key
+       → capped pair emission through ``_emit_group_pairs`` (never a
+       self-join), as ``simhash_near_dups`` does.
+    3. Verify inside the emission: each batch's pairs are deduped
+       (``_distinct_pairs``), and each remaining pair's exact
+       |A∩B|/|A∪B| is a sorted-array intersection of the two hash sets
+       carried in its group — no cached table, no join back, no
+       re-shingling. A pair emitted from several bands (or batches)
+       gets the same Jaccard every time, so ``distinct()`` leaves one
+       row per pair.
+
+    The price is a shuffle that carries each doc's ``hs`` once per band
+    it shares a bucket in; nothing stays cached after the result is
+    consumed.
 
     ``max_df`` (recommended at scale) drops band buckets larger than
     that before candidate emission — see ``_cap_groups``. A bucket that
     hot is an exact-dup cluster (run ``exact_dedup`` first) or a
     degenerate band; dropping costs recall only on such clusters. The
-    verify stage is exact and uncapped by design (the r2 form forwarded
-    ``max_df`` into verification, silently undercounting overlap inside
-    large true near-dup clusters).
-
-    PERSIST LIFETIME: the signature table is ``persist()``-ed
-    because two downstream branches consume it — and it stays cached
-    until the returned DataFrame is garbage-collected or the session's
-    ContextCleaner reclaims it. The ``hs`` column (~1k longs/doc) makes
-    it the largest intermediate of the job, so callers that invoke this
-    repeatedly in one session should pass ``cleanup=[]``: every
-    persisted frame is appended to it, and after the result has been
-    fully consumed (collected/written) call ``df.unpersist()`` on each
-    to release the blocks deterministically.
+    verify is exact: a surviving pair's Jaccard is over its two full
+    hash sets, whatever was capped.
     """
-    import pandas as pd
-
-    sig = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            lsh_signature_udf(k, n_hashes, bands)(F.col(text_col)).alias("_s"),
-        )
-        # struct first, fields second: two getField projections on the
-        # UDF call itself would each embed a full UDF eval (the
-        # double-eval trap tests/test_plans.py guards elsewhere)
-        .select("_id", F.col("_s.keys").alias("_keys"), F.col("_s.hs").alias("_hs"))
-        .persist()
-    )
-    if cleanup is not None:
-        cleanup.append(sig)
-    band_entries = sig.select("_id", F.explode("_keys").alias("key"))
-
+    # asNondeterministic, as in ngram_jaccard_pairs: the
+    # filter Spark infers from explode (size(_keys) > 0) would otherwise
+    # push the pure UDF below the caller's round-robin spread exchange
+    # and run it twice (verified: 2 ArrowEvalPython nodes → 1)
+    sig = df.select(
+        F.col(id_col).alias("_id"),
+        lsh_signature_udf(k, n_hashes, bands).asNondeterministic()(F.col(text_col)).alias("_s"),
+    ).select("_id", F.col("_s.keys").alias("_keys"), F.col("_s.hs").alias("_hs"))
     groups = (
-        band_entries.groupBy("key")
-        .agg(F.collect_list("_id").alias("_ids"))
-        .where(F.size("_ids") > 1)
-        .select("_ids")
+        sig.select(F.explode("_keys").alias("key"), F.struct("_id", "_hs").alias("_doc"))
+        .groupBy("key")
+        .agg(F.collect_list("_doc").alias("_docs"))
+        .where(F.size("_docs") > 1)
+        .select("_docs")
     )
-    groups = _cap_groups(groups, "_ids", max_df, observation)
+    groups = _cap_groups(groups, "_docs", max_df, observation)
 
-    cand = groups.mapInArrow(
-        _emit_group_pairs(), schema="id_a long, id_b long"
-    ).distinct()
-
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
-    joined = cand.join(a, "id_a").join(b, "id_b")
-
-    def _verify(batches):
+    def jaccard_step(cols, x, y):
         import numpy as np
 
-        for pdf in batches:
-            ids_a, ids_b, js = [], [], []
-            for ia, ib, ha, hb in zip(
-                pdf["id_a"], pdf["id_b"], pdf["_ha"], pdf["_hb"]
-            ):
-                ha = np.frombuffer(ha, dtype=np.int64)
-                hb = np.frombuffer(hb, dtype=np.int64)
-                common = np.intersect1d(ha, hb, assume_unique=True).size
-                union = ha.size + hb.size - common
-                # same filter-then-round order as ngram_jaccard_pairs:
-                # threshold on the raw IEEE ratio, round at the end
-                if union and common / union >= threshold:
-                    ids_a.append(ia)
-                    ids_b.append(ib)
-                    js.append(common / union)
-            yield pd.DataFrame(
-                {
-                    "id_a": np.asarray(ids_a, dtype=np.int64),
-                    "id_b": np.asarray(ids_b, dtype=np.int64),
-                    "jaccard": np.asarray(js, dtype=np.float64),
-                }
-            )
+        ids = cols["_id"]
+        x, y, _ = _distinct_pairs(ids, x, y)
+        sets = [np.frombuffer(h, dtype=np.int64) for h in cols["_hs"]]
+        common = np.fromiter(
+            (np.intersect1d(sets[a], sets[b], assume_unique=True).size for a, b in zip(x, y)),
+            dtype=np.int64,
+            count=len(x),
+        )
+        n = np.fromiter(map(len, sets), dtype=np.int64, count=len(sets))
+        # every doc in a band group has ≥1 shingle, so the union is > 0;
+        # same filter-then-round order as ngram_jaccard_pairs: threshold
+        # on the raw IEEE ratio, round at the end
+        jac = common / (n[x] + n[y] - common)
+        m = jac >= threshold
+        return {"id_a": ids[x][m], "id_b": ids[y][m], "jaccard": jac[m]}
 
-    out = joined.mapInPandas(_verify, schema="id_a long, id_b long, jaccard double")
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    pairs = groups.mapInArrow(
+        _emit_group_pairs(jaccard_step), schema="id_a long, id_b long, jaccard double"
+    ).distinct()
+    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 # -------------------------------------------------------------- SimHash
@@ -1184,72 +1159,76 @@ def dedup_components(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     e = e.distinct().persist()
-
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    changed = None
-    for _ in range(max_iters):
-        # candidate labels: own (tagged with _old=own lbl) + the label
-        # of every neighbor (_old NULL) — min(_old) per group recovers
-        # the previous label with no second join
-        own = labels.withColumn("_old", F.col("lbl"))
-        neighbor = (
-            e.join(labels.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                "lbl",
-                F.lit(None).cast("long").alias("_old"),
-            )
+    try:
+        labels = (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("lbl", F.col("node"))
+            .localCheckpoint(eager=True)
         )
-        cand = own.unionByName(neighbor)
-        if pointer_jump:
-            # label-of-label: lbl is itself a node of the same
-            # component, so adopting ITS label is sound and doubles
-            # the propagation distance per round
-            lofl = (
-                labels.alias("l1")
-                .join(
-                    labels.select(
-                        F.col("node").alias("lbl"),
-                        F.col("lbl").alias("_ll"),
-                    ),
-                    "lbl",
-                )
+        changed = None
+        for _ in range(max_iters):
+            # candidate labels: own (tagged with _old=own lbl) + the label
+            # of every neighbor (_old NULL) — min(_old) per group recovers
+            # the previous label with no second join
+            own = labels.withColumn("_old", F.col("lbl"))
+            neighbor = (
+                e.join(labels.withColumnRenamed("node", "src"), "src")
                 .select(
-                    "node",
-                    F.col("_ll").alias("lbl"),
+                    F.col("dst").alias("node"),
+                    "lbl",
                     F.lit(None).cast("long").alias("_old"),
                 )
             )
-            cand = cand.unionByName(lofl)
-        obs = Observation()
-        new_labels = (
-            cand.groupBy("node")
-            .agg(F.min("lbl").alias("lbl"), F.min("_old").alias("_old"))
-            .observe(
-                obs,
-                F.count(F.when(F.col("lbl") < F.col("_old"), 1)).alias("changed"),
+            cand = own.unionByName(neighbor)
+            if pointer_jump:
+                # label-of-label: lbl is itself a node of the same
+                # component, so adopting ITS label is sound and doubles
+                # the propagation distance per round
+                lofl = (
+                    labels.alias("l1")
+                    .join(
+                        labels.select(
+                            F.col("node").alias("lbl"),
+                            F.col("lbl").alias("_ll"),
+                        ),
+                        "lbl",
+                    )
+                    .select(
+                        "node",
+                        F.col("_ll").alias("lbl"),
+                        F.lit(None).cast("long").alias("_old"),
+                    )
+                )
+                cand = cand.unionByName(lofl)
+            obs = Observation()
+            new_labels = (
+                cand.groupBy("node")
+                .agg(F.min("lbl").alias("lbl"), F.min("_old").alias("_old"))
+                .observe(
+                    obs,
+                    F.count(F.when(F.col("lbl") < F.col("_old"), 1)).alias("changed"),
+                )
+                .drop("_old")
+                # eager checkpoint = the round's ONE job; it both truncates
+                # lineage and fires the observation (verified: a lazy
+                # checkpoint's LogicalRDD plan drops the metrics)
+                .localCheckpoint(eager=True)
             )
-            .drop("_old")
-            # eager checkpoint = the round's ONE job; it both truncates
-            # lineage and fires the observation (verified: a lazy
-            # checkpoint's LogicalRDD plan drops the metrics)
-            .localCheckpoint(eager=True)
-        )
-        changed = obs.get["changed"]
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise ValueError(
-            f"dedup_components did not converge within max_iters={max_iters} "
-            f"({changed} labels still shrinking) — the graph diameter exceeds "
-            "the cap; rerun with a larger max_iters"
-        )
+            changed = obs.get["changed"]
+            labels = new_labels
+            if changed == 0:
+                break
+        if changed != 0:
+            raise ValueError(
+                f"dedup_components did not converge within max_iters={max_iters} "
+                f"({changed} labels still shrinking) — the graph diameter exceeds "
+                "the cap; rerun with a larger max_iters"
+            )
+    finally:
+        # every round's labels are eager local checkpoints: nothing
+        # returned reads the edge list again
+        e.unpersist()
     out = labels.select(
         F.col("node").alias(id_col), F.col("lbl").alias("component_id")
     )
@@ -1447,8 +1426,8 @@ def substring_dedup(
        exploded frame is persisted — it feeds both the gram-frequency
        aggregate and the flag join, and re-running the gram UDF twice
        would double the only Python cost in the plan (pass
-       ``cleanup=[]`` to unpersist deterministically, as in
-       ``minhash_lsh_candidates``).
+       ``cleanup=[]``: the frame is appended to it, so the caller can
+       ``unpersist()`` it once the result has been consumed).
     2. Gram stats: groupBy(gh) → (count, min(struct(id, pos))). A
        COUNT aggregate with map-side partial combine — a gram repeated
        10⁹ times reduces to one row per map partition before the

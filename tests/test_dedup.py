@@ -27,6 +27,10 @@ from contessa_spark.operators.dedup import (
 SF001 = "/root/testdata/sf0.01"
 
 
+def _nothing_cached(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _hot_corpus(spark, n_hot: int):
     """n_hot docs sharing ONE hot shingle + unique tails, plus one true
     near-dup pair (ids 1_000_000/1_000_001) with jaccard 5/7 (8-word
@@ -194,12 +198,11 @@ def test_minhash_recall_equals_exact_at_driver_settings(spark):
         (r["id_a"], r["id_b"], r["jaccard"])
         for r in ngram_jaccard_pairs(docs, k=3, threshold=0.1).collect()
     }
-    lsh = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_candidates(
-            docs, k=3, n_hashes=32, bands=16, threshold=0.1
-        ).collect()
-    }
+    rows = minhash_lsh_candidates(
+        docs, k=3, n_hashes=32, bands=16, threshold=0.1
+    ).collect()
+    lsh = {(r["id_a"], r["id_b"], r["jaccard"]) for r in rows}
+    assert len(rows) == len(lsh)  # one row per pair, not one per band
     assert lsh <= exact  # verification step guarantees no false pairs
     assert lsh == exact, f"recall {len(lsh)}/{len(exact)}"
 
@@ -351,6 +354,7 @@ def test_dedup_components_semantics(spark):
     10-node path exercises multi-round convergence (diameter rounds)."""
     from contessa_spark.operators.dedup import dedup_components
 
+    spark.catalog.clearCache()
     pairs = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (20, 22)]
     pairs += [(100 + i, 100 + i + 1) for i in range(9)]  # path 100..109
     pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
@@ -358,10 +362,10 @@ def test_dedup_components_semantics(spark):
         [(i,) for i in [1, 2, 3, 10, 11, 20, 21, 22, 99] + list(range(100, 110))],
         "doc_id long",
     )
-    got = {
-        r["doc_id"]: r["component_id"]
-        for r in dedup_components(pdf, all_ids=ids).collect()
-    }
+    comps = dedup_components(pdf, all_ids=ids)
+    # the edge list is released before the labels are even read
+    assert _nothing_cached(spark)
+    got = {r["doc_id"]: r["component_id"] for r in comps.collect()}
     assert got == {
         1: 1, 2: 1, 3: 1,
         10: 10, 11: 10,
@@ -406,11 +410,13 @@ def test_dedup_components_raises_when_unconverged(spark):
     from contessa_spark.operators.dedup import dedup_components
 
     # path graph 0-1-2-...-9: diameter 9, needs more than 2 rounds
+    spark.catalog.clearCache()
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
     )
     with pytest.raises(ValueError, match="did not converge"):
         dedup_components(pairs, max_iters=2)
+    assert _nothing_cached(spark)
     with pytest.raises(ValueError, match="max_iters"):
         dedup_components(pairs, max_iters=0)
 

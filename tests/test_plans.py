@@ -451,6 +451,23 @@ def test_split_assign_is_pure_projection(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_minhash_verifies_inside_band_groups(spark):
+    """MinHash+LSH is one signature UDF, one band-group emission that
+    verifies its own pairs, and a distinct: no join back to a cached
+    signature table, no separate pandas verify, and nothing left cached
+    once the result has been read."""
+    import __spark_entry__ as entry
+
+    spark.catalog.clearCache()
+    df = entry.queries()["dedup_minhash_lsh"](spark, "/root/testdata/sf0.01")
+    plan = _plan(df)
+    assert plan.count("ArrowEvalPython") == 1
+    for node in ("Join", "InMemoryTableScan", "MapInPandas"):
+        assert node not in plan, node
+    assert df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pair_emitters_are_arrow_kernels(spark):
     """One pair engine. The uncapped n-gram counter is ONE grouped Arrow
     stage fed by exactly one exchange after the shingle UDF (the

@@ -4,7 +4,7 @@ the distributed paths rely on."""
 
 from datetime import datetime, timedelta
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from contessa_spark.functions import langid, perplexity, scrub, textstats
@@ -44,6 +44,7 @@ def test_stats_bounded(t):
 
 
 @given(text_st)
+@example("a a\x00b")  # tokens that differ only after a NUL stay apart
 @settings(max_examples=100, deadline=None)
 def test_fused_annotate_matches_single_signal_forms(t):
     """The fused batch core must equal the independent py_* functions
