@@ -98,13 +98,16 @@ class ConsistencyChecker:
     def persist(self, cr: CheckResult, task_ts: datetime, path: str) -> None:
         """Upsert one ConsistencyCheck row (contessa/models.py:157-205;
         identity = (type, name, left_table, right_table, task_ts,
-        time_filter), consistency_checker.py:233-238)."""
+        time_filter), consistency_checker.py:233-238) — a driver-side
+        parquet rewrite, or ``MERGE INTO`` for an ``iceberg:`` path."""
         import json
 
         import pandas as pd
 
         from contessa_spark.results import (
+            CONSISTENCY_CHECK_SCHEMA,
             CONSISTENCY_UPSERT_KEY,
+            IcebergMergeWriter,
             LocalSmallTableMerge,
         )
 
@@ -123,9 +126,14 @@ class ConsistencyChecker:
             "task_ts": task_ts,
             "created_at": datetime.now(timezone.utc).replace(tzinfo=None),
         }
-        LocalSmallTableMerge.merge(
-            pd.DataFrame([row]), path, CONSISTENCY_UPSERT_KEY
-        )
+        if path.startswith("iceberg:"):
+            IcebergMergeWriter(self.spark).merge(
+                [row], path, CONSISTENCY_UPSERT_KEY, CONSISTENCY_CHECK_SCHEMA
+            )
+        else:
+            LocalSmallTableMerge.merge(
+                pd.DataFrame([row]), path, CONSISTENCY_UPSERT_KEY
+            )
 
     def _side(
         self,

@@ -211,8 +211,9 @@ def wordpiece_token_counts(
     import pandas as pd
     from pyspark.sql import types as T
 
+    enc = _make_word_encoder(vocab)
+
     def _cnt(texts):
-        enc = _make_word_encoder(vocab)
         out = []
         for t in texts:
             n = 0

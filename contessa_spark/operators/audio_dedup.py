@@ -22,7 +22,9 @@ Spark-first shape: ONE ``mapInPandas`` pass parses the RIFF
 container and hashes (numpy integer sums per Arrow batch); candidate
 generation and verification reuse the modality-agnostic
 :func:`~contessa_spark.operators.image_dedup.hamming_near_dups`
-banding (pass ``hash_bits=32``) — pure JVM after the decode.
+banding (pass ``hash_bits=32``) — the Hamming engine of text SimHash
+and image dHash, one capped ``mapInArrow`` group pass after the
+decode.
 
 Reference parity: no counterpart in contessa (SURVEY.md §2 extension
 — multimodal dedup family).

@@ -23,10 +23,12 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
   ``similarity.hyperplane_lsh_join``.
 
 Every pair emitter — the capped n-gram posting lists, MinHash band
-buckets, SimHash band groups, ``similarity.hyperplane_lsh_join``'s
-table buckets (all through ``_emit_group_pairs`` under ``mapInArrow``)
-and the uncapped block-pair counter — draws its pairs from one
-in-run generator, ``_run_pairs``.
+buckets, the Hamming band groups of ``hamming_band_pairs`` (SimHash
+here, ``image_dedup`` dHash and ``audio_dedup`` fingerprints),
+``similarity.hyperplane_lsh_join``'s table buckets (all through one
+capped group pass, ``_group_pairs``, under ``mapInArrow``) and the
+uncapped block-pair counter — draws its pairs from one in-run
+generator, ``_run_pairs``.
 """
 
 from __future__ import annotations
@@ -37,37 +39,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from contessa_spark.hashing import FNV64_BASIS, FNV64_PRIME, fnv1a, gram_hashes, splitmix64
-
-
-def _cap_groups(
-    groups: DataFrame, list_col: str, max_df: Optional[int], observation=None
-) -> DataFrame:
-    """Document-frequency cap for pair-emitting group passes.
-
-    Pair emission from a posting list / band bucket is O(|group|²): one
-    shingle or band key shared by 10⁶ docs would emit 5·10¹¹ pairs from
-    a single group — the only quadratic blowup in these plans at web
-    scale. Groups larger than ``max_df`` are DROPPED before emission
-    (standard practice: a shingle common to millions of documents
-    carries no near-duplicate signal, and a band bucket that hot is an
-    exact-dup cluster that ``exact_dedup`` should have removed first).
-
-    Pass a ``pyspark.sql.Observation`` to get, after the first action,
-    ``dropped_groups`` and ``dropped_postings`` — what was dropped is
-    never silent.
-    """
-    if max_df is None:
-        return groups
-    if observation is not None:
-        groups = groups.observe(
-            observation,
-            F.count(F.when(F.size(list_col) > max_df, 1)).alias("dropped_groups"),
-            F.coalesce(
-                F.sum(F.when(F.size(list_col) > max_df, F.size(list_col))),
-                F.lit(0),
-            ).alias("dropped_postings"),
-        )
-    return groups.where(F.size(list_col) <= max_df)
 
 
 def _run_pairs(start, L, first=0):
@@ -158,6 +129,55 @@ def _emit_group_pairs(step=_id_pairs):
             )
 
     return emit
+
+
+def _group_pairs(
+    entries: DataFrame,
+    keys,
+    doc,
+    step,
+    schema: str,
+    max_df: Optional[int] = None,
+    observation=None,
+) -> DataFrame:
+    """The one group pass of every capped pair emitter: group
+    ``entries`` by ``keys``, collect ``doc`` (``_id`` or
+    ``struct(_id, *payload)``) per group, drop singletons and emit each
+    group's pairs through ``_emit_group_pairs(step)`` under
+    ``mapInArrow`` with output ``schema``. Pairs repeat across groups;
+    callers aggregate or ``distinct()``.
+
+    Document-frequency cap: pair emission from a posting list / band
+    bucket is O(|group|²): one shingle or band key shared by 10⁶ docs
+    would emit 5·10¹¹ pairs from a single group — the only quadratic
+    blowup in these plans at web scale. Groups larger than ``max_df``
+    are DROPPED before emission (standard practice: a shingle common to
+    millions of documents carries no near-duplicate signal, and a band
+    bucket that hot is an exact-dup cluster that ``exact_dedup`` should
+    have removed first).
+
+    Pass a ``pyspark.sql.Observation`` to get, after the first action,
+    ``dropped_groups`` and ``dropped_postings`` — what was dropped is
+    never silent.
+    """
+    groups = (
+        entries.groupBy(*keys)
+        .agg(F.collect_list(doc).alias("_docs"))
+        .where(F.size("_docs") > 1)
+        .select("_docs")
+    )
+    if max_df is not None:
+        hot = F.size("_docs") > max_df
+        if observation is not None:
+            groups = groups.observe(
+                observation,
+                F.count(F.when(hot, 1)).alias("dropped_groups"),
+                F.coalesce(F.sum(F.when(hot, F.size("_docs"))), F.lit(0)).alias(
+                    "dropped_postings"
+                ),
+            )
+        groups = groups.where(F.size("_docs") <= max_df)
+    return groups.mapInArrow(_emit_group_pairs(step), schema=schema)
 
 
 # ---------------------------------------------------------------- exact
@@ -434,7 +454,7 @@ def ngram_jaccard_pairs(
       the shingle inverted index (explode → group by shingle → capped
       pair emission), because the cap semantics are defined on posting
       lists: lists longer than ``max_df`` are DROPPED before pair
-      emission — see ``_cap_groups``. With a cap, pairs whose overlap
+      emission — see ``_group_pairs``. With a cap, pairs whose overlap
       includes a dropped hot shingle undercount ``common`` (recall-only
       loss; the reported jaccard of surviving pairs is a lower bound).
 
@@ -460,16 +480,6 @@ def ngram_jaccard_pairs(
         "_id", F.col("_t.hs").alias("_sh"), F.col("_t.n").alias("_n")
     )
     inv = sh.select("_id", "_n", F.explode("_sh").alias("_s"))
-    # pairs generated per shingle GROUP (collect the posting list, emit
-    # id pairs) — single pass over the inverted index, no self-join, so
-    # the (UDF-computed) shingles are evaluated exactly once
-    groups = (
-        inv.groupBy("_s")
-        .agg(F.collect_list(F.struct("_id", "_n")).alias("_docs"))
-        .where(F.size("_docs") > 1)
-        .select("_docs")
-    )
-    groups = _cap_groups(groups, "_docs", max_df, observation)
 
     def partial_counts(cols, x, y):
         # Pairs are PARTIALLY COUNTED per Arrow batch before leaving
@@ -482,10 +492,18 @@ def ngram_jaccard_pairs(
         x, y, cnt = _distinct_pairs(ids, x, y)
         return {"id_a": ids[x], "id_b": ids[y], "na": ns[x], "nb": ns[y], "cnt": cnt}
 
+    # pairs generated per shingle GROUP (collect the posting list, emit
+    # id pairs) — single pass over the inverted index, no self-join, so
+    # the (UDF-computed) shingles are evaluated exactly once
     pairs = (
-        groups.mapInArrow(
-            _emit_group_pairs(partial_counts),
-            schema="id_a long, id_b long, na int, nb int, cnt long",
+        _group_pairs(
+            inv,
+            ["_s"],
+            F.struct("_id", "_n"),
+            partial_counts,
+            "id_a long, id_b long, na int, nb int, cnt long",
+            max_df,
+            observation,
         )
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.sum("cnt").alias("common"))
@@ -934,7 +952,7 @@ def minhash_lsh_candidates(
     1. ``lsh_signature_udf`` computes band keys AND the distinct
        shingle-hash set per doc in one fused pass.
     2. Explode the band keys next to ``struct(id, hs)`` → group by key
-       → capped pair emission through ``_emit_group_pairs`` (never a
+       → capped pair emission through ``_group_pairs`` (never a
        self-join), as ``simhash_near_dups`` does.
     3. Verify inside the emission: each batch's pairs are deduped
        (``_distinct_pairs``), and each remaining pair's exact
@@ -949,7 +967,7 @@ def minhash_lsh_candidates(
     consumed.
 
     ``max_df`` (recommended at scale) drops band buckets larger than
-    that before candidate emission — see ``_cap_groups``. A bucket that
+    that before candidate emission — see ``_group_pairs``. A bucket that
     hot is an exact-dup cluster (run ``exact_dedup`` first) or a
     degenerate band; dropping costs recall only on such clusters. The
     verify is exact: a surviving pair's Jaccard is over its two full
@@ -963,14 +981,6 @@ def minhash_lsh_candidates(
         F.col(id_col).alias("_id"),
         lsh_signature_udf(k, n_hashes, bands).asNondeterministic()(F.col(text_col)).alias("_s"),
     ).select("_id", F.col("_s.keys").alias("_keys"), F.col("_s.hs").alias("_hs"))
-    groups = (
-        sig.select(F.explode("_keys").alias("key"), F.struct("_id", "_hs").alias("_doc"))
-        .groupBy("key")
-        .agg(F.collect_list("_doc").alias("_docs"))
-        .where(F.size("_docs") > 1)
-        .select("_docs")
-    )
-    groups = _cap_groups(groups, "_docs", max_df, observation)
 
     def jaccard_step(cols, x, y):
         import numpy as np
@@ -991,8 +1001,14 @@ def minhash_lsh_candidates(
         m = jac >= threshold
         return {"id_a": ids[x][m], "id_b": ids[y][m], "jaccard": jac[m]}
 
-    pairs = groups.mapInArrow(
-        _emit_group_pairs(jaccard_step), schema="id_a long, id_b long, jaccard double"
+    pairs = _group_pairs(
+        sig.select(F.explode("_keys").alias("key"), F.struct("_id", "_hs").alias("_doc")),
+        ["key"],
+        "_doc",
+        jaccard_step,
+        "id_a long, id_b long, jaccard double",
+        max_df,
+        observation,
     ).distinct()
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -1049,57 +1065,87 @@ def simhash_near_dups(
     fewer, colder (band, key) groups. k ≥ 8 keeps 8×8 banding and is
     RECALL-LOSSY (pass ``bands=16`` for lossless ≤ 15, at the cost of
     4-bit keys whose groups run ~N/16 hot — the ``max_df`` cap is then
-    mandatory at scale). Pairs are emitted per (band, key) GROUP — the
-    same single-pass
-    group-emission + ``_cap_groups(max_df)`` pattern as its three
-    siblings (ngram/minhash/embedding-LSH), never a row-level
-    self-join: a 16-bit key space means a 10¹²-doc corpus averages
-    ~10⁷ docs per bucket, and an uncapped bucket join would emit
-    ~10¹⁴ pairs per bucket before any Hamming filter. The Hamming
-    verify runs vectorized (numpy xor + byte-popcount) INSIDE the
-    emission, so only passing pairs ever materialize.
+    mandatory at scale). Candidate generation and verification are
+    :func:`hamming_band_pairs`, the engine the image and audio
+    fingerprint near-dups share.
     """
-    sh = df.select(F.col(id_col).alias("_id"), simhash_udf()(F.col(text_col)).alias("_sim"))
+    # asNondeterministic, as in ngram_jaccard_pairs: the engine's NULL
+    # filter would otherwise push the pure UDF below the caller's
+    # round-robin spread exchange and run it twice (2 ArrowEvalPython
+    # nodes → 1)
+    sh = df.select(
+        F.col(id_col).alias("_id"),
+        simhash_udf().asNondeterministic()(F.col(text_col)).alias("_sim"),
+    )
     if bands is None:
         bands = 4 if max_hamming <= 3 else 8
-    width = 64 // bands
-    entries = sh.select(
-        "_id",
-        "_sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("_sim"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ]
+    return hamming_band_pairs(sh, "_id", "_sim", max_hamming, bands, 64, max_df, observation)
+
+
+def hamming_band_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    bands: int,
+    hash_bits: int = 64,
+    max_df: Optional[int] = None,
+    observation=None,
+) -> DataFrame:
+    """All pairs of rows whose ``hash_col`` fingerprints (a long whose
+    low ``hash_bits`` bits are populated — text SimHash, image dHash,
+    audio fingerprint) are within ``max_hamming`` bits →
+    (id_a, id_b, hamming), id_a < id_b. NULL hashes are dropped.
+
+    The hash splits into ``bands`` disjoint bit bands of
+    ``hash_bits // bands`` bits; the last band takes the slack bits.
+    Pigeonhole: a pair within k bits agrees exactly on ≥1 band iff
+    bands > k, so with ``bands > max_hamming`` the banding is lossless.
+    Pairs are emitted per (band, key) GROUP through :func:`_group_pairs`
+    — capped by ``max_df``, never a row-level self-join: a 16-bit key
+    space means a 10¹²-doc corpus averages ~10⁷ docs per bucket, and an
+    uncapped bucket join would emit ~10¹⁴ pairs per bucket before any
+    Hamming filter. The Hamming verify runs vectorized (numpy xor +
+    byte-popcount) INSIDE the emission, so only passing pairs ever
+    materialize.
+    """
+    width = hash_bits // bands
+    keys = []
+    for i in range(bands):
+        w = width if i < bands - 1 else hash_bits - i * width
+        keys.append(
+            F.struct(
+                F.lit(i).alias("band"),
+                F.shiftrightunsigned(F.col("_h"), i * width)
+                .bitwiseAND(F.lit((1 << w) - 1 if w < 64 else -1))
+                .alias("key"),
             )
-        ).alias("bk"),
-    ).select("_id", "_sim", "bk.band", "bk.key")
-    groups = (
-        entries.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("_id", "_sim")).alias("_docs"))
-        .where(F.size("_docs") > 1)
-        .select("_docs")
+        )
+    entries = (
+        df.select(F.col(id_col).alias("_id"), F.col(hash_col).cast("long").alias("_h"))
+        .where(F.col("_h").isNotNull())
+        .select("_id", "_h", F.explode(F.array(*keys)).alias("bk"))
+        .select("_id", "_h", "bk.band", "bk.key")
     )
-    groups = _cap_groups(groups, "_docs", max_df, observation)
 
     def hamming_filter(cols, x, y):
         import numpy as np
 
         pop8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-        ids, sims = cols["_id"], cols["_sim"]
-        xor = np.bitwise_xor(sims[x], sims[y]).view(np.uint64)
+        ids, hs = cols["_id"], cols["_h"]
+        xor = np.bitwise_xor(hs[x], hs[y]).view(np.uint64)
         hd = pop8[xor.view(np.uint8).reshape(-1, 8)].sum(axis=1).astype(np.int32)
         m = hd <= max_hamming
         return {"id_a": ids[x][m], "id_b": ids[y][m], "hamming": hd[m]}
 
-    return groups.mapInArrow(
-        _emit_group_pairs(hamming_filter), schema="id_a long, id_b long, hamming int"
+    return _group_pairs(
+        entries,
+        ["band", "key"],
+        F.struct("_id", "_h"),
+        hamming_filter,
+        "id_a long, id_b long, hamming int",
+        max_df,
+        observation,
     ).distinct()
 
 

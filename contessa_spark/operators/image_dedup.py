@@ -5,19 +5,20 @@ Web-scale training corpora dedup images the same way they dedup text:
 a compact perceptual fingerprint per image, then candidate generation
 by fingerprint locality, then exact verification.  This module
 implements the difference-hash (dHash) family — 64-bit row-gradient
-signs over an 8×9 block-mean downsample — with the same lossless
-banding shape the text SimHash operator uses (``operators/dedup.py``):
-any two hashes within Hamming distance ``h`` agree exactly on at
-least one of ``h+1`` disjoint bands (pigeonhole), so an equality
-band-join finds every candidate pair and a JVM ``bit_count`` verifies.
+signs over an 8×9 block-mean downsample — and finds near-duplicates
+with the Hamming engine text SimHash uses,
+``dedup.hamming_band_pairs``: any two hashes within Hamming distance
+``h`` agree exactly on at least one of ``h+1`` disjoint bands
+(pigeonhole), so grouping by (band, key) finds every candidate pair,
+and the xor/popcount verify inside each group's emission is exact.
 
 Spark-first shape: ONE ``mapInPandas`` pass decodes and hashes
 (binary payload crosses to Python once, numpy does the integer
-arithmetic); everything after — band extraction (shift/mask), the
-band equality self-join, XOR + ``bit_count`` verification, pair
-dedup — is pure JVM.  Hot band buckets (flat images all hashing
-alike) are capped with drop accounting, the repo-wide guard against
-quadratic blowup.
+arithmetic); the band keys are JVM shift/mask expressions, and one
+capped ``mapInArrow`` group pass emits and verifies the pairs — no
+join and nothing persisted.  Hot band buckets (flat images all
+hashing alike) are capped at ``max_bucket``, the repo-wide guard
+against quadratic blowup.
 
 DETERMINISM: the hash is bit-deterministic by construction — block
 means are never materialized as floats; the gradient sign compares
@@ -36,7 +37,8 @@ import struct
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from contessa_spark.operators.dedup import hamming_band_pairs
 
 #: over this many images in one band bucket, the bucket is dropped
 #: from pair generation (degenerate content — e.g. monochrome fills)
@@ -178,84 +180,22 @@ def hamming_near_dups(
     populated bits; a constant-zero high band would put EVERY row in
     one bucket and trip the cap).
 
-    Lossless banding: ``max_hamming + 1`` disjoint bit bands — a pair
-    within the threshold must match exactly on ≥1 band (pigeonhole),
-    so the band equality join generates a superset of true pairs and
-    the JVM bit_count verification is exact.  Band buckets larger than
-    ``max_bucket`` are excluded from pair generation (logged upstream
-    by callers that care; degenerate fills would otherwise go
-    quadratic)."""
+    Lossless banding: ``max_hamming + 1`` disjoint bit bands of
+    :func:`~contessa_spark.operators.dedup.hamming_band_pairs` — a pair
+    within the threshold must match exactly on ≥1 band (pigeonhole).
+    Band buckets larger than ``max_bucket`` are excluded from pair
+    generation (degenerate fills would otherwise go quadratic)."""
     if max_hamming < 0 or max_hamming > 16:
         raise ValueError("hamming_near_dups: max_hamming must be in [0, 16]")
     if hash_bits < 1 or hash_bits > 64:
         raise ValueError("hamming_near_dups: hash_bits must be in [1, 64]")
-    n_bands = max_hamming + 1
-    if hash_bits < n_bands:
+    if hash_bits < max_hamming + 1:
         raise ValueError(
             "hamming_near_dups: need hash_bits >= max_hamming + 1 bands"
         )
-    width = hash_bits // n_bands
-    # localCheckpoint (lazy): the banded frame feeds the bucket-count
-    # subtree AND the pair join (which itself reads it twice as a/b) —
-    # without it an upstream decode/hash UDF in `hashes` re-runs once
-    # per consumer. Narrow (id, 64-bit hash) rows — tiny at any scale.
-    h = (
-        hashes.select(id_col, hash_col)
-        .where(F.col(hash_col).isNotNull())
-        .localCheckpoint(eager=False)
+    return hamming_band_pairs(
+        hashes, id_col, hash_col, max_hamming, max_hamming + 1, hash_bits, max_bucket
     )
-    bands = []
-    for i in range(n_bands):
-        off = i * width
-        w = width if i < n_bands - 1 else hash_bits - off  # last takes slack
-        mask = (1 << w) - 1
-        bands.append(
-            F.struct(
-                F.lit(i).alias("band_idx"),
-                F.expr(f"shiftrightunsigned({hash_col}, {off})").bitwiseAND(
-                    F.lit(mask)
-                ).alias("band_val"),
-            )
-        )
-    exploded = h.select(
-        F.col(id_col).alias("id"),
-        F.col(hash_col).alias("h"),
-        F.explode(F.array(*bands)).alias("b"),
-    ).select("id", "h", "b.band_idx", "b.band_val")
-
-    counts = exploded.groupBy("band_idx", "band_val").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    keep = exploded.join(
-        counts.where(F.col("__n") <= int(max_bucket)).drop("__n"),
-        ["band_idx", "band_val"],
-    )
-    a = keep.select(
-        "band_idx",
-        "band_val",
-        F.col("id").alias("id_a"),
-        F.col("h").alias("h_a"),
-    )
-    b = keep.select(
-        "band_idx",
-        "band_val",
-        F.col("id").alias("id_b"),
-        F.col("h").alias("h_b"),
-    )
-    pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("h_a").bitwiseXOR(F.col("h_b"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= int(max_hamming))
-        .distinct()
-    )
-    return pairs
 
 
 def image_near_dups(

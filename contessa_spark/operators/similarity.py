@@ -439,10 +439,10 @@ def hyperplane_lsh_join(
     Plan: per table, a sign-signature bucket id
     (``bucket_signatures_udf``: deterministic hyperplanes, one GEMM per
     Arrow batch); candidate pairs emitted per (table, bucket) group by
-    the ``mapInArrow`` group emitter MinHash, SimHash and the capped
-    n-gram path share (``dedup._emit_group_pairs``), including the
-    ``max_df`` hot-bucket cap (``dedup._cap_groups``) —
-    then every candidate is verified with ``pair_cosine_udf``.
+    the capped ``mapInArrow`` group pass MinHash, the Hamming
+    near-dups and the capped n-gram path share (``dedup._group_pairs``,
+    including its ``max_df`` hot-bucket cap) — then every candidate is
+    verified with ``pair_cosine_udf``.
     No cross join and no all-blocks-pair join anywhere; shuffles carry
     (table, bucket, id) entries and candidate id pairs only.
 
@@ -451,7 +451,7 @@ def hyperplane_lsh_join(
     (8 bits × 6 tables) gives ≈ 0.96; for low thresholds use fewer
     bits / more tables.
     """
-    from contessa_spark.operators.dedup import _cap_groups, _emit_group_pairs
+    from contessa_spark.operators.dedup import _group_pairs, _id_pairs
 
     base = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -472,16 +472,8 @@ def hyperplane_lsh_join(
         ).alias("tbl", "bucket"),
     )
 
-    groups = (
-        entries.groupBy("tbl", "bucket")
-        .agg(F.collect_list("_id").alias("_ids"))
-        .where(F.size("_ids") > 1)
-        .select("_ids")
-    )
-    groups = _cap_groups(groups, "_ids", max_df, observation)
-
-    cand = groups.mapInArrow(
-        _emit_group_pairs(), schema="id_a long, id_b long"
+    cand = _group_pairs(
+        entries, ["tbl", "bucket"], "_id", _id_pairs, "id_a long, id_b long", max_df, observation
     ).distinct()
 
     a = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))

@@ -9,12 +9,12 @@ Reference: contessa/models.py — QualityCheck row schema
 
 Spark realization: a fixed StructType (no dynamic per-table classes —
 the table *name* is the parameter), widened counters to LongType for
-10^12-row scale, and a pluggable writer:
+10^12-row scale, and a writer chosen by the result path:
 
-* ``IcebergMergeWriter`` — real deployment: ``MERGE INTO`` keyed on the
-  identity (+ optional ``partition_id`` for per-partition lineage /
-  checkpoint-resume); ``iceberg:`` result paths read their 30-day
-  medians through Spark;
+* ``IcebergMergeWriter`` — ``iceberg:<ident>`` paths, the real
+  deployment: ``MERGE INTO`` keyed on the identity (+ optional
+  ``partition_id`` for per-partition lineage / checkpoint-resume); the
+  30-day medians are read through Spark;
 * ``ParquetMergeWriter`` — parquet result directories. The table holds
   one row per rule per run (hundreds of rows), so it is control-plane
   data: the upsert is a driver-side pandas/pyarrow rewrite through

@@ -42,6 +42,7 @@ from contessa_spark.results import (
     QUALITY_CHECK_SCHEMA,
     UPSERT_KEY,
     CheckResult,
+    IcebergMergeWriter,
     ParquetMergeWriter,
     build_quality_rows,
     medians_30_day,
@@ -52,20 +53,15 @@ from contessa_spark.table import Table
 
 
 class QualityRunner:
-    def __init__(self, spark: SparkSession, writer=None, row_builder=None):
+    def __init__(self, spark: SparkSession, row_builder=None):
         """``row_builder(rules, agg_results, task_ts, medians) -> rows``
         is the Spark analogue of the reference's ``special_qc_map``
         (contessa/runner.py:29,124-140 — swap the persisted row shape
         per result table); defaults to the standard QualityCheck rows.
         It only runs when persisting, so its ``agg_results`` carry no
         failed examples.
-
-        ``writer.merge(rows, path, key_cols, schema, existing=None)``
-        upserts the rows; ``existing`` is the parquet table as this run
-        already read it (None for Iceberg).
         """
         self.spark = spark
-        self.writer = writer or ParquetMergeWriter(spark)
         self.row_builder = row_builder or build_quality_rows
 
     def run(
@@ -123,7 +119,9 @@ class QualityRunner:
                 self.spark, result_table_path, today=today, history=history
             )
             rows = self.row_builder(rules, ordered, task_ts, medians)
-            self.writer.merge(
+            iceberg = result_table_path.startswith("iceberg:")
+            writer = (IcebergMergeWriter if iceberg else ParquetMergeWriter)(self.spark)
+            writer.merge(
                 rows, result_table_path, UPSERT_KEY, QUALITY_CHECK_SCHEMA,
                 existing=history,
             )

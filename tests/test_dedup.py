@@ -421,6 +421,46 @@ def test_dedup_components_raises_when_unconverged(spark):
         dedup_components(pairs, max_iters=0)
 
 
+def _near_dup_families():
+    """One small call per banded near-dup family, keyed by name."""
+    from contessa_spark.operators.audio_dedup import audio_near_dups
+    from contessa_spark.operators.image_dedup import image_near_dups
+    from contessa_spark.operators.similarity import hyperplane_lsh_join
+
+    def docs(spark):
+        rows = [(i, f"near dup body {i % 5} shared words tail {i % 3}") for i in range(40)]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def fingerprints(spark, col):
+        rows = [(i, (i % 7) * 0x9E3779B97F4A7C15 % (1 << 31)) for i in range(40)]
+        return spark.createDataFrame(rows, f"media_id long, {col} long")
+
+    def vectors(spark):
+        rows = [(i, [float(i % 4), 1.0, float(i % 3)]) for i in range(40)]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    return {
+        "minhash": lambda spark: minhash_lsh_candidates(docs(spark), threshold=0.1),
+        "simhash": lambda spark: simhash_near_dups(docs(spark)),
+        "image": lambda spark: image_near_dups(fingerprints(spark, "dhash")),
+        "audio": lambda spark: audio_near_dups(fingerprints(spark, "afp")),
+        "hyperplane": lambda spark: hyperplane_lsh_join(vectors(spark), threshold=0.9, dim=3),
+    }
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "image", "audio", "hyperplane"])
+def test_near_dup_families_leave_nothing_persisted(spark, family):
+    """No banded near-dup family leaves an RDD persisted after its
+    result is consumed. ``getPersistentRDDs`` sees what the
+    CacheManager check ``_nothing_cached`` cannot: ``localCheckpoint``
+    and RDD-level ``persist``."""
+    jsc = spark.sparkContext._jsc
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    assert _near_dup_families()[family](spark).collect()
+    assert jsc.getPersistentRDDs().isEmpty()
+
+
 def test_hyperplane_lsh_join_declared_dim(spark):
     """The declared-dim fast path must skip inference yet agree with
     the inferred path; a WRONG declared dim must raise loudly instead

@@ -121,6 +121,88 @@ def test_image_near_dups_bucket_cap_and_validation(spark):
         image_near_dups(df, max_hamming=17)
 
 
+def _sweep_rows(seed, bits):
+    """402 seeded fingerprint rows: a hot cluster of 20–79 identical
+    hashes (trips the small caps), 12 base codewords with 0–8 flipped
+    bits each, and two NULL hashes (which must not pair)."""
+    import random
+
+    rng = random.Random(seed)
+    bases = [rng.getrandbits(bits) for _ in range(12)]
+    hot, n_hot = rng.getrandbits(bits), rng.randrange(20, 80)
+    rows = []
+    for i in range(400):
+        h = hot
+        if i >= n_hot:
+            h = rng.choice(bases)
+            for _ in range(rng.randrange(0, 9)):
+                h ^= 1 << rng.randrange(bits)
+        rows.append((i, h - (1 << 64) if h >= 1 << 63 else h))
+    rows += [(400, None), (401, None)]
+    rng.shuffle(rows)
+    return rows
+
+
+def _capped_band_pairs(rows, max_hamming, bits, cap):
+    """Reference model of capped pigeonhole banding: ``max_hamming + 1``
+    bands of ``bits // bands`` bits (the last takes the slack); pairs
+    that share a bucket of 2..``cap`` rows and lie within
+    ``max_hamming`` bits."""
+    n_bands = max_hamming + 1
+    width = bits // n_bands
+    hashes = {i: h & ((1 << 64) - 1) for i, h in rows if h is not None}
+    out = set()
+    for b in range(n_bands):
+        w = width if b < n_bands - 1 else bits - b * width
+        buckets = {}
+        for i, h in hashes.items():
+            buckets.setdefault((h >> (b * width)) & ((1 << w) - 1), []).append(i)
+        for ids in buckets.values():
+            if len(ids) > cap:
+                continue
+            ids.sort()
+            for x, ia in enumerate(ids):
+                for ib in ids[x + 1 :]:
+                    d = bin(hashes[ia] ^ hashes[ib]).count("1")
+                    if d <= max_hamming:
+                        out.add((ia, ib, d))
+    return out
+
+
+@pytest.mark.parametrize(
+    "modality,max_hamming,cap",
+    [
+        ("image", 4, 10_000),
+        ("image", 2, 30),
+        ("image", 3, 20),
+        ("image", 0, 10_000),
+        ("audio", 4, 10_000),
+        ("audio", 2, 25),
+    ],
+)
+def test_media_near_dups_match_capped_band_model(spark, modality, max_hamming, cap):
+    """Image and audio near-dups equal the capped-banding model on
+    seeded inputs, including a NULL hash, 64-bit one-band banding
+    (k=0) and caps that drop hot buckets."""
+    from contessa_spark.operators.audio_dedup import audio_near_dups
+    from contessa_spark.operators.image_dedup import image_near_dups
+
+    fn, col, bits = {
+        "image": (image_near_dups, "dhash", 64),
+        "audio": (audio_near_dups, "afp", 32),
+    }[modality]
+    dropped = False
+    for seed in (2, 3):
+        rows = _sweep_rows(seed, bits)
+        df = spark.createDataFrame(rows, f"media_id long, {col} long")
+        got = fn(df, max_hamming=max_hamming, max_bucket=cap).collect()
+        want = _capped_band_pairs(rows, max_hamming, bits, cap)
+        assert len(got) == len(want)
+        assert {tuple(r) for r in got} == want
+        dropped |= want != _capped_band_pairs(rows, max_hamming, bits, 10_000)
+    assert dropped == (cap < 10_000)
+
+
 def test_driver_codeword_separation():
     """Guards the media_image_dups oracle construction: the 50 planted
     group codewords must sit further apart than the query threshold

@@ -399,19 +399,30 @@ def test_bm25_broadcasts_query_terms_never_sorts_tokens(spark):
 
 
 def test_image_near_dups_plan_no_cross_join(spark):
-    """Pair generation must stay an equi-join on (band_idx, band_val)
-    — never a cartesian/nested-loop product — and the Hamming
-    verification must be JVM bit_count, not a Python UDF."""
+    """Image and audio near-dups run on the shared Hamming engine: pairs
+    come from ONE capped ``mapInArrow`` group pass over (band, key)
+    groups that verifies the Hamming distance inside the emission — no
+    join node of any kind and no Python UDF stage. Both modalities are
+    checked in this one test."""
+    from contessa_spark.operators.audio_dedup import audio_near_dups
     from contessa_spark.operators.image_dedup import image_near_dups
 
-    df = spark.createDataFrame(
-        [(i, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(64)],
-        "media_id long, dhash long",
-    )
-    plan = _plan(image_near_dups(df, max_hamming=4))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for fn, col in ((image_near_dups, "dhash"), (audio_near_dups, "afp")):
+        df = spark.createDataFrame(
+            [(i, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(64)],
+            f"media_id long, {col} long",
+        )
+        plan = _plan(fn(df, max_hamming=4))
+        for join in (
+            "SortMergeJoin",
+            "BroadcastHashJoin",
+            "ShuffledHashJoin",
+            "CartesianProduct",
+            "BroadcastNestedLoopJoin",
+        ):
+            assert join not in plan, (fn.__name__, join)
+        assert plan.count("MapInArrow") == 1, fn.__name__
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_rrf_fusion_joins_are_broadcast(spark):
@@ -491,3 +502,6 @@ def test_pair_emitters_are_arrow_kernels(spark):
         "embedding_near_dups_lsh",
     ):
         assert "MapInArrow" in _plan(queries[name](spark, sf)), name
+    # the Hamming engine's NULL filter must not split the SimHash UDF
+    # around the spread exchange
+    assert _plan(queries["dedup_simhash"](spark, sf)).count("ArrowEvalPython") == 1

@@ -334,3 +334,41 @@ def test_all_null_description_stays_a_string_column(spark, booking, tmp_path):
     assert len(stored) == 4
     assert all(r["rule_description"] is None for r in stored)
     assert {r["task_ts"] for r in stored} == {TASK_TS}
+
+
+def test_iceberg_result_paths_reach_the_merge_writer(spark, booking, tmp_path, monkeypatch):
+    """``iceberg:`` result paths go to ``IcebergMergeWriter`` for both
+    quality rows and consistency rows — never to a parquet writer,
+    which would fail on the URI and leave a local temp directory. The
+    MERGE itself is stubbed: no Iceberg catalog runs here."""
+    from contessa_spark.consistency import ConsistencyChecker
+    from contessa_spark.results import (
+        CONSISTENCY_CHECK_SCHEMA,
+        CONSISTENCY_UPSERT_KEY,
+        UPSERT_KEY,
+        IcebergMergeWriter,
+    )
+
+    calls = []
+
+    def merge(self, rows, table, key_cols, schema, existing=None):
+        calls.append((table, key_cols, schema, len(rows)))
+
+    monkeypatch.setattr(IcebergMergeWriter, "merge", merge)
+    monkeypatch.chdir(tmp_path)
+    rows = QualityRunner(spark).run(
+        RULES[:2],
+        booking,
+        check_table={"schema_name": "tmp", "table_name": "booking_all_v2"},
+        result_table_path="iceberg:db.qc",
+        context={"task_ts": TASK_TS},
+    )
+    ConsistencyChecker(spark).run(
+        "count", booking, booking, result_table_path="iceberg:db.cc",
+        context={"task_ts": TASK_TS},
+    )
+    assert calls == [
+        ("iceberg:db.qc", UPSERT_KEY, QUALITY_CHECK_SCHEMA, len(rows)),
+        ("iceberg:db.cc", CONSISTENCY_UPSERT_KEY, CONSISTENCY_CHECK_SCHEMA, 1),
+    ]
+    assert list(tmp_path.iterdir()) == []

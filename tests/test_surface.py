@@ -82,3 +82,23 @@ def test_hash_constants_live_in_one_module():
             if any(s in text for s in spellings):
                 found[name].add(path)
     assert found == {name: {"contessa_spark/hashing.py"} for name in _HASH_CONSTANTS}
+
+
+def test_group_emitter_used_only_through_group_pairs():
+    """Every capped pair emitter forms its groups through one function,
+    ``dedup._group_pairs``: no other library code references the
+    ``mapInArrow`` body ``_emit_group_pairs`` or a separate cap step
+    ``_cap_groups``."""
+    private = ("_emit_group_pairs", "_cap_groups")
+    found = []
+    for path in _tracked_py():
+        if not (path.startswith("contessa_spark/") or path == "__spark_entry__.py"):
+            continue
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for stmt in tree.body:
+            if path == "contessa_spark/operators/dedup.py" and getattr(stmt, "name", None) == "_group_pairs":
+                continue
+            refs = _refs(stmt)
+            found += [f"{path}: {name}" for name in private if refs[name]]
+    assert not found, "group emitter used outside dedup._group_pairs:\n" + "\n".join(found)
