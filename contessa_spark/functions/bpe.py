@@ -15,8 +15,10 @@ TakeOrderedAndProject top-``max_words`` cap bound the driver-side
 state to ~max_words rows regardless of corpus size. The merge loop
 runs driver-side over that dict (the classic incremental pair-count
 algorithm — only words containing the merged pair are touched);
-encoding broadcasts the rank table to workers inside a pandas UDF with
-a per-worker word memo (words are Zipf — most lookups hit).
+encoding ships the rank table to workers inside ``_subword_udf``, the
+apply kernel all three subword tokenizers share: per Arrow batch it
+encodes each UNIQUE word once, through one bounded word memo per UDF
+(words are Zipf — most lookups hit).
 
 Determinism: ties in pair frequency break on the lexicographically
 smallest pair; the sample is a hash predicate (stable across
@@ -26,6 +28,7 @@ partitionings, unlike ``df.sample``); the word cap orders by
 
 from __future__ import annotations
 
+from itertools import islice
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
@@ -224,62 +227,68 @@ def train_bpe(
 
 # ---------------------------------------------------------------- apply
 
-def _make_word_encoder(merges: List[Tuple[str, str]], byte_level: bool = False):
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
+#: words one subword UDF memoizes before it stops adding (bounded
+#: worker memory; Zipf words make most lookups hit well before it)
+_MEMO_WORDS = 2_000_000
+
+
+def _subword_udf(encode_word, tokens: bool = False):
+    """The apply kernel of every trained subword tokenizer (BPE,
+    unigram, WordPiece): pandas UDF text → BIGINT token count, or
+    → array<string> tokens with ``tokens=True``. Per Arrow batch, the
+    words (``hashing.lower_words``) are dictionary-encoded once
+    (``hashing.unique_tokens``) and ``encode_word`` runs once per
+    unique word through one bounded memo that lives as long as the
+    UDF; counts are summed per doc through the codes, tokens are the
+    per-word encodings concatenated in word order."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from contessa_spark.hashing import lower_words, unique_tokens
+
     memo: Dict[str, List[str]] = {}
 
-    def enc(word: str) -> List[str]:
-        got = memo.get(word)
-        if got is None:
-            got = encode_word(word, ranks, byte_level)
-            if len(memo) < 2_000_000:  # bounded worker memory
-                memo[word] = got
-        return got
+    def _apply(texts):
+        words = lower_words(texts)
+        lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+        codes, uniq = unique_tokens(words)
+        encs = []
+        for w in uniq.to_pylist():
+            got = memo.get(w)
+            if got is None:
+                got = encode_word(w)
+                if len(memo) < _MEMO_WORDS:
+                    memo[w] = got
+            encs.append(got)
+        if tokens:
+            it = iter(codes.tolist())
+            return pd.Series([[t for c in islice(it, n) for t in encs[c]] for n in lens.tolist()])
+        n_toks = np.fromiter(map(len, encs), dtype=np.int64, count=len(encs))
+        cs = np.concatenate(([0], np.cumsum(n_toks[codes])))
+        ends = np.cumsum(lens)
+        return pd.Series(cs[ends] - cs[ends - lens], dtype="int64")
 
-    return enc
+    _apply.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_apply, T.ArrayType(T.StringType()) if tokens else T.LongType())
+
+
+def _bpe_encoder(merges: List[Tuple[str, str]], byte_level: bool):
+    ranks = {tuple(p): i for i, p in enumerate(merges)}
+    return lambda w: encode_word(w, ranks, byte_level)
 
 
 def bpe_encode_udf(merges: List[Tuple[str, str]], byte_level: bool = False):
     """pandas UDF: text → array<string> of BPE tokens (lowercased
     whitespace words, each word encoded independently — merges never
-    cross the EOW sentinel). Per-worker word memo: Zipf words make the
-    greedy loop run once per DISTINCT word per worker."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    enc = _make_word_encoder(merges, byte_level)
-
-    def _enc(texts):
-        out = []
-        for t in texts:
-            words = (t if isinstance(t, str) else "").lower().split()
-            toks: List[str] = []
-            for w in words:
-                toks.extend(enc(w))
-            out.append(toks)
-        return pd.Series(out)
-
-    _enc.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_enc, T.ArrayType(T.StringType()))
+    cross the EOW sentinel)."""
+    return _subword_udf(_bpe_encoder(merges, byte_level), tokens=True)
 
 
 def bpe_token_count_udf(merges: List[Tuple[str, str]], byte_level: bool = False):
     """pandas UDF: text → BIGINT token count (no token materialization
     — the pack-budget hot path)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    enc = _make_word_encoder(merges, byte_level)
-
-    def _cnt(texts):
-        out = []
-        for t in texts:
-            words = (t if isinstance(t, str) else "").lower().split()
-            out.append(sum(len(enc(w)) for w in words))
-        return pd.Series(out, dtype="int64")
-
-    _cnt.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_cnt, T.LongType())
+    return _subword_udf(_bpe_encoder(merges, byte_level))
 
 
 def bpe_token_counts(

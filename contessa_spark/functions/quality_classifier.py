@@ -36,7 +36,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from contessa_spark.hashing import fnv1a
+from contessa_spark.hashing import fnv1a, lower_words
 
 
 #: engineered features appended after the hashed buckets: L2-normalized
@@ -54,7 +54,7 @@ def _hash_words(texts, n_features: int):
     products run on the same memory layout as a per-text build."""
     single = isinstance(texts, str)
     texts = [texts] if single else [t if isinstance(t, str) else "" for t in texts]
-    words = [t.lower().split() for t in texts]
+    words = lower_words(texts)
     buckets = fnv1a([w for ws in words for w in ws]) % np.uint64(n_features)
     out = []
     o = 0

@@ -11,8 +11,9 @@ Scale shape — identical to the BPE module's: training consumes the
 bounded WORD-FREQUENCY table (one map-side-combined aggregate + hash
 sample + top-``max_words`` cap — ``bpe.word_frequencies``), never the
 corpus; the EM/prune loop runs driver-side over that dict; encoding
-ships the final piece table to workers inside a pandas UDF with a
-per-worker word memo.
+ships the final piece table to workers inside the subword apply kernel
+``bpe._subword_udf`` (each batch's unique words Viterbi-segmented
+once, through one bounded word memo per UDF).
 
 Training runs FULL-LATTICE EM by default (``em_mode="lattice"``):
 expected piece counts from forward-backward over every segmentation of
@@ -321,28 +322,10 @@ def unigram_token_counts(
 ) -> DataFrame:
     """(id, unigram_tokens): token budget under the trained unigram
     vocabulary — comparable with ``bpe_token_counts``."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    from contessa_spark.functions.bpe import _subword_udf
 
-    memo: Dict[str, int] = {}
     floor = _vocab_floor(logp)
-
-    def _cnt(texts):
-        out = []
-        for t in texts:
-            n = 0
-            for w in (t if isinstance(t, str) else "").lower().split():
-                got = memo.get(w)
-                if got is None:
-                    got = len(_viterbi(w, logp, floor))
-                    if len(memo) < 2_000_000:
-                        memo[w] = got
-                n += got
-            out.append(n)
-        return pd.Series(out, dtype="int64")
-
-    _cnt.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(_cnt, T.LongType())
+    udf = _subword_udf(lambda w: _viterbi(w, logp, floor))
     return df.select(
         F.col(id_col), udf(F.col(text_col)).alias("unigram_tokens")
     )

@@ -19,8 +19,10 @@ shape, shared with the sibling tokenizers:
   so for a given corpus regardless of physical layout);
 * encoding is BERT's greedy longest-match-first per word
   (continuation pieces carry the ``##`` prefix; a word with any
-  uncovered span becomes a single ``[UNK]``), memoized per worker in
-  a fused pandas UDF — Zipf makes the hit rate high.
+  uncovered span becomes a single ``[UNK]``), run once per unique
+  word of each Arrow batch through one bounded word memo per UDF in
+  the shared subword apply kernel (``bpe._subword_udf``) — Zipf makes
+  the hit rate high.
 
 Vocabulary persistence mirrors `bpe.save_merges` (parquet, rank
 order)."""
@@ -185,21 +187,6 @@ def train_wordpiece(
     )
 
 
-def _make_word_encoder(vocab: List[str]):
-    vs = set(vocab)
-    memo: Dict[str, List[str]] = {}
-
-    def enc(word: str) -> List[str]:
-        got = memo.get(word)
-        if got is None:
-            got = encode_word(word, vs)
-            if len(memo) < 2_000_000:
-                memo[word] = got
-        return got
-
-    return enc
-
-
 def wordpiece_token_counts(
     df: DataFrame,
     vocab: List[str],
@@ -208,22 +195,10 @@ def wordpiece_token_counts(
 ) -> DataFrame:
     """(id, wordpiece_tokens): token budget under the trained vocab —
     comparable with `bpe_token_counts` / `unigram_token_counts`."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    from contessa_spark.functions.bpe import _subword_udf
 
-    enc = _make_word_encoder(vocab)
-
-    def _cnt(texts):
-        out = []
-        for t in texts:
-            n = 0
-            for w in (t if isinstance(t, str) else "").lower().split():
-                n += len(enc(w))
-            out.append(n)
-        return pd.Series(out, dtype="int64")
-
-    _cnt.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(_cnt, T.LongType())
+    vs = set(vocab)
+    udf = _subword_udf(lambda w: encode_word(w, vs))
     return df.select(
         F.col(id_col), udf(F.col(text_col)).alias("wordpiece_tokens")
     )

@@ -6,6 +6,9 @@
   are a prefix, and each position costs one numpy xor/multiply pass
   over that prefix. The last few (long) strings finish in a scalar
   loop so one huge token does not cost a numpy call per byte.
+* ``lower_words`` — a batch's words: each document's lowercased
+  whitespace split (NULL has none), the one word rule of the shingle,
+  MinHash, SimHash, quality-classifier and subword-tokenizer UDFs.
 * ``unique_tokens`` — one Arrow dictionary encoding of a batch's
   tokens: the distinct tokens and each token's code.
 * ``gram_hashes`` — FNV-64 of every word k-gram ``" ".join(words[i:i+k])``
@@ -77,6 +80,12 @@ def fnv1a(strings, bits: int = 64, init=None) -> np.ndarray:
         hs[i] = x
     h[order] = hs & np.uint64(mask)
     return h
+
+
+def lower_words(texts):
+    """The words of each text: its lowercased whitespace split; NULL
+    (any non-``str``) has none."""
+    return [t.lower().split() if isinstance(t, str) else [] for t in texts]
 
 
 def unique_tokens(tokens_per_doc):

@@ -28,7 +28,8 @@ here, ``image_dedup`` dHash and ``audio_dedup`` fingerprints),
 ``similarity.hyperplane_lsh_join``'s table buckets (all through one
 capped group pass, ``_group_pairs``, under ``mapInArrow``) and the
 uncapped block-pair counter — draws its pairs from one in-run
-generator, ``_run_pairs``.
+generator, ``_run_pairs``. The text families (shingles, MinHash,
+SimHash) take a document's words from ``hashing.lower_words``.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from contessa_spark.hashing import FNV64_BASIS, FNV64_PRIME, fnv1a, gram_hashes, splitmix64
+from contessa_spark.hashing import FNV64_BASIS, FNV64_PRIME, fnv1a, gram_hashes, lower_words, splitmix64
 
 
 def _run_pairs(start, L, first=0):
@@ -351,11 +352,6 @@ def _corpus_span_dedup(
 
 # ------------------------------------------------------------- shingles
 
-def _lower_words(texts):
-    """Whitespace-split lowered words of each (possibly NULL) text."""
-    return [t.lower().split() if isinstance(t, str) else [] for t in texts]
-
-
 def _segment_unique(flat, lens):
     """Per-doc sorted-unique over a flat (uint64) batch array: one
     lexsort + run-boundary mask instead of one ``np.unique`` call per
@@ -403,7 +399,7 @@ def hashed_shingles_udf(k: int = 3):
     from pyspark.sql import types as T
 
     def _hs(texts):
-        hs = _segment_unique(*gram_hashes(_lower_words(texts), k))
+        hs = _segment_unique(*gram_hashes(lower_words(texts), k))
         return pd.DataFrame({"hs": hs, "n": [len(a) for a in hs]})
 
     _hs.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
@@ -910,7 +906,7 @@ def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
     A, B = _affine_params(n_hashes)
 
     def _sig(texts):
-        flat, lens = gram_hashes(_lower_words(texts), k)
+        flat, lens = gram_hashes(lower_words(texts), k)
         km, nz = _batch_band_keys(flat, lens, n_hashes, bands, A, B)
         empty = np.empty(0, dtype=np.int64)
         keys_out = [empty] * len(lens)
@@ -1022,7 +1018,7 @@ def _simhash_batch(texts, n_bits: int = 64):
     are hashed in one ``fnv1a`` call and the votes summed per doc."""
     import numpy as np
 
-    words = _lower_words(texts)
+    words = lower_words(texts)
     lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
     h = fnv1a([w for ws in words for w in ws])
     doc = np.repeat(np.arange(len(words)), lens)

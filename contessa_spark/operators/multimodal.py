@@ -245,8 +245,9 @@ def _decode_webp(payload: bytes) -> dict:
       statistics via the full pure-python bitstream decoder in
       ``operators/vp8l.py`` (prefix codes, meta codes, color cache,
       LZ77, all four transforms); ``mean_byte`` = integer-floor mean
-      over R,G,B (alpha excluded); any decode irregularity or the
-      bomb guard degrades to dims-only;
+      over R,G,B (alpha excluded); any decode irregularity degrades to
+      dims-only, and so does the pixel budget ``vp8l.MAX_PIXELS``:
+      past 1M pixels: dims only, ``mean_byte`` NULL, ``ok`` true;
     * ``VP8X`` (extended): 4 flag bytes, then canvas width−1 and
       height−1 as uint24 LE each.
 
@@ -284,14 +285,7 @@ def _decode_webp(payload: bytes) -> dict:
             try:
                 from contessa_spark.operators.vp8l import vp8l_mean_rgb
 
-                # CPU budget, not just memory: the VP8L prefix/LZ77 and
-                # predictor stages are serial per-pixel Python (the
-                # separable transforms are numpy), so a max-size
-                # lossless frame could pin an executor core for minutes
-                # inside the stats UDF. 1M pixels (~seconds worst case)
-                # degrades to dims-only past the budget, matching the
-                # bomb-guard convention of the other decoders.
-                out["mean_byte"] = vp8l_mean_rgb(body, max_pixels=1 << 20)
+                out["mean_byte"] = vp8l_mean_rgb(body)
             except ValueError:
                 pass  # malformed pixel stream: dims-only, still ok
             return out
@@ -972,7 +966,9 @@ def decode_image_bytes(payload: bytes) -> dict:
     """Pure core: PNG (real decode, see ``_decode_png``) or the
     FAKEIMG1 test container → metadata. Other formats raise
     NotImplementedError (clearly-marked stub — wire Pillow/libav here;
-    the distributed plumbing above does not change)."""
+    the distributed plumbing above does not change). Lossless WebP
+    (VP8L) past 1M pixels: dims only, ``mean_byte`` NULL, ``ok`` true
+    (``vp8l.MAX_PIXELS``, see ``_decode_webp``)."""
     if payload is None or len(payload) < len(_MAGIC):
         return {"width": None, "height": None, "mean_byte": None, "ok": False}
     if payload.startswith(_PNG_MAGIC):

@@ -339,14 +339,33 @@ def hyperplane_lsh_topk(
     )
 
 
-def _pivot_init_df(train: DataFrame, n_cells: int, seed: int) -> DataFrame:
-    """Deterministic pivot-init rows: the ``n_cells`` lowest
-    ``xxhash64(id, seed)`` rows — a pseudo-random but layout-stable
-    selection whose physical plan is TakeOrderedAndProject."""
+def _ivf_train_sample(
+    corpus: DataFrame,
+    vec_df_col: str,
+    seed: int,
+    train_fraction: Optional[float],
+    max_train_vectors: int,
+) -> DataFrame:
+    """The IVF quantizer's train sample: a hash-threshold predicate
+    (``train_fraction``) and the ``max_train_vectors`` rows of lowest
+    ``xxhash64(neighbor_id, seed)`` — layout-stable, bounded driver
+    memory, and an ordered limit that compiles to
+    TakeOrderedAndProject, never a global sort."""
+    train = corpus
+    if train_fraction is not None:
+        thr = max(1, int(train_fraction * 1_000_000))
+        train = corpus.where(
+            F.pmod(
+                F.xxhash64(F.col("neighbor_id"), F.lit(seed * 2 + 1)),
+                F.lit(1_000_000),
+            )
+            < thr
+        )
     return (
         train.withColumn("_h", F.xxhash64(F.col("neighbor_id"), F.lit(seed)))
-        .orderBy("_h")
-        .limit(n_cells)
+        .orderBy("_h", "neighbor_id")  # total order: bit-stable collect
+        .limit(max_train_vectors)
+        .select(vec_df_col)
     )
 
 
@@ -376,29 +395,13 @@ def _train_ivf_pivots(
     and thus cell boundaries — could drift across layouts; the
     driver-side sum over hash-ordered rows is bit-stable.
 
-    Init rows = the ``n_cells`` lowest-hash sample rows — identical
-    selection to ``_pivot_init_df`` (kept for its plan test: the
-    ordered-limit compiles to TakeOrderedAndProject, never a global
-    sort)."""
+    Init rows = the ``n_cells`` lowest-hash sample rows
+    (``_ivf_train_sample`` returns them first)."""
     import numpy as np
 
-    train = corpus
-    if train_fraction is not None:
-        thr = max(1, int(train_fraction * 1_000_000))
-        train = corpus.where(
-            F.pmod(
-                F.xxhash64(F.col("neighbor_id"), F.lit(seed * 2 + 1)),
-                F.lit(1_000_000),
-            )
-            < thr
-        )
-    rows = (
-        train.withColumn("_h", F.xxhash64(F.col("neighbor_id"), F.lit(seed)))
-        .orderBy("_h", "neighbor_id")  # total order: bit-stable collect
-        .limit(max_train_vectors)
-        .select(vec_df_col)
-        .collect()
-    )
+    rows = _ivf_train_sample(
+        corpus, vec_df_col, seed, train_fraction, max_train_vectors
+    ).collect()
     if not rows:
         return []
     V = np.array([r[vec_df_col] for r in rows], dtype=np.float64)

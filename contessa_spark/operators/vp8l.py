@@ -50,6 +50,13 @@ _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
 _GREEN_BASE = 256 + 24  # literal greens + length prefix codes
 
+#: pixel budget of a decode: the prefix/LZ77 and predictor stages are
+#: serial per-pixel Python, so a max-size (16383²) lossless frame could
+#: pin an executor core for minutes; past 1M pixels (seconds worst
+#: case) the decoder returns the dims only — the bomb-guard convention
+#: of the other image decoders
+MAX_PIXELS = 1 << 20
+
 
 class Vp8lError(ValueError):
     """Malformed / truncated / unsupported VP8L stream."""
@@ -483,11 +490,11 @@ def _decode_image_stream(br: _Br, w: int, h: int, level0: bool) -> List[int]:
     return pix
 
 
-def decode_vp8l(body: bytes, max_pixels: int = 1 << 24):
+def decode_vp8l(body: bytes):
     """Decode a VP8L chunk body → (width, height, pixels) where pixels
-    is a list of 0xAARRGGBB ints, or (w, h, None) past ``max_pixels``
-    (decompression-bomb guard). Raises :class:`Vp8lError` on malformed
-    input."""
+    is a list of 0xAARRGGBB ints, or (w, h, None) past ``MAX_PIXELS``
+    (decompression-bomb and CPU guard). Raises :class:`Vp8lError` on
+    malformed input."""
     br = _Br(body)
     if br.bits(8) != 0x2F:
         raise Vp8lError("bad VP8L signature")
@@ -496,16 +503,16 @@ def decode_vp8l(body: bytes, max_pixels: int = 1 << 24):
     br.bit()  # alpha_is_used hint — irrelevant for decoding
     if br.bits(3) != 0:
         raise Vp8lError("unsupported VP8L version")
-    if w * h > max_pixels:
+    if w * h > MAX_PIXELS:
         return w, h, None
     return w, h, _decode_image_stream(br, w, h, level0=True)
 
 
-def vp8l_mean_rgb(body: bytes, max_pixels: int = 1 << 24) -> Optional[int]:
+def vp8l_mean_rgb(body: bytes) -> Optional[int]:
     """Integer-floor mean over the R, G, B bytes of the decoded image
     (alpha excluded — it is coverage, not intensity), or None when the
     bomb guard trips."""
-    _w, _h, pix = decode_vp8l(body, max_pixels)
+    _w, _h, pix = decode_vp8l(body)
     if pix is None or not pix:
         return None
     import numpy as np

@@ -5,6 +5,8 @@ and the pack_documents budget integration."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from contessa_spark.functions.bpe import (
@@ -160,3 +162,77 @@ def test_byte_level_spark_encode_partition_invariant(spark):
     a = run(docs)
     b = run(docs.repartition(7))
     assert a == b and a
+
+
+def _subword_case(name, counts):
+    """(udf column factory, pure per-word encoder) for one tokenizer
+    trained on ``counts``."""
+    from pyspark.sql import functions as F
+
+    from contessa_spark.functions import unigram, wordpiece
+    from contessa_spark.functions.bpe import bpe_encode_udf
+
+    if name.startswith("bpe"):
+        merges = train_bpe_from_counts(counts, 128)
+        ranks = {p: i for i, p in enumerate(merges)}
+
+        def enc(w):
+            return encode_word(w, ranks)
+
+        if name == "bpe_encode":
+            return (lambda df: df.select("doc_id", bpe_encode_udf(merges)(F.col("text")).alias("t"))), enc
+        return (lambda df: bpe_token_counts(df, merges).select("doc_id", F.col("bpe_tokens").alias("t"))), enc
+    if name == "unigram":
+        logp = unigram.train_unigram_from_counts(counts, vocab_size=256)
+        floor = unigram._vocab_floor(logp)
+        return (
+            lambda df: unigram.unigram_token_counts(df, logp).select("doc_id", F.col("unigram_tokens").alias("t"))
+        ), (lambda w: unigram._viterbi(w, logp, floor))
+    vocab = wordpiece.train_wordpiece_from_counts(counts, vocab_size=512)
+    vs = set(vocab)
+    return (
+        lambda df: wordpiece.wordpiece_token_counts(df, vocab).select("doc_id", F.col("wordpiece_tokens").alias("t"))
+    ), (lambda w: wordpiece.encode_word(w, vs))
+
+
+@pytest.mark.parametrize("name", ["bpe_counts", "bpe_encode", "unigram", "wordpiece"])
+def test_subword_udfs_match_per_word_encoding(spark, name):
+    """Every subword UDF equals its pure per-word encoder on each doc:
+    a count is ``sum(len(encode_word(w)) for w in lower_words([t])[0])``
+    and ``bpe_encode_udf``'s tokens are the per-word encodings
+    concatenated. Small Arrow batches make one task span several
+    batches, so the word memo is reused across them; NULL, empty,
+    NUL-containing and case-folding words are included."""
+    from collections import Counter
+
+    from contessa_spark.hashing import lower_words
+
+    docs = [
+        (r["doc_id"], r["text"])
+        for r in spark.read.parquet("/root/testdata/sf0.001/documents.parquet").orderBy("doc_id").limit(60).collect()
+    ]
+    docs += [
+        (-1, None),
+        (-2, ""),
+        (-3, "a\x00b a\x00c a\x00b"),
+        (-4, "İstanbul ǅemal HELLO Hello hello ΣΊΣΥΦΟΣ"),
+        (-5, "  \t\n "),
+    ]
+    counts = Counter(w for _, t in docs for w in lower_words([t])[0])
+    udf_rows, enc = _subword_case(name, counts)
+    df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {r["doc_id"]: r["t"] for r in udf_rows(df).collect()}
+    finally:
+        spark.conf.set(key, old)
+    want = {}
+    for d, t in docs:
+        per_word = [enc(w) for w in lower_words([t])[0]]
+        if name == "bpe_encode":
+            want[d] = [tok for toks in per_word for tok in toks]
+        else:
+            want[d] = sum(map(len, per_word))
+    assert got == want

@@ -328,25 +328,28 @@ def test_ivf_recall_vs_bruteforce(spark):
 
 
 def test_ivf_pivot_init_plan_no_global_sort(spark):
-    """Pivot init must be TakeOrderedAndProject (per-partition n-row
-    heap), never a global Sort of the train set (r2 VERDICT item)."""
+    """The IVF train sample (whose first rows are the pivot init) must
+    be TakeOrderedAndProject (per-partition n-row heap), never a global
+    Sort of the train set (r2 VERDICT item) — with and without the
+    hash-threshold fraction."""
     from pyspark.sql import functions as F
 
-    from contessa_spark.operators.similarity import _pivot_init_df
+    from contessa_spark.operators.similarity import _ivf_train_sample
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     train = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv")
     )
-    plan = (
-        _pivot_init_df(train, 8, 42)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "Sort " not in plan
-    assert "Exchange rangepartitioning" not in plan
+    for fraction in (None, 0.5):
+        plan = (
+            _ivf_train_sample(train, "_cv", 42, fraction, 100_000)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "TakeOrderedAndProject" in plan
+        assert "Sort " not in plan
+        assert "Exchange rangepartitioning" not in plan
 
 
 def test_dedup_components_semantics(spark):

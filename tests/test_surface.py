@@ -102,3 +102,23 @@ def test_group_emitter_used_only_through_group_pairs():
             refs = _refs(stmt)
             found += [f"{path}: {name}" for name in private if refs[name]]
     assert not found, "group emitter used outside dedup._group_pairs:\n" + "\n".join(found)
+
+
+def test_subword_apply_kernel_lives_in_one_place():
+    """The subword tokenizers (BPE, unigram, WordPiece) share one apply
+    kernel, ``bpe._subword_udf``: the word-memo bound (2M words) is an
+    integer literal in one library file, and no per-tokenizer memo
+    factory ``_make_word_encoder`` is defined again."""
+    bound, factories = set(), []
+    for path in _tracked_py():
+        if not (path.startswith("contessa_spark/") or path == "__spark_entry__.py"):
+            continue
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Constant) and type(n.value) is int and n.value == 2_000_000:
+                bound.add(path)
+            elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name == "_make_word_encoder":
+                factories.append(path)
+    assert bound == {"contessa_spark/functions/bpe.py"}, bound
+    assert not factories, factories

@@ -290,15 +290,13 @@ def _simple1(bw, sym):
         bw.put(1, 1).put(sym, 8)
 
 
-def test_hand_packed_literal_stream():
-    """Minimal hand-built stream: no transforms, no cache, no meta,
-    all five codes single-symbol → every pixel identical, ZERO data
-    bits per pixel."""
-    from contessa_spark.operators.vp8l import decode_vp8l
-
+def _const_stream(w, h):
+    """VP8L body of a w x h image with no transforms, no cache, no meta
+    and all five codes single-symbol: every pixel 0xFF134299, zero
+    data bits per pixel."""
     bw = _Bw()
     bw.put(0x2F, 8)
-    bw.put(4, 14).put(2, 14)   # 5 x 3
+    bw.put(w - 1, 14).put(h - 1, 14)
     bw.put(0, 1).put(0, 3)     # alpha hint, version
     bw.put(0, 1)               # no transforms
     bw.put(0, 1)               # no color cache
@@ -308,9 +306,40 @@ def test_hand_packed_literal_stream():
     _simple1(bw, 0x99)         # blue
     _simple1(bw, 0xFF)         # alpha
     _simple1(bw, 0)            # distance (unused)
-    w, h, pix = decode_vp8l(bw.bytes())
+    return bw.bytes()
+
+
+def test_hand_packed_literal_stream():
+    """Minimal hand-built stream: no transforms, no cache, no meta,
+    all five codes single-symbol → every pixel identical, ZERO data
+    bits per pixel."""
+    from contessa_spark.operators.vp8l import decode_vp8l
+
+    w, h, pix = decode_vp8l(_const_stream(5, 3))
     assert (w, h) == (5, 3)
     assert pix == [0xFF134299] * 15
+
+
+def test_webp_past_pixel_budget_is_dims_only():
+    """Past ``vp8l.MAX_PIXELS`` (1M) a lossless WebP yields its dims
+    only: ``mean_byte`` NULL, ``ok`` true. The stream is a valid
+    constant image (its small form decodes to a mean), so a decode
+    that ignored the budget would report a mean, not NULL."""
+    from contessa_spark.operators.multimodal import decode_image_bytes
+    from contessa_spark.operators.vp8l import MAX_PIXELS
+
+    def webp(w, h):
+        body = _const_stream(w, h)
+        chunk = b"VP8L" + struct.pack("<I", len(body)) + body + b"\0" * (len(body) & 1)
+        return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+    small = decode_image_bytes(webp(5, 3))
+    assert (small["width"], small["height"], small["ok"]) == (5, 3, True)
+    assert small["mean_byte"] == (0x13 + 0x42 + 0x99) // 3
+    assert 1025 * 1024 > MAX_PIXELS == 1 << 20
+    got = decode_image_bytes(webp(1025, 1024))
+    assert (got["width"], got["height"], got["ok"]) == (1025, 1024, True)
+    assert got["mean_byte"] is None
 
 
 def test_hand_packed_two_symbol_and_subtract_green():
@@ -407,5 +436,5 @@ def test_malformed_streams_raise():
     # bomb guard: huge dims -> pixels None, no decode attempt
     bw = _Bw()
     bw.put(0x2F, 8).put(16382, 14).put(16382, 14).put(0, 1).put(0, 3)
-    w, h, pix = decode_vp8l(bw.bytes(), max_pixels=1 << 20)
+    w, h, pix = decode_vp8l(bw.bytes())
     assert (w, h) == (16383, 16383) and pix is None
