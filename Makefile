@@ -16,6 +16,13 @@ oracles:
 	  SPARK_GRAFT_ORACLE_SF=/root/testdata/sf$$sf $(PY) -m pytest tests/test_oracle_parity.py -q -p no:cacheprovider || rc=1; \
 	done; exit $$rc
 
+# sha256 row digests of the word-level queries at sf0.001/0.01/0.1
+# (scripts/row_digest.py); ROWS_BASE=<earlier digest file> also
+# compares them and fails if any differ
+rows:
+	$(PY) scripts/row_digest.py --out rows_digest.json
+	if [ -n "$(ROWS_BASE)" ]; then $(PY) scripts/row_digest.py --compare "$(ROWS_BASE)" rows_digest.json; fi
+
 bench:
 	SPARK_GRAFT_SF_DIR=$${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-32} $(PY) bench.py
@@ -34,4 +41,4 @@ pipeline-smoke: zip
 	$(PY) scripts/run_pipeline.py --generate 2000 --base /tmp/cs_smoke --master 'local[8]'
 	rm -rf /tmp/cs_smoke
 
-.PHONY: test tier1 oracles bench scaling zip pipeline-smoke
+.PHONY: test tier1 oracles rows bench scaling zip pipeline-smoke

@@ -1,27 +1,30 @@
 """Fused per-row annotation UDF.
 
-langid + perplexity + scrub + ALL heuristic text stats in ONE Arrow
-pandas UDF returning a struct:
+langid + perplexity + scrub + ALL heuristic text stats in ONE
+``arrow_udf`` (an Arrow string array in, one struct array out):
 
 * the document text crosses the JVM↔Python boundary exactly once;
 * the per-word stats (stopword fraction, repetition, mean word length)
-  use python set/dict lookups — O(1) per word — where the codegen'd
+  run once per DISTINCT word of the batch's ``hashing.word_table``,
+  then as vectorized sums over the word codes — where the codegen'd
   Column equivalents degrade to LINEAR scans (array_contains over a
-  150-word literal costs ~360µs/doc/core at 2M docs; the python set
-  does the same in ~15µs). The Column versions in
-  functions/textstats.py remain the SQL-comparable reference forms;
-  this module reuses the same pure ``py_*`` cores, so values are
-  identical bit-for-bit.
-
-The pure cores are the same shared functions the test oracle uses, so
-fusing changes nothing semantically.
+  150-word literal costs ~360µs/doc/core at 2M docs). The Column
+  forms in functions/textstats.py remain the SQL-comparable
+  reference; the pure ``py_*`` cores are the test oracle, and values
+  are identical bit-for-bit.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from contessa_spark.functions.langid import detect
+from contessa_spark.functions.perplexity import perplexity_flat
 from contessa_spark.functions.scrub import scrub_text
-from contessa_spark.functions.textstats import py_symbol_ratio
+from contessa_spark.functions.textstats import _STOPSET, py_symbol_ratio
+from contessa_spark.hashing import doc_sums, fnv1a, lowercase, string_array, word_table
 
 FIELDS = [
     ("lang_pred", "string"),
@@ -36,115 +39,65 @@ FIELDS = [
     ("mean_word_len", "double"),
 ]
 
+_ARROW = {"string": pa.string(), "double": pa.float64(), "boolean": pa.bool_(), "long": pa.int64()}
+_STOPWORDS = pa.array(sorted(_STOPSET))
+
 
 def annotate_rows(texts):
-    """Pure batch core: dict of column-name → list for an iterable of
-    (possibly None) strings.
+    """Pure batch core: dict of column name → values (one per text)
+    for a batch of (possibly NULL) texts, an Arrow string array or a
+    Python sequence.
 
-    Tokenizes each document ONCE, then computes every word-level signal
-    from ONE ``hashing.unique_tokens`` over the batch's flattened
-    tokens: the lowercasing, the stopword membership and the word
-    length run once per UNIQUE token (Zipf: ~30× fewer than token
-    occurrences), the 32-bit FNV hash once per batch over the unique
-    lowered tokens (``hashing.fnv1a``), all broadcast back through the code array;
-    perplexity runs on the flat hash array (``perplexity_flat``);
-    stopword counts and word-length sums are exact-integer cumsum range
-    sums. Values are bit-identical to the old per-row form — same
-    tokenization (whitespace-run split; lowering a token never changes
-    split boundaries), same integer counts, same per-doc float
-    arithmetic — which the one-signal-at-a-time ``py_*`` test oracles
-    still check independently.
+    The words come from ONE raw-case ``hashing.word_table``; lowering,
+    stopword membership, word length and the 32-bit FNV hash of the
+    lowered word run once per DISTINCT word. Perplexity runs on the
+    flat hash array (``perplexity_flat``), stopword counts and
+    word-length sums are exact integer sums per doc, and repetition
+    counts distinct codes per doc: the same words, counts and float
+    division as the ``py_*`` test oracles, so values are bit-identical.
+    langid, scrub and the symbol ratio run per text.
     """
-    import numpy as np
-
-    from contessa_spark.functions.perplexity import perplexity_flat
-    from contessa_spark.functions.textstats import _STOPSET
-    from contessa_spark.hashing import fnv1a, unique_tokens
-
-    texts = [t if isinstance(t, str) else "" for t in texts]
-    n_docs = len(texts)
-    cols = {name: [None] * n_docs for name, _ in FIELDS}
-    toks_per_doc = [t.split() for t in texts]
-    lens = np.fromiter(map(len, toks_per_doc), dtype=np.int64, count=n_docs)
-    bounds = np.concatenate(([0], np.cumsum(lens)))
-    total = int(bounds[-1])
-    if total:
-        codes, uniq = unique_tokens(toks_per_doc)
-        uniq_list = uniq.to_pylist()
-        uniq_lower = [u.lower() for u in uniq_list]
-        n_uniq = len(uniq_list)
-        hs_flat = fnv1a(uniq_lower, 32).view(np.int64)[codes]
-        stop_cs = np.concatenate(
-            (
-                [0],
-                np.cumsum(
-                    np.fromiter(
-                        (u in _STOPSET for u in uniq_lower),
-                        dtype=np.int64,
-                        count=n_uniq,
-                    )[codes]
-                ),
-            )
-        )
-        wlen_cs = np.concatenate(
-            (
-                [0],
-                np.cumsum(
-                    np.fromiter(
-                        map(len, uniq_list), dtype=np.int64, count=n_uniq
-                    )[codes]
-                ),
-            )
-        )
-        ppl_arr = perplexity_flat(hs_flat, bounds[:-1], lens)
-        stop_cnt = stop_cs[bounds[1:]] - stop_cs[bounds[:-1]]
-        wlen_sum = wlen_cs[bounds[1:]] - wlen_cs[bounds[:-1]]
-    for i, t in enumerate(texts):
-        l, c = detect(t)
-        cols["lang_pred"][i] = l
-        cols["lang_conf"][i] = c
-        s = scrub_text(t)
+    arr = string_array(texts)
+    offsets, codes, words = word_table(arr)
+    lens = np.diff(offsets)
+    lowered = lowercase(words)
+    hs_flat = fnv1a(lowered, 32).view(np.int64)[codes]
+    is_stop = pc.is_in(lowered, value_set=_STOPWORDS).to_numpy(zero_copy_only=False)
+    wlen = pc.utf8_length(words).to_numpy()
+    # repetition: distinct (doc, code) keys, counted per doc
+    doc = np.repeat(np.arange(len(arr), dtype=np.int64), lens)
+    distinct = np.bincount(np.unique(doc * len(words) + codes) // max(len(words), 1), minlength=len(arr))
+    n = np.maximum(lens, 1)
+    has = lens > 0
+    pylist = arr.to_pylist()
+    langs = [detect(t) for t in pylist]
+    scrubbed = [scrub_text(t) for t in pylist]
+    changed = [s != t for s, t in zip(scrubbed, pylist)]
+    return {
+        "lang_pred": [lang for lang, _ in langs],
+        "lang_conf": [conf for _, conf in langs],
+        "ppl": perplexity_flat(hs_flat, offsets[:-1], lens),
         # NULL when unchanged: ~95% of docs need no scrubbing, so this
         # drops most of the UDF's Arrow return payload; the Spark side
         # coalesces back to the original text (annotate()).
-        changed = s != t
-        cols["scrubbed_text"][i] = s if changed else None
-        cols["pii_changed"][i] = changed
-        cols["n_chars"][i] = len(t)
-        cols["symbol_ratio"][i] = py_symbol_ratio(t)
-        n = int(lens[i])
-        if n == 0:
-            cols["ppl"][i] = 1.0e6
-            cols["repetition"][i] = 1.0
-            cols["stopword_frac"][i] = 0.0
-            cols["mean_word_len"][i] = 0.0
-        else:
-            cols["ppl"][i] = float(ppl_arr[i])
-            cols["repetition"][i] = 1.0 - len(set(toks_per_doc[i])) / n
-            cols["stopword_frac"][i] = int(stop_cnt[i]) / n
-            cols["mean_word_len"][i] = int(wlen_sum[i]) / n
-    return cols
+        "scrubbed_text": [s if c else None for s, c in zip(scrubbed, changed)],
+        "pii_changed": changed,
+        "n_chars": pc.utf8_length(arr).to_numpy(),
+        "symbol_ratio": [py_symbol_ratio(t) for t in pylist],
+        "repetition": np.where(has, 1.0 - distinct / n, 1.0),
+        "stopword_frac": np.where(has, doc_sums(is_stop[codes], offsets) / n, 0.0),
+        "mean_word_len": np.where(has, doc_sums(wlen[codes], offsets) / n, 0.0),
+    }
 
 
 def spark_udf():
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    out_type = T.StructType(
-        [
-            T.StructField(name, getattr(T, {
-                "string": "StringType",
-                "double": "DoubleType",
-                "boolean": "BooleanType",
-                "long": "LongType",
-            }[typ])())
-            for name, typ in FIELDS
-        ]
-    )
+    def _annotate(texts: pa.Array) -> pa.Array:
+        cols = annotate_rows(texts)
+        return pa.StructArray.from_arrays(
+            [pa.array(cols[name], _ARROW[typ]) for name, typ in FIELDS],
+            names=[name for name, _ in FIELDS],
+        )
 
-    def _annotate(texts):
-        return pd.DataFrame(annotate_rows(texts))
-
-    _annotate.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(_annotate, out_type)
+    return F.arrow_udf(_annotate, ", ".join(f"{name} {typ}" for name, typ in FIELDS))

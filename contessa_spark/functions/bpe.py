@@ -16,9 +16,10 @@ state to ~max_words rows regardless of corpus size. The merge loop
 runs driver-side over that dict (the classic incremental pair-count
 algorithm — only words containing the merged pair are touched);
 encoding ships the rank table to workers inside ``_subword_udf``, the
-apply kernel all three subword tokenizers share: per Arrow batch it
-encodes each UNIQUE word once, through one bounded word memo per UDF
-(words are Zipf — most lookups hit).
+apply kernel all three subword tokenizers share: an ``arrow_udf`` that
+takes each Arrow batch's words from one lowercased
+``hashing.word_table`` and encodes each DISTINCT word once, through one
+bounded word memo per UDF (words are Zipf — most lookups hit).
 
 Determinism: ties in pair frequency break on the lexicographically
 smallest pair; the sample is a hash predicate (stable across
@@ -28,11 +29,14 @@ partitionings, unlike ``df.sample``); the word cap orders by
 
 from __future__ import annotations
 
-from itertools import islice
 from typing import Dict, List, Optional, Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from contessa_spark.hashing import doc_sums, list_array, word_table
 
 #: end-of-word sentinel appended as its own symbol (Sennrich form);
 #: never collides with text because words are whitespace-split (and in
@@ -234,43 +238,38 @@ _MEMO_WORDS = 2_000_000
 
 def _subword_udf(encode_word, tokens: bool = False):
     """The apply kernel of every trained subword tokenizer (BPE,
-    unigram, WordPiece): pandas UDF text → BIGINT token count, or
+    unigram, WordPiece): Arrow UDF text → BIGINT token count, or
     → array<string> tokens with ``tokens=True``. Per Arrow batch, the
-    words (``hashing.lower_words``) are dictionary-encoded once
-    (``hashing.unique_tokens``) and ``encode_word`` runs once per
-    unique word through one bounded memo that lives as long as the
-    UDF; counts are summed per doc through the codes, tokens are the
-    per-word encodings concatenated in word order."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from contessa_spark.hashing import lower_words, unique_tokens
-
+    words come from one lowercased ``hashing.word_table`` and
+    ``encode_word`` runs once per distinct word through one bounded
+    memo that lives as long as the UDF; counts are summed per doc
+    through the codes (exact int64 range sums), tokens are the
+    per-word encodings gathered in word order."""
     memo: Dict[str, List[str]] = {}
 
-    def _apply(texts):
-        words = lower_words(texts)
-        lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
-        codes, uniq = unique_tokens(words)
+    def _apply(texts: pa.Array) -> pa.Array:
+        offsets, codes, words = word_table(texts, lower=True)
         encs = []
-        for w in uniq.to_pylist():
+        for w in words.to_pylist():
             got = memo.get(w)
             if got is None:
                 got = encode_word(w)
                 if len(memo) < _MEMO_WORDS:
                     memo[w] = got
             encs.append(got)
-        if tokens:
-            it = iter(codes.tolist())
-            return pd.Series([[t for c in islice(it, n) for t in encs[c]] for n in lens.tolist()])
         n_toks = np.fromiter(map(len, encs), dtype=np.int64, count=len(encs))
-        cs = np.concatenate(([0], np.cumsum(n_toks[codes])))
-        ends = np.cumsum(lens)
-        return pd.Series(cs[ends] - cs[ends - lens], dtype="int64")
+        per_doc = doc_sums(n_toks[codes], offsets)
+        if not tokens:
+            return pa.array(per_doc)
+        # word occurrence i's tokens are entries first[codes[i]], … of
+        # the distinct words' tokens; they start at out[i] in the output
+        first = np.cumsum(n_toks) - n_toks
+        out = np.cumsum(n_toks[codes]) - n_toks[codes]
+        idx = np.arange(per_doc.sum()) + np.repeat(first[codes] - out, n_toks[codes])
+        flat = pa.array([t for e in encs for t in e], pa.string())
+        return list_array(per_doc, flat.take(idx))
 
-    _apply.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_apply, T.ArrayType(T.StringType()) if tokens else T.LongType())
+    return F.arrow_udf(_apply, "array<string>" if tokens else "bigint")
 
 
 def _bpe_encoder(merges: List[Tuple[str, str]], byte_level: bool):
@@ -279,14 +278,14 @@ def _bpe_encoder(merges: List[Tuple[str, str]], byte_level: bool):
 
 
 def bpe_encode_udf(merges: List[Tuple[str, str]], byte_level: bool = False):
-    """pandas UDF: text → array<string> of BPE tokens (lowercased
+    """Arrow UDF: text → array<string> of BPE tokens (lowercased
     whitespace words, each word encoded independently — merges never
     cross the EOW sentinel)."""
     return _subword_udf(_bpe_encoder(merges, byte_level), tokens=True)
 
 
 def bpe_token_count_udf(merges: List[Tuple[str, str]], byte_level: bool = False):
-    """pandas UDF: text → BIGINT token count (no token materialization
+    """Arrow UDF: text → BIGINT token count (no token materialization
     — the pack-budget hot path)."""
     return _subword_udf(_bpe_encoder(merges, byte_level))
 

@@ -12,18 +12,19 @@ Spark shape:
   logistic regression runs driver-side in numpy (fixed iterations,
   float64 — bit-deterministic). A linear probe needs thousands of
   rows, not the corpus.
-* SCORING is one Arrow-vectorized pandas UDF with the weight vector
-  closed over (a few KB — implicit broadcast); per-doc cost is a
-  word-hash pass over the text, no shuffle anywhere.
+* SCORING is one ``arrow_udf`` (Arrow in and out) with the
+  weight vector closed over (a few KB — implicit broadcast); per-doc
+  cost is a word-hash pass over the text, no shuffle anywhere.
 
 Labels: any boolean/0-1 column. The driver query self-distills from
 the heuristic keep rule (C4/Gopher conjunction) — the standard
 bootstrap when no human/LLM labels exist; production swaps in real
 labels without touching the plumbing.
 
-Features: FNV-64 word hashes (``hashing.fnv1a``, one call per batch
-of texts) into ``n_features`` buckets, log(1+tf) weighting, L2
-normalization, plus a bias. Collisions are benign at the usual
+Features: FNV-64 hashes of the lowercased words of a batch's
+``hashing.word_table`` (each distinct word hashed once) into
+``n_features`` buckets, log(1+tf) weighting, L2 normalization, plus a
+bias. Collisions are benign at the usual
 2^12–2^16 sizes (hashing-trick regime).
 """
 
@@ -32,11 +33,12 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from contessa_spark.hashing import fnv1a, lower_words
+from contessa_spark.hashing import fnv1a, string_array, word_table
 
 
 #: engineered features appended after the hashed buckets: L2-normalized
@@ -47,29 +49,29 @@ N_EXTRA = 3  # log-chars, log-words, bias
 
 def _hash_words(texts, n_features: int):
     """Dense log-tf L2-normalized hashed bag-of-words + log-length
-    features + bias: a list with one vector per (possibly NULL) text,
-    or one vector for a single ``str``. Pure core shared by training
-    and the scoring UDF; the words of all texts hash in one ``fnv1a``
-    call, and each vector is still its own array, so its norm and dot
+    features + bias: a list with one vector per (possibly NULL) text of
+    an Arrow string array or Python sequence, or one vector for a
+    single ``str``. Pure core shared by training and the scoring UDF;
+    each distinct word of the batch's lowercased ``word_table`` hashes
+    once, and each vector is still its own array, so its norm and dot
     products run on the same memory layout as a per-text build."""
     single = isinstance(texts, str)
-    texts = [texts] if single else [t if isinstance(t, str) else "" for t in texts]
-    words = lower_words(texts)
-    buckets = fnv1a([w for ws in words for w in ws]) % np.uint64(n_features)
+    arr = string_array([texts] if single else texts)
+    offsets, codes, words = word_table(arr, lower=True)
+    buckets = (fnv1a(words) % np.uint64(n_features)).astype(np.int64)[codes]
+    n_chars = pc.utf8_length(arr).to_numpy()
     out = []
-    o = 0
-    for text, ws in zip(texts, words):
+    for d in range(len(arr)):
         v = np.zeros(n_features + N_EXTRA, dtype=np.float64)
-        v[:n_features] = np.bincount(buckets[o : o + len(ws)].astype(np.int64), minlength=n_features)
-        o += len(ws)
+        v[:n_features] = np.bincount(buckets[offsets[d] : offsets[d + 1]], minlength=n_features)
         bow = v[:n_features]
         nz = bow > 0
         bow[nz] = np.log1p(bow[nz])
         norm = np.linalg.norm(bow)
         if norm > 0:
             bow /= norm
-        v[n_features] = np.log1p(len(text)) / 10.0
-        v[n_features + 1] = np.log1p(len(ws)) / 10.0
+        v[n_features] = np.log1p(n_chars[d]) / 10.0
+        v[n_features + 1] = np.log1p(offsets[d + 1] - offsets[d]) / 10.0
         v[-1] = 1.0  # bias
         out.append(v)
     return out[0] if single else out
@@ -172,21 +174,17 @@ def train_quality_classifier(
 
 
 def quality_score_udf(weights: "np.ndarray", n_features: int = 4096):
-    """pandas UDF: text → P(label=1) under the trained linear model."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    """Arrow UDF: text → P(label=1) under the trained linear model."""
     w = np.asarray(weights, dtype=np.float64)
 
-    def _score(texts):
+    def _score(texts: pa.Array) -> pa.Array:
         out = np.empty(len(texts), dtype=np.float64)
-        for i, v in enumerate(_hash_words(texts.tolist(), n_features)):
+        for i, v in enumerate(_hash_words(texts, n_features)):
             z = min(500.0, max(-500.0, float(v @ w)))
             out[i] = 1.0 / (1.0 + np.exp(-z))
-        return pd.Series(out)
+        return pa.array(out)
 
-    _score.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_score, T.DoubleType())
+    return F.arrow_udf(_score, "double")
 
 
 def classify_quality(

@@ -18,9 +18,12 @@ Whitespace contract: "whitespace" means the Unicode White_Space set
 ``(?U)`` (UNICODE_CHARACTER_CLASS) flag so Java ``\\s`` matches it,
 and the Python keep/delete table is built from the same explicit set.
 Known residual divergence: Python ``str.split()`` additionally treats
-the C0 separators U+001C–001F as whitespace (Java does not) — those
-are unprintable control codes, accepted as out of contract and kept
-out of the property tests.
+the C0 separators U+001C–001F as whitespace (Java does not). The
+Python word paths (every word-level UDF, through
+``hashing.word_table``'s Arrow split) match ``str.split()`` there too,
+so only these JVM Column forms differ on those unprintable control
+codes — accepted as out of contract and kept out of the Column-form
+property tests.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
-"""String and integer hash kernels shared across the library.
+"""String and integer hash kernels, and the batch word table, shared
+across the library.
 
 * ``fnv1a`` — FNV-1a (64- or 32-bit) over the UTF-8 bytes of each
   string of an Arrow string array, batch-at-a-time: the strings are
@@ -6,14 +7,17 @@
   are a prefix, and each position costs one numpy xor/multiply pass
   over that prefix. The last few (long) strings finish in a scalar
   loop so one huge token does not cost a numpy call per byte.
-* ``lower_words`` — a batch's words: each document's lowercased
-  whitespace split (NULL has none), the one word rule of the shingle,
-  MinHash, SimHash, quality-classifier and subword-tokenizer UDFs.
-* ``unique_tokens`` — one Arrow dictionary encoding of a batch's
-  tokens: the distinct tokens and each token's code.
+* ``word_table`` — a batch's words, split and dictionary-encoded once
+  inside Arrow: per-doc offsets into one code array, and the batch's
+  distinct words. A document's words are its whitespace split (the
+  same as ``str.split()``), optionally lowercased; NULL has none. It
+  is the one word split of every word-level UDF (annotate, shingles,
+  MinHash, SimHash, substring dedup, the quality classifier and the
+  subword tokenizers).
 * ``gram_hashes`` — FNV-64 of every word k-gram ``" ".join(words[i:i+k])``
-  without building a gram string: each unique token is hashed once and
-  the next k−1 words are folded in by continuing the hash state.
+  of a word table, without building a gram string: each distinct word
+  is hashed once and the next k−1 words are folded in by continuing
+  the hash state.
 * ``splitmix64`` — the SplitMix64 finalizer (Steele et al. 2014).
 
 Hashes are stable across processes (unlike ``hash()``), so anything
@@ -22,10 +26,9 @@ derived from them is layout- and worker-independent.
 
 from __future__ import annotations
 
-import itertools
-
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 FNV64_BASIS = 0xCBF29CE484222325
 FNV64_PRIME = 0x100000001B3
@@ -38,6 +41,21 @@ _MASK64 = 0xFFFFFFFFFFFFFFFF
 _SCALAR_TAIL = 32
 
 
+def list_array(counts, values) -> pa.Array:
+    """Arrow list array whose row i holds the next ``counts[i]``
+    entries of ``values``."""
+    return pa.ListArray.from_arrays(np.concatenate(([0], np.cumsum(counts))).astype(np.int32), values)
+
+
+def string_array(strings) -> pa.Array:
+    """One Arrow string array for an Arrow string/large_string array
+    (chunked or sliced) or a Python sequence; NULL becomes ``""``."""
+    arr = strings if isinstance(strings, (pa.Array, pa.ChunkedArray)) else pa.array(strings, pa.string())
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    return arr.fill_null("") if arr.null_count else arr
+
+
 def fnv1a(strings, bits: int = 64, init=None) -> np.ndarray:
     """uint64 array of FNV-1a hashes (``bits`` = 64 or 32) of each
     string's UTF-8 bytes. ``strings`` is an Arrow string array (chunked
@@ -45,11 +63,7 @@ def fnv1a(strings, bits: int = 64, init=None) -> np.ndarray:
     ``init`` (uint64 per string) continues hashing from that state
     instead of the offset basis: ``fnv1a(b, init=fnv1a(a)) ==
     fnv1a(a + b)``."""
-    arr = strings if isinstance(strings, (pa.Array, pa.ChunkedArray)) else pa.array(strings, pa.string())
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.null_count:
-        arr = arr.fill_null("")
+    arr = string_array(strings)
     n = len(arr)
     basis, prime = (FNV64_BASIS, FNV64_PRIME) if bits == 64 else (FNV32_BASIS, FNV32_PRIME)
     h = np.full(n, basis, dtype=np.uint64) if init is None else np.array(init, dtype=np.uint64)
@@ -82,39 +96,72 @@ def fnv1a(strings, bits: int = 64, init=None) -> np.ndarray:
     return h
 
 
-def lower_words(texts):
-    """The words of each text: its lowercased whitespace split; NULL
-    (any non-``str``) has none."""
-    return [t.lower().split() if isinstance(t, str) else [] for t in texts]
+def lowercase(words) -> pa.Array:
+    """Python's ``str.lower`` of each word of an Arrow string array."""
+    return pa.array([w.lower() for w in words.to_numpy(zero_copy_only=False)], words.type)
 
 
-def unique_tokens(tokens_per_doc):
-    """(codes, uniq): the distinct tokens of all docs as an Arrow
-    string array in first-seen order, and every token (docs
-    concatenated in order) as an index into it. Arrow's
-    ``dictionary_encode``: ``pd.factorize`` would merge strings that
-    differ only after a NUL character."""
-    enc = pa.array(list(itertools.chain.from_iterable(tokens_per_doc)), pa.string()).dictionary_encode()
-    return enc.indices.to_numpy(), enc.dictionary
+def word_table(texts, lower: bool = False):
+    """(offsets, codes, words) of a batch of texts (``string_array``
+    input). ``words`` is the batch's distinct words as an Arrow string
+    array (never ``""``); ``codes`` (int) indexes it with every word of
+    every doc, docs concatenated in order; doc d's words are
+    ``codes[offsets[d]:offsets[d + 1]]`` (int64 offsets, n + 1).
+
+    The split is Arrow's ``utf8_split_whitespace``: it matches
+    ``str.split()`` on every code point but keeps empty tokens (leading
+    whitespace, whitespace runs, ``""``), dropped after one
+    ``dictionary_encode``. Trailing whitespace is trimmed first:
+    pyarrow 16.1's split decodes one code point past a text that ends
+    in whitespace, which for the last text of the array lies past the
+    data, so that whitespace sometimes came back as a word.
+    ``lower=True`` lowers each distinct word once (``lowercase``, Python
+    ``str.lower``: Arrow's ``utf8_lower`` differs on ``İ`` and final
+    ``Σ``) and re-codes, giving each doc's ``t.lower().split()``."""
+    arr = string_array(texts)
+    parts = pc.utf8_split_whitespace(pc.utf8_rtrim_whitespace(arr))
+    enc = pc.list_flatten(parts).dictionary_encode()
+    codes, words = enc.indices.to_numpy(), enc.dictionary
+    doc = np.repeat(np.arange(len(arr)), pc.list_value_length(parts).to_numpy())
+    empty = np.flatnonzero(pc.binary_length(words).to_numpy() == 0)
+    if len(empty):
+        e = int(empty[0])
+        keep = codes != e
+        codes, doc = codes[keep], doc[keep]
+        codes = codes - (codes > e)
+        words = pa.concat_arrays([words[:e], words[e + 1 :]])
+    if lower:
+        enc = lowercase(words).dictionary_encode()
+        codes, words = enc.indices.to_numpy()[codes], enc.dictionary
+    offsets = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(doc, minlength=len(arr)), out=offsets[1:])
+    return offsets, codes, words
 
 
-def gram_hashes(tokens_per_doc, k: int):
+def doc_sums(x, offsets) -> np.ndarray:
+    """Exact per-doc sums of an integer (or bool) per-word array over a
+    word table's ``offsets``: differences of one cumulative sum."""
+    cs = np.concatenate(([0], np.cumsum(x)))
+    return cs[offsets[1:]] - cs[offsets[:-1]]
+
+
+def gram_hashes(table, k: int):
     """(flat uint64, counts): FNV-64 of ``" ".join(words[i:i+k])`` for
-    every word k-gram position of every doc, docs concatenated in
-    order; ``counts[d] = max(0, len(words_d) − k + 1)``. Each unique
-    token (``unique_tokens``) is hashed once."""
-    lens = np.fromiter(map(len, tokens_per_doc), dtype=np.int64, count=len(tokens_per_doc))
+    every word k-gram position of every doc of a ``word_table``, docs
+    concatenated in order; ``counts[d] = max(0, len(words_d) − k + 1)``.
+    Each distinct word is hashed once."""
+    offsets, codes, words = table
+    lens = np.diff(offsets)
     counts = np.maximum(lens - (k - 1), 0)
     if not counts.any():
         return np.empty(0, dtype=np.uint64), counts
-    codes, uniq = unique_tokens(tokens_per_doc)
     # gram starts: doc-local index < count of that doc
-    doc_start = np.repeat(np.cumsum(lens) - lens, counts)
+    doc_start = np.repeat(offsets[:-1], counts)
     starts = doc_start + (np.arange(len(doc_start)) - np.repeat(np.cumsum(counts) - counts, counts))
-    acc = fnv1a(uniq)[codes[starts]]
+    acc = fnv1a(words)[codes[starts]]
     space, prime = np.uint64(0x20), np.uint64(FNV64_PRIME)
     for j in range(1, k):
-        acc = fnv1a(uniq.take(codes[starts + j]), init=(acc ^ space) * prime)
+        acc = fnv1a(words.take(codes[starts + j]), init=(acc ^ space) * prime)
     return acc, counts
 
 

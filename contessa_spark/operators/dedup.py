@@ -10,13 +10,13 @@ All deterministic (hash-based, no RNG), all shuffle-conscious:
   block-pair groups, one ``applyInArrow`` counter per group); capped,
   the shingle posting lists with vectorized pair emission — never a
   cross join;
-* MinHash+LSH: ONE fused pandas-UDF pass computes band keys + the
+* MinHash+LSH: ONE fused Arrow-UDF pass computes band keys + the
   shingle hash set; the hash sets ride in the capped band-bucket
   groups, and each candidate pair is verified by exact Jaccard inside
   its group's emission — the scale path (Broder 1997;
   Leskovec/Rajaraman/Ullman ch.3);
 * SimHash (Charikar 2002; Manku et al. WWW'07): 64-bit signature via a
-  vectorized pandas UDF, near-dup = Hamming distance ≤ k emitted from
+  vectorized Arrow UDF, near-dup = Hamming distance ≤ k emitted from
   capped rotated-band-key groups;
 * embedding cosine: exact blocked-GEMM all-pairs
   (``embedding_near_dups_blocked``); the LSH-bucketed scale path is
@@ -28,18 +28,33 @@ here, ``image_dedup`` dHash and ``audio_dedup`` fingerprints),
 ``similarity.hyperplane_lsh_join``'s table buckets (all through one
 capped group pass, ``_group_pairs``, under ``mapInArrow``) and the
 uncapped block-pair counter — draws its pairs from one in-run
-generator, ``_run_pairs``. The text families (shingles, MinHash,
-SimHash) take a document's words from ``hashing.lower_words``.
+generator, ``_run_pairs``. Every text UDF here (shingles, MinHash,
+SimHash, substring dedup) is an ``arrow_udf`` — a ``pa.Array`` in and
+out — that takes a batch's words from one
+``hashing.word_table`` (lowercased for the near-dup families, raw case
+for exact-substring dedup).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from contessa_spark.hashing import FNV64_BASIS, FNV64_PRIME, fnv1a, gram_hashes, lower_words, splitmix64
+from contessa_spark.hashing import (
+    FNV64_BASIS,
+    FNV64_PRIME,
+    doc_sums,
+    fnv1a,
+    gram_hashes,
+    list_array,
+    splitmix64,
+    word_table,
+)
 
 
 def _run_pairs(start, L, first=0):
@@ -49,8 +64,6 @@ def _run_pairs(start, L, first=0):
     ``(x, y)`` position arrays, ``x < y``, all numpy — no per-group
     loop and no cached triangle indices. int32 wherever it fits:
     the transient pair arrays set a worker's peak RSS."""
-    import numpy as np
-
     tot = int(L.sum())
     dt = np.int32 if max(first + len(L), tot) < (1 << 31) else np.int64
     y = np.repeat(np.arange(first, first + len(L), dtype=dt), L)
@@ -71,8 +84,6 @@ def _distinct_pairs(ids, x, y):
     emitted. A near-dup pair repeats in every group it shares (every
     shingle posting list, every band bucket), and each repeat would
     otherwise cross the Arrow boundary as its own row."""
-    import numpy as np
-
     ia, ib = ids[x], ids[y]
     order = np.lexsort((ib, ia))
     ia, ib, x, y = ia[order], ib[order], x[order], y[order]
@@ -96,10 +107,6 @@ def _emit_group_pairs(step=_id_pairs):
     repeat across groups; callers aggregate or ``distinct()``."""
 
     def emit(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         for b in batches:
             lists = b.column(0)
             flat = pc.list_flatten(lists)
@@ -355,14 +362,13 @@ def _corpus_span_dedup(
 def _segment_unique(flat, lens):
     """Per-doc sorted-unique over a flat (uint64) batch array: one
     lexsort + run-boundary mask instead of one ``np.unique`` call per
-    doc. Returns a list of int64 arrays (unsigned sort order then
-    int64 view — exactly ``np.unique(raw).view(int64)``)."""
-    import numpy as np
-
+    doc. Returns (values, counts): the docs' unique values
+    concatenated as int64 (unsigned sort order then int64 view —
+    exactly ``np.unique(raw).view(int64)`` per doc) and each doc's
+    count."""
     n_docs = len(lens)
     if len(flat) == 0:
-        empty = np.empty(0, dtype=np.int64)
-        return [empty] * n_docs
+        return np.empty(0, dtype=np.int64), np.zeros(n_docs, dtype=np.int64)
     doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
     order = np.lexsort((flat, doc_of))
     fs = flat[order]
@@ -370,13 +376,11 @@ def _segment_unique(flat, lens):
     keep = np.empty(len(fs), dtype=bool)
     keep[0] = True
     np.logical_or(ds[1:] != ds[:-1], fs[1:] != fs[:-1], out=keep[1:])
-    vals = fs[keep].view(np.int64)
-    counts = np.bincount(ds[keep], minlength=n_docs)
-    return np.split(vals, np.cumsum(counts)[:-1])
+    return fs[keep].view(np.int64), np.bincount(ds[keep], minlength=n_docs)
 
 
 def hashed_shingles_udf(k: int = 3):
-    """pandas UDF: text → struct(hs: array<long> distinct FNV-64
+    """Arrow UDF: text → struct(hs: array<long> distinct FNV-64
     shingle hashes, n: int = len(hs)). The inverted-index shuffle then
     carries 8-byte longs instead of ~20-byte gram strings — ~2× fewer
     shuffle bytes on the posting lists, which dominate the
@@ -393,25 +397,16 @@ def hashed_shingles_udf(k: int = 3):
     Struct first, fields second (the established in-repo pattern)
     keeps it one eval.
 
-    Hashing is one ``gram_hashes`` call per Arrow batch over the
-    lowered words; ``_segment_unique`` then drops repeated grams."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    Hashing is one ``gram_hashes`` call per Arrow batch over its
+    lowered word table; ``_segment_unique`` then drops repeated grams."""
 
-    def _hs(texts):
-        hs = _segment_unique(*gram_hashes(lower_words(texts), k))
-        return pd.DataFrame({"hs": hs, "n": [len(a) for a in hs]})
+    def _hs(texts: pa.Array) -> pa.Array:
+        vals, n = _segment_unique(*gram_hashes(word_table(texts, lower=True), k))
+        return pa.StructArray.from_arrays(
+            [list_array(n, vals), pa.array(n, pa.int32())], names=["hs", "n"]
+        )
 
-    _hs.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(
-        _hs,
-        T.StructType(
-            [
-                T.StructField("hs", T.ArrayType(T.LongType())),
-                T.StructField("n", T.IntegerType()),
-            ]
-        ),
-    )
+    return F.arrow_udf(_hs, "hs array<bigint>, n int")
 
 
 def ngram_jaccard_pairs(
@@ -584,8 +579,6 @@ def _count_block_pair(
     emitted integers let Spark recompute jaccard with the exact
     expression (and rounding) the capped path uses.
     """
-    import numpy as np
-
     m = len(ids)
     empty = (
         np.empty(0, np.int64),
@@ -779,9 +772,6 @@ def _ngram_jaccard_pairs_blocked(
         # one block-pair group: the partition's hash exchange is reused
         # by the grouping (its keys include _pt), so Python holds one
         # group at a time, never a whole bin
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
         sh = t.column("_sh")
         res = _count_block_pair(
@@ -820,8 +810,6 @@ _MERSENNE = (1 << 61) - 1
 
 def _affine_params(n_hashes: int, seed: int = 1234567):
     """Deterministic (a_j, b_j) pairs for affine minhash permutations."""
-    import numpy as np
-
     a = np.array([splitmix64(seed + 2 * j) % _MERSENNE or 1 for j in range(n_hashes)], dtype=np.uint64)
     b = np.array([splitmix64(seed + 2 * j + 1) % _MERSENNE for j in range(n_hashes)], dtype=np.uint64)
     return a, b
@@ -846,8 +834,6 @@ def _batch_band_keys(flat, lens, n_hashes, bands, A, B):
     ``(acc ^ band) ^ 2^63`` (adding/subtracting 2^63 mod 2^64 only
     flips the top bit). Returns an (n_nonempty, bands) int64 matrix for
     the docs with ≥1 shingle, plus the nonzero mask."""
-    import numpy as np
-
     r = n_hashes // bands
     nz = lens > 0
     if not nz.any():
@@ -874,7 +860,7 @@ def _batch_band_keys(flat, lens, n_hashes, bands, A, B):
 
 
 def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
-    """pandas UDF: text → struct(keys: array<long> LSH band keys,
+    """Arrow UDF: text → struct(keys: array<long> LSH band keys,
     hs: binary — the distinct shingle hashes packed as native int64
     bytes).
 
@@ -898,33 +884,21 @@ def lsh_signature_udf(k: int = 3, n_hashes: int = 64, bands: int = 16):
 
     Shingle hashes come from one ``gram_hashes`` call per Arrow batch
     and keep repeated grams: a repeat changes neither a doc's minimum
-    under any permutation nor its distinct hash set."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    under any permutation nor its distinct hash set. The ``hs`` column
+    is built over the unique-hash buffer itself (byte offsets 8× the
+    per-doc counts), with no per-doc ``bytes`` object."""
     A, B = _affine_params(n_hashes)
 
-    def _sig(texts):
-        flat, lens = gram_hashes(lower_words(texts), k)
+    def _sig(texts: pa.Array) -> pa.Array:
+        flat, lens = gram_hashes(word_table(texts, lower=True), k)
         km, nz = _batch_band_keys(flat, lens, n_hashes, bands, A, B)
-        empty = np.empty(0, dtype=np.int64)
-        keys_out = [empty] * len(lens)
-        for idx, d in enumerate(np.flatnonzero(nz)):
-            keys_out[d] = km[idx]
-        hs_out = [a.tobytes() for a in _segment_unique(flat, lens)]
-        return pd.DataFrame({"keys": keys_out, "hs": hs_out})
+        vals, n = _segment_unique(flat, lens)
+        # one binary value per doc over its slice of the unique-hash buffer
+        offsets = np.concatenate(([0], np.cumsum(n * 8))).astype(np.int32)
+        hs = pa.Array.from_buffers(pa.binary(), len(n), [None, pa.py_buffer(offsets), pa.py_buffer(vals)])
+        return pa.StructArray.from_arrays([list_array(nz * bands, km.ravel()), hs], names=["keys", "hs"])
 
-    _sig.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(
-        _sig,
-        T.StructType(
-            [
-                T.StructField("keys", T.ArrayType(T.LongType())),
-                T.StructField("hs", T.BinaryType()),
-            ]
-        ),
-    )
+    return F.arrow_udf(_sig, "keys array<bigint>, hs binary")
 
 
 def minhash_lsh_candidates(
@@ -979,8 +953,6 @@ def minhash_lsh_candidates(
     ).select("_id", F.col("_s.keys").alias("_keys"), F.col("_s.hs").alias("_hs"))
 
     def jaccard_step(cols, x, y):
-        import numpy as np
-
         ids = cols["_id"]
         x, y, _ = _distinct_pairs(ids, x, y)
         sets = [np.frombuffer(h, dtype=np.int64) for h in cols["_hs"]]
@@ -1014,33 +986,30 @@ def minhash_lsh_candidates(
 def _simhash_batch(texts, n_bits: int = 64):
     """Batch core of ``simhash_udf``: int64 simhash per (possibly NULL)
     text. Bit i is set when more than half of the doc's lowered words
-    have FNV-64 bit i set (no words → 0); the words of the whole batch
-    are hashed in one ``fnv1a`` call and the votes summed per doc."""
-    import numpy as np
-
-    words = lower_words(texts)
-    lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
-    h = fnv1a([w for ws in words for w in ws])
-    doc = np.repeat(np.arange(len(words)), lens)
-    sig = np.zeros(len(words), dtype=np.uint64)
+    have FNV-64 bit i set (no words → 0); each distinct word of the
+    batch's ``word_table`` is hashed once and the votes summed per
+    doc."""
+    offsets, codes, words = word_table(texts, lower=True)
+    lens = np.diff(offsets)
+    n_docs = len(lens)
+    h = fnv1a(words)[codes]
+    doc = np.repeat(np.arange(n_docs), lens)
+    sig = np.zeros(n_docs, dtype=np.uint64)
     for i in range(n_bits):
-        ones = np.bincount(doc, weights=(h >> np.uint64(i)) & np.uint64(1), minlength=len(words))
+        ones = np.bincount(doc, weights=(h >> np.uint64(i)) & np.uint64(1), minlength=n_docs)
         sig |= (2 * ones > lens).astype(np.uint64) << np.uint64(i)
     # two's-complement into signed 64-bit for Spark LongType
     return sig.view(np.int64)
 
 
 def simhash_udf(n_bits: int = 64):
-    """pandas UDF: text → 64-bit simhash (as long). Word-level FNV
+    """Arrow UDF: text → 64-bit simhash (as long). Word-level FNV
     hashes, bit-majority vote — deterministic."""
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    def _simhash(texts):
-        return pd.Series(_simhash_batch(texts, n_bits))
+    def _simhash(texts: pa.Array) -> pa.Array:
+        return pa.array(_simhash_batch(texts, n_bits))
 
-    _simhash.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_simhash, T.LongType())
+    return F.arrow_udf(_simhash, "bigint")
 
 
 def simhash_near_dups(
@@ -1125,8 +1094,6 @@ def hamming_band_pairs(
     )
 
     def hamming_filter(cols, x, y):
-        import numpy as np
-
         pop8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
         ids, hs = cols["_id"], cols["_h"]
         xor = np.bitwise_xor(hs[x], hs[y]).view(np.uint64)
@@ -1332,8 +1299,6 @@ def embedding_near_dups_blocked(
     pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
 
     def block_sim(batches):
-        import numpy as np
-
         for pdf in batches:
             out_a, out_b, out_c = [], [], []
             for ids_a, ids_b, vs_a, vs_b in zip(
@@ -1362,85 +1327,59 @@ def embedding_near_dups_blocked(
 # ------------------------------------------- substring-level exact dedup
 
 def positional_gram_hashes_udf(k: int = 5):
-    """pandas UDF: text → array<long> of FNV-64 word-k-gram hashes, ONE
+    """Arrow UDF: text → array<long> of FNV-64 word-k-gram hashes, ONE
     PER POSITION (index i = gram over words[i..i+k-1]; n_words−k+1
     entries, empty when the doc has < k words). Unlike
     ``hashed_shingles_udf`` this keeps duplicates and order — positions
     are the unit the substring pass flags. Raw case (exact-substring
     dedup is exact); whitespace split, same (?U)\\s contract as the
     rest of the engine. One ``gram_hashes`` call per Arrow batch."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    def _gh(texts):
-        words = [t.split() if isinstance(t, str) else [] for t in texts]
-        flat, counts = gram_hashes(words, k)
-        flat = flat.view(np.int64)
-        return pd.Series([flat[e - c : e] for e, c in zip(np.cumsum(counts), counts)])
+    def _gh(texts: pa.Array) -> pa.Array:
+        flat, counts = gram_hashes(word_table(texts), k)
+        return list_array(counts, flat.view(np.int64))
 
-    _gh.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_gh, T.ArrayType(T.LongType()))
+    return F.arrow_udf(_gh, "array<bigint>")
 
 
 def _strip_spans_udf(k: int):
-    """pandas UDF: (text, flagged gram starts) → struct(clean_text,
+    """Arrow UDF: (text, flagged gram starts) → struct(clean_text,
     n_words, n_removed_words, n_spans). A flagged start p covers words
     [p, p+k); overlapping/adjacent covers merge into maximal runs
     (the per-doc maximal-run merge of Lee et al. §4.1); kept words
     rejoin with single spaces (word-level dedup normalizes whitespace
-    by construction)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    by construction). The whole batch is one covered mask over its
+    raw-case ``word_table``: +1 at each cover's first word, −1 past
+    its last (clipped to the doc), cumulative sum > 0."""
 
-    def _strip(texts, flags):
-        clean, nw, nr, ns = [], [], [], []
-        for t, fl in zip(texts, flags):
-            words = (t if isinstance(t, str) else "").split()
-            n = len(words)
-            if fl is None or len(fl) == 0:
-                clean.append(" ".join(words))
-                nw.append(n)
-                nr.append(0)
-                ns.append(0)
-                continue
-            covered = np.zeros(n, dtype=bool)
-            for p in fl:
-                covered[p : p + k] = True
-            kept = [w for w, c in zip(words, covered) if not c]
-            # span count = runs of covered: rising edges of the mask
-            edges = int(covered[0]) + int(
-                np.count_nonzero(covered[1:] & ~covered[:-1])
-            )
-            clean.append(" ".join(kept))
-            nw.append(n)
-            nr.append(int(covered.sum()))
-            ns.append(edges)
-        return pd.DataFrame(
-            {
-                "clean_text": clean,
-                "n_words": np.asarray(nw, dtype=np.int64),
-                "n_removed_words": np.asarray(nr, dtype=np.int64),
-                "n_spans": np.asarray(ns, dtype=np.int64),
-            }
+    def _strip(texts: pa.Array, flags: pa.Array) -> pa.Array:
+        offsets, codes, words = word_table(texts)
+        lens, total = np.diff(offsets), int(offsets[-1])
+        flag_doc = pc.list_parent_indices(flags).to_numpy()
+        end = offsets[flag_doc + 1]
+        first = np.minimum(offsets[flag_doc] + pc.list_flatten(flags).to_numpy(), end)
+        last = np.minimum(first + k, end)
+        depth = np.cumsum(np.bincount(first, minlength=total + 1) - np.bincount(last, minlength=total + 1))
+        covered = depth[:total] > 0
+        # a span starts at a covered word whose predecessor in its doc
+        # is not covered
+        prev = np.zeros(total, dtype=bool)
+        prev[1:] = covered[:-1]
+        prev[offsets[:-1][lens > 0]] = False
+        removed = doc_sums(covered, offsets)
+        kept = list_array(lens - removed, words.take(codes[~covered]))
+        return pa.StructArray.from_arrays(
+            [
+                pc.binary_join(kept, " "),
+                pa.array(lens),
+                pa.array(removed),
+                pa.array(doc_sums(covered & ~prev, offsets)),
+            ],
+            names=["clean_text", "n_words", "n_removed_words", "n_spans"],
         )
 
-    _strip.__annotations__ = {
-        "texts": pd.Series,
-        "flags": pd.Series,
-        "return": pd.DataFrame,
-    }
-    return F.pandas_udf(
-        _strip,
-        T.StructType(
-            [
-                T.StructField("clean_text", T.StringType()),
-                T.StructField("n_words", T.LongType()),
-                T.StructField("n_removed_words", T.LongType()),
-                T.StructField("n_spans", T.LongType()),
-            ]
-        ),
+    return F.arrow_udf(
+        _strip, "clean_text string, n_words bigint, n_removed_words bigint, n_spans bigint"
     )
 
 
@@ -1463,7 +1402,7 @@ def substring_dedup(
     Plan — and why it has NO quadratic stage (unlike the pair-emitting
     near-dup passes, no ``max_df`` cap is needed):
 
-    1. ONE pandas-UDF pass per doc emits the k-gram FNV-64 hash at
+    1. ONE Arrow-UDF pass per doc emits the k-gram FNV-64 hash at
        every word position; posexplode → (id, pos, gh). The narrow
        exploded frame is persisted — it feeds both the gram-frequency
        aggregate and the flag join, and re-running the gram UDF twice
@@ -1481,7 +1420,7 @@ def substring_dedup(
        keep occurrences of count>1 grams that are NOT the global first.
     4. Per-doc flag lists: groupBy(id) collect_list(pos) — bounded by
        doc length.
-    5. Rebuild: left-join flags onto the input, one pandas UDF strips
+    5. Rebuild: left-join flags onto the input, one Arrow UDF strips
        the maximal covered runs (a span of length L ≥ k shared with an
        earlier occurrence has all its L−k+1 gram positions flagged, so
        the union of [p, p+k) covers exactly the span).

@@ -10,7 +10,7 @@ run resumable by partition.
 Execution shape (designed for 10^12 docs / 1000 executors):
 
 1. ONE scan of the input computes everything per row — langid +
-   perplexity + scrub as Arrow-batched pandas UDFs, the C4/Gopher
+   perplexity + scrub in one Arrow-batched ``arrow_udf``, the C4/Gopher
    heuristics as pure JVM Column expressions — and writes the fully
    annotated dataset (keep flag + per-rule booleans + scrubbed text)
    to the output table, hash-bucketed by url.
@@ -155,14 +155,14 @@ def keep_rule_names(cfg: PipelineConfig) -> List[str]:
 
 
 def annotate(df: DataFrame) -> DataFrame:
-    """ONE-pass per-row annotation via ONE fused Arrow pandas UDF.
+    """ONE-pass per-row annotation via ONE fused ``arrow_udf``.
 
     Text serializes across the JVM↔Python boundary exactly once; every
     derived signal (langid, perplexity, scrub, heuristic stats) comes
-    back as one struct. The per-word stats are python-set based — see
-    functions/annotate_udf.py for why that beats the codegen'd
-    array_contains form by ~20× here. No per-row Python at the Spark
-    level (Arrow batches only).
+    back as one struct. The per-word stats run once per distinct word
+    of the batch's word table — see functions/annotate_udf.py for why
+    that beats the codegen'd array_contains form by ~20× here. No
+    per-row Python at the Spark level (Arrow batches only).
     """
     from contessa_spark.functions import annotate_udf
 

@@ -1,0 +1,127 @@
+"""Row digests of declared queries: one sha256 per (sf, query) over the
+query's sorted rows, so two commits can be shown to return the same
+rows without keeping the rows.
+
+A digest is ``sha256(repr(sorted(tuple(r) for r in
+q(spark, sf_dir).select(sorted(columns)).collect())))``: columns in name
+order, rows sorted, so physical order and column order do not matter.
+Equal digests mean equal row multisets.
+
+Usage:
+    python scripts/row_digest.py --out rows.json [--repo DIR] [--data DIR]
+        (every query of ``QUERIES`` at every sf of ``SFS``; ``--data``
+        defaults to the testdata root ``bench.py`` reads)
+    python scripts/row_digest.py --compare base.json change.json [--out merged.json]
+
+``--repo`` imports ``__spark_entry__`` and ``contessa_spark`` from that
+checkout (Python workers too, through ``PYTHONPATH``), so one copy of
+this script digests any commit. ``--compare`` prints every (sf, query)
+whose digests differ, optionally writes both sides into one JSON and
+exits 1 unless all are identical.
+"""
+
+from __future__ import annotations
+
+import argparse
+import hashlib
+import json
+import os
+import subprocess
+import sys
+import time
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: the queries whose rows run through the word-level UDFs
+QUERIES = [
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_capped",
+    "dedup_components",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "doc_substring_dedup",
+    "doc_substring_dedup_dropall",
+    "doc_bpe_tokens",
+    "doc_unigram_tokens",
+    "doc_wordpiece_tokens",
+    "doc_quality_classifier",
+]
+SFS = ["0.001", "0.01", "0.1"]
+
+
+def digest(args) -> dict:
+    if args.data is None:
+        sys.path.insert(0, HERE)
+        from bench import SF_DIR
+
+        args.data = os.path.dirname(SF_DIR)
+    repo = os.path.abspath(args.repo)
+    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p)
+    sys.path.insert(0, repo)
+    import __spark_entry__ as entry
+    from contessa_spark.session import get_spark
+
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark("row_digest", master=f"local[{cores}]", shuffle_partitions=cores)
+    declared = entry.queries()
+    rev = subprocess.run(["git", "rev-parse", "HEAD"], cwd=repo, capture_output=True, text=True).stdout.strip()
+    results = {}
+    for sf in SFS:
+        for name in QUERIES:
+            t0 = time.perf_counter()
+            df = declared[name](spark, os.path.join(args.data, f"sf{sf}"))
+            rows = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+            results[f"sf{sf}/{name}"] = {
+                "rows": len(rows),
+                "sha256": hashlib.sha256(repr(rows).encode()).hexdigest(),
+                "s": round(time.perf_counter() - t0, 1),
+            }
+            print(f"sf{sf}/{name}", results[f"sf{sf}/{name}"], flush=True)
+    spark.stop()
+    return {"commit": rev, "host": f"{os.cpu_count()} cores, local[{cores}]", "results": results}
+
+
+def compare(base: dict, change: dict) -> dict:
+    merged = {}
+    for key in sorted(set(base["results"]) | set(change["results"])):
+        b, c = base["results"].get(key, {}), change["results"].get(key, {})
+        merged[key] = {
+            "rows_base": b.get("rows"),
+            "rows_change": c.get("rows"),
+            "sha256_base": b.get("sha256"),
+            "sha256_change": c.get("sha256"),
+            "s_base": b.get("s"),
+            "s_change": c.get("s"),
+        }
+    differ = [k for k, v in merged.items() if v["sha256_base"] is None or v["sha256_base"] != v["sha256_change"]]
+    for k in differ:
+        print("DIFFERS:", k, merged[k])
+    return {
+        "base": {k: base[k] for k in ("commit", "host") if k in base},
+        "change": {k: change[k] for k in ("commit", "host") if k in change},
+        "identical": not differ,
+        "results": merged,
+    }
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--out")
+    ap.add_argument("--repo", default=HERE)
+    ap.add_argument("--data", help="testdata root holding sf<N>/ (default: the parent of bench.py's SF_DIR)")
+    ap.add_argument("--compare", nargs=2, metavar=("BASE", "CHANGE"))
+    args = ap.parse_args()
+    if args.compare:
+        with open(args.compare[0]) as f, open(args.compare[1]) as g:
+            out = compare(json.load(f), json.load(g))
+    else:
+        out = digest(args)
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(out, f, indent=1)
+            f.write("\n")
+    return 0 if out.get("identical", True) else 1
+
+
+if __name__ == "__main__":
+    sys.exit(main())

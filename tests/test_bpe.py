@@ -196,16 +196,18 @@ def _subword_case(name, counts):
 
 
 @pytest.mark.parametrize("name", ["bpe_counts", "bpe_encode", "unigram", "wordpiece"])
-def test_subword_udfs_match_per_word_encoding(spark, name):
+def test_subword_udfs_match_per_word_encoding(spark, name, high_vocab):
     """Every subword UDF equals its pure per-word encoder on each doc:
-    a count is ``sum(len(encode_word(w)) for w in lower_words([t])[0])``
+    a count is ``sum(len(encode_word(w)) for w in t.lower().split())``
     and ``bpe_encode_udf``'s tokens are the per-word encodings
     concatenated. Small Arrow batches make one task span several
     batches, so the word memo is reused across them; NULL, empty,
-    NUL-containing and case-folding words are included."""
+    NUL-containing and case-folding words are included, and the
+    high-vocabulary corpus's first texts add ~10⁴ distinct words."""
     from collections import Counter
 
-    from contessa_spark.hashing import lower_words
+    def lower_split(t):
+        return (t or "").lower().split()
 
     docs = [
         (r["doc_id"], r["text"])
@@ -218,7 +220,8 @@ def test_subword_udfs_match_per_word_encoding(spark, name):
         (-4, "İstanbul ǅemal HELLO Hello hello ΣΊΣΥΦΟΣ"),
         (-5, "  \t\n "),
     ]
-    counts = Counter(w for _, t in docs for w in lower_words([t])[0])
+    docs += [(1_000_000 + i, t) for i, t in enumerate(high_vocab[:300])]
+    counts = Counter(w for _, t in docs for w in lower_split(t))
     udf_rows, enc = _subword_case(name, counts)
     df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -230,7 +233,7 @@ def test_subword_udfs_match_per_word_encoding(spark, name):
         spark.conf.set(key, old)
     want = {}
     for d, t in docs:
-        per_word = [enc(w) for w in lower_words([t])[0]]
+        per_word = [enc(w) for w in lower_split(t)]
         if name == "bpe_encode":
             want[d] = [tok for toks in per_word for tok in toks]
         else:

@@ -4,6 +4,8 @@ the distributed paths rely on."""
 
 from datetime import datetime, timedelta
 
+import numpy as np
+import pyarrow as pa
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -420,6 +422,117 @@ def test_fnv1a_init_continues_the_hash(pairs, bits):
     assert got == [_fnv_ref(x + y, bits) for x, y in pairs]
 
 
+def _table_of(docs):
+    """A word table built directly from per-doc word lists, so the
+    gram kernel also sees words a whitespace split cannot produce."""
+    enc = pa.array([w for ws in docs for w in ws], pa.string()).dictionary_encode()
+    offsets = np.concatenate(([0], np.cumsum([len(ws) for ws in docs], dtype=np.int64)))
+    return offsets, enc.indices.to_numpy(), enc.dictionary
+
+
+def _table_words(table):
+    """(every word in order, words per doc) of a ``word_table``."""
+    offsets, codes, words = table
+    return words.take(codes).to_pylist(), np.diff(offsets).tolist()
+
+
+def _split_words(texts, lower=False):
+    """(every word in order, words per doc) of ``str.split()``."""
+    per_doc = [((t or "").lower() if lower else (t or "")).split() for t in texts]
+    return [w for ws in per_doc for w in ws], [len(ws) for ws in per_doc]
+
+
+def _assert_word_tables(texts, all_forms=True):
+    """Raw and lowered word tables of ``texts`` equal ``t.split()`` and
+    ``t.lower().split()`` for a list and for string, large_string,
+    sliced and chunked input (the last three unless ``all_forms`` is
+    false); ``words`` is distinct and never holds ``""``."""
+    from contessa_spark.hashing import word_table
+
+    arr = pa.array(texts, pa.string())
+    forms = [list(texts), arr.cast(pa.large_string())]
+    if all_forms:
+        padded = pa.array(["x y"] + list(texts) + ["z"], pa.string())
+        half = len(texts) // 2
+        forms += [arr, padded.slice(1, len(texts)), pa.chunked_array([arr.slice(0, half), arr.slice(half)])]
+    for lower in (False, True):
+        want = _split_words(texts, lower)
+        for form in forms:
+            table = word_table(form, lower=lower)
+            words = table[2].to_pylist()
+            assert "" not in words and len(set(words)) == len(words)
+            assert _table_words(table) == want
+
+
+@given(st.lists(st.one_of(st.none(), text_st, st.sampled_from(["", " ", " a ", "İΣ ǅΣ\x1cΣ\x00b"])), max_size=20))
+@settings(max_examples=150, deadline=None)
+def test_word_table_matches_str_split(texts):
+    _assert_word_tables(texts)
+
+
+def test_word_table_splits_every_code_point_like_str_split():
+    """Every non-surrogate code point c: ``"a"+chr(c)+"b"`` and
+    ``c+"a"+c+"b"+c`` split as ``str.split()`` does, lowering never creates or removes whitespace,
+    and the lowered table of ``"AΣ"+chr(c)+"Σb"`` (final-sigma context
+    on both sides of c) equals ``t.lower().split()``. Each is one
+    vectorized array of 1,112,064 texts."""
+    from contessa_spark.hashing import word_table
+
+    chars = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    assert len(chars) == 1_112_064
+    assert [ch for ch in chars if any(x.isspace() for x in ch.lower()) != ch.isspace()] == []
+    assert [ch for ch in chars if ch.isspace() and ch.lower() != ch] == []
+    for texts in (["a" + ch + "b" for ch in chars], [ch + "a" + ch + "b" + ch for ch in chars]):
+        assert _table_words(word_table(texts)) == _split_words(texts)
+    texts = ["AΣ" + ch + "Σb" for ch in chars]
+    assert _table_words(word_table(texts, lower=True)) == _split_words(texts, lower=True)
+
+
+def test_word_table_when_invalid_bytes_follow_the_last_text():
+    """Arrow's split decodes one code point past a text that ends in
+    whitespace. After the last text of an array that is whatever
+    follows its data in memory (in an IPC body, the next buffer), and
+    where those bytes are not UTF-8 pyarrow 16.1 returned the trailing
+    whitespace as part of a word. Here the data buffer ends in 0xff
+    bytes past the last offset."""
+    from contessa_spark.hashing import word_table
+
+    for last in ["\ta£\r", "a ", "b  ", " ", "c\x85", "d\u3000", "e\x1f"]:
+        texts = ["x y", last]
+        data = "".join(texts).encode()
+        offsets = np.array([0, 3, len(data)], dtype=np.int32)
+        arr = pa.Array.from_buffers(pa.string(), 2, [None, pa.py_buffer(offsets), pa.py_buffer(data + b"\xff" * 8)])
+        for lower in (False, True):
+            assert _table_words(word_table(arr, lower=lower)) == _split_words(texts, lower), repr(last)
+
+
+def test_word_table_on_high_vocab_corpus(high_vocab):
+    """Raw and lowered tables equal ``str.split()`` on the seeded
+    Heaps'-law corpus (>10⁵ distinct words either way)."""
+    from contessa_spark.hashing import word_table
+
+    assert len(word_table(high_vocab)[2]) > 100_000
+    assert len(word_table(high_vocab, lower=True)[2]) > 100_000
+    _assert_word_tables(high_vocab, all_forms=False)
+
+
+def test_annotate_rows_match_single_signal_forms_on_high_vocab_corpus(high_vocab):
+    """The fused batch core equals the ``py_*`` oracles on every text
+    of the high-vocabulary corpus, in one batch."""
+    cols = annotate_rows(high_vocab)
+    for i, t in enumerate(high_vocab):
+        t = t or ""
+        assert cols["n_chars"][i] == len(t)
+        assert cols["symbol_ratio"][i] == textstats.py_symbol_ratio(t)
+        assert cols["repetition"][i] == textstats.py_repetition(t)
+        assert cols["stopword_frac"][i] == textstats.py_stopword_frac(t)
+        assert cols["mean_word_len"][i] == textstats.py_mean_word_len(t)
+        assert cols["ppl"][i] == perplexity.perplexity(t)
+        assert (cols["lang_pred"][i], cols["lang_conf"][i]) == langid.detect(t)
+        scrubbed = cols["scrubbed_text"][i]
+        assert (scrubbed if scrubbed is not None else t) == scrub.scrub_text(t)
+
+
 @given(st.lists(st.lists(st.text(max_size=6), max_size=9), max_size=25),
        st.integers(min_value=1, max_value=5))
 @settings(max_examples=150, deadline=None)
@@ -428,7 +541,7 @@ def test_gram_hashes_match_joined_grams(docs, k):
     gram string; docs with fewer than k words contribute none."""
     from contessa_spark.hashing import gram_hashes
 
-    flat, counts = gram_hashes(docs, k)
+    flat, counts = gram_hashes(_table_of(docs), k)
     assert counts.tolist() == [max(0, len(w) - k + 1) for w in docs]
     assert flat.tolist() == [
         _fnv_ref(" ".join(w[i : i + k])) for w in docs for i in range(len(w) - k + 1)

@@ -122,3 +122,43 @@ def test_subword_apply_kernel_lives_in_one_place():
                 factories.append(path)
     assert bound == {"contessa_spark/functions/bpe.py"}, bound
     assert not factories, factories
+
+
+#: library files whose UDFs take their words from ``hashing.word_table``
+_WORD_UDF_FILES = (
+    "contessa_spark/functions/annotate_udf.py",
+    "contessa_spark/operators/dedup.py",
+    "contessa_spark/functions/bpe.py",
+    "contessa_spark/functions/quality_classifier.py",
+)
+
+
+def test_one_word_split_for_word_level_udfs():
+    """``hashing.word_table`` is the one word split of the word-level
+    UDFs: Arrow's ``utf8_split_whitespace`` is named in no other library
+    file, the per-list helpers ``lower_words`` / ``unique_tokens`` it
+    replaced are defined nowhere, and the word-UDF modules make no
+    zero-argument ``.split()`` call."""
+    split_elsewhere, old_helpers, bare_splits = [], [], []
+    for path in _tracked_py():
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            src = f.read()
+        tree = ast.parse(src, filename=path)
+        library = path.startswith("contessa_spark/") or path == "__spark_entry__.py"
+        if library and path != "contessa_spark/hashing.py" and "utf8_split_whitespace" in src:
+            split_elsewhere.append(path)
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name in ("lower_words", "unique_tokens"):
+                old_helpers.append(f"{path}: {n.name}")
+            elif (
+                path in _WORD_UDF_FILES
+                and isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "split"
+                and not n.args
+                and not n.keywords
+            ):
+                bare_splits.append(f"{path}:{n.lineno}")
+    assert not split_elsewhere, split_elsewhere
+    assert not old_helpers, old_helpers
+    assert not bare_splits, bare_splits
