@@ -469,20 +469,28 @@ def _doc_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
 from contessa_spark.operators.linkgraph import SCALE as SCALE_PR
 
 
+def _link_edges(docs: DataFrame, mul: int, add: int) -> DataFrame:
+    # deterministic synthetic link graph (documents carry no outlinks
+    # at test scale): node = doc_id % 100, edge u → (mul·u + add) % 100
+    return docs.select(
+        (F.col("doc_id") % 100).alias("src"),
+        ((F.col("doc_id") * mul + add) % 100).alias("dst"),
+    )
+
+
+def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # u → (7u+3) % 100 — a dense functional graph with cycles and
+    # dangling asymmetry
+    return _link_edges(_load(spark, sf_dir, "documents"), 7, 3)
+
+
 def _domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # link-authority prior over a deterministic synthetic link graph
-    # (documents carry no outlinks at test scale): node = doc_id % 100,
-    # edge u → (7u+3) % 100 — a dense functional graph with cycles and
-    # dangling asymmetry. Integer fixed-point ranks hash-match the
-    # unrolled-CTE oracle exactly (see operators/linkgraph.py).
+    # link-authority prior over the synthetic link graph. Integer
+    # fixed-point ranks hash-match the unrolled-CTE oracle exactly (see
+    # operators/linkgraph.py).
     from contessa_spark.operators.linkgraph import pagerank
 
-    docs = _load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 100).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 100).alias("dst"),
-    )
-    return pagerank(edges, iters=3)
+    return pagerank(_pagerank_edges(spark, sf_dir), iters=3)
 
 
 def _pagerank_oracle_sql(iters: int = 3) -> str:
@@ -565,25 +573,20 @@ def _doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hits_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # domain_pagerank's graph plus a second edge family so in/out-degrees
+    # vary: u → (7u+3)%100 and u → (3u+11)%100
+    docs = _load(spark, sf_dir, "documents")
+    return _link_edges(docs, 7, 3).unionAll(_link_edges(docs, 3, 11))
+
+
 def _domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # HITS hubs/authorities (operators/linkgraph.py) over the same
-    # synthetic-link-graph convention as domain_pagerank, with a second
-    # edge family so in/out-degrees vary: u → (7u+3)%100 and
-    # u → (3u+11)%100. Integer L1-normalized fixed-point scores
-    # hash-match the unrolled-CTE oracle exactly.
+    # HITS hubs/authorities (operators/linkgraph.py) over the synthetic
+    # link graph. Integer L1-normalized fixed-point scores hash-match
+    # the unrolled-CTE oracle exactly.
     from contessa_spark.operators.linkgraph import hits
 
-    docs = _load(spark, sf_dir, "documents")
-    edges = docs.select(
-        (F.col("doc_id") % 100).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 100).alias("dst"),
-    ).unionAll(
-        docs.select(
-            (F.col("doc_id") % 100).alias("src"),
-            ((F.col("doc_id") * 3 + 11) % 100).alias("dst"),
-        )
-    )
-    return hits(edges, iters=2)
+    return hits(_hits_edges(spark, sf_dir), iters=2)
 
 
 def _hits_oracle_sql(iters: int = 2) -> str:
@@ -1213,30 +1216,33 @@ def _events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+def _synth_media(docs: DataFrame, payload_of_id) -> DataFrame:
+    """(media_id, payload) per ``doc_id`` of ``docs``: the synthetic
+    media file ``payload_of_id(doc_id)``, built one Arrow batch at a
+    time."""
+    import pyarrow as pa
 
+    def make_media(batches):
+        for batch in batches:
+            ids = batch.column(0).to_pylist()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, pa.int64()), pa.array([payload_of_id(i) for i in ids], pa.binary())],
+                names=["media_id", "payload"],
+            )
+
+    return docs.select("doc_id").mapInArrow(make_media, "media_id long, payload binary")
+
+
+def _media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from contessa_spark.operators.multimodal import decode_images, fake_image_bytes
 
     # the single-file documents scan yields ONE split; the synth+decode
     # python chain inherits it and serializes onto one core without
     # the round-robin spread (no-op at production split counts)
-    docs = _documents(spark, sf_dir).select("doc_id")
-
-    def make_media(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        fake_image_bytes(16 + i % 64, 16 + i % 32, i % 256)
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make_media, schema="media_id long, payload binary")
+    media = _synth_media(
+        _documents(spark, sf_dir),
+        lambda i: fake_image_bytes(16 + i % 64, 16 + i % 32, i % 256),
+    )
     return decode_images(media)
 
 
@@ -1252,8 +1258,6 @@ def _media_image_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs at hamming 0 — which the oracle recomputes arithmetically.
     # The full encode→decode→hash→band→verify path must hold for the
     # row set to match.
-    import pandas as pd
-
     from contessa_spark.hashing import splitmix64
     from contessa_spark.operators.image_dedup import (
         bmp24_from_gray,
@@ -1262,30 +1266,10 @@ def _media_image_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_near_dups,
     )
 
-    docs = (
-        _load(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 500)
+    media = _synth_media(
+        _load(spark, sf_dir, "documents").where(F.col("doc_id") < 500),
+        lambda i: bmp24_from_gray(codeword_image_gray(splitmix64(i % 50), (i // 50) % 32)),
     )
-
-    def make_media(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        bmp24_from_gray(
-                            codeword_image_gray(
-                                splitmix64(i % 50), (i // 50) % 32
-                            )
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make_media, schema="media_id long, payload binary")
     return image_near_dups(image_dhash(media), max_hamming=4)
 
 
@@ -1299,8 +1283,6 @@ def _media_audio_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 40 codewords sit > 6 bits apart (asserted in tests), so pairs at
     # max_hamming=4 are exactly the within-group pairs at hamming 0.
     # Full RIFF encode→parse→hash→band→verify path must hold to match.
-    import pandas as pd
-
     from contessa_spark.operators.audio_dedup import (
         audio_afp,
         audio_near_dups,
@@ -1308,29 +1290,10 @@ def _media_audio_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from contessa_spark.hashing import splitmix64
 
-    docs = (
-        _load(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 500)
+    media = _synth_media(
+        _load(spark, sf_dir, "documents").where(F.col("doc_id") < 500),
+        lambda i: codeword_wav_bytes(splitmix64(i % 40) & 0xFFFFFFFF, scale=1 + (i // 40) % 13),
     )
-
-    def make_media(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        codeword_wav_bytes(
-                            splitmix64(i % 40) & 0xFFFFFFFF,
-                            scale=1 + (i // 40) % 13,
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make_media, schema="media_id long, payload binary")
     return audio_near_dups(audio_afp(media), max_hamming=4)
 
 
@@ -1339,28 +1302,12 @@ def _media_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synthesized per doc_id, then actually decoded — headers AND the
     # sample stream (mean-abs amplitude); the oracle recomputes every
     # field arithmetically from doc_id
-    import pandas as pd
-
     from contessa_spark.operators.multimodal import decode_audio, fake_wav_bytes
 
-    docs = _documents(spark, sf_dir).select("doc_id")
-
-    def make_media(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        fake_wav_bytes(
-                            8000 + (i % 4) * 4000, 1 + i % 2, 100 + i % 400, i
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make_media, schema="media_id long, payload binary")
+    media = _synth_media(
+        _documents(spark, sf_dir),
+        lambda i: fake_wav_bytes(8000 + (i % 4) * 4000, 1 + i % 2, 100 + i % 400, i),
+    )
     return decode_audio(media)
 
 
@@ -1368,30 +1315,12 @@ def _media_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real ISO-BMFF (MP4) skeletons per doc_id — ftyp + moov/mvhd +
     # trak/tkhd — decoded by the public-spec box walk; oracle
     # recomputes all fields arithmetically
-    import pandas as pd
-
     from contessa_spark.operators.multimodal import decode_video, fake_mp4_bytes
 
-    docs = _documents(spark, sf_dir).select("doc_id")
-
-    def make_media(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        fake_mp4_bytes(
-                            320 + (i % 8) * 80,
-                            240 + (i % 6) * 60,
-                            1000 + (i % 5000),
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make_media, schema="media_id long, payload binary")
+    media = _synth_media(
+        _documents(spark, sf_dir),
+        lambda i: fake_mp4_bytes(320 + (i % 8) * 80, 240 + (i % 6) * 60, 1000 + (i % 5000)),
+    )
     return decode_video(media)
 
 

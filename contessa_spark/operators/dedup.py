@@ -42,7 +42,7 @@ from typing import Optional
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from contessa_spark.hashing import (
@@ -983,31 +983,32 @@ def minhash_lsh_candidates(
 
 # -------------------------------------------------------------- SimHash
 
-def _simhash_batch(texts, n_bits: int = 64):
+def _simhash_batch(texts):
     """Batch core of ``simhash_udf``: int64 simhash per (possibly NULL)
     text. Bit i is set when more than half of the doc's lowered words
-    have FNV-64 bit i set (no words → 0); each distinct word of the
-    batch's ``word_table`` is hashed once and the votes summed per
-    doc."""
+    have FNV-64 bit i set (no words → 0). One vote pass: each distinct
+    word of the batch's ``word_table`` is hashed once and unpacked to a
+    64-column bit row; the rows gathered by word are summed per doc
+    (empty docs skipped — ``reduceat`` needs increasing starts) and
+    the majorities packed back into 64 bits."""
     offsets, codes, words = word_table(texts, lower=True)
     lens = np.diff(offsets)
-    n_docs = len(lens)
-    h = fnv1a(words)[codes]
-    doc = np.repeat(np.arange(n_docs), lens)
-    sig = np.zeros(n_docs, dtype=np.uint64)
-    for i in range(n_bits):
-        ones = np.bincount(doc, weights=(h >> np.uint64(i)) & np.uint64(1), minlength=n_docs)
-        sig |= (2 * ones > lens).astype(np.uint64) << np.uint64(i)
-    # two's-complement into signed 64-bit for Spark LongType
-    return sig.view(np.int64)
+    bits = np.unpackbits(fnv1a(words).astype("<u8").view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+    votes = np.zeros((len(lens), 64), dtype=np.int32)
+    has = lens > 0
+    if has.any():
+        votes[has] = np.add.reduceat(bits[codes], offsets[:-1][has], axis=0, dtype=np.int32)
+    majority = np.packbits(2 * votes > lens[:, None], axis=1, bitorder="little")
+    # little-endian bytes → signed 64-bit for Spark LongType
+    return majority.view("<i8").ravel()
 
 
-def simhash_udf(n_bits: int = 64):
+def simhash_udf():
     """Arrow UDF: text → 64-bit simhash (as long). Word-level FNV
     hashes, bit-majority vote — deterministic."""
 
     def _simhash(texts: pa.Array) -> pa.Array:
-        return pa.array(_simhash_batch(texts, n_bits))
+        return pa.array(_simhash_batch(texts))
 
     return F.arrow_udf(_simhash, "bigint")
 
@@ -1388,7 +1389,6 @@ def substring_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 50,
-    cleanup: Optional[list] = None,
     keep_first: bool = True,
 ) -> DataFrame:
     """Substring-level EXACT dedup (Lee et al. 2021 "Deduplicating
@@ -1399,28 +1399,19 @@ def substring_dedup(
     order, whitespace-normalized. The paper's unit is 50 BPE tokens;
     here the unit is whitespace words and ``k`` is the span threshold.
 
-    Plan — and why it has NO quadratic stage (unlike the pair-emitting
-    near-dup passes, no ``max_df`` cap is needed):
+    Plan — every intermediate has ONE consumer, so nothing is persisted
+    and nothing joins back to its own data; and it has NO quadratic
+    stage (unlike the pair-emitting near-dup passes, no ``max_df`` cap
+    is needed):
 
     1. ONE Arrow-UDF pass per doc emits the k-gram FNV-64 hash at
-       every word position; posexplode → (id, pos, gh). The narrow
-       exploded frame is persisted — it feeds both the gram-frequency
-       aggregate and the flag join, and re-running the gram UDF twice
-       would double the only Python cost in the plan (pass
-       ``cleanup=[]``: the frame is appended to it, so the caller can
-       ``unpersist()`` it once the result has been consumed).
-    2. Gram stats: groupBy(gh) → (count, min(struct(id, pos))). A
-       COUNT aggregate with map-side partial combine — a gram repeated
-       10⁹ times reduces to one row per map partition before the
-       shuffle, so hot boilerplate grams never concentrate rows (the
-       same shape as ``corpus_line_dedup``); contrast with posting-list
-       collection, which would need capping.
-    3. Flag positions: join grams back on gh (every probe row matches
-       ≤ 1 stats row — linear, AQE skew-join splits hot grams),
-       keep occurrences of count>1 grams that are NOT the global first.
-    4. Per-doc flag lists: groupBy(id) collect_list(pos) — bounded by
-       doc length.
-    5. Rebuild: left-join flags onto the input, one Arrow UDF strips
+       every word position; posexplode → (id, pos, gh).
+    2. Flag positions: window aggregates over ``partitionBy(gh)`` give
+       each gram's count and its first (id, pos) — one exchange on gh,
+       linear in the gram rows. Keep occurrences of count>1 grams that
+       are NOT the global first; then per-doc flag lists,
+       groupBy(id) collect_list(pos) — bounded by doc length.
+    3. Rebuild: left-join flags onto the input, one Arrow UDF strips
        the maximal covered runs (a span of length L ≥ k shared with an
        earlier occurrence has all its L−k+1 gram positions flagged, so
        the union of [p, p+k) covers exactly the span).
@@ -1434,9 +1425,10 @@ def substring_dedup(
     ``keep_first=False`` strips EVERY occurrence of a duplicated span
     (Lee et al. also evaluate this variant — it guarantees no
     repeated span survives anywhere, at the cost of losing the
-    canonical copy too); the aggregate then needs only the count, not
-    the first-occurrence struct.
+    canonical copy too); the flag filter then reads only the count,
+    and the optimizer drops the unused first-occurrence window.
     """
+    by_gram = Window.partitionBy("gh")
     # asNondeterministic: pins the (pure) gram UDF above any caller's
     # spread exchange — deterministic UDF projections get pushed below
     # it and re-extracted above, running the whole gram pass twice
@@ -1450,40 +1442,17 @@ def substring_dedup(
             .alias("_ghs"),
         )
         .select("_id", F.posexplode("_ghs").alias("pos", "gh"))
-        .persist()
+        .select(
+            "_id",
+            "pos",
+            F.count(F.lit(1)).over(by_gram).alias("_cnt"),
+            F.min(F.struct("_id", "pos")).over(by_gram).alias("_first"),
+        )
     )
-    if cleanup is not None:
-        cleanup.append(grams)
-
+    dup = F.col("_cnt") > 1
     if keep_first:
-        dup_grams = (
-            grams.groupBy("gh")
-            .agg(
-                F.count(F.lit(1)).alias("_cnt"),
-                F.min(F.struct(F.col("_id"), F.col("pos"))).alias("_first"),
-            )
-            .where(F.col("_cnt") > 1)
-            .select("gh", "_first")
-        )
-        flagged = (
-            grams.join(dup_grams, "gh")
-            .where(
-                ~(
-                    (F.col("_first._id") == F.col("_id"))
-                    & (F.col("_first.pos") == F.col("pos"))
-                )
-            )
-            .select("_id", "pos")
-        )
-    else:
-        dup_grams = (
-            grams.groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .where(F.col("_cnt") > 1)
-            .select("gh")
-        )
-        flagged = grams.join(dup_grams, "gh").select("_id", "pos")
-    flags = flagged.groupBy("_id").agg(F.collect_list("pos").alias("_flags"))
+        dup &= ~((F.col("_first._id") == F.col("_id")) & (F.col("_first.pos") == F.col("pos")))
+    flags = grams.where(dup).groupBy("_id").agg(F.collect_list("pos").alias("_flags"))
 
     strip = _strip_spans_udf(k)
     out = (

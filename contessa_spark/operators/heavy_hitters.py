@@ -22,9 +22,10 @@ each batch's exact counts feed the MG state, decrements amortize), one
 summary row per (group, item) candidate; a groupBy-sum merges partial
 summaries, subtracting nothing — summing MG summaries and re-pruning
 to the top 1/ε preserves the guarantee with ε doubled (Agarwal et al.
-Thm 1); we track the per-partition decrement totals explicitly and
-expose ``max_undercount`` so callers see the actual error bound, not
-the worst case.
+Thm 1). Each partition's decrement total rides in the same aggregate
+as a NULL-item row and is exposed as ``max_undercount``, so callers
+see the actual error bound, not the worst case. The summary is read
+once — nothing materialized, no join back.
 
 The ESTIMATES are layout-dependent (merge order changes decrements) —
 the GUARANTEE is not. Tests gate the guarantee under multiple layouts;
@@ -37,9 +38,9 @@ family: MinHash / SimHash / bloom / HLL / MG).
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Union
+from typing import List, Sequence, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -65,6 +66,13 @@ def misra_gries_topk(
     locally; after the merge the bound is the SUM of per-partition
     decrements, reported exactly in ``max_undercount`` — identical for
     every row of a group). est_count never exceeds the true count.
+
+    Plan: the ``mapInPandas`` summary emits item rows with
+    ``part_dec = 0`` and one NULL-item row per (partition, group) with
+    a decrement; ``groupBy(*group_cols, item)`` sums both columns;
+    ``max_undercount`` is ``sum(_dec)`` over ``partitionBy(*group_cols)``;
+    NULL items drop, then ``row_number`` ranks over the same window
+    partitioning. A NULL group key is a group like any other.
     """
     import pandas as pd
 
@@ -106,59 +114,36 @@ def misra_gries_topk(
         rows = []
         for gkey, (counters, dec) in state.items():
             for item, c in counters.items():
-                rows.append((*gkey, item, c, dec))
-            if not counters and dec:
-                # all counters decremented away: a NULL-item sentinel
-                # keeps this partition's decrement in the bound (input
-                # NULLs are filtered, so NULL is free as a sentinel)
+                rows.append((*gkey, item, c, 0))
+            if dec:
+                # one NULL-item row carries this partition's decrement
+                # total (input NULLs are filtered, so NULL is free)
                 rows.append((*gkey, None, 0, dec))
         cols = gc + ["item", "part_count", "part_dec"]
-        yield pd.DataFrame(rows, columns=cols)
+        # object columns: a NULL item must not turn int64 items into
+        # float64, which rounds items above 2**53
+        yield pd.DataFrame(rows, columns=cols, dtype=object)
 
     gtypes = [f"`{c}` {dict(src.dtypes)[c]}" for c in gc]
     vtype = dict(src.dtypes)[value_col]
     schema = ", ".join(
         gtypes + [f"item {vtype}", "part_count long", "part_dec long"]
     )
-    partials = src.mapInPandas(summarize, schema)
-
-    # merge: sum per-item partial counts; the group's undercount bound
-    # is the sum of every PARTITION's decrement total — collect it from
-    # the distinct (partition, dec) pairs via max-per-partial trick:
-    # part_dec repeats on every row a partition emits for the group, so
-    # sum(DISTINCT) is unsafe (two partitions can share a value); tag
-    # each source partition instead.
-    #
-    # localCheckpoint (lazy): per_part_dec and counted both consume the
-    # sketch pass below — without it the full input scan + MG summarize
-    # runs TWICE, and the pid/part_dec pairing would silently rely on
-    # deterministic re-scan partitioning. The materialized partials are
-    # O(1/ε) rows per partition per group — bounded at any scale.
-    partials = partials.withColumn(
-        "pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
-    per_part_dec = (
-        partials.groupBy(*gc, "pid")
-        .agg(F.max("part_dec").alias("d"))
-        .groupBy(*gc)
-        .agg(F.sum("d").alias("max_undercount"))
-    )
-    counted = partials.where(F.col("item").isNotNull())
+    # merge: per-item partial counts sum to est_count; the NULL-item
+    # rows carry each partition's decrement total, so the group's bound
+    # is its NULL row's _dec, spread by a window sum that shares the
+    # rank's exchange on the group
     merged = (
-        counted.groupBy(*gc, "item")
-        .agg(F.sum("part_count").alias("est_count"))
-        .join(per_part_dec, gc)
-        if gc
-        else counted.groupBy("item")
-        .agg(F.sum("part_count").alias("est_count"))
-        .crossJoin(per_part_dec)
+        src.mapInPandas(summarize, schema)
+        .groupBy(*gc, "item")
+        .agg(
+            F.sum("part_count").alias("est_count"),
+            F.sum("part_dec").alias("_dec"),
+        )
+        .withColumn("max_undercount", F.sum("_dec").over(Window.partitionBy(*gc)))
+        .where(F.col("item").isNotNull())
     )
-    w_cols = [F.col(c) for c in gc]
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*w_cols).orderBy(
-        F.desc("est_count"), F.asc("item")
-    )
+    w = Window.partitionBy(*gc).orderBy(F.desc("est_count"), F.asc("item"))
     return (
         merged.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

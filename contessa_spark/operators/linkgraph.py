@@ -38,6 +38,11 @@ from pyspark.sql import functions as F
 
 #: fixed-point scale: ranks live in [0, SCALE] (sum ≈ n_nodes * SCALE)
 SCALE = 1_000_000_000
+#: rounds between lineage-truncating checkpoints of the iterated
+#: scores: the plan tree grows geometrically with the rounds on a lazy
+#: engine (a HITS round is two half-steps, so it checkpoints sooner)
+PAGERANK_CHECKPOINT_EVERY = 6
+HITS_CHECKPOINT_EVERY = 3
 
 
 def pagerank(
@@ -47,7 +52,6 @@ def pagerank(
     damping_den: int = 100,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 6,
 ) -> DataFrame:
     """Integer-arithmetic PageRank over an edge list → (node,
     rank_scaled) with ``rank_scaled ≈ rank × 10⁹``.
@@ -111,7 +115,7 @@ def pagerank(
             .cast("long")
             .alias("rank_scaled"),
         )
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0:
             # geometric plan growth is the iterative-algorithm tax on a
             # lazy engine; truncate lineage like dedup_components does
             ranks = ranks.localCheckpoint(eager=True)
@@ -124,7 +128,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     scale: int = SCALE,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over an edge list →
     (node, auth_scaled, hub_scaled), L1-normalized fixed-point integers
@@ -218,7 +221,7 @@ def hits(
     for i in range(iters):
         auth = _pull_and_normalize(hub, "hub_scaled", "src", "dst", "auth_scaled")
         hub = _pull_and_normalize(auth, "auth_scaled", "dst", "src", "hub_scaled")
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+        if (i + 1) % HITS_CHECKPOINT_EVERY == 0 and i + 1 < iters:
             auth = auth.localCheckpoint(eager=True)
             hub = hub.localCheckpoint(eager=True)
     return auth.join(hub, "node")

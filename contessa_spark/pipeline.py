@@ -91,10 +91,12 @@ class PipelineConfig:
     # production file-backed runs PREFER "input_partition" — it is what
     # bench.py and the scaling evidence use, per the measurement above.
     bucket_by: str = "url"
-    # zstd over the default snappy: ~1.4× smaller text payloads, and
-    # output I/O — not compression CPU — is the serial tail on shared
-    # storage (parallel CPU buys back the encode cost)
-    output_codec: str = "zstd"
+
+
+#: output parquet codec — zstd over the default snappy: ~1.4× smaller
+#: text payloads, and output I/O — not compression CPU — is the serial
+#: tail on shared storage (parallel CPU buys back the encode cost)
+OUTPUT_CODEC = "zstd"
 
 
 #: rule definitions in the contessa DSL (dict form, normalizer-ready)
@@ -460,7 +462,7 @@ class QualityFilterPipeline:
             (
                 projected.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
-                .option("compression", cfg.output_codec)
+                .option("compression", OUTPUT_CODEC)
                 .partitionBy("bucket")
                 .parquet(self.output_path)
             )

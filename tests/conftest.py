@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -12,6 +13,27 @@ from contessa_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark("contessa_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def leaves_nothing(spark):
+    """Context manager: releases every persisted RDD and cached plan,
+    runs the block, then asserts the block left neither behind.
+    ``getPersistentRDDs`` sees ``localCheckpoint`` and RDD-level
+    ``persist``; the CacheManager sees ``DataFrame.persist``/``cache``."""
+    jsc = spark.sparkContext._jsc
+
+    @contextlib.contextmanager
+    def check():
+        for rdd in list(jsc.getPersistentRDDs().values()):
+            rdd.unpersist(True)
+        spark.catalog.clearCache()
+        yield
+        left = [str(rdd) for rdd in jsc.getPersistentRDDs().values()]
+        assert not left, f"persisted RDDs left behind: {left}"
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), "cached plans left behind"
+
+    return check
 
 
 #: letters of the high-vocabulary corpus: lowercase Latin, Latin-1,

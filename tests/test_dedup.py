@@ -452,16 +452,11 @@ def _near_dup_families():
 
 
 @pytest.mark.parametrize("family", ["minhash", "simhash", "image", "audio", "hyperplane"])
-def test_near_dup_families_leave_nothing_persisted(spark, family):
-    """No banded near-dup family leaves an RDD persisted after its
-    result is consumed. ``getPersistentRDDs`` sees what the
-    CacheManager check ``_nothing_cached`` cannot: ``localCheckpoint``
-    and RDD-level ``persist``."""
-    jsc = spark.sparkContext._jsc
-    for rdd in list(jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-    assert _near_dup_families()[family](spark).collect()
-    assert jsc.getPersistentRDDs().isEmpty()
+def test_near_dup_families_leave_nothing_persisted(spark, leaves_nothing, family):
+    """No banded near-dup family leaves an RDD persisted or a plan
+    cached after its result is consumed."""
+    with leaves_nothing():
+        assert _near_dup_families()[family](spark).collect()
 
 
 def test_hyperplane_lsh_join_declared_dim(spark):
@@ -590,10 +585,11 @@ def test_substring_dedup_drop_all_mode(spark):
 
 
 def test_substring_dedup_plan_shape(spark):
-    """The gram-frequency aggregate must partial-combine map-side (hot
-    boilerplate grams reduce per partition before the shuffle) and the
-    scan must prune to (doc_id, text) — no quadratic stage exists in
-    this plan by construction."""
+    """Every intermediate has one consumer: the gram UDF runs once,
+    nothing is cached, each gram's count and first occurrence come from
+    one window partitioned by gh, and the only join puts the flags onto
+    the input. The scan prunes to (doc_id, text) — no quadratic stage
+    exists in this plan by construction."""
     import re
 
     from contessa_spark.operators.dedup import substring_dedup
@@ -605,7 +601,11 @@ def test_substring_dedup_plan_shape(spark):
         .executedPlan()
         .toString()
     )
-    assert "partial_min" in plan and "partial_count" in plan
+    assert plan.count("ArrowEvalPython [_gh(") == 1
+    assert "InMemoryTableScan" not in plan
+    assert re.search(r"Window \[count\(1\) .*min\(.*\], \[gh#\d+L\]", plan)
+    joins = re.findall(r"\w+Join .*", plan)
+    assert len(joins) == 1 and "LeftOuter" in joins[0]
     for rs in re.findall(r"ReadSchema: (\S+)", plan):
         assert "lang" not in rs and "source" not in rs
 

@@ -323,3 +323,36 @@ def test_hits_scale_too_small_raises(spark):
     df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     with _pytest.raises(ValueError, match="scale"):
         hits(df, iters=1, scale=2)
+
+
+def test_link_scores_past_the_lineage_checkpoint_match_oracle(spark):
+    """Enough rounds to take the in-loop checkpoint branch (pagerank
+    round 6, hits round 3) over the sf0.001 domain graph: the scores
+    stay exactly equal to the unrolled DuckDB oracle. Its CTEs are
+    materialized here: inlined, each HITS round references the last one
+    four times, so the 5-round oracle would expand to 4⁵ scans."""
+    import re
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from contessa_spark.operators.linkgraph import (
+        HITS_CHECKPOINT_EVERY,
+        PAGERANK_CHECKPOINT_EVERY,
+        hits,
+        pagerank,
+    )
+
+    pr_iters, hits_iters = 7, 5
+    assert pr_iters > PAGERANK_CHECKPOINT_EVERY and hits_iters > HITS_CHECKPOINT_EVERY
+    sf = "/root/testdata/sf0.001"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    pr = pagerank(entry._pagerank_edges(spark, sf), iters=pr_iters)
+    assert sorted(map(tuple, pr.select("node", "rank_scaled").collect())) == sorted(
+        con.sql(entry._pagerank_oracle_sql(pr_iters)).fetchall()
+    )
+    hs = hits(entry._hits_edges(spark, sf), iters=hits_iters)
+    assert sorted(map(tuple, hs.select("node", "auth_scaled", "hub_scaled").collect())) == sorted(
+        con.sql(re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", entry._hits_oracle_sql(hits_iters))).fetchall()
+    )

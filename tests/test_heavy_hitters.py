@@ -105,3 +105,48 @@ def test_nulls_filtered_and_group_isolation(spark):
     out = misra_gries_topk(df, "v", "g", k=5, capacity=16).collect()
     got = {(r["g"], r["item"]): r["est_count"] for r in out}
     assert got == {("a", "x"): 2, ("b", "x"): 1, ("b", "y"): 1}
+
+
+def test_max_undercount_is_sum_of_partition_decrements(spark):
+    """``max_undercount`` is the sum of each partition's decrement
+    total, and est_count the sum of its surviving counters: equal to a
+    pure-Python weighted Misra–Gries run over each partition of a
+    fixed-layout input at capacity 8. Within a partition and group every
+    item's count is distinct, so the summary's count-descending update
+    order is fixed. Items sit above 2**53, where a float64 round trip
+    would change them."""
+    from collections import Counter
+
+    from contessa_spark.operators.heavy_hitters import misra_gries_topk
+
+    # five equal blocks, one per partition; items overlap across blocks
+    base = 2**60
+    rows = [
+        (g, base + 7 * p + j)
+        for p in range(5)
+        for g in ("a", "b")
+        for j in range(12 + (g == "b"))
+        for _ in range(j + 1)
+    ]
+    rdd = spark.sparkContext.parallelize(rows, 5)
+    df = spark.createDataFrame(rdd, "g string, v long")
+
+    capacity, dec, est = 8, Counter(), Counter()
+    parts = rdd.glom().collect()
+    assert [len(set(part)) for part in parts] == [25] * 5
+    for part in parts:
+        for g in ("a", "b"):
+            counters, d = {}, 0
+            for item, c in Counter(v for h, v in part if h == g).most_common():
+                counters[item] = c
+                if len(counters) > capacity:
+                    m = min(counters.values())
+                    d += m
+                    counters = {i: n - m for i, n in counters.items() if n > m}
+            dec[g] += d
+            est.update({(g, i): n for i, n in counters.items()})
+    assert all(dec.values())
+
+    out = misra_gries_topk(df, "v", "g", k=100, capacity=capacity).collect()
+    assert {r["g"]: r["max_undercount"] for r in out} == dec
+    assert {(r["g"], r["item"]): r["est_count"] for r in out} == est

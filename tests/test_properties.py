@@ -549,6 +549,7 @@ def test_gram_hashes_match_joined_grams(docs, k):
 
 
 @given(st.lists(st.one_of(st.none(), text_st), max_size=20))
+@example(["a b", None, "", " \t ", "A a B", "", "c"])  # empty docs between and after words
 @settings(max_examples=100, deadline=None)
 def test_simhash_batch_matches_per_word_votes(texts):
     """The batch SimHash core equals a per-word scalar vote: bit i is
