@@ -17,6 +17,31 @@ re-expressed Spark-first:
 Reference semantics citations use ``path:line`` into /root/reference.
 """
 
+import os
+import sys
+
+if sys.version_info < (3, 13) and "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    # Spark sets that variable only for its Python workers, and a worker
+    # calls importlib.invalidate_caches() before every task
+    # (pyspark.worker_util.setup_spark_files). Before CPython 3.13 each
+    # zipimporter then re-reads its archive's whole central directory: a
+    # reused worker holds 16 (pyspark.zip, the spark-core jar, py4j), ~170
+    # ms per task. Here an importer re-reads only when its archive's
+    # (mtime, size) differs from the stamp taken before its last re-read.
+    import zipimport
+
+    def _reread_if_changed(self, _reread=zipimport.zipimporter.invalidate_caches):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            _reread(self)
+            self._archive_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = _reread_if_changed
+
 from contessa_spark.time_filter import TimeFilter, TimeFilterColumn, parse_time_filter
 from contessa_spark.normalizer import RuleNormalizer
 from contessa_spark.rules import (

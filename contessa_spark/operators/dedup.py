@@ -707,31 +707,27 @@ def _ngram_jaccard_pairs_blocked(
         max(math.ceil(n_docs / block_docs), b_par),
         max(1, n_docs // 64 + 1),
     )
+    # The plan is built in few DataFrame steps, with the per-element
+    # expression as SQL text: each step is an analysis round trip to
+    # the JVM (10-30 ms each on 4 cores), and a steady near_dup op
+    # spent about a fifth of its time building its two plans.
     sigs = df.select(
         F.col(id_col).alias("_id"),
         hashed_shingles_udf(k).asNondeterministic()(F.col(text_col)).alias("_t"),
-    ).select(
-        "_id", F.col("_t.hs").alias("_sh"), F.col("_t.n").alias("_n")
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("_blk"),
     )
     # each doc participates in exactly B block-pairs: (blk, j) as the
     # lower side for j ≥ blk, (j, blk) as the upper side for j < blk
-    blk = F.pmod(F.xxhash64(F.col("_id")), F.lit(B)).cast("int")
-    targets = F.transform(
-        F.sequence(F.lit(0), F.lit(B - 1)),
-        lambda j: F.struct(
-            F.least(F.col("_blk"), j).alias("_bi"),
-            F.greatest(F.col("_blk"), j).alias("_bj"),
-            F.when(F.col("_blk") <= j, F.lit(0)).otherwise(F.lit(1)).alias("_side"),
-        ),
+    targets = F.expr(
+        f"transform(sequence(0, {B - 1}), j -> named_struct("
+        "'_bi', least(_blk, j), '_bj', greatest(_blk, j), '_side', if(_blk <= j, 0, 1)))"
     )
-    rep = (
-        sigs.withColumn("_blk", blk)
-        .select("_id", "_sh", "_n", F.explode(targets).alias("_p"))
-        .select("_id", "_sh", "_n", "_p.*")
+    rep = sigs.select(
+        "_id", F.col("_t.hs").alias("_sh"), F.col("_t.n").alias("_n"), F.explode(targets).alias("_p")
     )
     nG = B * (B + 1) // 2
     n_bins = max(sc.defaultParallelism, 1)
-    t_idx = F.expr(f"_bi * {B} - (_bi * (_bi - 1)) DIV 2 + (_bj - _bi)").cast("int")
+    t_idx = F.expr(f"_p._bi * {B} - (_p._bi * (_p._bi - 1)) DIV 2 + (_p._bj - _p._bi)").cast("int")
     if nG <= _LPT_MAX_GROUPS:
         # Pack the nG block-pair groups into EXACTLY defaultParallelism
         # reduce tasks, balanced by predicted pair work (off-diagonal
@@ -788,7 +784,7 @@ def _ngram_jaccard_pairs_blocked(
         )
 
     cand = (
-        rep.withColumn("_pt", route)
+        rep.select("_id", "_sh", "_n", "_p.*", route.alias("_pt"))
         .repartition(n_bins, "_pt")
         .groupBy("_pt", "_bi", "_bj")
         .applyInArrow(
@@ -796,10 +792,8 @@ def _ngram_jaccard_pairs_blocked(
         )
     )
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        cand.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return cand.where(jac >= threshold).select(
+        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
     )
 
 
@@ -950,7 +944,7 @@ def minhash_lsh_candidates(
     sig = df.select(
         F.col(id_col).alias("_id"),
         lsh_signature_udf(k, n_hashes, bands).asNondeterministic()(F.col(text_col)).alias("_s"),
-    ).select("_id", F.col("_s.keys").alias("_keys"), F.col("_s.hs").alias("_hs"))
+    )
 
     def jaccard_step(cols, x, y):
         ids = cols["_id"]
@@ -970,7 +964,10 @@ def minhash_lsh_candidates(
         return {"id_a": ids[x][m], "id_b": ids[y][m], "jaccard": jac[m]}
 
     pairs = _group_pairs(
-        sig.select(F.explode("_keys").alias("key"), F.struct("_id", "_hs").alias("_doc")),
+        sig.select(
+            F.explode("_s.keys").alias("key"),
+            F.struct(F.col("_id"), F.col("_s.hs").alias("_hs")).alias("_doc"),
+        ),
         ["key"],
         "_doc",
         jaccard_step,

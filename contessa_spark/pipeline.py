@@ -37,6 +37,8 @@ Rule ancestry (SURVEY §2.5):
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -168,16 +170,14 @@ def annotate(df: DataFrame) -> DataFrame:
     """
     from contessa_spark.functions import annotate_udf
 
-    out = df.withColumn("_ann", annotate_udf.spark_udf()(F.col("text")))
-    for name, _ in annotate_udf.FIELDS:
-        if name == "scrubbed_text":
-            # the UDF returns NULL when no scrub changed the text
-            out = out.withColumn(
-                name, F.coalesce(F.col("_ann.scrubbed_text"), F.col("text"))
-            )
-        else:
-            out = out.withColumn(name, F.col(f"_ann.{name}"))
-    return out.drop("_ann")
+    fields = {name: F.col(f"_ann.{name}") for name, _ in annotate_udf.FIELDS}
+    # the UDF returns NULL when no scrub changed the text
+    fields["scrubbed_text"] = F.coalesce(fields["scrubbed_text"], F.col("text"))
+    return (
+        df.withColumn("_ann", annotate_udf.spark_udf()(F.col("text")))
+        .withColumns(fields)
+        .drop("_ann")
+    )
 
 
 def _rule_predicates(cfg: PipelineConfig) -> Dict[str, Column]:
@@ -194,22 +194,22 @@ def with_decisions(
     annotated: DataFrame, cfg: PipelineConfig, bucket: bool = True
 ) -> DataFrame:
     """Add per-rule boolean columns + the keep conjunction (+ bucket id
-    unless the input already carries one)."""
-    preds = _rule_predicates(cfg)
-    out = annotated
-    for name, pred in preds.items():
-        out = out.withColumn(f"rule_{name}", pred.eqNullSafe(F.lit(True)))
-    keep = None
-    for name in keep_rule_names(cfg):
-        c = F.col(f"rule_{name}")
-        keep = c if keep is None else (keep & c)
-    out = out.withColumn("keep", keep)
+    unless the input already carries one), as one projection."""
+    rules = {
+        name: pred.eqNullSafe(F.lit(True))
+        for name, pred in _rule_predicates(cfg).items()
+    }
+    cols = {f"rule_{name}": c for name, c in rules.items()}
+    # the keep conjunction reads the predicates, not the rule_* columns
+    # being defined in the same projection
+    cols["keep"] = functools.reduce(
+        operator.and_, (rules[name] for name in keep_rule_names(cfg))
+    )
     if bucket:
-        out = out.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int"),
-        )
-    return out
+        cols["bucket"] = F.pmod(
+            F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)
+        ).cast("int")
+    return annotated.withColumns(cols)
 
 
 LINEAGE_KEY = ["bucket"]

@@ -9,15 +9,23 @@ Equal digests mean equal row multisets.
 
 Usage:
     python scripts/row_digest.py --out rows.json [--repo DIR] [--data DIR]
-        (every query of ``QUERIES`` at every sf of ``SFS``; ``--data``
+        (every query of ``QUERIES``, plus the pipeline's rows from
+        ``pipeline_decisions``, at every sf of ``SFS``; ``--data``
         defaults to the testdata root ``bench.py`` reads)
     python scripts/row_digest.py --compare base.json change.json [--out merged.json]
 
 ``--repo`` imports ``__spark_entry__`` and ``contessa_spark`` from that
-checkout (Python workers too, through ``PYTHONPATH``), so one copy of
-this script digests any commit. ``--compare`` prints every (sf, query)
-whose digests differ, optionally writes both sides into one JSON and
-exits 1 unless all are identical.
+checkout, so one copy of this script digests any commit. Python workers
+put their working directory, which is the driver's, first on
+``sys.path``, ahead of ``PYTHONPATH``; so the script changes into that
+checkout before the session starts, which is how the workers import
+its ``contessa_spark`` and not the caller's directory's. The digest's
+``commit`` ends in ``-dirty`` when the checkout has uncommitted changes.
+
+``--compare`` prints every (sf, query) whose digests differ, optionally
+writes both sides into one JSON and exits 1 unless all are identical;
+a base digested before ``pipeline_decisions`` existed lacks those keys,
+so make the base with ``--repo`` and this copy of the script.
 """
 
 from __future__ import annotations
@@ -49,27 +57,44 @@ QUERIES = [
 SFS = ["0.001", "0.01", "0.1"]
 
 
+def pipeline_decisions(spark, sf_dir):
+    """The quality-filter pipeline's annotate and decision columns
+    (``pipeline.with_decisions(pipeline.annotate(...))``) over the sf's
+    documents, with a url made from ``source`` and ``doc_id``."""
+    from pyspark.sql import functions as F
+
+    from contessa_spark.pipeline import PipelineConfig, annotate, with_decisions
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = docs.withColumn("url", F.format_string("https://%s/%d", "source", "doc_id"))
+    return with_decisions(annotate(docs), PipelineConfig())
+
+
 def digest(args) -> dict:
     if args.data is None:
         sys.path.insert(0, HERE)
         from bench import SF_DIR
 
         args.data = os.path.dirname(SF_DIR)
-    repo = os.path.abspath(args.repo)
-    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p)
+    data, repo = os.path.abspath(args.data), os.path.abspath(args.repo)
     sys.path.insert(0, repo)
+    os.chdir(repo)
     import __spark_entry__ as entry
     from contessa_spark.session import get_spark
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = get_spark("row_digest", master=f"local[{cores}]", shuffle_partitions=cores)
     declared = entry.queries()
-    rev = subprocess.run(["git", "rev-parse", "HEAD"], cwd=repo, capture_output=True, text=True).stdout.strip()
+    row_sets = {**{name: declared[name] for name in QUERIES}, "pipeline_decisions": pipeline_decisions}
+    git = lambda *a: subprocess.run(["git", *a], cwd=repo, capture_output=True, text=True).stdout.strip()
+    rev = git("rev-parse", "HEAD")
+    if rev and git("status", "--porcelain", "--untracked-files=no"):
+        rev += "-dirty"  # uncommitted changes on top of HEAD
     results = {}
     for sf in SFS:
-        for name in QUERIES:
+        for name, q in row_sets.items():
             t0 = time.perf_counter()
-            df = declared[name](spark, os.path.join(args.data, f"sf{sf}"))
+            df = q(spark, os.path.join(data, f"sf{sf}"))
             rows = sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
             results[f"sf{sf}/{name}"] = {
                 "rows": len(rows),
@@ -111,6 +136,8 @@ def main() -> int:
     ap.add_argument("--data", help="testdata root holding sf<N>/ (default: the parent of bench.py's SF_DIR)")
     ap.add_argument("--compare", nargs=2, metavar=("BASE", "CHANGE"))
     args = ap.parse_args()
+    if args.out:
+        args.out = os.path.abspath(args.out)  # digest() changes directory
     if args.compare:
         with open(args.compare[0]) as f, open(args.compare[1]) as g:
             out = compare(json.load(f), json.load(g))

@@ -310,6 +310,26 @@ def test_documents_spreads_only_when_underpartitioned(spark, tmp_path, monkeypat
     assert "Exchange" not in wide, wide
 
 
+def test_load_takes_schema_from_footer(spark):
+    """``__spark_entry__._load`` builds every table's DataFrame without
+    a Spark job (no schema-inference job per read) and with the schema
+    Spark's own inference gives, timestamp kinds included."""
+    import __spark_entry__ as entry_mod
+
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    group = "test_load_takes_schema_from_footer"
+    sc.setJobGroup(group, group)
+    try:
+        loaded = {name: entry_mod._load(spark, sf, name) for name in entry_mod.TABLES}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for name, df in loaded.items():
+        assert df.schema == spark.read.parquet(f"{sf}/{name}.parquet").schema, name
+
+
 def test_semantic_dedup_plan_no_cross_join(spark):
     """SemDedup's pairwise stage is confined to cells via
     groupBy+applyInPandas — the plan must contain NO cartesian or
