@@ -600,32 +600,34 @@ def _domain_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hits_oracle_sql(iters: int = 2) -> str:
     # mirror of operators/linkgraph.py::hits — uniform scale//n init,
-    # per-half-step L1 renormalization via integer floor division
+    # per-half-step L1 renormalization via integer floor division.
+    # Every CTE is MATERIALIZED: each round reads the previous one four
+    # times, and an inlined CTE would make the work grow as 4^iters.
     S = SCALE_PR
     parts = [
-        "WITH e AS (SELECT DISTINCT src, dst FROM ("
+        "WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ("
         "SELECT (doc_id % 100) AS src, ((doc_id * 7 + 3) % 100) AS dst "
         "FROM documents UNION ALL "
         "SELECT (doc_id % 100), ((doc_id * 3 + 11) % 100) FROM documents)), "
-        "n AS (SELECT src AS node FROM e UNION SELECT dst FROM e), "
-        f"h0 AS (SELECT node, ({S} // (SELECT count(*) FROM n))::BIGINT AS h "
+        "n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e), "
+        f"h0 AS MATERIALIZED (SELECT node, ({S} // (SELECT count(*) FROM n))::BIGINT AS h "
         "FROM n)"
     ]
     for i in range(iters):
         parts.append(
-            f", ar{i} AS (SELECT n.node, coalesce(s.c, 0)::BIGINT AS raw "
+            f", ar{i} AS MATERIALIZED (SELECT n.node, coalesce(s.c, 0)::BIGINT AS raw "
             f"FROM n LEFT JOIN (SELECT e.dst AS node, sum(h{i}.h)::BIGINT AS c "
             f"FROM e JOIN h{i} ON h{i}.node = e.src GROUP BY e.dst) s "
             f"ON n.node = s.node), "
-            f"a{i + 1} AS (SELECT node, CASE WHEN t.t = 0 THEN 0 ELSE "
+            f"a{i + 1} AS MATERIALIZED (SELECT node, CASE WHEN t.t = 0 THEN 0 ELSE "
             f"(raw * {S}) // t.t END::BIGINT AS a FROM ar{i}, "
             f"(SELECT sum(raw)::BIGINT AS t FROM ar{i}) t), "
-            f"hr{i} AS (SELECT n.node, coalesce(s.c, 0)::BIGINT AS raw "
+            f"hr{i} AS MATERIALIZED (SELECT n.node, coalesce(s.c, 0)::BIGINT AS raw "
             f"FROM n LEFT JOIN (SELECT e.src AS node, "
             f"sum(a{i + 1}.a)::BIGINT AS c "
             f"FROM e JOIN a{i + 1} ON a{i + 1}.node = e.dst GROUP BY e.src) s "
             f"ON n.node = s.node), "
-            f"h{i + 1} AS (SELECT node, CASE WHEN t.t = 0 THEN 0 ELSE "
+            f"h{i + 1} AS MATERIALIZED (SELECT node, CASE WHEN t.t = 0 THEN 0 ELSE "
             f"(raw * {S}) // t.t END::BIGINT AS h FROM hr{i}, "
             f"(SELECT sum(raw)::BIGINT AS t FROM hr{i}) t)"
         )
@@ -1076,8 +1078,8 @@ def _embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the 10⁹-vector path: LSH bucket → capped group pair emission →
-    # exact codegen-dot verify. Low threshold (0.45 ⇒ θ≈63°) needs few
+    # the 10⁹-vector path: LSH bucket → capped group pair emission,
+    # which verifies each pair's exact cosine in its group. Low threshold (0.45 ⇒ θ≈63°) needs few
     # bits + many tables for recall (1-(1-p^2)^8 ≈ 0.97 at p≈0.65).
     from contessa_spark.operators.similarity import hyperplane_lsh_join
 

@@ -20,8 +20,8 @@ Spark-first plan (the classic scalable k-means shape):
       argmin keeps every boundary decision engine-agnostic — the
       ``embedding_kmeans`` oracle recomputes the whole loop in DuckDB
       with unrolled CTEs (the ``domain_pagerank`` trick).
-   b. centroid update — per-PARTITION partial (cluster, sum-vector,
-      count) rows from ``mapInPandas`` (≤ k rows per Arrow batch, a
+   b. centroid update — per-BATCH partial (cluster, sum-vector,
+      count) rows from ``mapInArrow`` (≤ k rows per Arrow batch, a
       map-side combine), exploded to (cluster, dim, partial) and
       summed in ONE tiny shuffle of ≤ batches·k·d scalar rows; the
       k × d result is collected to the driver and broadcast into the
@@ -31,6 +31,9 @@ Spark-first plan (the classic scalable k-means shape):
       A cluster that loses all members keeps its previous centroid
       (mirrored in the oracle via LEFT JOIN + coalesce).
 3. final assignment with the last centroids → (id, cluster).
+
+Both Python stages read their vectors with ``vectors.matrix`` (Arrow
+in, Arrow out, no pandas).
 
 Scale notes: every pass over the corpus is a narrow scan + Arrow-batch
 GEMM (no shuffle of vectors, no driver materialization of anything
@@ -48,8 +51,13 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from contessa_spark.hashing import list_array
+from contessa_spark.vectors import embedding_base, matrix
 
 
 def kmeans_embeddings(
@@ -83,22 +91,10 @@ def kmeans_embeddings(
       the form the DuckDB ``embedding_kmeans`` oracle replays
       CTE-by-CTE).
     """
-    import numpy as np
-    import pandas as pd
-
-    from contessa_spark.operators.similarity import dim_check
-
     spark = df.sparkSession
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    if dim is None:
-        first = base.select(F.size("_v")).first()
-        if first is None:
-            return spark.createDataFrame([], f"{id_col} long, cluster long")
-        dim = first[0]
-    base = base.where(dim_check(F.col("_v"), dim))
+    base, dim = embedding_base(df, id_col, vec_col, dim)
+    if base is None:
+        return spark.createDataFrame([], f"{id_col} long, cluster long")
 
     # --- 1. deterministic seed selection (md5-ordered, collect once)
     hkey = F.md5(
@@ -112,18 +108,18 @@ def kmeans_embeddings(
         .orderBy("_h", "_id")
         .limit(n_pool)
         .select("_id", "_v")
-        .collect()
+        .toArrow()
     )
-    if not pool:
+    if not pool.num_rows:
         return spark.createDataFrame([], f"{id_col} long, cluster long")
-    if init == "md5" or len(pool) <= k:
-        seed_rows = pool[:k]
+    ids = pool.column("_id").to_numpy().astype(np.int64)
+    V = matrix(pool.column("_v"), dim)
+    if init == "md5" or len(ids) <= k:
+        chosen = np.arange(min(k, len(ids)))
     else:
         # farthest-first on the md5 sample: start from the lowest-md5
         # row, repeatedly add the point with the largest rounded
         # distance to its nearest chosen seed (ties → lowest id)
-        ids = np.array([r["_id"] for r in pool], dtype=np.int64)
-        V = np.array([r["_v"] for r in pool], dtype=np.float64)
         chosen = [0]
         dmin = np.round(
             np.sqrt(np.maximum(((V - V[0]) ** 2).sum(axis=1), 0.0)), 6
@@ -137,50 +133,48 @@ def kmeans_embeddings(
             )
             dmin = np.minimum(dmin, d)
             dmin[nxt] = -1.0
-        seed_rows = [pool[i] for i in chosen]
-    seed_rows.sort(key=lambda r: r["_id"])  # argmin first-min == lowest pid
-    pids = np.array([r["_id"] for r in seed_rows], dtype=np.int64)
-    C = np.array([r["_v"] for r in seed_rows], dtype=np.float64)
+        chosen = np.array(chosen)
+    # argmin first-min == lowest pid
+    chosen = chosen[np.argsort(ids[chosen], kind="stable")]
+    pids = ids[chosen]
+    C = V[chosen]
 
     def assign_ids(centroids: np.ndarray):
-        """pandas UDF: vector → seed id of the nearest centroid."""
-        from pyspark.sql import types as T
-
+        """Arrow UDF: vector → seed id of the nearest centroid."""
         cn = (centroids * centroids).sum(axis=1)
 
-        def _assign(vecs: pd.Series) -> pd.Series:
-            V = np.array(list(vecs), dtype=np.float64)
-            if V.ndim != 2:
-                return pd.Series([], dtype="int64")
+        def _assign(vecs: pa.Array) -> pa.Array:
+            V = matrix(vecs, dim)
             d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ centroids.T) + cn
             dist = np.round(np.sqrt(np.maximum(d2, 0.0)), 6)
-            return pd.Series(pids[np.argmin(dist, axis=1)])
+            return pa.array(pids[np.argmin(dist, axis=1)])
 
-        _assign.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-        return F.pandas_udf(_assign, T.LongType())
+        return F.arrow_udf(_assign, "long")
+
+    # --- 2b. map-side partial sums; only (cluster, dim, partial)
+    # scalars ever shuffle
+    def partials(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            V = matrix(b.column("_v"), dim)
+            cl = b.column("cluster").to_numpy()
+            cids = np.unique(cl)
+            masks = [cl == cid for cid in cids]
+            # a NaN partial is NULL, which the Spark sum below skips
+            psum = pa.array(np.concatenate([V[m].sum(axis=0) for m in masks]), from_pandas=True)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cids),
+                    list_array(np.full(len(cids), dim), psum),
+                    pa.array([int(m.sum()) for m in masks], pa.int64()),
+                ],
+                names=["cluster", "psum", "cnt"],
+            )
 
     for _ in range(iters):
         assigned = base.withColumn("cluster", assign_ids(C)(F.col("_v")))
-
-        # --- 2b. map-side partial sums; only (cluster, dim, partial)
-        # scalars ever shuffle
-        def partials(batches, _dim=dim):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array(list(pdf["_v"]), dtype=np.float64)
-                cl = pdf["cluster"].to_numpy()
-                out_c, out_s, out_n = [], [], []
-                for cid in np.unique(cl):
-                    m = cl == cid
-                    out_c.append(int(cid))
-                    out_s.append((V[m].sum(axis=0)).tolist())
-                    out_n.append(int(m.sum()))
-                yield pd.DataFrame(
-                    {"cluster": out_c, "psum": out_s, "cnt": out_n}
-                )
-
-        part_df = assigned.mapInPandas(
+        part_df = assigned.mapInArrow(
             partials, "cluster long, psum array<double>, cnt long"
         )
         stats = (

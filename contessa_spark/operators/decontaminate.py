@@ -24,10 +24,14 @@ doc gram — irrelevant at any real benchmark size.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from contessa_spark.operators.dedup import hashed_shingles_udf
+from contessa_spark.vectors import matrix, unit_rows
 
 
 def ngram_contamination(
@@ -92,7 +96,7 @@ def semantic_contamination(
     overlap can't see (the rephrased-MMLU failure mode).
 
     Plan: the benchmark matrix (eval suites are small by nature) is
-    collected once and closed over a ``mapInPandas`` scorer — one numpy
+    collected once and closed over a ``mapInArrow`` scorer — one numpy
     GEMM per corpus Arrow batch, per-row max over the benchmark axis,
     ZERO corpus shuffles (each row's verdict completes within its own
     batch; same shape as ``brute_force_topk`` without even the final
@@ -109,30 +113,27 @@ def semantic_contamination(
     Output: (id, max_cosine, contaminated); max_cosine rounded to 6 dp
     (round is monotone, so round-then-max ≡ max-then-round).
     """
-    import numpy as np
-    import pandas as pd
-
     sqnorm = F.aggregate(F.col("_v"), F.lit(0.0), lambda a, x: a + x * x)
-    bench_rows = (
+    bench = (
         benchmark.select(F.col(vec_col).cast("array<double>").alias("_v"))
         .where(sqnorm > 0)
-        .take(max_bench_vectors + 1)
+        .limit(max_bench_vectors + 1)
+        .toArrow()
     )
-    if len(bench_rows) > max_bench_vectors:
+    if bench.num_rows > max_bench_vectors:
         raise ValueError(
             f"benchmark side exceeds max_bench_vectors={max_bench_vectors}; "
             "a 'benchmark' that large should use the LSH join path"
         )
     out_schema = f"{id_col} long, max_cosine double, contaminated boolean"
-    if not bench_rows:
+    if not bench.num_rows:
         # nothing to leak: everything is clean with max_cosine NULL
         return corpus.select(
             F.col(id_col),
             F.lit(None).cast("double").alias("max_cosine"),
             F.lit(False).alias("contaminated"),
         )
-    B = np.array([r["_v"] for r in bench_rows], dtype=np.float64)
-    B = B / np.linalg.norm(B, axis=1, keepdims=True)
+    B = unit_rows(matrix(bench.column("_v")))[0]
     dim = B.shape[1]
 
     base = corpus.select(
@@ -141,35 +142,26 @@ def semantic_contamination(
     )
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf["_id"].to_numpy(dtype=np.int64)
-            vs = list(pdf["_v"])
+            vs = b.column(1)
             # validity decided IN the batch (not a pre-filter), so
             # excluded rows still get an output row with NULL cosine
-            valid = np.fromiter(
-                (v is not None and len(v) == dim for v in vs),
-                dtype=bool,
-                count=len(vs),
+            valid = pc.fill_null(pc.equal(pc.list_value_length(vs), dim), False)
+            U, ok = unit_rows(matrix(vs.filter(valid), dim))
+            mx = np.full(b.num_rows, np.nan)
+            mx[np.flatnonzero(valid.to_numpy(zero_copy_only=False))[ok]] = np.round(
+                (U[ok] @ B.T).max(axis=1), 6
             )
-            mx = np.full(len(vs), np.nan)
-            vidx = np.flatnonzero(valid)
-            if len(vidx):
-                V = np.array([vs[i] for i in vidx], dtype=np.float64)
-                nrm = np.linalg.norm(V, axis=1)
-                ok = nrm > 0  # False for zero AND NaN norms
-                if ok.any():
-                    U = V[ok] / nrm[ok, None]
-                    mx[vidx[ok]] = np.round((U @ B.T).max(axis=1), 6)
-            # NaN slots become NULL through Arrow (from_pandas masks
-            # NaN); contaminated is a real boolean either way
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "max_cosine": mx,
-                    "contaminated": np.where(np.isnan(mx), False, mx >= threshold),
-                }
+            # NaN slots are NULL; contaminated is a real boolean either way
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0).cast(pa.int64()),
+                    pa.array(mx, mask=np.isnan(mx)),
+                    pa.array(~np.isnan(mx) & (mx >= threshold)),
+                ],
+                names=[id_col, "max_cosine", "contaminated"],
             )
 
-    return base.mapInPandas(score, schema=out_schema)
+    return base.mapInArrow(score, schema=out_schema)

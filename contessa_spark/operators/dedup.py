@@ -55,6 +55,7 @@ from contessa_spark.hashing import (
     splitmix64,
     word_table,
 )
+from contessa_spark.vectors import matrix, unit_rows
 
 
 def _run_pairs(start, L, first=0):
@@ -103,8 +104,9 @@ def _emit_group_pairs(step=_id_pairs):
 
     ``step(cols, x, y)`` turns a batch's pairs into output columns:
     ``cols`` maps ``_id`` and every payload field to its sorted, deduped
-    values, and ``x``/``y`` index them. Default: ``(id_a, id_b)``. Pairs
-    repeat across groups; callers aggregate or ``distinct()``."""
+    values (a vector field as rows of its ``vectors.matrix``), and
+    ``x``/``y`` index them. Default: ``(id_a, id_b)``. Pairs repeat
+    across groups; callers aggregate or ``distinct()``."""
 
     def emit(batches):
         for b in batches:
@@ -112,7 +114,9 @@ def _emit_group_pairs(step=_id_pairs):
             flat = pc.list_flatten(lists)
             if pa.types.is_struct(flat.type):
                 cols = {
-                    f.name: a.to_numpy(zero_copy_only=False)
+                    f.name: matrix(a)
+                    if pa.types.is_list(f.type)
+                    else a.to_numpy(zero_copy_only=False)
                     for f, a in zip(flat.type, flat.flatten())
                 }
             else:
@@ -1261,63 +1265,49 @@ def embedding_near_dups_blocked(
     Rows are grouped into ⌈n/block⌉ blocks; the self-join happens on
     BLOCK pairs (B(B+1)/2 rows, each carrying two vector blocks), and
     each block pair computes its full similarity sub-matrix with one
-    numpy float64 matmul inside ``applyInPandas`` — 25M dots become a
+    numpy float64 matmul inside ``mapInArrow`` — 25M dots become a
     handful of GEMMs instead of 25M interpreted expressions. Exact
     (same float64 math, rounded to 6dp) and embarrassingly parallel:
     at 10^9 vectors pair-blocking composes with LSH pre-bucketing.
+    A zero-norm vector has no cosine and pairs with nothing.
     """
-    import pandas as pd
-
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).withColumn("_blk", (F.col("_id") / block_size).cast("long"))
 
-    # ONE row per block, FLAT layout: (block_id, ids[], flat vectors[])
-    # — a flat array<double> crosses Arrow as one contiguous buffer and
-    # reshapes zero-copy in numpy, where the old list-of-struct rows
-    # cost a per-element Python conversion on every one of the B
-    # replicas of each block (guide §4.2: re-slice buffers, don't copy
-    # rows). Both collect_lists aggregate rows in the same order within
-    # the one aggregate execution, so ids and vectors stay aligned.
-    blocks = base.groupBy("_blk").agg(
-        F.collect_list("_id").alias("_ids"),
-        F.flatten(F.collect_list("_v")).alias("_vs"),
-    )
-    a = blocks.select(
-        F.col("_blk").alias("blk_a"),
-        F.col("_ids").alias("ids_a"),
-        F.col("_vs").alias("vs_a"),
-    )
-    b = blocks.select(
-        F.col("_blk").alias("blk_b"),
-        F.col("_ids").alias("ids_b"),
-        F.col("_vs").alias("vs_b"),
-    )
+    # ONE row per block: its (id, vector) structs, which cross Arrow
+    # as contiguous child buffers — a block's vectors read as one
+    # ``vectors.matrix`` with no per-row conversion
+    blocks = base.groupBy("_blk").agg(F.collect_list(F.struct("_id", "_v")).alias("_docs"))
+    a = blocks.select(F.col("_blk").alias("blk_a"), F.col("_docs").alias("docs_a"))
+    b = blocks.select(F.col("_blk").alias("blk_b"), F.col("_docs").alias("docs_b"))
     pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
 
+    def block(docs):
+        ids, vecs = pc.list_flatten(docs).flatten()
+        U, ok = unit_rows(matrix(vecs))
+        return ids.to_numpy().astype(np.int64), U, ok
+
     def block_sim(batches):
-        for pdf in batches:
+        for batch in batches:
             out_a, out_b, out_c = [], [], []
-            for ids_a, ids_b, vs_a, vs_b in zip(
-                pdf["ids_a"], pdf["ids_b"], pdf["vs_a"], pdf["vs_b"]
-            ):
-                ids_a = np.asarray(ids_a, dtype=np.int64)
-                ids_b = np.asarray(ids_b, dtype=np.int64)
-                A = np.asarray(vs_a, dtype=np.float64).reshape(len(ids_a), -1)
-                B = np.asarray(vs_b, dtype=np.float64).reshape(len(ids_b), -1)
-                A = A / np.linalg.norm(A, axis=1, keepdims=True)
-                B = B / np.linalg.norm(B, axis=1, keepdims=True)
+            for i in range(batch.num_rows):
+                ids_a, A, ok_a = block(batch.column(0).slice(i, 1))
+                ids_b, B, ok_b = block(batch.column(1).slice(i, 1))
                 S = A @ B.T
-                ia, ib = np.nonzero(S >= threshold)
+                ia, ib = np.nonzero((S >= threshold) & ok_a[:, None] & ok_b)
                 ka, kb = ids_a[ia], ids_b[ib]
                 keep = ka < kb
                 out_a.extend(ka[keep])
                 out_b.extend(kb[keep])
                 out_c.extend(np.round(S[ia, ib][keep], 6))
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cosine": out_c})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out_a, pa.int64()), pa.array(out_b, pa.int64()), pa.array(out_c, pa.float64())],
+                names=["id_a", "id_b", "cosine"],
+            )
 
-    return pairs.select("ids_a", "ids_b", "vs_a", "vs_b").mapInPandas(
+    return pairs.select("docs_a", "docs_b").mapInArrow(
         block_sim, schema="id_a long, id_b long, cosine double"
     )
 

@@ -21,10 +21,14 @@ Spark-first plan:
    (np.argmax first-max over pid-ordered pivots ≡ SQL ``ORDER BY cos
    DESC, pid ASC LIMIT 1``). Rounding before argmax keeps the
    boundary decision engine-agnostic.
-3. within-cell dedup — ``groupBy(cell).applyInPandas``: unit-normalize
+3. within-cell dedup — ``groupBy(cell).applyInArrow``: unit-normalize
    the cell's matrix, one GEMM for all pairwise cosines, keep-first by
    ascending id (a row drops iff some LOWER id in the cell is within
    ``threshold``). Shuffle carries (id, vector) once, keyed by cell.
+
+Both Python stages read their vectors with ``vectors.matrix`` and
+normalize them with ``vectors.unit_rows`` — Arrow in, Arrow out, no
+pandas.
 
 Scale notes: the pairwise stage is O(|cell|²) BY DESIGN — the SemDedup
 paper sizes clusters so this is tractable (they run 50k clusters over
@@ -42,8 +46,12 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from contessa_spark.vectors import embedding_base, matrix, unit_rows
 
 
 def semantic_dedup(
@@ -67,23 +75,10 @@ def semantic_dedup(
     assignment, and the drop predicate all recompute bit-identically in
     DuckDB from the same md5 ordering and 6-dp-rounded cosines.
     """
-    import numpy as np
-    import pandas as pd
-
-    from contessa_spark.operators.similarity import dim_check
-
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    if dim is None:
-        first = base.select(F.size("_v")).first()
-        if first is None:
-            return df.sparkSession.createDataFrame(
-                [], f"{id_col} long, cell long, keep boolean"
-            )
-        dim = first[0]
-    base = base.where(dim_check(F.col("_v"), dim))
+    empty = f"{id_col} long, cell long, keep boolean"
+    base, dim = embedding_base(df, id_col, vec_col, dim)
+    if base is None:
+        return df.sparkSession.createDataFrame([], empty)
     # zero-norm vectors have no cosine: exclude them from clustering
     # entirely (mirrored in the oracle's WHERE list_dot_product > 0)
     sqnorm = F.aggregate(
@@ -95,54 +90,42 @@ def semantic_dedup(
     hkey = F.md5(
         F.concat_ws("|", F.lit(salt), F.col("_id").cast("string")).cast("binary")
     )
-    pivot_rows = (
+    pivots = (
         base.withColumn("_h", hkey)
         .orderBy("_h", "_id")  # total order: layout-stable collect
         .limit(n_cells)
         .select("_id", "_v")
-        .collect()
+        .toArrow()
     )
-    if not pivot_rows:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, cell long, keep boolean"
-        )
+    if not pivots.num_rows:
+        return df.sparkSession.createDataFrame([], empty)
     # pid-ascending order so argmax first-max == lowest pid on ties
-    pivot_rows.sort(key=lambda r: r["_id"])
-    pids = np.array([r["_id"] for r in pivot_rows], dtype=np.int64)
-    P = np.array([r["_v"] for r in pivot_rows], dtype=np.float64)
-    P = P / np.linalg.norm(P, axis=1, keepdims=True)
+    pids = pivots.column("_id").to_numpy().astype(np.int64)
+    order = np.argsort(pids, kind="stable")
+    pids = pids[order]
+    P = unit_rows(matrix(pivots.column("_v"))[order])[0]
 
     # --- 2. assignment: one GEMM per Arrow batch, rounded argmax-cosine
-    def assign_udf():
-        from pyspark.sql import types as T
+    def _cells(vecs: pa.Array) -> pa.Array:
+        U = unit_rows(matrix(vecs, dim))[0]
+        return pa.array(pids[np.argmax(np.round(U @ P.T, 6), axis=1)])
 
-        def _cells(vecs: pd.Series) -> pd.Series:
-            V = np.array(list(vecs), dtype=np.float64)
-            if V.ndim != 2:
-                return pd.Series([], dtype="int64")
-            U = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = np.round(U @ P.T, 6)
-            return pd.Series(pids[np.argmax(S, axis=1)])
-
-        _cells.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-        return F.pandas_udf(_cells, T.LongType())
-
-    assigned = base.withColumn("cell", assign_udf()(F.col("_v")))
+    assigned = base.withColumn("cell", F.arrow_udf(_cells, "long")(F.col("_v")))
 
     # --- 3. within-cell keep-first dedup (one GEMM per cell)
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
+    def dedup_cell(t: pa.Table) -> pa.Table:
+        n = t.num_rows
+        cell = t.column("cell")[0].as_py()
         if n > max_cell_rows:
             raise ValueError(
-                f"semantic_dedup cell {pdf['cell'].iloc[0]} has {n} rows "
+                f"semantic_dedup cell {cell} has {n} rows "
                 f"(> max_cell_rows={max_cell_rows}); raise n_cells so the "
                 "O(cell^2) pairwise stage stays tractable"
             )
-        ids = pdf["_id"].to_numpy(dtype=np.int64)
+        ids = t.column("_id").to_numpy().astype(np.int64)
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = np.array(list(pdf["_v"].iloc[order]), dtype=np.float64)
-        U = V / np.linalg.norm(V, axis=1, keepdims=True)
+        U = unit_rows(matrix(t.column("_v"))[order])[0]
         # row i drops iff any j<i has cosine >= threshold. BLOCKED: a
         # one-shot n×n similarity matrix would be 320 GB at the
         # max_cell_rows cap; each block row only needs columns j < i,
@@ -163,15 +146,9 @@ def semantic_dedup(
             dropped[s0:e0] = ge[:, :s0].any(axis=1) | np.tril(
                 ge[:, s0:e0], k=-1
             ).any(axis=1)
-        return pd.DataFrame(
-            {
-                "_id": ids,
-                "cell": pdf["cell"].iloc[0],
-                "keep": ~dropped,
-            }
-        )
+        return pa.table({"_id": ids, "cell": np.full(n, cell, dtype=np.int64), "keep": ~dropped})
 
-    out = assigned.groupBy("cell").applyInPandas(
+    out = assigned.groupBy("cell").applyInArrow(
         dedup_cell, schema="_id long, cell long, keep boolean"
     )
     return out.select(

@@ -1,8 +1,8 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-* ``brute_force_topk`` — exact cosine top-k: candidate pair join +
-  window rank. The correctness baseline; O(Q·N) pairs but the pair
-  rows are narrow and Catalyst broadcasts the (small) query side.
+* ``brute_force_topk`` — exact cosine top-k: one GEMM per corpus
+  Arrow batch against the collected query matrix + window rank. The
+  correctness baseline; O(Q·N) dots, no pair rows at all.
 * ``hyperplane_lsh_topk`` — the scale path: random-hyperplane signed
   signatures (Charikar 2002 SimHash-for-cosine) bucket the corpus;
   top-k is searched only within matching buckets (multi-probe via
@@ -13,8 +13,9 @@
   using hash-selected pivot vectors; probes the closest n_probe cells.
 
 At 10^12 rows the bucket join replaces an impossible cross join.
-Distance/signature math runs as numpy GEMMs inside Arrow-batched
-pandas UDFs (pivot/plane matrices closed over — implicit broadcast):
+Distance/signature math runs as numpy GEMMs over each Arrow batch's
+``vectors.matrix`` inside ``arrow_udf``s and ``mapInArrow`` (pivot/plane
+matrices closed over — implicit broadcast):
 the r1-r3 pure-expression forms were exactly as distributed, but at
 dim=64 their expanded/interpreted trees cost seconds-per-call of
 driver-side PLANNING + janino compile (measured ~2 s for one 64-term
@@ -26,28 +27,16 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from contessa_spark.hashing import splitmix64
+from contessa_spark.hashing import list_array, splitmix64
+from contessa_spark.vectors import embedding_base, matrix, norms, unit_rows
 
-
-def dim_check(vec: Column, dim: int) -> Column:
-    """Per-row declared-dim guard as a FILTER predicate: true when the
-    vector's size equals ``dim``, raises otherwise. A wrong declared
-    dim otherwise produces silently-wrong math (GEMMs against planes or
-    pivots of the wrong width, the bucket-collapse degeneration the LSH
-    docstrings document). Use via ``.where(dim_check(col, dim))`` — a
-    predicate evaluates ONCE per row. ``size()`` is O(1) on arrays — no
-    extra Spark job, unlike a ``first()`` check."""
-    return F.when(F.size(vec) == dim, F.lit(True)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"declared dim={dim} but embedding has size "),
-                F.size(vec).cast("string"),
-            )
-        )
-    )
+#: the top-k searches' output, also when there is nothing to search
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, rank int"
 
 
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> List[List[float]]:
@@ -67,14 +56,10 @@ def _hyperplanes(dim: int, n_bits: int, seed: int) -> List[List[float]]:
 
 
 def bucket_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
-    """pandas UDF: vector → array<long> of per-table sign-bucket ids
+    """Arrow UDF: vector → array<long> of per-table sign-bucket ids
     (index = table). Table t uses ``_hyperplanes(dim, n_bits, seed +
     7919·t)``; bit i is set iff dot(plane_i, v) ≥ 0 and bucket = Σ 1<<i,
     all computed as one (batch × n_tables·n_bits) GEMM."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     planes = np.array(
         [
             _hyperplanes(dim, n_bits, seed + 7919 * t)
@@ -84,21 +69,23 @@ def bucket_signatures_udf(dim: int, n_bits: int, n_tables: int, seed: int):
     ).reshape(n_tables * n_bits, dim)
     weights = (1 << np.arange(n_bits, dtype=np.int64))
 
-    def _buckets(vecs):
-        V = np.array(list(vecs), dtype=np.float64)
-        if V.ndim != 2:  # empty batch
-            return pd.Series([[] for _ in range(len(vecs))])
-        bits = (V @ planes.T) >= 0  # (n, n_tables*n_bits)
-        bits = bits.reshape(len(V), n_tables, n_bits)
-        buckets = (bits * weights[None, None, :]).sum(axis=2)
-        return pd.Series(buckets.astype(np.int64).tolist())
+    def _buckets(vecs: pa.Array) -> pa.Array:
+        bits = (matrix(vecs, dim) @ planes.T) >= 0  # (n, n_tables*n_bits)
+        buckets = (bits.reshape(len(vecs), n_tables, n_bits) * weights).sum(axis=2)
+        return list_array(np.full(len(vecs), n_tables), buckets.astype(np.int64).ravel())
 
-    _buckets.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_buckets, T.ArrayType(T.LongType()))
+    return F.arrow_udf(_buckets, "array<bigint>")
+
+
+def _pair_cosines(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row i's cosine of ``A[i]`` and ``B[i]``, rounded to 6 dp: one
+    einsum over the pairs; a zero-norm row gives NaN."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round(np.einsum("ij,ij->i", A, B) / (norms(A) * norms(B)), 6)
 
 
 def pair_cosine_udf():
-    """pandas UDF: (vec_a, vec_b) → cosine rounded to 6 dp — one
+    """Arrow UDF: (vec_a, vec_b) → cosine rounded to 6 dp — one
     vectorized einsum per Arrow batch. Used for exact re-ranking on
     candidate pairs: a dim-expanded codegen dot is equally exact but
     costs ~2 s of planning+janino per execution at dim=64 (measured).
@@ -107,28 +94,30 @@ def pair_cosine_udf():
     desc), the opposite of numpy/SQL-standard semantics. Consumers must
     therefore DROP NaN rows explicitly (``~F.isnan('cosine')``) before
     any threshold or rank — every operator in this module does."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    def _cos(a, b):
-        A = np.array(list(a), dtype=np.float64)
-        B = np.array(list(b), dtype=np.float64)
-        if A.ndim != 2:
-            return pd.Series(np.zeros(len(a), dtype=np.float64))
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(np.round(num / den, 6))
+    def _cos(a: pa.Array, b: pa.Array) -> pa.Array:
+        return pa.array(_pair_cosines(matrix(a), matrix(b)))
 
-    _cos.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
     # asNondeterministic (guide §4.4): every consumer filters on the
     # UDF column (NaN drop / threshold), and the optimizer otherwise
     # duplicates the eval below the pushed filter AND in the projection
     # — each candidate pair paid the einsum twice (verified: 2
     # ArrowEvalPython nodes → 1 in all three ANN verify plans). The
     # function is pure; the marking only stops reorder/duplication.
-    return F.pandas_udf(_cos, T.DoubleType()).asNondeterministic()
+    return F.arrow_udf(_cos, "double").asNondeterministic()
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The re-rankers' one tail: each query's ``k`` best rows of
+    ``scored`` by (cosine desc, neighbor_id asc), ranked from 1."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def brute_force_topk(
@@ -165,36 +154,31 @@ def brute_force_topk(
     ``max_queries`` guards the driver collect: beyond it, raise —
     a query set that large should use ``hyperplane_lsh_topk`` or a
     bucketed join, not all-pairs brute force."""
-    import numpy as np
-    import pandas as pd
-
-    corpus = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
+    qt = (
+        query_df.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).cast("array<double>").alias("_qv"),
+        )
+        .limit(max_queries + 1)
+        .toArrow()
     )
-    qrows = query_df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).take(max_queries + 1)
-    if len(qrows) > max_queries:
+    if qt.num_rows > max_queries:
         raise ValueError(
             f"brute_force_topk query side exceeds max_queries="
             f"{max_queries}; use hyperplane_lsh_topk / ivf_topk for "
             "large query sets"
         )
-    if not qrows:
-        return df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["_qv"] for r in qrows], dtype=np.float64)
+    if not qt.num_rows:
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    qids = qt.column("query_id").to_numpy().astype(np.int64)
+    Q = matrix(qt.column("_qv"))
     if dim is not None and Q.shape[1] != dim:
         raise ValueError(
             f"declared dim={dim} but query embeddings have size {Q.shape[1]}"
         )
     dim = Q.shape[1]
-    Qn = np.linalg.norm(Q, axis=1)
-    corpus = corpus.where(dim_check(F.col("_cv"), dim))
+    Qn = norms(Q)
+    corpus, _ = embedding_base(df, id_col, vec_col, dim, "neighbor_id", "_cv")
 
     def score_blocks(batches):
         # Two-level top-k: per-BATCH local top-k is accumulated across
@@ -204,14 +188,13 @@ def brute_force_topk(
         # layout, not by the Arrow batch count (at 10⁶ batches the old
         # per-batch emission concentrated 10⁷ rows in one window task).
         out_q, out_n, out_c = [], [], []
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            C = np.array(list(pdf["_cv"]), dtype=np.float64)
-            Cn = np.linalg.norm(C, axis=1)
+            ids = b.column(0).to_numpy().astype(np.int64)
+            C = matrix(b.column(1), dim)
             with np.errstate(divide="ignore", invalid="ignore"):
-                S = (C @ Q.T) / (Cn[:, None] * Qn[None, :])  # (nc, nq)
+                S = (C @ Q.T) / (norms(C)[:, None] * Qn[None, :])  # (nc, nq)
             S = np.round(S, 6)
             kk = min(k, len(ids))
             for j in range(len(qids)):
@@ -241,24 +224,16 @@ def brute_force_topk(
             run_id = np.cumsum(np.r_[True, aq[1:] != aq[:-1]]) - 1
             pos = np.arange(len(aq)) - starts[run_id]
             keep = pos < k
-            yield pd.DataFrame(
-                {
-                    "query_id": aq[keep],
-                    "neighbor_id": an[keep],
-                    "cosine": ac[keep],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(aq[keep]), pa.array(an[keep]), pa.array(ac[keep])],
+                names=["query_id", "neighbor_id", "cosine"],
             )
 
-    local = corpus.mapInPandas(
-        score_blocks, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_k(
+        corpus.mapInArrow(
+            score_blocks, schema="query_id long, neighbor_id long, cosine double"
+        ),
+        k,
     )
 
 
@@ -291,21 +266,10 @@ def hyperplane_lsh_topk(
     reason. Vectors re-attach afterwards: the corpus side by join, the
     query side broadcast (a top-k query set is small by construction) —
     ~16× fewer dedup-shuffle bytes at dim=64."""
-    corpus = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    queries = query_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    if dim is None:
-        first = corpus.select(F.size("_cv")).first()
-        if first is None:
-            return df.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine double, rank int"
-            )
-        dim = first[0]
-    corpus = corpus.withColumn("_cv", F.col("_cv").cast("array<double>")).where(
-        dim_check(F.col("_cv"), dim)
-    )
-    queries = queries.withColumn("_qv", F.col("_qv").cast("array<double>")).where(
-        dim_check(F.col("_qv"), dim)
-    )
+    corpus, dim = embedding_base(df, id_col, vec_col, dim, "neighbor_id", "_cv")
+    if corpus is None:
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    queries, _ = embedding_base(query_df, id_col, vec_col, dim, "query_id", "_qv")
 
     buckets = bucket_signatures_udf(dim, n_bits, n_tables, seed)
     c_all = corpus.select(
@@ -329,14 +293,7 @@ def hyperplane_lsh_topk(
         # drop before the window so they never outrank real neighbors
         .where(~F.isnan(F.col("cosine")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _ivf_train_sample(
@@ -378,7 +335,7 @@ def _train_ivf_pivots(
     train_iters: int,
     train_fraction: Optional[float],
     max_train_vectors: int = 100_000,
-) -> List[List[float]]:
+) -> np.ndarray:
     """Spherical-k-means coarse quantizer, faiss-style: the TRAIN
     SAMPLE is collected once (hash-threshold predicate + hash-ordered
     ``max_train_vectors`` cap — layout-stable, bounded driver memory)
@@ -396,22 +353,17 @@ def _train_ivf_pivots(
     driver-side sum over hash-ordered rows is bit-stable.
 
     Init rows = the ``n_cells`` lowest-hash sample rows
-    (``_ivf_train_sample`` returns them first)."""
-    import numpy as np
-
-    rows = _ivf_train_sample(
-        corpus, vec_df_col, seed, train_fraction, max_train_vectors
-    ).collect()
-    if not rows:
-        return []
-    V = np.array([r[vec_df_col] for r in rows], dtype=np.float64)
-
-    def _unit_rows(M):
-        n = np.linalg.norm(M, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return M / n
-
-    P = _unit_rows(V[: min(n_cells, len(V))].copy())
+    (``_ivf_train_sample`` returns them first). Returns the
+    ``(n_cells, dim)`` unit pivot matrix; no rows for an empty sample."""
+    V = matrix(
+        _ivf_train_sample(
+            corpus, vec_df_col, seed, train_fraction, max_train_vectors
+        ).toArrow().column(0),
+        dim,
+    )
+    if not len(V):
+        return V
+    P = unit_rows(V[:n_cells])[0]
     for _ in range(train_iters):
         cell = np.argmax(V @ P.T, axis=1)  # first-max, like the SQL form
         newP = P.copy()
@@ -419,8 +371,8 @@ def _train_ivf_pivots(
             members = V[cell == c]
             if len(members):
                 newP[c] = members.sum(axis=0)
-        P = _unit_rows(newP)
-    return [[float(x) for x in p] for p in P]
+        P = unit_rows(newP)[0]
+    return P
 
 
 def hyperplane_lsh_join(
@@ -441,56 +393,55 @@ def hyperplane_lsh_join(
 
     Plan: per table, a sign-signature bucket id
     (``bucket_signatures_udf``: deterministic hyperplanes, one GEMM per
-    Arrow batch); candidate pairs emitted per (table, bucket) group by
-    the capped ``mapInArrow`` group pass MinHash, the Hamming
-    near-dups and the capped n-gram path share (``dedup._group_pairs``,
-    including its ``max_df`` hot-bucket cap) — then every candidate is
-    verified with ``pair_cosine_udf``.
-    No cross join and no all-blocks-pair join anywhere; shuffles carry
-    (table, bucket, id) entries and candidate id pairs only.
+    Arrow batch); each (table, bucket) group collects ``struct(_id,
+    _v)`` and goes through the capped ``mapInArrow`` group pass MinHash,
+    the Hamming near-dups and the capped n-gram path share
+    (``dedup._group_pairs``, including its ``max_df`` hot-bucket cap).
+    The group step verifies its own candidates: a batch's pairs are
+    deduped, and each remaining pair's cosine is the one einsum of
+    ``pair_cosine_udf`` over the two vectors carried in the group —
+    no join back to the vectors, no cross join, no all-blocks-pair
+    join; ``distinct()`` leaves one row per pair. The group shuffle
+    carries each vector once per table it shares a bucket in, which is
+    still less than the two join-backs moved (12.4 → 6.4 MB shuffled
+    by ``embedding_near_dups_lsh`` at sf0.1).
 
     Recall for a pair at cosine s: 1 − (1 − p^n_bits)^n_tables with
     p = 1 − arccos(s)/π (Charikar 2002). At threshold 0.95 the default
     (8 bits × 6 tables) gives ≈ 0.96; for low thresholds use fewer
     bits / more tables.
     """
-    from contessa_spark.operators.dedup import _group_pairs, _id_pairs
+    from contessa_spark.operators.dedup import _distinct_pairs, _group_pairs
 
-    base = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
-    )
-    if dim is None:
-        first = base.select(F.size("_v")).first()
-        if first is None:
-            return df.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        dim = first[0]
-    base = base.where(dim_check(F.col("_v"), dim))
+    base, dim = embedding_base(df, id_col, vec_col, dim)
+    if base is None:
+        return df.sparkSession.createDataFrame([], "id_a long, id_b long, cosine double")
+
+    def cosine_step(cols, x, y):
+        ids, V = cols["_id"], cols["_v"]
+        x, y, _ = _distinct_pairs(ids, x, y)
+        cos = _pair_cosines(V[x], V[y])
+        # the threshold applies to the rounded cosine, so the verify
+        # decision is the reported value's; NaN (a zero-norm vector)
+        # fails it
+        m = cos >= threshold
+        return {"id_a": ids[x][m], "id_b": ids[y][m], "cosine": cos[m]}
 
     entries = base.select(
-        "_id",
         F.posexplode(
             bucket_signatures_udf(dim, n_bits, n_tables, seed)(F.col("_v"))
         ).alias("tbl", "bucket"),
+        F.struct("_id", "_v").alias("_doc"),
     )
-
-    cand = _group_pairs(
-        entries, ["tbl", "bucket"], "_id", _id_pairs, "id_a long, id_b long", max_df, observation
+    return _group_pairs(
+        entries,
+        ["tbl", "bucket"],
+        "_doc",
+        cosine_step,
+        "id_a long, id_b long, cosine double",
+        max_df,
+        observation,
     ).distinct()
-
-    a = base.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))
-    b = base.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        # pair_cosine_udf rounds to 6dp; thresholding the rounded value
-        # keeps the verify decision identical to the reported cosine.
-        # NaN (zero-norm vector) satisfies >= in Spark — drop explicitly.
-        .withColumn("cosine", pair_cosine_udf()(F.col("va"), F.col("vb")))
-        .where(~F.isnan(F.col("cosine")) & (F.col("cosine") >= threshold))
-        .select("id_a", "id_b", "cosine")
-    )
 
 
 def ivf_topk(
@@ -523,50 +474,28 @@ def ivf_topk(
 
     Probe ties break on the LOWER cell id (numpy stable argsort).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    corpus = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    if dim is None:
-        first = corpus.select(F.size("_cv")).first()
-        if first is None:
-            return df.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine double, rank int"
-            )
-        dim = first[0]
-    corpus = corpus.where(dim_check(F.col("_cv"), dim))
-    pivots = _train_ivf_pivots(
+    corpus, dim = embedding_base(df, id_col, vec_col, dim, "neighbor_id", "_cv")
+    if corpus is None:
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    P = _train_ivf_pivots(
         corpus, "_cv", dim, n_cells, seed, train_iters, train_fraction
     )
-    if not pivots:
-        return df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    P = np.array(pivots, dtype=np.float64)
+    if not len(P):
+        return df.sparkSession.createDataFrame([], _TOPK_SCHEMA)
 
     def _probe_udf(n: int):
-        def _cells(vecs):
-            V = np.array(list(vecs), dtype=np.float64)
-            if V.ndim != 2:
-                return pd.Series([[] for _ in range(len(vecs))])
-            S = V @ P.T
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n]
-            return pd.Series(order.astype(np.int32).tolist())
+        def _cells(vecs: pa.Array) -> pa.Array:
+            order = np.argsort(-(matrix(vecs, dim) @ P.T), axis=1, kind="stable")[:, :n]
+            return list_array(np.full(len(vecs), order.shape[1]), order.astype(np.int32).ravel())
 
-        _cells.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
         # pure; marked non-deterministic so the join/filter on the
         # derived cell column can't duplicate the GEMM eval (§4.4)
-        return F.pandas_udf(
-            _cells, T.ArrayType(T.IntegerType())
-        ).asNondeterministic()
+        return F.arrow_udf(_cells, "array<int>").asNondeterministic()
 
     c_assigned = corpus.withColumn(
         "cell", F.element_at(_probe_udf(1)(F.col("_cv")), 1)
     )
-    queries = query_df.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).where(dim_check(F.col("_qv"), dim))
+    queries, _ = embedding_base(query_df, id_col, vec_col, dim, "query_id", "_qv")
     q_assigned = queries.withColumn(
         "cell", F.explode(_probe_udf(n_probe)(F.col("_qv")))
     )
@@ -579,11 +508,4 @@ def ivf_topk(
         # NaN (zero-norm) would rank FIRST under desc in Spark — drop
         .where(~F.isnan(F.col("cosine")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)

@@ -495,6 +495,13 @@ class QualityFilterPipeline:
             .toPandas()  # ≤ n_buckets rows — control-plane data
         )
         lineage_rows["input_fp"] = input_fp_str
+        # the quality rows name the run by the instant the lineage holds,
+        # Spark's naive session-time-zone value of task_ts; a resumed run
+        # that collects no lineage row reads it from a one-row frame
+        ts_rows = lineage_rows
+        if not len(ts_rows):
+            ts_rows = self.spark.createDataFrame([(task_ts,)], "task_ts timestamp").toPandas()
+        task_ts = ts_rows["task_ts"].iloc[0]
 
         # lineage merge, quality rollup and summary are all driver-side
         # pandas over the collected lineage: one Spark job total instead

@@ -3,8 +3,9 @@
 Local-mode defaults for tests/bench; the same builder flags are what a
 production spark-submit would set cluster-side. AQE on (runtime
 re-plan + skew-join splitting), Arrow on (all Python code in this
-engine runs over Arrow batches: the word-level UDFs are ``arrow_udf``s,
-the rest pandas UDFs and pandas/Arrow map and group functions), shuffle
+engine runs over Arrow batches: the word-level and embedding UDFs are
+``arrow_udf``s, the rest pandas UDFs and pandas/Arrow map and group
+functions), shuffle
 partitions sized to cores locally
 (production: ~2-3× total executor cores, or rely on AQE coalescing).
 """

@@ -40,7 +40,9 @@ import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: the queries whose rows run through the word-level UDFs
+#: the queries whose rows run through the word-level UDFs, then the
+#: embedding queries (three of which, ``embedding_near_dups_lsh``,
+#: ``ann_topk_lsh`` and ``ann_topk_ivf``, have no DuckDB oracle)
 QUERIES = [
     "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_capped",
@@ -53,6 +55,15 @@ QUERIES = [
     "doc_unigram_tokens",
     "doc_wordpiece_tokens",
     "doc_quality_classifier",
+    "ann_topk_bruteforce",
+    "ann_topk_lsh",
+    "ann_topk_ivf",
+    "embedding_near_dups",
+    "embedding_near_dups_lsh",
+    "embedding_kmeans",
+    "dedup_semantic",
+    "doc_semantic_decontamination",
+    "doc_hybrid_rrf",
 ]
 SFS = ["0.001", "0.01", "0.1"]
 

@@ -642,13 +642,14 @@ def test_corpus_sentence_dedup_semantics(spark):
     assert (got[5]["n_sentences"], got[5]["n_kept"]) == (0, 0)
 
 
-def test_ann_zero_norm_vectors_never_rank(spark):
-    """Zero-norm vectors produce NaN cosine, and Spark treats NaN as
-    GREATER than any double (NaN >= t is true, NaN sorts first under
-    desc) — so without explicit masking a zero embedding would claim
-    rank 1 in every ANN operator. All four paths must drop them."""
-    import numpy as np
-
+def _embedding_ops():
+    """The eight embedding operators, each as ``(corpus, queries) ->
+    DataFrame`` at settings that give every one of them rows on the
+    31-vector corpus of ``test_ann_zero_norm_vectors_never_rank``."""
+    from contessa_spark.operators.clustering import kmeans_embeddings
+    from contessa_spark.operators.decontaminate import semantic_contamination
+    from contessa_spark.operators.dedup import embedding_near_dups_blocked
+    from contessa_spark.operators.semantic import semantic_dedup
     from contessa_spark.operators.similarity import (
         brute_force_topk,
         hyperplane_lsh_join,
@@ -656,27 +657,99 @@ def test_ann_zero_norm_vectors_never_rank(spark):
         ivf_topk,
     )
 
+    return {
+        "brute_force_topk": lambda emb, q: brute_force_topk(emb, q, k=5),
+        "hyperplane_lsh_topk": lambda emb, q: hyperplane_lsh_topk(emb, q, k=5, n_bits=2, n_tables=4),
+        "ivf_topk": lambda emb, q: ivf_topk(emb, q, k=5, n_cells=4, n_probe=4),
+        "hyperplane_lsh_join": lambda emb, q: hyperplane_lsh_join(emb, threshold=0.0, n_bits=2, n_tables=4),
+        "embedding_near_dups_blocked": lambda emb, q: embedding_near_dups_blocked(emb, threshold=0.0, block_size=8),
+        "semantic_dedup": lambda emb, q: semantic_dedup(emb, threshold=0.5, n_cells=3),
+        "kmeans_embeddings": lambda emb, q: kmeans_embeddings(emb, k=3, iters=2),
+        "semantic_contamination": lambda emb, q: semantic_contamination(emb, q, threshold=0.5),
+    }
+
+
+def _outcome(spark, op, rows, batch_rows=None):
+    """``(row count, sha256 prefix of the sorted rows)`` of ``op`` over
+    ``rows`` with queries ``vec_id < 3``, or the class of the exception
+    that building or collecting it raised: ``"dim_check"`` for the
+    per-row size guard's ``raise_error``, which Spark wraps in a class
+    that depends on where the plan fails. ``batch_rows`` lowers
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` so that the
+    operator's Arrow batches split mid-input."""
+    import hashlib
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if batch_rows:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        df = _embedding_ops()[op](emb, emb.where(F.col("vec_id") < 3))
+        # repr keys: NULL and NaN cells do not order
+        got = sorted(repr(tuple(r)) for r in df.select(sorted(df.columns)).collect())
+    except Exception as e:  # the pinned outcome is the error class
+        return "dim_check" if "USER_RAISED_EXCEPTION" in str(e) else type(e).__name__
+    finally:
+        spark.conf.set(conf, old)
+    return len(got), hashlib.sha256(repr(got).encode()).hexdigest()[:12]
+
+
+#: what each embedding operator returns on the zero-norm corpus and its
+#: edge inputs: a NULL vector, a NaN component, no rows, and the
+#: zero-norm corpus again in 4-row Arrow batches. A NULL vector fails
+#: every size-checked operator at ``dim_check``; the blocked GEMM fails
+#: in its worker; the contamination verdict reports it.
+_EMPTY = (0, "4f53cda18c2b")
+_EDGE_OUTCOMES = {
+    "brute_force_topk": {"zero": (15, "9af6abeb2fb9"), "null": "dim_check", "nan": (15, "9af6abeb2fb9")},
+    "embedding_near_dups_blocked": {"zero": (243, "7cd52405b7b0"), "null": "PythonException", "nan": (243, "7cd52405b7b0")},
+    "hyperplane_lsh_join": {"zero": (200, "f0460683c77a"), "null": "dim_check", "nan": (200, "f0460683c77a")},
+    "hyperplane_lsh_topk": {"zero": (15, "7c9259893736"), "null": "dim_check", "nan": (15, "7c9259893736")},
+    "ivf_topk": {"zero": (15, "9af6abeb2fb9"), "null": "dim_check", "nan": (15, "9af6abeb2fb9")},
+    "kmeans_embeddings": {"zero": (31, "330063a3130e"), "null": "dim_check", "nan": (32, "2c46a2c1db0e")},
+    "semantic_contamination": {"zero": (31, "ee455dc188e5"), "null": (32, "3d200fa2ec92"), "nan": (32, "cc95c9bc5abb")},
+    "semantic_dedup": {"zero": (30, "5555e6d08751"), "null": "dim_check", "nan": (31, "53d745886dd6")},
+}
+
+
+@pytest.mark.parametrize("op", sorted(_embedding_ops()))
+def test_ann_zero_norm_vectors_never_rank(spark, op):
+    """Zero-norm vectors produce NaN cosine, and Spark treats NaN as
+    GREATER than any double (NaN >= t is true, NaN sorts first under
+    desc) — so without explicit masking a zero embedding would claim
+    rank 1 in every ANN operator. Every cosine operator drops them
+    (k-means, whose L2 distance is defined there, keeps them; the
+    contamination verdict reports them clean with a NULL cosine).
+    The outcomes on the edge inputs are pinned per operator."""
+    import numpy as np
+
     rng = np.random.RandomState(3)
     rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(30)]
     rows.append((99, [0.0] * 8))  # the zero-norm trap
+
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = emb.where(F.col("vec_id") < 3)
+    got = _embedding_ops()[op](emb, emb.where(F.col("vec_id") < 3)).collect()
+    assert got
+    ids = [v for r in got for k, v in r.asDict().items() if k != "cell" and "id" in k]
+    cosines = [v for r in got for k, v in r.asDict().items() if "cosine" in k]
+    if op == "kmeans_embeddings":
+        assert 99 in ids
+    elif op == "semantic_contamination":
+        assert [(r["max_cosine"], r["contaminated"]) for r in got if r["vec_id"] == 99] == [(None, False)]
+    else:
+        assert 99 not in ids
+        assert all(not np.isnan(c) for c in cosines)
 
-    for name, out in [
-        ("brute", brute_force_topk(emb, q, k=5)),
-        ("lsh", hyperplane_lsh_topk(emb, q, k=5, n_bits=2, n_tables=4)),
-        ("ivf", ivf_topk(emb, q, k=5, n_cells=4, n_probe=4)),
-    ]:
-        got = out.collect()
-        assert got, name
-        assert all(r["neighbor_id"] != 99 for r in got), name
-        assert all(not np.isnan(r["cosine"]) for r in got), name
-
-    pairs = hyperplane_lsh_join(
-        emb, threshold=0.0, n_bits=2, n_tables=4
-    ).collect()
-    assert all(99 not in (r["id_a"], r["id_b"]) for r in pairs)
-    assert all(not np.isnan(r["cosine"]) for r in pairs)
+    nan_row = [float("nan")] + [1.0] * 7
+    outcomes = {
+        "zero": _outcome(spark, op, rows),
+        "null": _outcome(spark, op, rows + [(98, None)]),
+        "nan": _outcome(spark, op, rows + [(97, nan_row)]),
+        "empty": _outcome(spark, op, []),
+        "batches": _outcome(spark, op, rows, batch_rows=4),
+    }
+    assert outcomes == {**_EDGE_OUTCOMES[op], "empty": _EMPTY, "batches": outcomes["zero"]}
 
 
 def test_brute_force_topk_partition_invariant_two_level(spark):

@@ -174,7 +174,7 @@ def test_semantic_contamination_semantics(spark):
 def test_semantic_contamination_no_corpus_shuffle(spark):
     """The verdict completes inside each corpus Arrow batch: no
     Exchange may appear on the corpus path (benchmark is closure-
-    broadcast into the MapInPandas scorer)."""
+    broadcast into the MapInArrow scorer)."""
     from contessa_spark.operators.decontaminate import semantic_contamination
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -186,7 +186,7 @@ def test_semantic_contamination_no_corpus_shuffle(spark):
         .executedPlan()
         .toString()
     )
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
     assert "Join" not in plan
 
@@ -328,11 +328,8 @@ def test_hits_scale_too_small_raises(spark):
 def test_link_scores_past_the_lineage_checkpoint_match_oracle(spark):
     """Enough rounds to take the in-loop checkpoint branch (pagerank
     round 6, hits round 3) over the sf0.001 domain graph: the scores
-    stay exactly equal to the unrolled DuckDB oracle. Its CTEs are
-    materialized here: inlined, each HITS round references the last one
-    four times, so the 5-round oracle would expand to 4⁵ scans."""
-    import re
-
+    stay exactly equal to the unrolled DuckDB oracle (whose HITS CTEs
+    are materialized, so 5 rounds cost 5 rounds, not 4⁵ scans)."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -354,5 +351,5 @@ def test_link_scores_past_the_lineage_checkpoint_match_oracle(spark):
     )
     hs = hits(entry._hits_edges(spark, sf), iters=hits_iters)
     assert sorted(map(tuple, hs.select("node", "auth_scaled", "hub_scaled").collect())) == sorted(
-        con.sql(re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", entry._hits_oracle_sql(hits_iters))).fetchall()
+        con.sql(entry._hits_oracle_sql(hits_iters)).fetchall()
     )

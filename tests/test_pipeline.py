@@ -304,3 +304,30 @@ def test_validate_mode_respects_full_mode_checkpoints(spark, web_df, tmp_path):
     # input still works (guard state intact)
     s = pipe.run(spark.read.parquet(src6), task_ts=TASK_TS)
     assert s["resumed_buckets_skipped"] > 0
+
+
+def test_quality_task_ts_is_the_lineage_instant(spark, web_df, tmp_path):
+    """A tz-aware task_ts under a non-UTC session time zone: the quality
+    table names the run by the naive instant the lineage holds (Spark's
+    session-time-zone value), also on a resumed run that collects no
+    lineage row."""
+    from datetime import timedelta, timezone
+
+    from contessa_spark.results import LocalSmallTableMerge
+
+    ts = datetime(2026, 7, 1, 12, 0, tzinfo=timezone(timedelta(hours=5)))
+    want = {datetime(2026, 7, 1, 3, 0)}  # 07:00 UTC in New York (UTC-4)
+    conf = "spark.sql.session.timeZone"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "America/New_York")
+    try:
+        pipe = QualityFilterPipeline(spark, str(tmp_path), PipelineConfig(n_buckets=4))
+        pipe.run(web_df, task_ts=ts)
+        assert set(LocalSmallTableMerge.read(pipe.lineage_path)["task_ts"]) == want
+        assert set(LocalSmallTableMerge.read(pipe.quality_path)["task_ts"]) == want
+        # every bucket is done: the rerun collects no lineage row
+        assert pipe.run(web_df, task_ts=ts)["resumed_buckets_skipped"] == 4
+        assert set(LocalSmallTableMerge.read(pipe.quality_path)["task_ts"]) == want
+        assert len(LocalSmallTableMerge.read(pipe.lineage_path)) == 4
+    finally:
+        spark.conf.set(conf, old)

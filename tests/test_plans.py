@@ -103,7 +103,7 @@ def test_doc_scrub_udf_evaluated_once(spark):
 
 def test_topk_gemm_plan_no_pair_join(spark):
     """brute_force_topk scores with a closure-broadcast GEMM scorer —
-    the plan must contain the MapInPandas scorer and ONE corpus scan,
+    the plan must contain the MapInArrow scorer and ONE corpus scan,
     and NO pair join (the r1-r3 broadcast join + 64-term codegen dot
     cost ~2 s of planning/janino per execution). The final window only
     ranks the per-block local top-k."""
@@ -112,7 +112,7 @@ def test_topk_gemm_plan_no_pair_join(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 5)
     plan = _plan(brute_force_topk(emb, q, k=3, dim=64))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Join" not in plan
     assert plan.count("FileScan parquet") == 1
     assert "Window" in plan
@@ -332,7 +332,7 @@ def test_load_takes_schema_from_footer(spark):
 
 def test_semantic_dedup_plan_no_cross_join(spark):
     """SemDedup's pairwise stage is confined to cells via
-    groupBy+applyInPandas — the plan must contain NO cartesian or
+    groupBy+applyInArrow — the plan must contain NO cartesian or
     nested-loop join (the naive all-pairs formulation)."""
     from contessa_spark.operators.semantic import semantic_dedup
 
@@ -340,7 +340,7 @@ def test_semantic_dedup_plan_no_cross_join(spark):
     plan = _plan(semantic_dedup(emb, threshold=0.4, n_cells=4))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "FlatMapGroupsInPandas" in plan  # the per-cell GEMM stage
+    assert "FlatMapGroupsInArrow" in plan  # the per-cell GEMM stage
 
 
 def test_normalize_text_udf_evaluated_once(spark):
@@ -525,3 +525,17 @@ def test_pair_emitters_are_arrow_kernels(spark):
     # the Hamming engine's NULL filter must not split the SimHash UDF
     # around the spread exchange
     assert _plan(queries["dedup_simhash"](spark, sf)).count("ArrowEvalPython") == 1
+
+
+def test_hyperplane_lsh_join_verifies_inside_band_groups(spark):
+    """The embedding LSH join is one signature UDF, one table-bucket
+    group emission that computes its own pairs' cosines, and a
+    distinct: no join back to the vectors and no pandas stage."""
+    import __spark_entry__ as entry
+
+    df = entry.queries()["embedding_near_dups_lsh"](spark, "/root/testdata/sf0.01")
+    plan = _plan(df)
+    assert "Join" not in plan
+    assert "Pandas" not in plan
+    assert plan.count("ArrowEvalPython") == 1 and plan.count("MapInArrow") == 1
+    assert df.collect()

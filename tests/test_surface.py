@@ -162,3 +162,61 @@ def test_one_word_split_for_word_level_udfs():
     assert not split_elsewhere, split_elsewhere
     assert not old_helpers, old_helpers
     assert not bare_splits, bare_splits
+
+
+#: the embedding family's modules; ``dedup.py`` joins them with its
+#: one embedding function, ``embedding_near_dups_blocked``
+_EMBEDDING_FILES = (
+    "contessa_spark/operators/similarity.py",
+    "contessa_spark/operators/semantic.py",
+    "contessa_spark/operators/clustering.py",
+    "contessa_spark/operators/decontaminate.py",
+)
+_PANDAS_FORMS = ("np.array(list(", "pandas_udf", "mapInPandas", "applyInPandas")
+
+
+def _is_dim_inference(node) -> bool:
+    """A ``….first()`` call whose receiver calls ``size(…)``: the
+    ``select(F.size(vec)).first()`` read of an embedding's dimension."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "first"
+        and any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "attr", getattr(n.func, "id", None)) == "size"
+            for n in ast.walk(node.func.value)
+        )
+    )
+
+
+def test_one_embedding_batch_kernel():
+    """The embedding operators read every batch through
+    ``vectors.matrix``: no pandas entry point and no hand-built
+    ``np.array(list(...))`` matrix in their modules or in
+    ``dedup.embedding_near_dups_blocked``; one dim inference in the
+    library (``vectors.embedding_base``), and no row norm taken outside
+    ``vectors``."""
+    sources = {}
+    for path in _tracked_py():
+        if path.startswith("contessa_spark/") or path == "__spark_entry__.py":
+            with open(os.path.join(REPO, path), encoding="utf-8") as f:
+                sources[path] = f.read()
+    tree = ast.parse(sources["contessa_spark/operators/dedup.py"])
+    (blocked,) = [n for n in tree.body if getattr(n, "name", None) == "embedding_near_dups_blocked"]
+    checked = {p: sources[p] for p in _EMBEDDING_FILES}
+    checked["dedup.embedding_near_dups_blocked"] = ast.get_source_segment(
+        sources["contessa_spark/operators/dedup.py"], blocked
+    )
+    pandas_forms = [f"{p}: {form}" for p, src in checked.items() for form in _PANDAS_FORMS if form in src]
+    assert not pandas_forms, pandas_forms
+
+    inference, norm_calls = [], []
+    for path, src in sources.items():
+        for n in ast.walk(ast.parse(src)):
+            if _is_dim_inference(n):
+                inference.append(path)
+            elif isinstance(n, ast.Attribute) and n.attr == "norm" and (path in checked or path.endswith("dedup.py")):
+                norm_calls.append(path)
+    assert inference == ["contessa_spark/vectors.py"], inference
+    assert not norm_calls, norm_calls
