@@ -23,6 +23,12 @@ rows:
 	$(PY) scripts/row_digest.py --out rows_digest.json
 	if [ -n "$(ROWS_BASE)" ]; then $(PY) scripts/row_digest.py --compare "$(ROWS_BASE)" rows_digest.json; fi
 
+# fresh-process start-up with and without the driver JVM's class-data
+# archive: get_spark, first SQL job, first arrow_udf job, JVM exit
+# (scripts/cold_start.py)
+coldstart:
+	$(PY) scripts/cold_start.py --reps 3 --out cold_start.json
+
 bench:
 	SPARK_GRAFT_SF_DIR=$${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 	SPARK_GRAFT_CPUS=$${SPARK_GRAFT_CPUS:-32} $(PY) bench.py
@@ -41,4 +47,4 @@ pipeline-smoke: zip
 	$(PY) scripts/run_pipeline.py --generate 2000 --base /tmp/cs_smoke --master 'local[8]'
 	rm -rf /tmp/cs_smoke
 
-.PHONY: test tier1 oracles rows bench scaling zip pipeline-smoke
+.PHONY: test tier1 oracles rows coldstart bench scaling zip pipeline-smoke

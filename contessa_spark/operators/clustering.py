@@ -40,7 +40,10 @@ GEMM (no shuffle of vectors, no driver materialization of anything
 larger than k × d); ``iters`` passes total. Zero-norm rows are NOT
 excluded (L2 distance is well-defined everywhere — unlike the cosine
 operators); a vector whose length ≠ ``dim`` raises, the same
-``dim_check`` guard as the sibling similarity operators.
+``dim_check`` guard as the sibling similarity operators. A vector with
+a NaN or infinite component is assigned (to the lowest seed id when
+every distance is NaN) but is never a seed and adds to no centroid, so
+it moves no other row.
 
 Reference parity: contessa has no embedding ops — forward-looking
 training-pipeline operator (SURVEY.md §2 extension), same family as
@@ -103,8 +106,12 @@ def kmeans_embeddings(
     if init not in ("greedy", "md5"):
         raise ValueError(f"unknown init {init!r}: use 'greedy' or 'md5'")
     n_pool = k if init == "md5" else max(init_sample_rows, k)
+    # a vector with a NaN or infinite component is never a seed: its
+    # column of distances would be NaN for every row
+    finite = F.forall("_v", lambda x: ~F.isnan(x) & (F.abs(x) != F.lit(float("inf"))))
     pool = (
-        base.withColumn("_h", hkey)
+        base.filter(finite)
+        .withColumn("_h", hkey)
         .orderBy("_h", "_id")
         .limit(n_pool)
         .select("_id", "_v")
@@ -160,9 +167,11 @@ def kmeans_embeddings(
             V = matrix(b.column("_v"), dim)
             cl = b.column("cluster").to_numpy()
             cids = np.unique(cl)
-            masks = [cl == cid for cid in cids]
-            # a NaN partial is NULL, which the Spark sum below skips
-            psum = pa.array(np.concatenate([V[m].sum(axis=0) for m in masks]), from_pandas=True)
+            # a row with a non-finite component is assigned but moves
+            # no centroid: it adds to neither the sum nor the count
+            finite = np.isfinite(V).all(axis=1)
+            masks = [(cl == cid) & finite for cid in cids]
+            psum = pa.array(np.concatenate([V[m].sum(axis=0) for m in masks]))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(cids),

@@ -8,6 +8,24 @@ engine runs over Arrow batches: the word-level and embedding UDFs are
 functions), shuffle
 partitions sized to cores locally
 (production: ~2-3× total executor cores, or rely on AQE coalescing).
+
+The driver JVM that ``get_spark`` launches maps Spark's classes from a
+class-data-sharing archive in ``$XDG_CACHE_HOME/contessa_spark/``
+(``class_archive``): the first session on a JDK, Spark jar set and heap
+size lists the classes its JVM loads, and its interpreter dumps the
+archive from that list when it exits (~16 s more exit, 150-200 MB);
+every later one starts in about half the time. It is used only when
+Spark's conf dir holds nothing but ``*.template`` files (the launch then
+points ``SPARK_CONF_DIR`` at an empty directory, which configures the
+same) and the caller sets no ``spark.driver.defaultJavaOptions``;
+deleting the directory resets it. Under ``spark-submit`` the JVM is
+already running, and nothing changes.
+
+PySpark's per-call call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``): analysis
+errors lose the Python call site in their DataFrame context, and every
+DataFrame/Column call saves a stack walk and the py4j round trips that
+set and clear its origin.
 """
 
 from __future__ import annotations
@@ -15,6 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from contessa_spark import class_archive
 
 
 def get_spark(
@@ -44,10 +64,10 @@ def get_spark(
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         local_dir = "/dev/shm/spark-local"
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    options = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Scan-parallelism FLOOR (not a split-size cap): a single
         # ~100 MB parquet file is one 128 MB split by default, so every
         # scan-heavy stage over it serializes onto one core; the floor
@@ -55,13 +75,13 @@ def get_spark(
         # when the files' row groups allow. Scale-correct: at
         # production split counts (≫ cores) it is a no-op, unlike
         # lowering maxPartitionBytes, which would fragment large scans.
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
-        .config("spark.task.cpus", str(task_cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.files.minPartitionNum": str(shuffle_partitions),
+        "spark.task.cpus": str(task_cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Bound Arrow batches by BYTES, not the 10k-row default: text
         # documents average ~2 KB here, so default batches ran ~12-20 MB
         # per worker with matching transient allocations on both sides
@@ -72,14 +92,16 @@ def get_spark(
         # at cluster scale the same cap bounds per-worker batch memory
         # (guide: lower maxRecordsPerBatch/maxBytesPerBatch for large
         # binary/text cells).
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", "2097152")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.execution.arrow.maxBytesPerBatch": "2097152",
+        # No Python call site per DataFrame/Column call: capturing one
+        # costs a stack walk and py4j round trips per call
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+    }
     if local_dir:
-        b = b.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+        options["spark.local.dir"] = local_dir
+    options.update(extra_conf or {})
+    spark = class_archive.get_or_create(options)
     spark.sparkContext.setLogLevel("WARN")
     return spark

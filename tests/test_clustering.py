@@ -6,6 +6,7 @@ import os
 import sys
 
 import numpy as np
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -104,3 +105,27 @@ def test_kmeans_dim_mismatch_raises_and_empty_input(spark):
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert kmeans_embeddings(empty, k=2, iters=1).count() == 0
+
+
+@pytest.mark.parametrize("init", ["greedy", "md5"])
+@pytest.mark.parametrize("nan_id", [97, 84])
+def test_kmeans_nan_vector_moves_no_other_row(spark, init, nan_id):
+    """A vector with a NaN component is assigned somewhere, but adds to
+    no centroid's sum or count and is never a seed, so every other row
+    keeps its cluster. Id 84 has the lowest md5 rank of all 31 ids: it
+    would be the first seed of either init."""
+    from contessa_spark.operators.clustering import kmeans_embeddings
+
+    rng = np.random.RandomState(3)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(30)]
+    schema = "vec_id long, embedding array<double>"
+
+    def clusters(rows):
+        out = kmeans_embeddings(spark.createDataFrame(rows, schema), k=3, iters=2, init=init)
+        return {r["vec_id"]: r["cluster"] for r in out.collect()}
+
+    base = clusters(rows)
+    with_nan = clusters(rows + [(nan_id, [float("nan")] + [1.0] * 7)])
+    assert nan_id in with_nan
+    del with_nan[nan_id]
+    assert with_nan == base

@@ -707,7 +707,7 @@ _EDGE_OUTCOMES = {
     "hyperplane_lsh_join": {"zero": (200, "f0460683c77a"), "null": "dim_check", "nan": (200, "f0460683c77a")},
     "hyperplane_lsh_topk": {"zero": (15, "7c9259893736"), "null": "dim_check", "nan": (15, "7c9259893736")},
     "ivf_topk": {"zero": (15, "9af6abeb2fb9"), "null": "dim_check", "nan": (15, "9af6abeb2fb9")},
-    "kmeans_embeddings": {"zero": (31, "330063a3130e"), "null": "dim_check", "nan": (32, "2c46a2c1db0e")},
+    "kmeans_embeddings": {"zero": (31, "330063a3130e"), "null": "dim_check", "nan": (32, "3671de872d29")},
     "semantic_contamination": {"zero": (31, "ee455dc188e5"), "null": (32, "3d200fa2ec92"), "nan": (32, "cc95c9bc5abb")},
     "semantic_dedup": {"zero": (30, "5555e6d08751"), "null": "dim_check", "nan": (31, "53d745886dd6")},
 }
