@@ -35,8 +35,15 @@ maps them instead (~2.8 → ~1.5 s per ``get_spark`` on a 4-core host).
   ``defaultJavaOptions`` gets no archive. The JVM writes its log to
   this process's stdout, so CDS logging is off; a fatal error's report
   goes to the cache, not the working directory.
+* A launch that passed an archive reads HotSpot's ``UseSharedSpaces``
+  (``HotSpotDiagnosticMXBean``); when it is false the JVM rejected the
+  archive (truncated, or of another classpath or JVM), and the file is
+  deleted so the next session records a new one.
 * Under ``spark-submit`` the driver JVM is already running when Python
   starts (``PYSPARK_GATEWAY_PORT`` is set), so nothing is changed.
+
+:func:`get_or_create` also sets the other launch-time setting, the
+local worker daemon (:func:`_library_daemon`).
 
 Only the driver JVM is covered: in local mode that is the whole
 engine; a cluster's executors start their own JVMs.
@@ -49,16 +56,21 @@ import contextlib
 import hashlib
 import os
 import shutil
+import site
 import subprocess
 import uuid
 from dataclasses import dataclass
 from typing import List, Optional
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 _JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
+_DAEMON_MODULE = "spark.python.daemon.module"
+#: the worker daemon that imports pyspark from its install
+_DAEMON = "contessa_spark.worker_daemon"
 #: every CDS tag set off, so neither recording nor a mismatched archive
 #: logs
 _QUIET = "-Xlog:cds*=off"
@@ -260,11 +272,51 @@ def _builder(options: dict) -> SparkSession.Builder:
     return SparkSession.builder.config(map=options)
 
 
+def _library_daemon(options: dict) -> bool:
+    """Whether a driver JVM launched with ``options`` runs
+    ``contessa_spark.worker_daemon``, which imports pyspark from its
+    install (``contessa_spark/__init__.py``): not when the caller chose a
+    daemon or the master is not local, nor when ``python -m`` in this
+    working directory, where the local executor starts the daemon, would
+    not import this package. The first of that directory, the
+    executor's and this process's ``PYTHONPATH`` and this interpreter's
+    site-packages that holds a ``contessa_spark`` package must be this
+    package's parent."""
+    master = options.get("spark.master", "")
+    if _DAEMON_MODULE in options or not (master == "local" or master.startswith("local[")):
+        return False
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    path = [os.getcwd(), *options.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep),
+            *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    for entry in filter(None, path):
+        if os.path.isfile(os.path.join(entry, "contessa_spark", "__init__.py")):
+            return os.path.realpath(entry) == root
+    return False
+
+
+def _maps_archive(jvm) -> bool:
+    """Whether the JVM behind ``jvm`` (a py4j view) mapped its CDS
+    archive: HotSpot's ``UseSharedSpaces``, false when it rejected it;
+    true when the JVM cannot tell (no such bean or flag)."""
+    try:
+        bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+        return bean.getVMOption("UseSharedSpaces").getValue() != "false"
+    except Py4JError:
+        return True
+
+
 def get_or_create(options: dict) -> SparkSession:
-    """``SparkSession.builder.config(map=options).getOrCreate()``, with
-    the driver JVM on a CDS archive when this call launches it."""
-    launching = SparkContext._gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT")
-    launch = plan(options) if launching else None
+    """``SparkSession.builder.config(map=options).getOrCreate()``. When
+    this call launches the driver JVM, it also decides the launch-time
+    settings: the local worker daemon (:func:`_library_daemon`) and the
+    CDS archive (:func:`plan`); an archive that JVM did not map is
+    deleted, so the next session records a new one."""
+    if SparkContext._gateway is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return _builder(options).getOrCreate()
+    if _library_daemon(options):
+        options = {**options, _DAEMON_MODULE: _DAEMON}
+    launch = plan(options)
     if launch is None:
         return _builder(options).getOrCreate()
     try:
@@ -279,8 +331,13 @@ def get_or_create(options: dict) -> SparkSession:
         with contextlib.suppress(OSError):
             os.remove(launch.class_list or launch.archive)
         return spark
+    if launch.class_list is None:
+        if not _maps_archive(spark.sparkContext._jvm):
+            with contextlib.suppress(OSError):
+                os.remove(launch.archive)
+        return spark
     proc = getattr(SparkContext._gateway, "proc", None)
-    jvm_argv = _command_line(proc.pid) if launch.class_list and proc is not None else None
+    jvm_argv = _command_line(proc.pid) if proc is not None else None
     if jvm_argv:
         atexit.register(publish, proc, dump_command(launch, jvm_argv), launch)
     return spark

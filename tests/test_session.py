@@ -1,10 +1,12 @@
 """``get_spark``: no per-call call-site capture, and the driver JVM's
 class-data-sharing archive (``contessa_spark/class_archive.py``): its
 key, its publish-after-exit rule, the dump's command, the conf-dir,
-caller-options and spark-submit rules, the restored environment, and
-two fresh sessions of which the second maps Spark's classes from the
-archive the first one dumped."""
+caller-options and spark-submit rules, the restored environment, two
+fresh sessions of which the second maps Spark's classes from the
+archive the first one dumped, and a session that deletes an archive
+its JVM did not map."""
 
+import glob
 import os
 import subprocess
 import sys
@@ -296,9 +298,8 @@ _SESSION = """
 def test_second_fresh_session_maps_spark_classes_from_the_archive(tmp_path):
     """Two fresh interpreters on one empty cache: the first records its
     classes and dumps them when it exits (it does not stop the
-    session), the second
-    loads Spark's classes from that archive. The JVM prints nothing to
-    stdout in either."""
+    session), the second loads Spark's classes from that archive and
+    keeps it. The JVM prints nothing to stdout in either."""
     env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
     env.update(XDG_CACHE_HOME=str(tmp_path / "xdg"), SPARK_GRAFT_DRIVER_MEM="1g")
     cache = tmp_path / "xdg" / "contessa_spark"
@@ -316,3 +317,32 @@ def test_second_fresh_session_maps_spark_classes_from_the_archive(tmp_path):
         ))
     assert spark_top[0] == 0
     assert spark_top[1] > 1000
+
+
+@pytest.mark.parametrize("fault", ["wrongkey", "truncarchive"])
+def test_archive_the_jvm_did_not_map_is_deleted(cache, tmp_path, fault):
+    """The key's archive is a valid static archive of another classpath
+    that holds that classpath's classes (``wrongkey``), or its first
+    1 MB (``truncarchive``). The JVM runs without it, reads
+    ``UseSharedSpaces`` false, and the session deletes the file, so the
+    next one records a new archive."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    [scala] = glob.glob(os.path.join(_find_spark_home(), "jars", "scala-library-*.jar"))
+    classes, other = tmp_path / "other.lst", tmp_path / "other.jsa"
+    classes.write_text("java/lang/Object id: 0\nscala/Function0\n")
+    subprocess.run([class_archive.java_binary(), "-Xshare:dump", f"-XX:SharedClassListFile={classes}",
+                    f"-XX:SharedArchiveFile={other}", "-cp", scala], capture_output=True, check=True, timeout=120)
+    data = other.read_bytes()
+    archive = class_archive.plan({"spark.driver.memory": "1g"}).archive
+    _write(cache / os.path.basename(archive), data if fault == "wrongkey" else data[: 1 << 20])
+
+    log = tmp_path / "class-load.log"
+    code = textwrap.dedent(_SESSION.format(repo=REPO, log=log))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout == "45\n"
+    assert not os.path.exists(archive)
+    assert "source: shared objects file" not in log.read_text()
+    assert class_archive.plan({"spark.driver.memory": "1g"}).class_list
