@@ -7,7 +7,9 @@ table compile into **one** DataFrame pass: a single ``agg`` of 3N
 counters (total/passed/failed per rule). Catalyst handles partial
 (map-side) + final aggregation, so the whole quality-check run is one
 scan + one tiny shuffle regardless of rule count — the plan that
-survives a 100 TB table.
+survives a 100 TB table. Each CustomSqlRule's own plan aggregates to
+one row that is cross-joined to that pass's row, so the driver counts
+all of a run's rules with one action.
 
 Counting semantics (exact parity with contessa/rules.py:84-93):
 
@@ -26,7 +28,7 @@ from __future__ import annotations
 from datetime import datetime
 from functools import reduce
 from operator import and_
-from typing import Any, Dict, List, Optional, Sequence
+from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,22 +51,34 @@ def scope_predicate(rule, task_ts: datetime) -> Optional[Column]:
     return reduce(and_, parts)
 
 
-def _count_if(cond: Column) -> Column:
-    # count(CASE WHEN cond THEN 1 END): NULL/false contribute nothing —
-    # stays inside whole-stage codegen, partial-aggregates map-side.
-    return F.count(F.when(cond, F.lit(1)))
+def compile_counters(
+    rule: OneColumnRule, task_ts: datetime, idx: int, rows: Column
+) -> List[Column]:
+    """3 aggregate Columns (total, passed, failed) for one rule;
+    ``rows`` counts every row, the total of a rule with no scope.
 
-
-def compile_counters(rule: OneColumnRule, task_ts: datetime, idx: int) -> List[Column]:
-    """3 aggregate Columns (total, passed, failed) for one rule."""
+    ``count_if`` counts the rows where its argument is TRUE, so a NULL
+    scope or predicate falls out of every counter, as under SQL WHERE
+    (``NULL AND FALSE`` is FALSE, ``NULL AND TRUE`` is NULL)."""
     scope = scope_predicate(rule, task_ts)
     pred = rule.predicate()
-    in_scope = F.lit(True) if scope is None else scope.eqNullSafe(F.lit(True))
+    if scope is None:
+        total, passed, failed = rows, F.count_if(pred), F.count_if(~pred)
+    else:
+        total = F.count_if(scope)
+        passed, failed = F.count_if(scope & pred), F.count_if(scope & ~pred)
     return [
-        _count_if(in_scope).alias(f"total_{idx}"),
-        _count_if(in_scope & pred.eqNullSafe(F.lit(True))).alias(f"passed_{idx}"),
-        _count_if(in_scope & pred.eqNullSafe(F.lit(False))).alias(f"failed_{idx}"),
+        total.alias(f"total_{idx}"),
+        passed.alias(f"passed_{idx}"),
+        failed.alias(f"failed_{idx}"),
     ]
+
+
+def _all_counters(rules: Sequence[OneColumnRule], task_ts: datetime) -> List[Column]:
+    """``compile_counters`` of every rule, in order, sharing one
+    row count (each Column built is a driver round trip to the JVM)."""
+    rows = F.count(F.lit(1))
+    return [c for i, rule in enumerate(rules) for c in compile_counters(rule, task_ts, i, rows)]
 
 
 def run_column_rules(
@@ -72,23 +86,30 @@ def run_column_rules(
     rules: Sequence[OneColumnRule],
     task_ts: datetime,
     collect_examples: int = 10,
+    sql_rules: Sequence[Tuple[CustomSqlRule, DataFrame]] = (),
 ) -> List[AggregatedResult]:
-    """Evaluate every Column-expressible rule in ONE scan of ``df``.
+    """Count every Column-expressible rule in ONE scan of ``df`` and
+    every ``(CustomSqlRule, frame)`` of ``sql_rules`` with them, in ONE
+    action: each SQL rule's frame (``rule.evaluate(spark, context)``)
+    aggregates to one row, and the one-row aggregates are joined with
+    ``crossJoin``, so the driver plans and collects once. Results come
+    in order: ``rules``, then ``sql_rules``.
 
     Examples (failing values) are fetched lazily per rule via
     ``limit(n)`` — Spark's CollectLimit stops early, never a full-set
     driver collect (unlike the reference's O(failures) Python set,
-    contessa/rules.py:74-95). That is one more job per failing rule;
-    ``collect_examples=0`` skips them, leaving the counting scan as the
-    only job (a persisted ``QualityRunner`` run does this: its rows
+    contessa/rules.py:74-95). That is one more action per failing rule;
+    ``collect_examples=0`` skips them, leaving the counting action as
+    the only one (a persisted ``QualityRunner`` run does this: its rows
     have no example column).
     """
-    if not rules:
+    counts: List[DataFrame] = []
+    if rules:
+        counts.append(df.agg(*_all_counters(rules, task_ts)))
+    counts.extend(_sql_counts(rule, out, j) for j, (rule, out) in enumerate(sql_rules))
+    if not counts:
         return []
-    aggs: List[Column] = []
-    for i, rule in enumerate(rules):
-        aggs.extend(compile_counters(rule, task_ts, i))
-    row = df.agg(*aggs).collect()[0]
+    row = reduce(DataFrame.crossJoin, counts).collect()[0]
 
     results: List[AggregatedResult] = []
     for i, rule in enumerate(rules):
@@ -124,6 +145,8 @@ def run_column_rules(
                     failed_example=examples,
                 )
             )
+    for j, (rule, out) in enumerate(sql_rules):
+        results.append(_sql_result(rule, out, row, j, collect_examples))
     return results
 
 
@@ -138,10 +161,7 @@ def counters_df(
     Output: (attribute, rule_name, rule_type, total_records, failed,
     passed, status).
     """
-    aggs: List[Column] = []
-    for i, rule in enumerate(rules):
-        aggs.extend(compile_counters(rule, task_ts, i))
-    one = df.agg(*aggs)
+    one = df.agg(*_all_counters(rules, task_ts))
     parts = []
     for i, rule in enumerate(rules):
         parts.append(
@@ -158,26 +178,15 @@ def counters_df(
     )
 
 
-def run_custom_sql_rule(
-    spark: SparkSession,
-    rule: CustomSqlRule,
-    context: Dict[str, Any],
-    collect_examples: int = 10,
-) -> AggregatedResult:
-    """Evaluate a CustomSqlRule (its own ``spark.sql`` plan).
+def _sql_counts(rule: CustomSqlRule, out: DataFrame, idx: int) -> DataFrame:
+    """One-row aggregate of a CustomSqlRule's frame: ``sql_failed_{idx}``
+    (every row) in ``only_failures_mode``, else ``sql_total_{idx}``,
+    ``sql_passed_{idx}`` and ``sql_failed_{idx}`` over its first column.
 
-    First result column must be boolean validity
-    (contessa/rules.py:84-87 raises ValueError otherwise);
-    ``only_failures_mode`` treats every returned row as a failure with
-    total_records=0 (contessa/rules.py:80-82). ``collect_examples=0``
-    skips the failed-example job, as in ``run_column_rules``.
-    """
-    out = rule.evaluate(spark, context)
+    That column must be boolean validity (contessa/rules.py:84-87
+    raises ValueError otherwise)."""
     if rule.only_failures_mode:
-        failed = out.count()
-        examples = [tuple(r) for r in out.limit(collect_examples).collect()] if collect_examples else []
-        return AggregatedResult(total_records=0, failed=failed, passed=0, failed_example=examples)
-
+        return out.agg(F.count(F.lit(1)).alias(f"sql_failed_{idx}"))
     first = out.schema[0]
     if first.dataType.simpleString() != "boolean":
         raise ValueError(
@@ -185,20 +194,56 @@ def run_custom_sql_rule(
             f"return list of booleans in column `valid`."
         )
     valid = F.col(first.name)
-    row = out.agg(
-        F.count(F.lit(1)).alias("total"),
-        _count_if(valid.eqNullSafe(F.lit(True))).alias("passed"),
-        _count_if(valid.eqNullSafe(F.lit(False))).alias("failed"),
-    ).collect()[0]
+    return out.agg(
+        F.count(F.lit(1)).alias(f"sql_total_{idx}"),
+        F.count_if(valid).alias(f"sql_passed_{idx}"),
+        F.count_if(~valid).alias(f"sql_failed_{idx}"),
+    )
+
+
+def _sql_result(
+    rule: CustomSqlRule, out: DataFrame, row, idx: int, collect_examples: int
+) -> AggregatedResult:
+    """A CustomSqlRule's result from the counters ``_sql_counts`` put in
+    ``row``, with up to ``collect_examples`` failing rows fetched by one
+    more action: every column of a failing row in ``only_failures_mode``
+    (contessa/rules.py:80-82, total_records=0), else the columns after
+    the validity column."""
+    failed = row[f"sql_failed_{idx}"]
+    if rule.only_failures_mode:
+        examples = [tuple(r) for r in out.limit(collect_examples).collect()] if collect_examples else []
+        return AggregatedResult(total_records=0, failed=failed, passed=0, failed_example=examples)
     examples: List[Any] = []
-    if collect_examples and row["failed"]:
+    if collect_examples and failed:
+        valid = F.col(out.schema[0].name)
         rest = [f.name for f in out.schema.fields[1:]]
         ex_df = out.where(valid.eqNullSafe(F.lit(False)))
         ex_df = ex_df.select(*rest) if rest else ex_df
         examples = [tuple(r) for r in ex_df.limit(collect_examples).collect()]
     return AggregatedResult(
-        total_records=row["total"],
-        failed=row["failed"],
-        passed=row["passed"],
+        total_records=row[f"sql_total_{idx}"],
+        failed=failed,
+        passed=row[f"sql_passed_{idx}"],
         failed_example=examples,
     )
+
+
+def run_custom_sql_rule(
+    spark: SparkSession,
+    rule: CustomSqlRule,
+    context: Dict[str, Any],
+    collect_examples: int = 10,
+) -> AggregatedResult:
+    """Evaluate one CustomSqlRule on its own (its own ``spark.sql``
+    plan and counting action); ``QualityRunner`` instead counts its SQL
+    rules in ``run_column_rules``'s one action.
+
+    First result column must be boolean validity
+    (contessa/rules.py:84-87 raises ValueError otherwise);
+    ``only_failures_mode`` treats every returned row as a failure with
+    total_records=0 (contessa/rules.py:80-82). ``collect_examples=0``
+    skips the failed-example action, as in ``run_column_rules``.
+    """
+    out = rule.evaluate(spark, context)
+    row = _sql_counts(rule, out, 0).collect()[0]
+    return _sql_result(rule, out, row, 0, collect_examples)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from datetime import datetime, timezone
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from contessa_spark.results import CheckResult
@@ -72,8 +72,10 @@ class ConsistencyChecker:
             ctx.update(context)
         task_ts = ctx["task_ts"]
 
-        left = self._side(left_df, left_sql, method, columns, time_filter, task_ts, right_df, ctx)
-        right = self._side(right_df, right_sql, method, columns, time_filter, task_ts, right_df, ctx)
+        # one window predicate serves both sides
+        window = time_filter.predicate(task_ts) if isinstance(time_filter, TimeFilter) else None
+        left = self._side(left_df, left_sql, method, columns, window, right_df, ctx)
+        right = self._side(right_df, right_sql, method, columns, window, right_df, ctx)
 
         if method == self.COUNT:
             results = self._compare_counts(left, right)
@@ -141,15 +143,14 @@ class ConsistencyChecker:
         custom_sql: Optional[str],
         method: str,
         columns: Optional[List[str]],
-        time_filter,
-        task_ts: datetime,
+        window: Optional[Column],
         right_df: DataFrame,
         ctx: Dict,
     ) -> DataFrame:
         if custom_sql:
             return self.spark.sql(render_jinja_sql(custom_sql, ctx))
-        if time_filter is not None and isinstance(time_filter, TimeFilter):
-            df = df.where(time_filter.predicate(task_ts))
+        if window is not None:
+            df = df.where(window)
         if method == self.COUNT:
             if columns:
                 # count(c1, c2, ...) counts rows where all cols non-null
@@ -157,7 +158,7 @@ class ConsistencyChecker:
                 for c in columns:
                     p = F.col(c).isNotNull()
                     cond = p if cond is None else (cond & p)
-                return df.agg(F.count(F.when(cond, F.lit(1))).alias("cnt"))
+                return df.agg(F.count_if(cond).alias("cnt"))
             return df.agg(F.count(F.lit(1)).alias("cnt"))
         # DIFF: explicit column list, defaulting to right side's columns
         # sorted by name (order-insensitive, consistency_checker.py:134-142)
@@ -197,12 +198,9 @@ class ConsistencyChecker:
         left's column names POSITIONALLY, mirroring INTERSECT's
         positional schema alignment."""
         cols = left.columns
-        u = left.select(
-            *cols, F.lit(1).alias("_in_l"), F.lit(0).alias("_in_r")
-        ).unionByName(
-            right.toDF(*cols).select(
-                *cols, F.lit(0).alias("_in_l"), F.lit(1).alias("_in_r")
-            )
+        one, zero = F.lit(1), F.lit(0)
+        u = left.withColumns({"_in_l": one, "_in_r": zero}).unionByName(
+            right.toDF(*cols).withColumns({"_in_l": zero, "_in_r": one})
         )
         return u.groupBy(*cols).agg(
             F.max("_in_l").alias("_l"), F.max("_in_r").alias("_r")
@@ -213,34 +211,27 @@ class ConsistencyChecker:
         left: DataFrame, right: DataFrame, collect_examples: int
     ) -> AggregatedResult:
         # Python-set semantics ⇒ distinct set ops, computed in ONE scan
-        # of each side (_tag_presence) and ONE counting job. The tagged
-        # frame is cached so the optional examples collect is a cache
-        # read, not a recompute of both scans.
+        # of each side (_tag_presence) and ONE action: the counters'
+        # one-row aggregate is cross-joined to the first
+        # ``collect_examples`` differing rows, gathered into one list.
+        # Both branches hold the same tagged subtree, so Spark's
+        # exchange reuse shuffles each side once; nothing is cached.
         g = ConsistencyChecker._tag_presence(left, right)
+        # every group holds at least one side: equal flags mean both
+        both = F.col("_l") == F.col("_r")
+        counts = g.agg(
+            F.count_if(both).alias("passed"), F.count_if(~both).alias("failed")
+        )
         if collect_examples:
-            g = g.persist()
-        try:
-            row = g.agg(
-                F.count(F.when(F.col("_l") + F.col("_r") == 2, 1)).alias(
-                    "passed"
-                ),
-                F.count(F.when(F.col("_l") + F.col("_r") == 1, 1)).alias(
-                    "failed"
-                ),
-            ).collect()[0]
-            passed, failed = row["passed"], row["failed"]
-            examples = []
-            if collect_examples and failed:
-                examples = [
-                    tuple(r)
-                    for r in g.where(F.col("_l") + F.col("_r") == 1)
-                    .select(*left.columns)
-                    .limit(collect_examples)
-                    .collect()
-                ]
-        finally:
-            if collect_examples:
-                g.unpersist()
+            counts = counts.crossJoin(
+                g.where(~both)
+                .select(F.struct(*left.columns).alias("row"))
+                .limit(collect_examples)
+                .agg(F.collect_list("row").alias("examples"))
+            )
+        row = counts.collect()[0]
+        passed, failed = row["passed"], row["failed"]
+        examples = [tuple(r) for r in row["examples"]] if collect_examples else []
         return AggregatedResult(
             total_records=passed + failed,
             failed=failed,

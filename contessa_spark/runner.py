@@ -11,11 +11,12 @@ mapping (SURVEY §3.1):
 4. ensure result table / else in-memory ``CheckResult``;
 5. execute — **one DataFrame pass for all Column rules** (the
    idiomatic-Spark win over the reference's per-rule scans,
-   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule. A
-   persisted run fetches no failed examples (the QualityCheck row has
-   no column for them), so its only Spark jobs are these counting
-   scans; the in-memory run also collects up to ``collect_examples``
-   failing values per rule;
+   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule, all
+   counted by ONE action (``compiler.run_column_rules``). A persisted
+   run fetches no failed examples (the QualityCheck row has no column
+   for them), so that counting action is its only Spark work; the
+   in-memory run also collects up to ``collect_examples`` failing
+   values per rule;
 6. enrich with percentages/status/30-day medians (medians computed
    BEFORE merging the current rows — contessa ordering caveat,
    models.py:111 vs runner.py:58). A parquet result table is read
@@ -36,7 +37,9 @@ from typing import Dict, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
-from contessa_spark.compiler import run_column_rules, run_custom_sql_rule
+# run_custom_sql_rule is not called here; it stays importable from this
+# module for callers that wrap or patch the runner's entry points
+from contessa_spark.compiler import run_column_rules, run_custom_sql_rule  # noqa: F401
 from contessa_spark.normalizer import RuleNormalizer
 from contessa_spark.results import (
     QUALITY_CHECK_SCHEMA,
@@ -101,16 +104,9 @@ class QualityRunner:
         sql_rules = [r for r in rules if isinstance(r, CustomSqlRule)]
 
         n_examples = 0 if result_table_path else collect_examples
-        agg_results = {}
-        for rule, res in zip(
-            column_rules,
-            run_column_rules(check_df, column_rules, task_ts, n_examples),
-        ):
-            agg_results[id(rule)] = res
-        for rule in sql_rules:
-            agg_results[id(rule)] = run_custom_sql_rule(
-                self.spark, rule, ctx, n_examples
-            )
+        sql_frames = [(rule, rule.evaluate(self.spark, ctx)) for rule in sql_rules]
+        counted = run_column_rules(check_df, column_rules, task_ts, n_examples, sql_frames)
+        agg_results = {id(rule): res for rule, res in zip(column_rules + sql_rules, counted)}
         ordered = [agg_results[id(r)] for r in rules]
 
         if result_table_path:

@@ -1,6 +1,7 @@
 import contextlib
 import os
 import sys
+import time
 
 import pytest
 
@@ -34,6 +35,56 @@ def leaves_nothing(spark):
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), "cached plans left behind"
 
     return check
+
+
+class JobGroups:
+    """Spark jobs and SQL executions per job group. ``label(fn, group)``
+    is ``fn`` with its Spark jobs in job group ``group``; ``counts``
+    gives each group's jobs and SQL executions (distinct
+    ``spark.sql.execution.id``: one per DataFrame action, however many
+    jobs AQE splits it into)."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.sc = spark.sparkContext
+
+    def label(self, fn, group):
+        sc = self.sc
+
+        def wrapped(*args, **kwargs):
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return wrapped
+
+    def counts(self, groups):
+        """``{group: (jobs, executions)}``, once the status listeners
+        have seen every job so far: the job and SQL listeners share one
+        queue, and a sentinel job is registered only after all earlier
+        events."""
+        tracker, jvm = self.sc.statusTracker(), self.sc._jvm
+        sentinel = f"sentinel-{time.monotonic_ns()}"
+        self.label(lambda: self.sc.parallelize([1], 1).count(), sentinel)()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(sentinel):
+            assert time.time() < deadline, "job listener never caught up"
+            time.sleep(0.05)
+        to_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+        store = self.spark._jsparkSession.sharedState().statusStore()
+        execution_jobs = [set(to_java(ex.jobs()).keySet()) for ex in to_java(store.executionsList())]
+        out = {}
+        for g in groups:
+            jobs = set(tracker.getJobIdsForGroup(g))
+            out[g] = (len(jobs), sum(1 for ids in execution_jobs if ids & jobs))
+        return out
+
+
+@pytest.fixture
+def job_groups(spark):
+    return JobGroups(spark)
 
 
 #: letters of the high-vocabulary corpus: lowercase Latin, Latin-1,

@@ -180,3 +180,27 @@ def test_count_is_one_action_with_signed_failed(spark, left, monkeypatch):
     assert len(actions) == 1
     assert (res.total_records, res.failed, res.passed) == (4, -1, 3)
     assert res.status == "invalid"
+
+
+def test_diff_is_one_action_and_caches_nothing(spark, job_groups, leaves_nothing):
+    """DIFF with examples returns its counts and at most
+    ``collect_examples`` rows of the symmetric difference from one SQL
+    execution, and leaves no persisted RDD or cached plan behind."""
+    lo = spark.range(0, 30).selectExpr("id", "CAST(id % 7 AS STRING) AS tag", "NULL AS note")
+    hi = spark.range(15, 40).selectExpr("id", "CAST(id % 7 AS STRING) AS tag", "NULL AS note")
+    cc = ConsistencyChecker(spark)
+    run = job_groups.label(cc.run, "diff_examples")
+    with leaves_nothing():
+        res = run("diff", lo, hi, context={"task_ts": TASK_TS}, collect_examples=10)
+    assert job_groups.counts(["diff_examples"])["diff_examples"][1] == 1
+    # 15 rows in both, 15 only left, 10 only right (Python-set semantics)
+    assert (res.total_records, res.passed, res.failed) == (40, 15, 25)
+    declarative = ConsistencyChecker.diff_compare_df(lo, hi).collect()[0]
+    assert (res.passed, res.failed) == (declarative["passed"], declarative["failed"])
+    # rows compare on the right side's columns sorted by name
+    cols = sorted(hi.columns)
+    l_rows = {tuple(r) for r in lo.select(*cols).collect()}
+    r_rows = {tuple(r) for r in hi.select(*cols).collect()}
+    assert len(res.failed_example) == 10
+    assert set(res.failed_example) <= l_rows ^ r_rows
+    assert len(set(res.failed_example)) == 10

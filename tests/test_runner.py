@@ -1,7 +1,6 @@
 """End-to-end runner parity (test/integration/test_runner.py:89-153,
 FIXTURES.md F4) + persistence/upsert/median semantics."""
 
-import time
 from datetime import date, datetime, timedelta, timezone
 
 import pytest
@@ -187,38 +186,11 @@ def test_custom_sql_strict_jinja(spark, booking):
         runner.run(bad, booking, context={"task_ts": TASK_TS})
 
 
-def _labelled(spark, fn, group):
-    """``fn`` with its Spark jobs tagged as job group ``group``."""
-    sc = spark.sparkContext
-
-    def wrapped(*args, **kwargs):
-        sc.setJobGroup(group, group)
-        try:
-            return fn(*args, **kwargs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-
-    return wrapped
-
-
-def _job_counts(spark, groups):
-    """Jobs per group, once the listener has seen every job so far: a
-    sentinel job is registered only after all earlier ones."""
-    sc = spark.sparkContext
-    _labelled(spark, lambda: sc.parallelize([1], 1).count(), "sentinel")()
-    deadline = time.time() + 30
-    while not sc.statusTracker().getJobIdsForGroup("sentinel"):
-        assert time.time() < deadline, "job listener never caught up"
-        time.sleep(0.05)
-    return {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
-
-
-def test_persisted_run_jobs_are_counting_scans_only(spark, booking, tmp_path, monkeypatch):
+def test_persisted_run_jobs_are_counting_scans_only(spark, booking, tmp_path, monkeypatch, job_groups):
     """A persisted run merges and takes its 30-day medians on the driver
-    (no Spark job) and fetches no failed examples: the column rules
-    cost exactly one counting scan, the same jobs as a bare count."""
-    from pyspark.sql import functions as F
-
+    (no Spark job) and fetches no failed examples: its column rules and
+    its custom-SQL rule are counted by exactly one SQL execution (one
+    action), and ``run_custom_sql_rule`` is never called."""
     path = str(tmp_path / "quality_check_booking")
     ctx = {"schema_name": "tmp", "table_name": "booking_all_v2"}
     yesterday = TASK_TS - timedelta(days=1)
@@ -227,26 +199,61 @@ def test_persisted_run_jobs_are_counting_scans_only(spark, booking, tmp_path, mo
         RULES, booking, check_table=ctx, result_table_path=path,
         context={"task_ts": yesterday}, today=yesterday.date(),
     )
-    for name in ("run_column_rules", "run_custom_sql_rule", "medians_30_day",
-                 "read_result_table"):
-        monkeypatch.setattr(runner_mod, name, _labelled(spark, getattr(runner_mod, name), name))
-    monkeypatch.setattr(
-        ParquetMergeWriter, "merge", _labelled(spark, ParquetMergeWriter.merge, "merge")
-    )
+    groups = ["run_column_rules", "run_custom_sql_rule", "medians_30_day", "read_result_table"]
+    for name in groups:
+        monkeypatch.setattr(runner_mod, name, job_groups.label(getattr(runner_mod, name), name))
+    monkeypatch.setattr(ParquetMergeWriter, "merge", job_groups.label(ParquetMergeWriter.merge, "merge"))
     rows = QualityRunner(spark).run(
         RULES, booking, check_table=ctx, result_table_path=path,
         context={"task_ts": TASK_TS}, today=TASK_TS.date(),
     )
-    _labelled(spark, lambda: booking.agg(F.count(F.lit(1))).collect(), "bare_count")()
-    jobs = _job_counts(spark, ["run_column_rules", "run_custom_sql_rule", "medians_30_day",
-                               "read_result_table", "merge", "bare_count"])
-    assert jobs["medians_30_day"] == jobs["read_result_table"] == jobs["merge"] == 0
-    assert jobs["bare_count"] >= 1
-    assert jobs["run_column_rules"] == jobs["bare_count"]
-    assert jobs["run_custom_sql_rule"] == jobs["bare_count"]
+    counts = job_groups.counts(groups + ["merge"])
+    assert counts["run_column_rules"][0] >= 1
+    assert counts["run_column_rules"][1] == 1
+    for name in ("run_custom_sql_rule", "medians_30_day", "read_result_table", "merge"):
+        assert counts[name] == (0, 0), name
+    assert {r["rule_name"]: (r["total_records"], r["passed"], r["failed"]) for r in rows} == {
+        "not_null_name": (3, 2, 1), "gt_name": (3, 0, 3), "sql_name": (4, 3, 1), "not_name": (4, 3, 1),
+    }
     # the medians saw yesterday's rows; the merge kept them
     assert {r["median_30_day_failed"] for r in rows} == {1.0}
     assert spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path).count() == 8
+
+
+def test_sql_rules_counted_with_the_column_rules(spark, booking):
+    """Custom-SQL rules counted in ``run_column_rules``'s one action
+    give what ``run_custom_sql_rule`` gives for each alone, in
+    ``only_failures_mode`` too, with results in rule order."""
+    from contessa_spark.compiler import run_column_rules, run_custom_sql_rule
+
+    booking.createOrReplaceTempView("booking_sql_rules")
+    sql_rules = QualityRunner.build_rules([
+        {"name": "s", "type": "sql", "sql": CUSTOM_SQL, "column": "c", "description": "d"},
+        {"name": "f", "type": "sql", "column": "c", "description": "d", "only_failures_mode": True,
+         "sql": "SELECT id, src FROM {{ table_fullname }} WHERE price > 3"},
+    ])
+    (gt,) = QualityRunner.build_rules([{"name": "g", "type": "gt", "column": "price", "value": 3}])
+    ctx = {"task_ts": TASK_TS, "table_fullname": "booking_sql_rules"}
+    frames = [(r, r.evaluate(spark, ctx)) for r in sql_rules]
+    together = run_column_rules(booking, [gt], TASK_TS, 10, frames)
+    alone = [run_custom_sql_rule(spark, r, ctx, 10) for r in sql_rules]
+    assert [(r.total_records, r.passed, r.failed) for r in together] == [(4, 3, 1), (4, 3, 1), (0, 0, 3)]
+    def key(r):
+        return r.total_records, r.passed, r.failed, sorted(r.failed_example)
+
+    assert [key(r) for r in together[1:]] == [key(r) for r in alone]
+    assert sorted(together[2].failed_example) == [(2, None), (3, "VIE"), (4, "VIE")]
+
+
+def test_non_boolean_sql_rule_raises_before_any_action(spark, booking, job_groups):
+    """contessa/rules.py:84-87: a custom-SQL rule whose first column is
+    not boolean raises ValueError, and no counting action runs."""
+    bad = [{"name": "s", "type": "sql", "column": "c", "description": "d",
+            "sql": "SELECT price FROM {{ table_fullname }}"}]
+    run = job_groups.label(QualityRunner(spark).run, "bad_sql_rule")
+    with pytest.raises(ValueError, match="list of booleans"):
+        run(RULES[:2] + bad, booking, context={"task_ts": TASK_TS})
+    assert job_groups.counts(["bad_sql_rule"])["bad_sql_rule"] == (0, 0)
 
 
 def test_in_memory_run_returns_failed_examples(spark, booking):

@@ -220,3 +220,26 @@ def test_one_embedding_batch_kernel():
                 norm_calls.append(path)
     assert inference == ["contessa_spark/vectors.py"], inference
     assert not norm_calls, norm_calls
+
+
+def test_perfbench_trace_targets_resolve(tmp_path):
+    """Every ``(owner, attr)`` a perfbench workload's ``patch_targets``
+    wraps in a traced run still exists where the tracer looks it up: a
+    module attribute, or a name in a class's own ``__dict__``. A
+    library refactor that moves one would make every traced op raise."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_workloads", os.path.join(REPO, "perfbench", "workloads.py")
+    )
+    workloads = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(workloads)
+    missing, seen = [], 0
+    for name, cls in workloads.WORKLOADS.items():
+        for owner, attr, _span in cls(str(tmp_path / name), 0, None).patch_targets():
+            seen += 1
+            found = owner.__dict__.get(attr) if isinstance(owner, type) else getattr(owner, attr, None)
+            if found is None:
+                missing.append(f"{name}: {owner.__name__}.{attr}")
+    assert seen, "no workload declares trace targets"
+    assert not missing, missing
