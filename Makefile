@@ -16,7 +16,8 @@ oracles:
 	  SPARK_GRAFT_ORACLE_SF=/root/testdata/sf$$sf $(PY) -m pytest tests/test_oracle_parity.py -q -p no:cacheprovider || rc=1; \
 	done; exit $$rc
 
-# sha256 row digests of the word-level and embedding queries at sf0.001/0.01/0.1
+# sha256 row digests of the word-level, embedding, per-row text UDF, summary
+# and media queries at sf0.001/0.01/0.1
 # (scripts/row_digest.py); ROWS_BASE=<earlier digest file> also
 # compares them and fails if any differ
 rows:

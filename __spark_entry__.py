@@ -94,7 +94,7 @@ def _documents_footer(sf_dir: str):
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table, round-robin repartitioned up to the
     session's parallelism when the file has fewer row groups than that.
-    A pandas-UDF stage inherits the scan partitioning, and a row group
+    A Python UDF stage inherits the scan partitioning, and a row group
     is the smallest unit a scan split reads: the small-SF documents
     table is ONE row group, so without this the entire Python stage of
     a dedup query serializes onto one core (measured: the whole 2 s

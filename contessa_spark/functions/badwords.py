@@ -9,7 +9,7 @@ Two paths, chosen by what the blocklist contains:
   against the lowercased word array (codegen, zero UDF, and the exact
   predicate re-expresses as DuckDB ``list_has_any`` — oracle-shared).
 * ``phrase_hits_udf``: multi-word PHRASES / substrings → a driver-built
-  Aho-Corasick automaton closed over a pandas UDF. One pass over the
+  Aho-Corasick automaton closed over an ``arrow_udf``. One pass over the
   text counts occurrences of ALL patterns simultaneously — a regex
   alternation of thousands of phrases is quadratic-ish in practice and
   blows the regex compiler long before that (the real C4 list is ~400
@@ -40,6 +40,7 @@ from __future__ import annotations
 from collections import deque
 from typing import Iterable, List, Tuple
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -262,7 +263,7 @@ def ac_count_batch(texts, dense, seg_len: int = 512, block_rows: int = 8192):
     seg_len = max(seg_len, ov, 1)
     width = ov + seg_len
 
-    bs = [(t.lower() if isinstance(t, str) else "").encode("utf-8") for t in texts]
+    bs = [(t or "").lower().encode("utf-8") for t in texts]
     lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=n)
     total_bytes = int(lens.sum())
     if total_bytes == 0:
@@ -371,18 +372,14 @@ def ac_count_batch(texts, dense, seg_len: int = 512, block_rows: int = 8192):
 
 
 def phrase_hits_udf(patterns: Iterable[str]):
-    """pandas UDF: text → BIGINT occurrence count over all patterns
+    """``arrow_udf``: text → BIGINT occurrence count over all patterns
     (vectorized dense-DFA batch kernel — see ``ac_count_batch``)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     dense = build_ac_dense(patterns)
 
-    def _hits(texts):
-        return pd.Series(ac_count_batch(list(texts), dense), dtype="int64")
+    def _hits(texts: pa.Array) -> pa.Array:
+        return pa.array(ac_count_batch(texts.to_pylist(), dense), pa.int64())
 
-    _hits.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_hits, T.LongType())
+    return F.arrow_udf(_hits, "bigint")
 
 
 def badword_stats(

@@ -20,7 +20,7 @@ fixed hashed-bigram scorer, re-expressed Spark-first:
   lower orders, and back-off weights computed as RESIDUAL mass — so
   every conditional stays a proper distribution even when pruning
   dropped grams (the sum-to-one test asserts this directly).
-* **scoring is one fused pandas UDF** over the closure-broadcast
+* **scoring is one fused ``arrow_udf``** over the closure-broadcast
   model: per document, position i is scored with the longest order
   available (unigram at doc start, bigram next, n-gram beyond) and
   perplexity = exp(-mean log P). Zero shuffles, text crosses the
@@ -42,6 +42,7 @@ import math
 import re
 from typing import Dict, List, Optional, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,7 +74,7 @@ def _java_ws_re():
 
 
 def _grams_udf(n: int):
-    """pandas UDF: text → array<string> of space-joined word n-grams.
+    """``arrow_udf``: text → array<string> of space-joined word n-grams.
 
     Replaces the ``transform(sequence, i -> concat_ws(slice(words)))``
     Column form: higher-order array lambdas are interpreted per
@@ -82,19 +83,13 @@ def _grams_udf(n: int):
     identical gram multiset (exactness checked by groupBy-count diff
     and the DuckDB oracle). Tokenization uses the Java-exact
     whitespace class so oracle agreement is preserved even on control
-    codes."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    codes. A NULL text has no grams."""
     ws = _java_ws_re()
 
-    def _g(texts):
+    def _g(texts: pa.Array) -> pa.Array:
         out = []
-        for t in texts:
-            if not isinstance(t, str):
-                out.append([])
-                continue
-            w = [x for x in ws.split(t) if x]
+        for t in texts.to_pylist():
+            w = [x for x in ws.split(t or "") if x]
             if len(w) < n:
                 out.append([])
                 continue
@@ -104,29 +99,23 @@ def _grams_udf(n: int):
                 out.append(
                     [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
                 )
-        return pd.Series(out)
+        return pa.array(out, pa.list_(pa.string()))
 
-    _g.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_g, T.ArrayType(T.StringType()))
+    return F.arrow_udf(_g, "array<string>")
 
 
 def _tagged_grams_udf(order: int):
-    """pandas UDF: text → array<struct<k:int, gram:string>> of every
+    """``arrow_udf``: text → array<struct<k:int, gram:string>> of every
     order's grams 1..order, concatenated — the one-scan multi-order
     form ``all_order_counts`` explodes (same UDF economics as
     ``_grams_udf``)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     ws = _java_ws_re()
+    gram_type = pa.list_(pa.struct([("k", pa.int32()), ("gram", pa.string())]))
 
-    def _g(texts):
+    def _g(texts: pa.Array) -> pa.Array:
         out = []
-        for t in texts:
-            if not isinstance(t, str):
-                out.append([])
-                continue
-            w = [x for x in ws.split(t) if x]
+        for t in texts.to_pylist():
+            w = [x for x in ws.split(t or "") if x]
             tagged = []
             for k in range(1, order + 1):
                 if len(w) < k:
@@ -139,20 +128,9 @@ def _tagged_grams_udf(order: int):
                         for i in range(len(w) - k + 1)
                     )
             out.append(tagged)
-        return pd.Series(out)
+        return pa.array(out, gram_type)
 
-    _g.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(
-        _g,
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("k", T.IntegerType()),
-                    T.StructField("gram", T.StringType()),
-                ]
-            )
-        ),
-    )
+    return F.arrow_udf(_g, "array<struct<k:int, gram:string>>")
 
 
 def ngram_counts(
@@ -410,19 +388,12 @@ def train_kn(
 
 
 def kn_perplexity_udf(model: KNModel):
-    """pandas UDF: text → KN perplexity (model closure-broadcast)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    """``arrow_udf``: text → KN perplexity (model closure-broadcast)."""
 
-    def _ppl(texts):
-        return pd.Series(
-            [model.perplexity(t if isinstance(t, str) else None)
-             for t in texts],
-            dtype="float64",
-        )
+    def _ppl(texts: pa.Array) -> pa.Array:
+        return pa.array([model.perplexity(t) for t in texts.to_pylist()], pa.float64())
 
-    _ppl.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_ppl, T.DoubleType())
+    return F.arrow_udf(_ppl, "double")
 
 
 def kn_perplexity(

@@ -11,7 +11,7 @@ Everything is derived from the seed corpora below at import time — no
 model files, no RNG, bit-identical across partitions and processes
 (the determinism requirement of BASELINE.json's per-row invariant).
 
-Spark binding: a scalar pandas UDF returning a struct
+Spark binding: a scalar ``arrow_udf`` returning a struct
 (lang_pred string, lang_conf double). The per-doc loop lives inside
 the Arrow batch (vectorized transfer, numpy scoring) — no Spark-level
 row-at-a-time Python.
@@ -22,6 +22,7 @@ from __future__ import annotations
 from typing import List, Tuple
 
 import numpy as np
+import pyarrow as pa
 
 N_BUCKETS = 1024
 
@@ -184,30 +185,22 @@ def detect(text: str) -> Tuple[str, float]:
 def detect_batch(texts) -> Tuple[List[str], List[float]]:
     langs, confs = [], []
     for t in texts:
-        l, c = detect(t if isinstance(t, str) else "")
+        l, c = detect(t or "")
         langs.append(l)
         confs.append(c)
     return langs, confs
 
 
 def spark_udf():
-    """Scalar pandas UDF: text → struct(lang_pred, lang_conf)."""
-    import pandas as pd
+    """Scalar ``arrow_udf``: text → struct(lang_pred, lang_conf); a NULL
+    text scores as the empty text."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    out_type = T.StructType(
-        [
-            T.StructField("lang_pred", T.StringType()),
-            T.StructField("lang_conf", T.DoubleType()),
-        ]
-    )
+    def _langid(texts: pa.Array) -> pa.Array:
+        langs, confs = detect_batch(texts.to_pylist())
+        return pa.StructArray.from_arrays(
+            [pa.array(langs, pa.string()), pa.array(confs, pa.float64())],
+            names=["lang_pred", "lang_conf"],
+        )
 
-    def _langid(texts):
-        langs, confs = detect_batch(texts.fillna(""))
-        return pd.DataFrame({"lang_pred": langs, "lang_conf": confs})
-
-    # set real (non-string) hints: `from __future__ import annotations`
-    # would otherwise leave strings pyspark can't resolve in this scope
-    _langid.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(_langid, out_type)
+    return F.arrow_udf(_langid, "lang_pred string, lang_conf double")

@@ -1,7 +1,7 @@
 """PII + toxicity scrubbing.
 
 One pure function, ``scrub_text``, is the single source of truth for
-both the Spark pandas UDF and the test oracle — that is what makes the
+both the Spark ``arrow_udf`` and the test oracle — that is what makes the
 scrubbed text byte-identical per url (BASELINE.json per-row
 invariant). Python ``re`` is the authoritative regex engine on both
 sides; the Spark side never re-implements the patterns in Java regex.
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import re
 from typing import List, Tuple
+
+import pyarrow as pa
 
 EMAIL_RE = re.compile(r"[\w.+-]+@[\w-]+\.[\w.-]+")
 SSN_RE = re.compile(r"\b\d{3}-\d{2}-\d{4}\b")
@@ -62,10 +64,11 @@ def scrub_text(text: str) -> str:
 
 
 def scrub_batch(texts) -> Tuple[List[str], List[bool]]:
-    """(scrubbed, changed) per text."""
+    """(scrubbed, changed) per text; a NULL text scrubs as the empty
+    text."""
     scrubbed, changed = [], []
     for t in texts:
-        t = t if isinstance(t, str) else ""
+        t = t or ""
         s = scrub_text(t)
         scrubbed.append(s)
         changed.append(s != t)
@@ -73,21 +76,14 @@ def scrub_batch(texts) -> Tuple[List[str], List[bool]]:
 
 
 def spark_udf():
-    """pandas UDF: text → struct(scrubbed_text string, pii_changed boolean)."""
-    import pandas as pd
+    """``arrow_udf``: text → struct(scrubbed_text string, pii_changed boolean)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    out_type = T.StructType(
-        [
-            T.StructField("scrubbed_text", T.StringType()),
-            T.StructField("pii_changed", T.BooleanType()),
-        ]
-    )
+    def _scrub(texts: pa.Array) -> pa.Array:
+        scrubbed, changed = scrub_batch(texts.to_pylist())
+        return pa.StructArray.from_arrays(
+            [pa.array(scrubbed, pa.string()), pa.array(changed, pa.bool_())],
+            names=["scrubbed_text", "pii_changed"],
+        )
 
-    def _scrub(texts):
-        scrubbed, changed = scrub_batch(texts)
-        return pd.DataFrame({"scrubbed_text": scrubbed, "pii_changed": changed})
-
-    _scrub.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return F.pandas_udf(_scrub, out_type)
+    return F.arrow_udf(_scrub, "scrubbed_text string, pii_changed boolean")

@@ -13,7 +13,7 @@ identical documents hash identically.
   succeeds AND it strictly reduces the artifact count — never a lossy
   guess; up to two passes (double-mojibake happens in real crawls).
 
-Spark shape: one vectorized pandas UDF, no shuffle; pure cores shared
+Spark shape: one ``arrow_udf``, no shuffle; pure cores shared
 with tests. The NFC half is oracle-comparable (DuckDB
 ``nfc_normalize`` — utf8proc — agrees with CPython's unicodedata on
 the normalization forms); mojibake repair is pytest-gated (golden
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import unicodedata
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,19 +67,10 @@ def py_normalize(text: str, mojibake: bool = True) -> str:
 
 
 def normalize_text_udf(mojibake: bool = True):
-    import pandas as pd
-    from pyspark.sql import types as T
+    def _norm(texts: pa.Array) -> pa.Array:
+        return pa.array([py_normalize(t or "", mojibake) for t in texts.to_pylist()], pa.string())
 
-    def _norm(texts):
-        return pd.Series(
-            [
-                py_normalize(t if isinstance(t, str) else "", mojibake)
-                for t in texts
-            ]
-        )
-
-    _norm.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return F.pandas_udf(_norm, T.StringType())
+    return F.arrow_udf(_norm, "string")
 
 
 def normalize_text(

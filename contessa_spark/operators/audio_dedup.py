@@ -18,7 +18,7 @@ under positive amplitude scaling (a volume change multiplies every
 energy by the same factor, which cancels from both sides — the
 audio analogue of the image dHash's brightness invariance).
 
-Spark-first shape: ONE ``mapInPandas`` pass parses the RIFF
+Spark-first shape: ONE ``mapInArrow`` pass parses the RIFF
 container and hashes (numpy integer sums per Arrow batch); candidate
 generation and verification reuse the modality-agnostic
 :func:`~contessa_spark.operators.image_dedup.hamming_near_dups`
@@ -33,8 +33,9 @@ Reference parity: no counterpart in contessa (SURVEY.md §2 extension
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from contessa_spark.operators.image_dedup import hamming_near_dups
@@ -113,21 +114,18 @@ def audio_afp(
 ) -> DataFrame:
     """(id, afp) per clip — NULL for undecodable / too-short
     payloads.  One Arrow pass."""
-    import pandas as pd
 
-    out_schema = f"{id_col} long, afp long"
-
-    def hash_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
+    def hash_batches(batches):
+        for b in batches:
             hashes = []
-            for payload in pdf[payload_col]:
-                s = wav_pcm16_samples(bytes(payload)) if payload is not None else None
+            for payload in b.column(1).to_pylist():
+                s = wav_pcm16_samples(payload) if payload is not None else None
                 hashes.append(afp32_from_samples(s) if s is not None else None)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "afp": pd.array(hashes, dtype="Int64")}
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).cast(pa.int64()), pa.array(hashes, pa.int64())], names=[id_col, "afp"]
             )
 
-    return df.select(id_col, payload_col).mapInPandas(hash_batches, schema=out_schema)
+    return df.select(id_col, payload_col).mapInArrow(hash_batches, schema=f"{id_col} long, afp long")
 
 
 def audio_near_dups(

@@ -16,7 +16,7 @@ so every item with frequency > εN is guaranteed present (no false
 negatives above the threshold), and reported estimates never
 overcount.
 
-Spark-first plan: ``mapInPandas`` runs the classic counter algorithm
+Spark-first plan: ``mapInArrow`` runs the classic counter algorithm
 per Arrow batch stream (value_counts-vectorized, not per-row Python:
 each batch's exact counts feed the MG state, decrements amortize), one
 summary row per (group, item) candidate; a groupBy-sum merges partial
@@ -40,6 +40,9 @@ from __future__ import annotations
 
 from typing import List, Sequence, Union
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -67,15 +70,13 @@ def misra_gries_topk(
     decrements, reported exactly in ``max_undercount`` — identical for
     every row of a group). est_count never exceeds the true count.
 
-    Plan: the ``mapInPandas`` summary emits item rows with
+    Plan: the ``mapInArrow`` summary emits item rows with
     ``part_dec = 0`` and one NULL-item row per (partition, group) with
     a decrement; ``groupBy(*group_cols, item)`` sums both columns;
     ``max_undercount`` is ``sum(_dec)`` over ``partitionBy(*group_cols)``;
     NULL items drop, then ``row_number`` ranks over the same window
     partitioning. A NULL group key is a group like any other.
     """
-    import pandas as pd
-
     gc = _cols(group_cols)
     sel = gc + [value_col]
     src = df.select(*sel).where(F.col(value_col).isNotNull())
@@ -83,23 +84,25 @@ def misra_gries_topk(
     def summarize(batches):
         # state per group: {group_key: ({item: count}, decrement_total)}
         state: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keys = (
-                list(zip(*[pdf[c] for c in gc])) if gc else [()] * len(pdf)
-            )
-            kf = pd.Series(keys)
-            for gkey, sub in pdf.groupby(kf, sort=False):
+        for b in batches:
+            types = b.schema.types + [pa.int64(), pa.int64()]
+            keys = zip(*[b.column(c).to_pylist() for c in gc]) if gc else [()] * b.num_rows
+            rows_of: dict = {}
+            for i, gkey in enumerate(keys):
+                rows_of.setdefault(gkey, []).append(i)
+            for gkey, idx in rows_of.items():
                 counters, dec = state.get(gkey, ({}, 0))
                 # exact counts within the batch, then one MG update per
-                # DISTINCT item — vectorized, no per-row loop
-                vc = sub[value_col].value_counts()
-                for item, c in vc.items():
+                # DISTINCT item, count-descending (ties first-seen
+                # first) — vectorized, no per-row loop
+                vc = pc.value_counts(b.column(value_col).take(idx))
+                counts = vc.field("counts").to_numpy()
+                order = np.argsort(-counts, kind="stable")
+                for item, c in zip(vc.field("values").take(order).to_pylist(), counts[order].tolist()):
                     if item in counters:
-                        counters[item] += int(c)
+                        counters[item] += c
                     else:
-                        counters[item] = int(c)
+                        counters[item] = c
                         if len(counters) > capacity:
                             # decrement by the current minimum count:
                             # removes ≥1 counter, amortized O(1)
@@ -119,10 +122,12 @@ def misra_gries_topk(
                 # one NULL-item row carries this partition's decrement
                 # total (input NULLs are filtered, so NULL is free)
                 rows.append((*gkey, None, 0, dec))
-        cols = gc + ["item", "part_count", "part_dec"]
-        # object columns: a NULL item must not turn int64 items into
-        # float64, which rounds items above 2**53
-        yield pd.DataFrame(rows, columns=cols, dtype=object)
+        if not rows:
+            return
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(zip(*rows), types)],
+            names=gc + ["item", "part_count", "part_dec"],
+        )
 
     gtypes = [f"`{c}` {dict(src.dtypes)[c]}" for c in gc]
     vtype = dict(src.dtypes)[value_col]
@@ -134,7 +139,7 @@ def misra_gries_topk(
     # is its NULL row's _dec, spread by a window sum that shares the
     # rank's exchange on the group
     merged = (
-        src.mapInPandas(summarize, schema)
+        src.mapInArrow(summarize, schema)
         .groupBy(*gc, "item")
         .agg(
             F.sum("part_count").alias("est_count"),

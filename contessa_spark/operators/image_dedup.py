@@ -12,7 +12,7 @@ with the Hamming engine text SimHash uses,
 (pigeonhole), so grouping by (band, key) finds every candidate pair,
 and the xor/popcount verify inside each group's emission is exact.
 
-Spark-first shape: ONE ``mapInPandas`` pass decodes and hashes
+Spark-first shape: ONE ``mapInArrow`` pass decodes and hashes
 (binary payload crosses to Python once, numpy does the integer
 arithmetic); the band keys are JVM shift/mask expressions, and one
 capped ``mapInArrow`` group pass emits and verifies the pairs — no
@@ -34,8 +34,9 @@ Reference parity: no counterpart in contessa (SURVEY.md §2 extension
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from contessa_spark.operators.dedup import hamming_band_pairs
@@ -150,19 +151,18 @@ def image_dhash(
     One Arrow pass; currently decodes the 24-bit BMP container (the
     fully-decoded format family; PNG/GIF grids plug in the same
     way)."""
-    import pandas as pd
 
-    out_schema = f"{id_col} long, dhash long"
-
-    def hash_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
+    def hash_batches(batches):
+        for b in batches:
             hashes = []
-            for payload in pdf[payload_col]:
-                g = bmp24_gray_grid(bytes(payload)) if payload is not None else None
+            for payload in b.column(1).to_pylist():
+                g = bmp24_gray_grid(payload) if payload is not None else None
                 hashes.append(dhash64_from_gray(g) if g is not None else None)
-            yield pd.DataFrame({id_col: pdf[id_col], "dhash": pd.array(hashes, dtype="Int64")})
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).cast(pa.int64()), pa.array(hashes, pa.int64())], names=[id_col, "dhash"]
+            )
 
-    return df.select(id_col, payload_col).mapInPandas(hash_batches, schema=out_schema)
+    return df.select(id_col, payload_col).mapInArrow(hash_batches, schema=f"{id_col} long, dhash long")
 
 
 def hamming_near_dups(

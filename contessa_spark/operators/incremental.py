@@ -31,6 +31,8 @@ from __future__ import annotations
 import math
 from typing import Optional, Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,8 +55,6 @@ def bloom_params(n_items: int, fpp: float) -> Tuple[int, int]:
 
 def _positions(h1, m_bits: int, k: int):
     """Kirsch-Mitzenmacher: k positions from two derived hashes."""
-    import numpy as np
-
     z = (h1 + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
     z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(
         0xFFFFFFFFFFFFFFFF
@@ -76,13 +76,11 @@ def build_fingerprint_bloom(
     """(bloom_bytes, m_bits, k) over the seen corpus's fingerprints.
 
     One pass: each partition folds its fingerprints into a local
-    ``m/8``-byte bitmap (mapInPandas, one output row per partition);
+    ``m/8``-byte bitmap (mapInArrow, one output row per partition);
     the driver ORs the ≤ n_partitions bitmaps. No shuffle, driver
     memory = one bitmap. ``n_items`` (for auto-sizing) defaults to a
     ``count()`` of the seen side — pass it when known to skip that
     job."""
-    import numpy as np
-
     if m_bits is None or k is None:
         if n_items is None:
             n_items = seen_df.count()
@@ -98,21 +96,17 @@ def build_fingerprint_bloom(
     fps = seen_df.select(fingerprint_col(text_col).alias("_fp"))
 
     def _partition_bloom(batches):
-        import pandas as pd
-
         words = np.zeros(n_words, dtype=np.uint64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            h1 = fnv1a(pdf["_fp"])
+        for b in batches:
+            h1 = fnv1a(b.column(0))
             for pos in _positions(h1, m_bits, k):
                 np.bitwise_or.at(
                     words, (pos >> np.uint64(6)).astype(np.int64),
                     np.uint64(1) << (pos & np.uint64(63)),
                 )
-        yield pd.DataFrame({"bloom": [words.tobytes()]})
+        yield pa.RecordBatch.from_arrays([pa.array([words.tobytes()], pa.binary())], names=["bloom"])
 
-    parts = fps.mapInPandas(_partition_bloom, schema="bloom binary").collect()
+    parts = fps.mapInArrow(_partition_bloom, schema="bloom binary").collect()
     acc = np.zeros(n_words, dtype=np.uint64)
     for r in parts:
         acc |= np.frombuffer(r["bloom"], dtype=np.uint64)
@@ -138,30 +132,23 @@ def incremental_dedup(
     if method != "bloom":
         raise ValueError(f"unknown method {method!r}: anti_join | bloom")
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     bloom, m_bits, k = build_fingerprint_bloom(
         seen_df, text_col, fpp=fpp, n_items=seen_count
     )
     words = np.frombuffer(bloom, dtype=np.uint64)
 
-    def _unseen(fp_series):
-        if not len(fp_series):
-            return pd.Series([], dtype=bool)
-        h1 = fnv1a(fp_series)
-        hit = np.ones(len(fp_series), dtype=bool)
+    def _unseen(fps: pa.Array) -> pa.Array:
+        h1 = fnv1a(fps)
+        hit = np.ones(len(fps), dtype=bool)
         for pos in _positions(h1, m_bits, k):
             bit = (
                 words[(pos >> np.uint64(6)).astype(np.int64)]
                 >> (pos & np.uint64(63))
             ) & np.uint64(1)
             hit &= bit.astype(bool)
-        return pd.Series(~hit)
+        return pa.array(~hit)
 
-    _unseen.__annotations__ = {"fp_series": pd.Series, "return": pd.Series}
-    unseen = F.pandas_udf(_unseen, T.BooleanType())
+    unseen = F.arrow_udf(_unseen, "boolean")
     return (
         new_df.withColumn("_fp", fingerprint_col(text_col))
         .where(unseen(F.col("_fp")))

@@ -11,20 +11,23 @@ stub (no image/av libraries ship in this container) — swapping in
 Pillow/libav happens inside one function body; the distributed
 plumbing does not change.
 
-Batch-shape rule: media blobs are large, so all decode/feature UDFs
-run via ``mapInPandas`` with a capped Arrow batch size (set
+Batch-shape rule: media blobs are large, so all decode/feature passes
+run via ``mapInArrow`` over (media_id, payload) — each blob crosses to
+Python once as a ``bytes`` cell of an Arrow batch, and only the narrow
+typed result crosses back — with a capped Arrow batch size (set
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` ≈ 64 for multi-MB
-blobs) and rows should be bucketed by content hash so one partition
+blobs), and rows should be bucketed by content hash so one partition
 never holds all the hot items.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -926,31 +929,34 @@ def resize_png_bytes(payload: bytes, target_w: int, target_h: int) -> bytes:
     return _encode_png(out_rows, target_w, target_h, channels)
 
 
+def _map_payloads(df: DataFrame, row, schema: str) -> DataFrame:
+    """``mapInArrow`` over (media_id, payload) → ``schema``: one output
+    row per record, ``row(payload)`` (``bytes``, or None for a NULL
+    payload) giving its fields by name; a field it leaves out is NULL."""
+    arrow_schema = to_arrow_schema(T.StructType.fromDDL(schema))
+
+    def _map(batches):
+        for b in batches:
+            ids, payloads = b.column(0).to_pylist(), b.column(1).to_pylist()
+            rows = [{**row(p), "media_id": mid} for mid, p in zip(ids, payloads)]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.select("media_id", "payload").mapInArrow(_map, schema=schema)
+
+
 def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Real distributed resize for PNG payloads: mapInPandas over
+    """Real distributed resize for PNG payloads: mapInArrow over
     (media_id, payload) → (media_id, payload resized-PNG, ok). Non-PNG
     / corrupt payloads yield ok=False with a NULL payload (per-record
     containment, as everywhere in this module)."""
-    import pandas as pd
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    out = resize_png_bytes(
-                        bytes(payload) if payload is not None else b"",
-                        target_w,
-                        target_h,
-                    )
-                    rows.append({"media_id": mid, "payload": out, "ok": True})
-                except Exception:
-                    rows.append({"media_id": mid, "payload": None, "ok": False})
-            yield pd.DataFrame(rows)
+    def _resize(payload):
+        try:
+            return {"payload": resize_png_bytes(payload or b"", target_w, target_h), "ok": True}
+        except Exception:
+            return {"ok": False}
 
-    return df.select("media_id", "payload").mapInPandas(
-        _resize, schema="media_id long, payload binary, ok boolean"
-    )
+    return _map_payloads(df, _resize, "media_id long, payload binary, ok boolean")
 
 
 def fake_image_bytes(width: int, height: int, mean_byte: int) -> bytes:
@@ -1204,29 +1210,16 @@ VIDEO_SCHEMA = (
 
 
 def decode_video(df: DataFrame) -> DataFrame:
-    """mapInPandas MP4 metadata decode — per-record containment as in
+    """mapInArrow MP4 metadata decode — per-record containment as in
     ``decode_images``/``decode_audio``."""
-    import pandas as pd
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    d = decode_mp4_bytes(
-                        bytes(payload) if payload is not None else None
-                    )
-                except Exception:
-                    d = {
-                        "width": None, "height": None, "duration_ms": None,
-                        "timescale": None, "ok": False,
-                    }
-                d = dict(d)
-                d["media_id"] = mid
-                rows.append(d)
-            yield pd.DataFrame(rows)
+    def _decode(payload):
+        try:
+            return decode_mp4_bytes(payload)
+        except Exception:
+            return {"ok": False}
 
-    return df.select("media_id", "payload").mapInPandas(_decode, schema=VIDEO_SCHEMA)
+    return _map_payloads(df, _decode, VIDEO_SCHEMA)
 
 
 AUDIO_SCHEMA = (
@@ -1236,69 +1229,38 @@ AUDIO_SCHEMA = (
 
 
 def decode_audio(df: DataFrame) -> DataFrame:
-    """mapInPandas audio decode — same per-record containment contract
+    """mapInArrow audio decode — same per-record containment contract
     as ``decode_images`` (a corrupt blob yields an ok=False row)."""
-    import pandas as pd
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    d = decode_wav_bytes(
-                        bytes(payload) if payload is not None else None
-                    )
-                except Exception:
-                    d = {
-                        "sample_rate": None, "n_channels": None,
-                        "bits_per_sample": None, "n_frames": None,
-                        "duration_ms": None, "mean_abs": None, "ok": False,
-                    }
-                d = dict(d)
-                d["media_id"] = mid
-                rows.append(d)
-            yield pd.DataFrame(rows)
+    def _decode(payload):
+        try:
+            return decode_wav_bytes(payload)
+        except Exception:
+            return {"ok": False}
 
-    return df.select("media_id", "payload").mapInPandas(_decode, schema=AUDIO_SCHEMA)
+    return _map_payloads(df, _decode, AUDIO_SCHEMA)
 
 
 def decode_images(df: DataFrame) -> DataFrame:
-    """mapInPandas decode: batches of (media_id, payload) → metadata.
+    """mapInArrow decode: batches of (media_id, payload) → metadata.
 
-    The pattern to copy for real decoders: per-batch loop over binary
-    cells inside an Arrow batch, output a narrow typed frame, never
+    The pattern to copy for real decoders: per-record loop over the
+    binary cells of an Arrow batch, output a narrow typed batch, never
     carry the blob forward.
     """
-    import pandas as pd
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # per-record containment: one truncated/corrupt blob in
-                # a 10^12-doc crawl must yield an ok=False ROW, not fail
-                # the job after task retries. NotImplementedError stays
-                # fatal on purpose — an unrouted format is a pipeline
-                # configuration error (gate on mime upstream), not data
-                # corruption.
-                try:
-                    d = decode_image_bytes(
-                        bytes(payload) if payload is not None else None
-                    )
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    d = {"width": None, "height": None, "mean_byte": None, "ok": False}
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": d["width"],
-                        "height": d["height"],
-                        "mean_byte": d["mean_byte"],
-                        "ok": d["ok"],
-                        "n_bytes": len(payload) if payload is not None else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def _decode(payload):
+        # per-record containment: one truncated/corrupt blob in a
+        # 10^12-doc crawl must yield an ok=False ROW, not fail the job
+        # after task retries. NotImplementedError stays fatal on
+        # purpose — an unrouted format is a pipeline configuration
+        # error (gate on mime upstream), not data corruption.
+        try:
+            d = decode_image_bytes(payload)
+        except NotImplementedError:
+            raise
+        except Exception:
+            d = {"ok": False}
+        return {**d, "n_bytes": len(payload) if payload is not None else 0}
 
-    return df.select("media_id", "payload").mapInPandas(_decode, schema=DECODED_SCHEMA)
+    return _map_payloads(df, _decode, DECODED_SCHEMA)

@@ -47,6 +47,9 @@ from __future__ import annotations
 import math
 from typing import List, Optional, Sequence, Union
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -103,37 +106,40 @@ def quantile_summary_partials(
     it per group via max-per-pid (two partitions can share a value, so
     sum(DISTINCT) would be wrong; same accounting as
     ``heavy_hitters.misra_gries_topk``).
-    """
-    import pandas as pd
 
+    Plan: a ``mapInArrow`` pass folds each partition's batches into
+    per-group summaries, in row order within a group, and emits them
+    once the partition is read.
+    """
     gc = _cols(group_cols)
     src = df.select(*gc, value_col).where(F.col(value_col).isNotNull())
 
     def summarize(batches):
         state: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keys = (
-                list(zip(*[pdf[c] for c in gc])) if gc else [()] * len(pdf)
-            )
-            for gkey, sub in pdf.groupby(pd.Series(keys), sort=False):
+        for b in batches:
+            types = [b.schema.field(c).type for c in gc] + [pa.float64(), pa.int64(), pa.int64()]
+            keys = zip(*[b.column(c).to_pylist() for c in gc]) if gc else [()] * b.num_rows
+            groups: dict = {}
+            for gkey, v in zip(keys, b.column(value_col).cast(pa.float64()).to_pylist()):
+                groups.setdefault(gkey, []).append(v)
+            for gkey, values in groups.items():
                 s = state.get(gkey)
                 if s is None:
                     s = state[gkey] = _Summary(capacity)
-                s.insert_batch(sub[value_col].astype(float).tolist())
-        rows = []
-        for gkey, s in state.items():
-            for v, w in s.rows():
-                rows.append((*gkey, v, w, s.err))
-        cols = gc + ["item", "weight", "part_err"]
-        yield pd.DataFrame(rows, columns=cols)
+                s.insert_batch(values)
+        if not state:
+            return
+        rows = [(*gkey, v, w, s.err) for gkey, s in state.items() for v, w in s.rows()]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(zip(*rows), types)],
+            names=gc + ["item", "weight", "part_err"],
+        )
 
     gtypes = [f"`{c}` {dict(src.dtypes)[c]}" for c in gc]
     schema = ", ".join(
         gtypes + ["item double", "weight long", "part_err long"]
     )
-    return src.mapInPandas(summarize, schema).withColumn(
+    return src.mapInArrow(summarize, schema).withColumn(
         "pid", F.spark_partition_id()
     )
 
@@ -157,8 +163,6 @@ def grouped_quantiles(
     group counts add a hierarchical pre-merge (tree of unions +
     re-compactions) before this step.
     """
-    import pandas as pd
-
     gc = _cols(group_cols)
     phis = [float(p) for p in phis]
     if not phis or min(phis) <= 0.0 or max(phis) > 1.0:
@@ -173,30 +177,32 @@ def grouped_quantiles(
         + ["phi double", "quantile_est double", "max_rank_error long"]
     )
 
-    def finalize(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        gvals = tuple(pdf.iloc[0][c] for c in gc)
-        err = int(pdf.groupby("pid")["part_err"].max().sum())
-        s = pdf.sort_values("item", kind="mergesort")
-        cum = s["weight"].cumsum()
-        n = int(cum.iloc[-1])
-        rows = []
+    def finalize(t: pa.Table) -> pa.Table:
+        err = pc.sum(t.group_by("pid").aggregate([("part_err", "max")]).column("part_err_max")).as_py()
+        order = pc.sort_indices(t, [("item", "ascending")])  # stable
+        items = t.column("item").take(order).to_numpy()
+        cum = np.cumsum(t.column("weight").take(order).to_numpy())
+        est = []
         for phi in sorted(phis):
-            target = math.ceil(phi * n)  # IEEE-double product, as oracle
-            idx = int(cum.searchsorted(target, side="left"))
-            rows.append(
-                (*gvals, phi, float(s["item"].iloc[idx]), err)
-            )
-        cols = gc + ["phi", "quantile_est", "max_rank_error"]
-        return pd.DataFrame(rows, columns=cols)
+            target = math.ceil(phi * int(cum[-1]))  # IEEE-double product, as oracle
+            est.append(float(items[np.searchsorted(cum, target, side="left")]))
+        k = len(est)
+        return pa.table(
+            {
+                **{c: pa.repeat(t.column(c)[0], k) for c in gc},
+                "phi": pa.array(sorted(phis), pa.float64()),
+                "quantile_est": pa.array(est, pa.float64()),
+                "max_rank_error": pa.repeat(pa.scalar(err, pa.int64()), k),
+            }
+        )
 
     if gc:
-        return partials.groupBy(*gc).applyInPandas(finalize, out_schema)
+        return partials.groupBy(*gc).applyInArrow(finalize, out_schema)
 
-    def finalize_global(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        out = finalize(pdf)
-        out.insert(0, "_g", 1)
-        return out
+    def finalize_global(t: pa.Table) -> pa.Table:
+        out = finalize(t)
+        return out.add_column(0, "_g", pa.repeat(pa.scalar(1, pa.int32()), out.num_rows))
 
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
+    return partials.groupBy(F.lit(1).alias("_g")).applyInArrow(
         finalize_global, "_g int, " + out_schema
     ).drop("_g")

@@ -2,12 +2,16 @@
 quality scoring, language ID, document fingerprinting.
 
 JVM Column expressions wherever SQL can express the semantics (token
-counts, quality score, fingerprints — all oracle-comparable), pandas
-UDFs only for the model-based ops (language ID).
+counts, quality score, fingerprints — all oracle-comparable); Python
+runs over Arrow batches only where SQL cannot: ``arrow_udf``s for
+language ID and the per-document n-gram fractions, one
+``applyInArrow`` group pass for best-fit-decreasing packing.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -228,31 +232,21 @@ def top_ngram_char_frac(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, top_{n}gram_char_frac …) for each n — ONE vectorized pandas
-    UDF computes every n in a single pass over the words (per-doc
+    """(id, top_{n}gram_char_frac …) for each n — ONE ``arrow_udf``
+    computes every n in a single pass over the words (per-doc
     statistic: dict counting in the UDF, no corpus shuffle — the same
-    measured call as ``dup_ngram_char_frac``)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    measured call as ``dup_ngram_char_frac``). A NULL text scores as
+    the empty text."""
+    names = [f"top_{n}gram_char_frac" for n in ns]
 
-    def _fracs(texts):
-        cols = {f"top_{n}gram_char_frac": [] for n in ns}
-        for t in texts:
-            t = t if isinstance(t, str) else ""
-            for n in ns:
-                cols[f"top_{n}gram_char_frac"].append(py_top_ngram_char_frac(t, n))
-        return pd.DataFrame(cols)
+    def _fracs(texts: pa.Array) -> pa.Array:
+        docs = [t or "" for t in texts.to_pylist()]
+        return pa.StructArray.from_arrays(
+            [pa.array([py_top_ngram_char_frac(t, n) for t in docs], pa.float64()) for n in ns],
+            names=names,
+        )
 
-    _fracs.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    udf = F.pandas_udf(
-        _fracs,
-        T.StructType(
-            [
-                T.StructField(f"top_{n}gram_char_frac", T.DoubleType())
-                for n in ns
-            ]
-        ),
-    )
+    udf = F.arrow_udf(_fracs, ", ".join(f"{name} double" for name in names))
     # struct first, fields second — evaluates the UDF exactly once
     return df.select(F.col(id_col), udf(F.col(text_col)).alias("_t")).select(
         F.col(id_col),
@@ -315,23 +309,16 @@ def py_dup_ngram_char_frac(text: str, n: int = 2) -> float:
 def dup_ngram_char_frac(
     df: DataFrame, n: int = 2, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, dup_ngram_frac) over the shared pure core — a vectorized
-    pandas UDF (per-word dict counting is the measured fast path; the
-    equivalent explode+groupBy would shuffle every gram of the corpus
-    for a PER-DOC statistic)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    """(id, dup_ngram_frac) over the shared pure core — an
+    ``arrow_udf`` (per-word dict counting is the measured fast path;
+    the equivalent explode+groupBy would shuffle every gram of the
+    corpus for a PER-DOC statistic). A NULL text scores as the empty
+    text."""
 
-    def _frac(texts):
-        return pd.Series(
-            [
-                py_dup_ngram_char_frac(t if isinstance(t, str) else "", n)
-                for t in texts
-            ]
-        )
+    def _frac(texts: pa.Array) -> pa.Array:
+        return pa.array([py_dup_ngram_char_frac(t or "", n) for t in texts.to_pylist()], pa.float64())
 
-    _frac.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(_frac, T.DoubleType())
+    udf = F.arrow_udf(_frac, "double")
     return df.select(
         F.col(id_col), F.round(udf(F.col(text_col)), 6).alias("dup_ngram_frac")
     )
@@ -424,7 +411,7 @@ def pack_documents_bfd(
 
     Plan: same single shuffle on the bucket key; the per-bucket state
     (a remaining-capacity list, one entry per open pack) lives inside
-    one ``applyInPandas`` group of bounded size ≈ corpus/n_buckets —
+    one ``applyInArrow`` group of bounded size ≈ corpus/n_buckets —
     the bisect-managed capacity list makes the bucket pass
     O(docs·log packs). Fully deterministic (sort key is total), so the
     layout reproduces under any partitioning AND in the recursive-CTE
@@ -433,8 +420,6 @@ def pack_documents_bfd(
     Output: (id, bucket, pack_id, n_tokens); pack_id is the 0-based
     pack-creation index within the bucket."""
     import bisect
-
-    import pandas as pd
 
     toks = (
         n_tokens_col.cast("long")
@@ -451,33 +436,32 @@ def pack_documents_bfd(
         toks.alias("n_tokens"),
     )
 
-    def bfd(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", "_id"], ascending=[False, True], kind="mergesort"
-        )
+    def bfd(t: pa.Table) -> pa.Table:
+        # a stable sort: equal (n_tokens, _id) keys keep their order
+        t = t.take(pc.sort_indices(t, [("n_tokens", "descending"), ("_id", "ascending")]))
         packs: list = []  # sorted (remaining, pack_id): bisect((n, -1))
         next_id = 0       # finds min remaining >= n, lowest id on ties
         assigned = []
-        for n in pdf["n_tokens"].astype("int64"):
-            i = bisect.bisect_left(packs, (int(n), -1))
+        for n in t.column("n_tokens").to_pylist():
+            i = bisect.bisect_left(packs, (n, -1))
             if i < len(packs):
                 rem, pid = packs.pop(i)
-                bisect.insort(packs, (rem - int(n), pid))
+                bisect.insort(packs, (rem - n, pid))
             else:
                 pid = next_id
                 next_id += 1
-                bisect.insort(packs, (budget_tokens - int(n), pid))
+                bisect.insort(packs, (budget_tokens - n, pid))
             assigned.append(pid)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "_id": pdf["_id"].to_numpy(),
-                "bucket": pdf["bucket"].to_numpy(),
-                "pack_id": pd.array(assigned, dtype="int64"),
-                "n_tokens": pdf["n_tokens"].to_numpy(),
+                "_id": t.column("_id").cast(pa.int64()),
+                "bucket": t.column("bucket"),
+                "pack_id": pa.array(assigned, pa.int64()),
+                "n_tokens": t.column("n_tokens"),
             }
         )
 
-    out = base.groupBy("bucket").applyInPandas(
+    out = base.groupBy("bucket").applyInArrow(
         bfd, schema="_id long, bucket int, pack_id long, n_tokens long"
     )
     return out.select(

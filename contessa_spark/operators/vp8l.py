@@ -26,8 +26,8 @@ bit-identical ARGB output, plus hand-packed streams for each feature
 in isolation.
 
 Sandbox note: this container has no image LIBRARIES importable from
-python (no Pillow), so the pipeline decodes WebP itself; the
-mapInPandas plumbing in ``operators/multimodal.py`` is unchanged.
+python (no Pillow), so the pipeline decodes WebP itself; it runs
+inside the ``mapInArrow`` decode of ``operators/multimodal.py``.
 """
 
 from __future__ import annotations

@@ -3,9 +3,9 @@
 Local-mode defaults for tests/bench; the same builder flags are what a
 production spark-submit would set cluster-side. AQE on (runtime
 re-plan + skew-join splitting), Arrow on (all Python code in this
-engine runs over Arrow batches: the word-level and embedding UDFs are
-``arrow_udf``s, the rest pandas UDFs and pandas/Arrow map and group
-functions), shuffle
+engine runs over Arrow batches: every UDF is an ``arrow_udf`` and every
+map and group function a ``mapInArrow`` or ``applyInArrow``; the one
+exception is streaming's ``applyInPandasWithState``), shuffle
 partitions sized to cores locally
 (production: ~2-3× total executor cores, or rely on AQE coalescing).
 
@@ -59,7 +59,7 @@ def get_spark(
     task_cpus: int = 1,
     extra_conf: dict = None,
 ) -> SparkSession:
-    """``task_cpus=2`` is the right setting for pandas-UDF-heavy jobs:
+    """``task_cpus=2`` is the right setting for Python-UDF-heavy jobs:
     each UDF task keeps BOTH a JVM serde thread and a Python worker
     busy, so scheduling cores/1 tasks runs 2× cores runnable threads —
     a measurable convoy collapse at high core counts (38s vs 2.3s for

@@ -9,7 +9,7 @@ the payload is stripped, the remaining body is the page html.
 
 Distributed shape: ``spark.read.format("binaryFile")`` lists and
 splits *files* across executors, and the parse runs per file inside
-``mapInPandas`` — each WARC file is one row in, many page rows out.
+``mapInArrow`` — each WARC file is one row in, many page rows out.
 WARC files are sized ~1 GB by convention, so file-granular
 parallelism is the natural partitioning; text extraction is a real
 dependency-free HTML→text pass (``extract_text``): skip-subtree
@@ -24,8 +24,9 @@ from __future__ import annotations
 
 import io
 from datetime import datetime
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -131,39 +132,28 @@ def extract_text(html: bytes) -> str:
     return "\n".join(lines)
 
 
-# backward-compatible alias (pre-r2 name)
-_extract_text = extract_text
-
-
 def read_warc(
     spark: SparkSession, path: str, lang_default: str = ""
 ) -> DataFrame:
-    """WARC files at ``path`` → DataFrame(url, warc_ts, html, text, lang)."""
-    import pandas as pd
+    """WARC files at ``path`` → DataFrame(url, warc_ts, html, text, lang);
+    ``warc_ts`` is the record's ``WARC-Date``, in UTC."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    files = spark.read.format("binaryFile").load(path).select("content")
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    arrow_schema = to_arrow_schema(T.StructType.fromDDL(schema))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for rec in _parse_warc_bytes(bytes(blob)):
-                    rows.append(
-                        {
-                            "url": rec["url"],
-                            "warc_ts": rec["warc_ts"],
-                            "html": rec["html"],
-                            "text": extract_text(rec["html"]),
-                            "lang": lang_default,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+    def parse(batches):
+        for b in batches:
+            rows = [
+                {**rec, "text": extract_text(rec["html"]), "lang": lang_default}
+                for blob in b.column(0).to_pylist()
+                for rec in _parse_warc_bytes(blob)
+            ]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return files.mapInPandas(
-        parse, schema="url string, warc_ts timestamp, html binary, text string, lang string"
-    )
+    return files.mapInArrow(parse, schema=schema)
 
 
 def warc_record(url: str, ts: datetime, html: bytes) -> bytes:

@@ -10,7 +10,7 @@ Design constraints:
   table is identical however it is partitioned, and the pure-Python
   test oracle can regenerate any row independently.
 * **Distributed** — ``generate(spark, n)`` is ``spark.range(n)`` +
-  ``mapInPandas``; scales to any n with no driver materialization.
+  ``mapInArrow``; scales to any n with no driver materialization.
 * **Hot domains** — domain rank drawn ~ u³ (Zipf-ish), so a handful
   of domains dominate, exercising salted repartitioning.
 * **Doc-type mix** — clean prose per language, wrong-lang tags,
@@ -24,7 +24,9 @@ from __future__ import annotations
 
 import hashlib
 from datetime import datetime, timedelta
-from typing import Dict, Iterator, List
+from typing import Dict, List
+
+import pyarrow as pa
 
 from contessa_spark.functions.langid import LANGS, SEED_CORPORA
 
@@ -142,17 +144,18 @@ WEB_SCHEMA = (
 
 
 def generate(spark, n: int, seed: int = 42, with_doc_type: bool = False):
-    """Distributed generation: spark.range(n) → mapInPandas(gen_row)."""
-    import pandas as pd
+    """Distributed generation: spark.range(n) → mapInArrow(gen_row).
+    The naive ``warc_ts`` values are read as UTC, the session time zone
+    ``get_spark`` sets."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = WEB_SCHEMA + (", doc_type string" if with_doc_type else "")
-    cols = ["url", "warc_ts", "html", "text", "lang"] + (
-        ["doc_type"] if with_doc_type else []
-    )
+    arrow_schema = to_arrow_schema(T.StructType.fromDDL(schema))
 
-    def gen_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [gen_row(int(i), seed) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=cols)
+    def gen_batches(batches):
+        for b in batches:
+            rows = [gen_row(i, seed) for i in b.column(0).to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return spark.range(n).mapInPandas(gen_batches, schema=schema)
+    return spark.range(n).mapInArrow(gen_batches, schema=schema)

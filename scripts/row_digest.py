@@ -42,7 +42,9 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: the queries whose rows run through the word-level UDFs, then the
 #: embedding queries (three of which, ``embedding_near_dups_lsh``,
-#: ``ann_topk_lsh`` and ``ann_topk_ivf``, have no DuckDB oracle)
+#: ``ann_topk_lsh`` and ``ann_topk_ivf``, have no DuckDB oracle), then
+#: the per-row text UDFs, the summaries, the bloom filter and the media
+#: decoders and hashers
 QUERIES = [
     "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_capped",
@@ -64,6 +66,24 @@ QUERIES = [
     "dedup_semantic",
     "doc_semantic_decontamination",
     "doc_hybrid_rrf",
+    "doc_langid",
+    "doc_scrub",
+    "doc_badwords",
+    "doc_textnorm",
+    "lm_trigram_counts",
+    "doc_kn_perplexity",
+    "doc_top_ngrams",
+    "doc_dup_ngrams",
+    "doc_dup_ngrams5",
+    "doc_pack_bfd",
+    "doc_incremental_dedup",
+    "events_top_users_mg",
+    "events_value_quantiles",
+    "media_decode",
+    "media_audio_decode",
+    "media_video_decode",
+    "media_image_dups",
+    "media_audio_dups",
 ]
 SFS = ["0.001", "0.01", "0.1"]
 

@@ -150,3 +150,23 @@ def test_max_undercount_is_sum_of_partition_decrements(spark):
     out = misra_gries_topk(df, "v", "g", k=100, capacity=capacity).collect()
     assert {r["g"]: r["max_undercount"] for r in out} == dec
     assert {(r["g"], r["item"]): r["est_count"] for r in out} == est
+
+
+def test_tied_counts_update_in_first_seen_order(spark):
+    """Within a batch, items with equal counts update the summary in
+    first-seen order (``Counter.most_common``'s order). At capacity 2,
+    a first batch leaves item 1 at 5 and item 2 at 1; in the second,
+    items 3 and 4 (2 each, 3 seen first) each force a decrement of 1,
+    so 4 survives, 1 ends at 3 and the undercount is 2."""
+    from contessa_spark.operators.heavy_hitters import misra_gries_topk
+
+    df = spark.createDataFrame([(v,) for v in [1] * 5 + [2, 3, 4, 3, 4]], "v long").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    try:
+        out = misra_gries_topk(df, "v", k=5, capacity=2).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert {r["item"]: r["est_count"] for r in out} == {1: 3, 4: 1}
+    assert {r["max_undercount"] for r in out} == {2}

@@ -1,7 +1,8 @@
 """Library surface guard: every top-level function or class defined in
-``contessa_spark/`` or ``__spark_entry__.py`` must be referenced from
-some tracked ``.py`` file (library, ``__spark_entry__.py``, scripts,
-benchmark or tests) outside its own definition.
+``contessa_spark/`` or ``__spark_entry__.py``, and every module-level
+alias (``name = other_name``), must be referenced from some tracked
+``.py`` file (library, ``__spark_entry__.py``, scripts, benchmark or
+tests) outside its own definition.
 
 A reference is a name load, an attribute access or an import alias; a
 mention in a docstring or comment does not count. Dead definitions
@@ -50,11 +51,50 @@ def test_no_unreferenced_top_level_definitions():
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 defs.append((path, stmt.name, refs[stmt.name]))
+            elif (
+                library
+                and isinstance(stmt, ast.Assign)
+                and len(stmt.targets) == 1
+                and isinstance(stmt.targets[0], ast.Name)
+                and isinstance(stmt.value, ast.Name)
+            ):
+                name = stmt.targets[0].id
+                defs.append((path, name, refs[name]))
     assert defs, "scan found no library definitions"
     dead = sorted(
         f"{path}: {name}" for path, name, own in defs if total[name] - own == 0
     )
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+#: the pandas batch entry points of PySpark's DataFrame and functions API
+_PANDAS_ENTRY_POINTS = ("pandas_udf", "mapInPandas", "applyInPandas", "applyInPandasWithState")
+
+
+def test_one_batch_form_at_the_python_boundary():
+    """Library code crosses the JVM↔Python boundary in one batch form,
+    Arrow: no library file names a pandas entry point (``pandas_udf``,
+    ``mapInPandas``, ``applyInPandas``) as a name, attribute or import;
+    docstrings and comments do not count.
+
+    The one exception is ``applyInPandasWithState`` in
+    ``contessa_spark/streaming/stateful.py``. Spark's only other
+    stateful streaming API, ``transformWithState``, hands ``Row``s to a
+    ``StatefulProcessor`` rather than Arrow batches, and it needs
+    protobuf, which is not among this project's dependencies."""
+    allowed = {("contessa_spark/streaming/stateful.py", "applyInPandasWithState")}
+    found = []
+    for path in _tracked_py():
+        if not (path.startswith("contessa_spark/") or path == "__spark_entry__.py"):
+            continue
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            refs = _refs(ast.parse(f.read(), filename=path))
+        found += [
+            f"{path}: {name}"
+            for name in _PANDAS_ENTRY_POINTS
+            if refs[name] and (path, name) not in allowed
+        ]
+    assert not found, "pandas entry points in the library:\n" + "\n".join(found)
 
 
 #: FNV-1a offset bases and primes, and the SplitMix64 multiplier, in

@@ -1,6 +1,7 @@
 """Unit semantics for corpus/text operators whose oracle runs on data
 that doesn't exercise them (testdata documents are single-line)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from contessa_spark.operators.text_analysis import line_stats, token_topk_per_lang
@@ -400,3 +401,100 @@ def test_chunk_documents_semantics(spark):
 
     with _pt.raises(ValueError, match="overlap"):
         chunk_documents(df, chunk_tokens=4, overlap=4)
+
+
+#: NULL, empty, whitespace-only and non-BMP texts: the inputs where a
+#: per-row text UDF's NULL handling and string decoding show
+_EDGE_TEXTS = [None, "", " \t\n ", "frak 😀 the cat 😀 the cat sat"]
+
+
+def _udf_values(udf):
+    """``df -> {i: value}`` for a one-column UDF over ``t``."""
+    return lambda df: {r["i"]: r["v"] for r in df.select("i", udf(F.col("t")).alias("v")).collect()}
+
+
+def _edge_cases():
+    from contessa_spark.functions import langid, scrub
+    from contessa_spark.functions.badwords import ac_count_batch, build_ac_dense, phrase_hits_udf
+    from contessa_spark.functions.kenlm import (
+        _grams_udf,
+        _java_ws_re,
+        _tagged_grams_udf,
+        kn_perplexity_udf,
+        train_kn_from_counts,
+    )
+    from contessa_spark.functions.textnorm import normalize_text_udf, py_normalize
+    from contessa_spark.operators.text_analysis import (
+        dup_ngram_char_frac,
+        py_dup_ngram_char_frac,
+        py_top_ngram_char_frac,
+        top_ngram_char_frac,
+    )
+
+    phrases = ["frak", "the cat"]
+    model = train_kn_from_counts(
+        [{("the",): 3, ("cat",): 2, ("sat",): 1}, {("the", "cat"): 2, ("cat", "sat"): 1}], 0.5
+    )
+
+    def words(t):
+        return [w for w in _java_ws_re().split(t) if w]
+
+    def grams(t, n):
+        w = words(t)
+        return [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
+
+    return {
+        "langid": (
+            lambda df: {i: tuple(v) for i, v in _udf_values(langid.spark_udf())(df).items()},
+            langid.detect,
+        ),
+        "scrub": (
+            lambda df: {i: tuple(v) for i, v in _udf_values(scrub.spark_udf())(df).items()},
+            lambda t: tuple(c[0] for c in scrub.scrub_batch([t])),
+        ),
+        "phrase_hits": (
+            _udf_values(phrase_hits_udf(phrases)),
+            lambda t: int(ac_count_batch([t], build_ac_dense(phrases))[0]),
+        ),
+        "textnorm": (_udf_values(normalize_text_udf()), py_normalize),
+        "kn_perplexity": (_udf_values(kn_perplexity_udf(model)), model.perplexity),
+        "grams": (_udf_values(_grams_udf(2)), lambda t: grams(t, 2)),
+        "tagged_grams": (
+            lambda df: {i: [tuple(g) for g in v] for i, v in _udf_values(_tagged_grams_udf(2))(df).items()},
+            lambda t: [(1, w) for w in words(t)] + [(2, g) for g in grams(t, 2)],
+        ),
+        "top_ngram_char_frac": (
+            lambda df: {
+                r["i"]: (r["top_2gram_char_frac"], r["top_3gram_char_frac"])
+                for r in top_ngram_char_frac(df, ns=(2, 3), text_col="t", id_col="i").collect()
+            },
+            lambda t: tuple(round(py_top_ngram_char_frac(t, n), 6) for n in (2, 3)),
+        ),
+        "dup_ngram_char_frac": (
+            lambda df: {r["i"]: r["dup_ngram_frac"] for r in dup_ngram_char_frac(df, text_col="t", id_col="i").collect()},
+            lambda t: round(py_dup_ngram_char_frac(t), 6),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "langid",
+        "scrub",
+        "phrase_hits",
+        "textnorm",
+        "kn_perplexity",
+        "grams",
+        "tagged_grams",
+        "top_ngram_char_frac",
+        "dup_ngram_char_frac",
+    ],
+)
+def test_text_udfs_match_cores_on_null_and_edge_texts(spark, case):
+    """Each per-row text UDF returns its pure core's value on an empty,
+    a whitespace-only and a non-BMP text, and on a NULL text the core's
+    value for the empty text."""
+    spark_values, core = _edge_cases()[case]
+    df = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)), "i long, t string")
+    assert spark_values(df) == {i: core("" if t is None else t) for i, t in enumerate(_EDGE_TEXTS)}
